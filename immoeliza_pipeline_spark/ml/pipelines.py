@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _assemble(df: DataFrame, feature_cols: Sequence[str], target: str):
+def _assemble(feature_cols: Sequence[str]):
     from pyspark.ml.feature import StandardScaler, VectorAssembler
     assembler = VectorAssembler(inputCols=list(feature_cols), outputCol="__features_raw")
     scaler = StandardScaler(inputCol="__features_raw", outputCol="features",
@@ -36,7 +36,7 @@ def fit_linear_pipeline(train: DataFrame, feature_cols: Sequence[str], target: s
     elastic_net=0 is Ridge, =1 is Lasso (project.py:222-224)."""
     from pyspark.ml import Pipeline
     from pyspark.ml.regression import LinearRegression
-    assembler, scaler = _assemble(train, feature_cols, target)
+    assembler, scaler = _assemble(feature_cols)
     lr = LinearRegression(featuresCol="features", labelCol=target,
                           regParam=reg_param, elasticNetParam=elastic_net)
     return Pipeline(stages=[assembler, scaler, lr]).fit(train)
@@ -47,7 +47,7 @@ def fit_random_forest_pipeline(train: DataFrame, feature_cols: Sequence[str],
                                max_depth: int = 5, seed: int = 42):
     from pyspark.ml import Pipeline
     from pyspark.ml.regression import RandomForestRegressor
-    assembler, scaler = _assemble(train, feature_cols, target)
+    assembler, scaler = _assemble(feature_cols)
     rf = RandomForestRegressor(featuresCol="features", labelCol=target,
                                numTrees=num_trees, maxDepth=max_depth, seed=seed)
     return Pipeline(stages=[assembler, scaler, rf]).fit(train)
@@ -62,40 +62,69 @@ def fit_gbt_pipeline(train: DataFrame, feature_cols: Sequence[str],
     tree to the current residuals."""
     from pyspark.ml import Pipeline
     from pyspark.ml.regression import GBTRegressor
-    assembler, scaler = _assemble(train, feature_cols, target)
+    assembler, scaler = _assemble(feature_cols)
     gbt = GBTRegressor(featuresCol="features", labelCol=target,
                        maxIter=max_iter, maxDepth=max_depth,
                        stepSize=step_size, seed=seed)
     return Pipeline(stages=[assembler, scaler, gbt]).fit(train)
 
 
+def _score(scored: DataFrame, target: str,
+           pred_cols: Sequence[str]) -> list[dict[str, float]]:
+    """RMSE + R² of every prediction column in ``pred_cols``, all in
+    ONE aggregate pass over ``scored`` (project.py:137-144). R² is
+    1 - MSE / var_pop(target), so no separate pass computes the label
+    mean. Both metrics are computed inside the aggregate: a constant
+    target gives NULL R², and an empty frame NULL for both."""
+    y = F.col(target)
+    aggs = []
+    for i, p in enumerate(pred_cols):
+        err = y - F.col(p)
+        mse = F.avg(err * err)
+        aggs += [F.sqrt(mse).alias(f"rmse{i}"),
+                 (1 - F.try_divide(mse, F.var_pop(y))).alias(f"r2{i}")]
+    row = scored.agg(*aggs).first()
+    return [{"rmse": row[f"rmse{i}"], "r2": row[f"r2{i}"]}
+            for i in range(len(pred_cols))]
+
+
 def evaluate(model, test: DataFrame, target: str) -> dict[str, float]:
-    """RMSE + R² on a held-out frame (project.py:137-144). The label
-    mean comes from the RAW test frame so the (expensive) model
-    transform executes once, not once per aggregate branch."""
-    pred = model.transform(test)
-    err = F.col(target) - F.col("prediction")
-    ybar = test.agg(F.avg(target).alias("__ybar"))
-    row = (pred.crossJoin(F.broadcast(ybar))
-           .agg(F.sqrt(F.avg(err * err)).alias("rmse"),
-                (1 - F.sum(err * err)
-                 / F.sum((F.col(target) - F.col("__ybar")) ** 2)).alias("r2"))
-           .first())
-    return {"rmse": row["rmse"], "r2": row["r2"]}
+    """RMSE + R² of ``model`` on a held-out frame: the one-candidate
+    case of the grid's scorer, one aggregate over the transformed
+    frame."""
+    return _score(model.transform(test), target, ["prediction"])[0]
 
 
 def grid_search_linear(train: DataFrame, test: DataFrame,
                        feature_cols: Sequence[str], target: str,
                        reg_params: Sequence[float] = (0.0, 0.1, 1.0)) -> dict:
     """Deterministic analog of RandomizedSearchCV (project.py:183-193):
-    evaluate each candidate on the holdout, return the best by RMSE."""
-    best = None
-    for rp in reg_params:
-        model = fit_linear_pipeline(train, feature_cols, target, reg_param=rp)
-        metrics = evaluate(model, test, target)
-        if best is None or metrics["rmse"] < best["rmse"]:
-            best = {"reg_param": rp, "model": model, **metrics}
-    return best
+    evaluate each candidate on the holdout, return the best by RMSE
+    (strict <, so the first of tied candidates wins).
+
+    The assembler + scaler prefix does not depend on ``reg_param``, so
+    it is fitted once; one LinearRegression per ``reg_param`` fits on
+    the scaled train frame, and every candidate is scored in a single
+    aggregate over ``test``, each under its own prediction column. The
+    winner is returned as the same [assembler, scaler, regression]
+    PipelineModel that ``fit_linear_pipeline`` builds."""
+    from pyspark.ml import PipelineModel
+    from pyspark.ml.regression import LinearRegression
+    assembler, scaler = _assemble(feature_cols)
+    raw = assembler.transform(train)
+    scaler_model = scaler.fit(raw)
+    scaled = scaler_model.transform(raw)
+    fits = [LinearRegression(featuresCol="features", labelCol=target,
+                             regParam=rp, predictionCol=f"__pred{i}").fit(scaled)
+            for i, rp in enumerate(reg_params)]
+    scored = scaler_model.transform(assembler.transform(test))
+    for m in fits:
+        scored = m.transform(scored)
+    metrics = _score(scored, target, [m.getPredictionCol() for m in fits])
+    best_i = min(range(len(fits)), key=lambda i: metrics[i]["rmse"])
+    winner = fits[best_i].setPredictionCol("prediction")
+    return {"reg_param": reg_params[best_i], **metrics[best_i],
+            "model": PipelineModel(stages=[assembler, scaler_model, winner])}
 
 
 def save_model(model, path: str) -> None:
@@ -155,16 +184,18 @@ def randomized_search(df: DataFrame, feature_cols: Sequence[str], target: str,
     chosen = ranked[:n_iter]
     folded = df.withColumn("__fold", F.pmod(F.col(id_col), F.lit(k))).persist()
     best = None
-    for family, params in chosen:
-        fold_rmses = []
-        for fold in range(k):
-            train = folded.filter(F.col("__fold") != fold)
-            test = folded.filter(F.col("__fold") == fold)
-            model = _FITTERS[family](train, feature_cols, target, **params)
-            fold_rmses.append(evaluate(model, test, target)["rmse"])
-        cv_rmse = sum(fold_rmses) / k
-        if best is None or cv_rmse < best["cv_rmse"]:
-            best = {"family": family, "params": params, "cv_rmse": cv_rmse}
-    folded.unpersist()
+    try:
+        for family, params in chosen:
+            fold_rmses = []
+            for fold in range(k):
+                train = folded.filter(F.col("__fold") != fold)
+                test = folded.filter(F.col("__fold") == fold)
+                model = _FITTERS[family](train, feature_cols, target, **params)
+                fold_rmses.append(evaluate(model, test, target)["rmse"])
+            cv_rmse = sum(fold_rmses) / k
+            if best is None or cv_rmse < best["cv_rmse"]:
+                best = {"family": family, "params": params, "cv_rmse": cv_rmse}
+    finally:
+        folded.unpersist()
     final = _FITTERS[best["family"]](df, feature_cols, target, **best["params"])
     return {**best, "model": final}

@@ -7,8 +7,10 @@ need to be versioned'.
 
 Spark-first difference: stages here pass DataFrames, not files, so a
 chain of stages is ONE Catalyst plan (the reference materializes CSV
-between every step). Materialization happens only at explicitly
-declared versioned sinks.
+between every step). A stage that several stages consume (a fan-out
+stage) is computed once per run: ``Pipeline.run`` persists it as it is
+produced and releases it when ``run`` returns or raises, so no cache
+outlives the run.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import Counter
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -32,7 +35,13 @@ class Stage:
 @dataclass
 class Pipeline:
     """Topologically-executed DAG of named stages. Each stage fn
-    receives (spark, **upstream results) and returns a DataFrame."""
+    receives (spark, **upstream results) and returns a DataFrame.
+
+    Invariant: within one ``run``, a stage with more than one
+    dependent is computed once. It is persisted as it is produced and
+    unpersisted when ``run`` returns or raises; the frames ``run``
+    returns are uncached, so an action on them after ``run`` recomputes
+    its plan."""
 
     name: str
     stages: list[Stage] = field(default_factory=list)
@@ -66,11 +75,39 @@ class Pipeline:
         return order
 
     def run(self, spark: SparkSession) -> dict[str, DataFrame]:
+        order = self._topo_order()
+        dependents = Counter(d for s in order for d in set(s.depends_on))
         results: dict[str, DataFrame] = {}
-        for stage in self._topo_order():
-            inputs = {dep: results[dep] for dep in stage.depends_on}
-            results[stage.name] = stage.fn(spark, **inputs)
+        cached: list[DataFrame] = []
+        try:
+            for stage in order:
+                inputs = {dep: results[dep] for dep in stage.depends_on}
+                out = stage.fn(spark, **inputs)
+                if dependents[stage.name] > 1:
+                    cached.append(_persist_as_planned(out))
+                results[stage.name] = out
+        finally:
+            for df in cached:
+                df.unpersist()
         return results
+
+
+def _persist_as_planned(df: DataFrame) -> DataFrame:
+    """Persist ``df`` with the partitioning AQE gives it uncached.
+
+    By default Spark pins a cached plan's output partitioning (its final
+    shuffle is not coalesced), which regroups the floating-point sums
+    of every consumer; letting AQE coalesce keeps each consumer's result
+    bit-identical to an uncached run. The conf is read when the cache
+    entry is built, so it is set only around ``persist()``."""
+    conf = df.sparkSession.conf
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    prev = conf.get(key)
+    conf.set(key, "true")
+    try:
+        return df.persist()
+    finally:
+        conf.set(key, prev)
 
 
 def write_versioned(df: DataFrame, base_dir: str, dataset: str,
@@ -158,12 +195,17 @@ def dataset_diff(spark: SparkSession, base_dir: str, dataset: str,
 
 def immoeliza_pipeline(sf_dir: str, out_dir: str) -> Pipeline:
     """The reference DAG re-expressed: ingest → preprocess → model →
-    publish, as one lazily-composed plan per branch."""
+    publish, as one lazily-composed plan per branch. One version id is
+    taken per build and stamps all four sinks (orders_clean, ols_model,
+    predictions, lr_model), so one run publishes one version."""
     from pyspark.sql import functions as F
 
     from immoeliza_pipeline_spark.ml import regression as R
     from immoeliza_pipeline_spark.operators import encode, impute, outliers
     from immoeliza_pipeline_spark.sources.readers import load_table
+
+    version = time.strftime("%Y%m%dT%H%M%S", time.gmtime())
+    fitted = {}  # model_ml's grid winner, scored in memory by publish
 
     def ingest(spark: SparkSession) -> DataFrame:
         return load_table(spark, sf_dir, "orders")
@@ -180,19 +222,19 @@ def immoeliza_pipeline(sf_dir: str, out_dir: str) -> Pipeline:
     def model_ml(spark: SparkSession, preprocess: DataFrame) -> DataFrame:
         """Best-model selection + retrain + persist (project.py:266-310):
         a small deterministic grid stands in for RandomizedSearchCV;
-        the winner is saved as a VERSIONED MLlib pipeline."""
+        the winner is saved as a VERSIONED MLlib pipeline and handed
+        to publish."""
         from immoeliza_pipeline_spark.ml import pipelines as P
         train = preprocess.filter(F.col("o_orderkey") % 5 != 0)
         test = preprocess.filter(F.col("o_orderkey") % 5 == 0)
         best = P.grid_search_linear(
             train, test, ["o_orderpriority_encoded"], "o_totalprice",
             reg_params=(0.0, 1.0))
-        version = time.strftime("%Y%m%dT%H%M%S", time.gmtime())
-        path = os.path.join(out_dir, "lr_model", f"v={version}")
-        P.save_model(best["model"], path)
-        os.makedirs(os.path.join(out_dir, "lr_model"), exist_ok=True)
+        P.save_model(best["model"],
+                     os.path.join(out_dir, "lr_model", f"v={version}"))
         with open(os.path.join(out_dir, "lr_model", "LATEST"), "w") as f:
             f.write(version)
+        fitted["lr_model"] = best["model"]
         return spark.createDataFrame(
             [(version, float(best["rmse"]), float(best["r2"]),
               float(best["reg_param"]))],
@@ -201,19 +243,17 @@ def immoeliza_pipeline(sf_dir: str, out_dir: str) -> Pipeline:
     def publish(spark: SparkSession, preprocess: DataFrame,
                 model: DataFrame, model_ml: DataFrame) -> DataFrame:
         """Versioned datasets + predictions — the 'update the API with
-        new data' step (01-immoeliza-pipeline.md mission)."""
-        from pyspark.ml import PipelineModel
-        write_versioned(preprocess, out_dir, "orders_clean")
-        write_versioned(model, out_dir, "ols_model")
-        with open(os.path.join(out_dir, "lr_model", "LATEST")) as f:
-            version = f.read().strip()
-        fitted = PipelineModel.load(
-            os.path.join(out_dir, "lr_model", f"v={version}"))
-        preds = fitted.transform(preprocess).select(
+        new data' step (01-immoeliza-pipeline.md mission). Scores
+        with the model model_ml saved, held in memory; the returned
+        status frame is a literal, so acting on it after ``run``
+        recomputes nothing."""
+        write_versioned(preprocess, out_dir, "orders_clean", version)
+        write_versioned(model, out_dir, "ols_model", version)
+        preds = fitted["lr_model"].transform(preprocess).select(
             "o_orderkey", "o_totalprice",
             F.col("prediction").alias("predicted_price"))
-        write_versioned(preds, out_dir, "predictions")
-        return model.select(F.lit("published").alias("status"))
+        write_versioned(preds, out_dir, "predictions", version)
+        return spark.createDataFrame([("published",)], "status string")
 
     return (
         Pipeline("immoeliza")

@@ -20,3 +20,9 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def persisted_rdds(spark):
+    """Callable returning the ids of the RDDs Spark holds persisted."""
+    return lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())

@@ -59,10 +59,12 @@ def test_grid_search_picks_best(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem").limit(2000)
     train = li.filter("l_orderkey % 5 != 0")
     test = li.filter("l_orderkey % 5 = 0")
-    best = P.grid_search_linear(train, test, ["l_quantity"], "l_extendedprice",
-                                reg_params=(0.0, 10.0))
-    assert best["reg_param"] in (0.0, 10.0)
+    best = P.grid_search_linear(train, test, ["l_quantity", "l_discount", "l_tax"],
+                                "l_extendedprice", reg_params=(0.0, 1.0, 10.0))
+    assert best["reg_param"] in (0.0, 1.0, 10.0)
     assert best["rmse"] > 0
+    # the one-pass grid scorer and evaluate are the same scoring path
+    assert best["rmse"] == P.evaluate(best["model"], test, "l_extendedprice")["rmse"]
 
 
 def test_gbt_pipeline_fits_and_roundtrips(tmp_path, spark, sf_dir):
@@ -102,6 +104,24 @@ def test_randomized_search_is_reproducible(spark, sf_dir):
     ranked8 = sorted(P._lattice_candidates(("linear", "rf", "gbt")),
                      key=lambda c: P._rank_key(8, c[0], c[1]))[:2]
     assert ranked7 != ranked8
+
+
+def test_randomized_search_releases_fold_cache_on_error(spark, sf_dir, monkeypatch,
+                                                       persisted_rdds):
+    from immoeliza_pipeline_spark.ml import pipelines as P
+    from immoeliza_pipeline_spark.sources.readers import load_table
+    li = load_table(spark, sf_dir, "lineitem").limit(200)
+    before = persisted_rdds()
+
+    def boom(train, *args, **kwargs):
+        train.count()  # fills the fold cache
+        raise RuntimeError("fit failed")
+
+    monkeypatch.setitem(P._FITTERS, "linear", boom)
+    with pytest.raises(RuntimeError, match="fit failed"):
+        P.randomized_search(li, ["l_quantity"], "l_extendedprice", "l_orderkey",
+                            n_iter=1, k=2, families=("linear",))
+    assert persisted_rdds() - before == set()
 
 
 def test_model_save_roundtrip(tmp_path, spark, sf_dir):

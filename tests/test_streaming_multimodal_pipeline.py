@@ -82,11 +82,22 @@ def test_decoder_seam_swaps_without_plan_change(spark, sf_dir):
                and rows[i].feat_dim == 3 for i in rows)
 
 
-def test_pipeline_dag_runs_and_versions(tmp_path, spark, sf_dir):
+def test_pipeline_dag_runs_and_versions(tmp_path, spark, sf_dir, monkeypatch):
+    import itertools
+    import time
+
     from immoeliza_pipeline_spark.plans.pipeline import (
         immoeliza_pipeline, read_versioned)
+    # a clock that ticks one second per call: a run that straddles a
+    # second must still publish every sink under one version
+    clock = itertools.count(1_700_000_000)
+    real_gmtime = time.gmtime
+    monkeypatch.setattr(time, "gmtime", lambda secs=None: real_gmtime(next(clock)))
     pipe = immoeliza_pipeline(sf_dir, str(tmp_path))
     results = pipe.run(spark)
+    latest = {(tmp_path / sink / "LATEST").read_text()
+              for sink in ("orders_clean", "ols_model", "predictions", "lr_model")}
+    assert len(latest) == 1
     assert set(results) == {"ingest", "preprocess", "model", "model_ml", "publish"}
     assert results["publish"].first()["status"] == "published"
     clean = read_versioned(spark, str(tmp_path), "orders_clean")
@@ -100,6 +111,84 @@ def test_pipeline_dag_runs_and_versions(tmp_path, spark, sf_dir):
     assert "predicted_price" in preds.columns
     metrics = results["model_ml"].first()
     assert metrics.rmse > 0 and metrics.reg_param in (0.0, 1.0)
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.fixture(scope="module")
+def counted_weekly_run(tmp_path_factory, spark, sf_dir, persisted_rdds):
+    """One weekly DAG run + the caller's action on ``publish``, under
+    its own job group, starting from an empty session cache."""
+    from immoeliza_pipeline_spark.plans.pipeline import immoeliza_pipeline
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    before = persisted_rdds()
+    out = tmp_path_factory.mktemp("weekly")
+    sc.setJobGroup("weekly-dag", "weekly DAG job budget")
+    try:
+        results = immoeliza_pipeline(sf_dir, str(out)).run(spark)
+        leaked = persisted_rdds() - before
+        cache_empty = _cache_is_empty(spark)
+        results["publish"].collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("weekly-dag"))
+    return {"out": out, "jobs": jobs, "leaked": leaked,
+            "cache_empty": cache_empty}
+
+
+def test_pipeline_dag_job_budget_and_cache_lifetime(counted_weekly_run):
+    """Each intermediate result is computed once per run: the fan-out
+    preprocess stage is cached for the run only, the grid shares its
+    scaler fit and scores all candidates in one pass, and publish
+    scores with the in-memory model."""
+    assert counted_weekly_run["jobs"] <= 40
+    assert counted_weekly_run["leaked"] == set()
+    assert counted_weekly_run["cache_empty"]
+
+
+def test_saved_model_reproduces_published_predictions(counted_weekly_run, spark):
+    """publish scores with the in-memory winner; the saved artifact
+    must give exactly the same predictions when loaded back."""
+    import os
+
+    from pyspark.ml import PipelineModel
+
+    from immoeliza_pipeline_spark.plans.pipeline import read_versioned
+    out = str(counted_weekly_run["out"])
+    with open(os.path.join(out, "lr_model", "LATEST")) as f:
+        version = f.read().strip()
+    loaded = PipelineModel.load(os.path.join(out, "lr_model", f"v={version}"))
+    clean = read_versioned(spark, out, "orders_clean")
+    reloaded = {r.o_orderkey: r.prediction for r in
+                loaded.transform(clean).select("o_orderkey", "prediction").collect()}
+    published = {r.o_orderkey: r.predicted_price for r in
+                 read_versioned(spark, out, "predictions").collect()}
+    assert reloaded and reloaded == published
+
+
+def test_pipeline_releases_cache_when_stage_raises(tmp_path, spark, sf_dir,
+                                                   persisted_rdds):
+    from immoeliza_pipeline_spark.plans.pipeline import immoeliza_pipeline
+    spark.catalog.clearCache()
+    before = persisted_rdds()
+    during = []
+
+    def boom(spark, preprocess):
+        preprocess.count()  # fills the fan-out cache
+        during.append(persisted_rdds())
+        raise RuntimeError("model_ml failed")
+
+    pipe = immoeliza_pipeline(sf_dir, str(tmp_path))
+    next(s for s in pipe.stages if s.name == "model_ml").fn = boom
+    with pytest.raises(RuntimeError, match="model_ml failed"):
+        pipe.run(spark)
+    assert during[0] - before  # preprocess was cached while running
+    assert persisted_rdds() - before == set()
+    assert _cache_is_empty(spark)
 
 
 def test_backfill_partitions_and_pruning(tmp_path, spark, sf_dir):

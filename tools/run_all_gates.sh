@@ -1,12 +1,16 @@
 #!/usr/bin/env bash
 # One-command reproduction of the full validation surface:
-#   tests, oracle parity at two scale factors, hostile-timezone
-#   parity, and the benchmark diffed against BASELINE.md.
+#   tests, the benchmark's smoke check (its correctness checks on
+#   small seeded inputs), oracle parity at two scale factors,
+#   hostile-timezone parity, and the bench diffed against BASELINE.md.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== pytest =="
 python -m pytest tests/ -q
+
+echo "== benchmark smoke =="
+python3 perfbench/smoke.py
 
 echo "== oracle sf0.01 =="
 python tools/check_oracle.py
