@@ -87,8 +87,10 @@ class Pipeline:
                     cached.append(_persist_as_planned(out))
                 results[stage.name] = out
         finally:
+            # Blocking: the cached blocks are gone when run returns, not
+            # dropped in the background while the caller's next job runs.
             for df in cached:
-                df.unpersist()
+                df.unpersist(blocking=True)
         return results
 
 
@@ -244,16 +246,18 @@ def immoeliza_pipeline(sf_dir: str, out_dir: str) -> Pipeline:
                 model: DataFrame, model_ml: DataFrame) -> DataFrame:
         """Versioned datasets + predictions — the 'update the API with
         new data' step (01-immoeliza-pipeline.md mission). Scores
-        with the model model_ml saved, held in memory; the returned
-        status frame is a literal, so acting on it after ``run``
-        recomputes nothing."""
+        with the model model_ml saved, held in memory. The returned
+        status frame is an inline table: acting on it after ``run``
+        recomputes nothing and starts no Spark job (a frame built by
+        ``createDataFrame`` from a Python list would start one, with a
+        Python worker per task)."""
         write_versioned(preprocess, out_dir, "orders_clean", version)
         write_versioned(model, out_dir, "ols_model", version)
         preds = fitted["lr_model"].transform(preprocess).select(
             "o_orderkey", "o_totalprice",
             F.col("prediction").alias("predicted_price"))
         write_versioned(preds, out_dir, "predictions", version)
-        return spark.createDataFrame([("published",)], "status string")
+        return spark.sql("VALUES ('published') AS t(status)")
 
     return (
         Pipeline("immoeliza")

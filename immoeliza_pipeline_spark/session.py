@@ -58,6 +58,14 @@ def get_spark(app_name: str = "immoeliza-pipeline-spark",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM",
                                _default_driver_mem()))
         .config("spark.ui.enabled", "false")
+        # Generated classes are cached per (class loader, source), in a
+        # Guava cache whose capacity is split over 4 segments picked by
+        # hash. With Spark's 100 entries, one weekly-DAG run's ~80
+        # classes can overflow a 25-entry segment in some JVMs (the
+        # class loader's identity hash differs per process) and then
+        # recompile ~20 classes every run. A larger cache keeps a
+        # repeated workload's classes compiled once per JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     return builder.getOrCreate()
 
