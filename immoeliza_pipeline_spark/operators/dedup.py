@@ -676,10 +676,17 @@ def dedup_paragraphs(paras: DataFrame) -> DataFrame:
     md5(para)) — linear at 100 TB; no joins, no candidate pairs.
     Input is the (doc_id, idx, para) frame of blank_line_paragraphs /
     word_block_paragraphs; output is the kept subset."""
-    from pyspark.sql import Window
-    hashed = paras.withColumn(
-        "__h", F.md5(F.col("para").cast("binary")))
-    w = Window.partitionBy("__h").orderBy("doc_id", "idx")
-    return (hashed.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
+    return (paras.withColumn("__keep", first_paragraph_occurrence())
+            .filter(F.col("__keep"))
             .select("doc_id", "idx", "para"))
+
+
+def first_paragraph_occurrence() -> Column:
+    """The keep-first rule over a (doc_id, idx, para) frame: true on
+    the occurrence of each distinct paragraph text (md5 of para) with
+    the smallest (doc_id, idx), false on every later one. A window
+    expression — stage it as a column before filtering on it."""
+    from pyspark.sql import Window
+    w = Window.partitionBy(F.md5(F.col("para").cast("binary"))) \
+        .orderBy("doc_id", "idx")
+    return F.row_number().over(w) == 1

@@ -11,8 +11,9 @@ generation stays linear at 100 TB.
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -34,23 +35,45 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def sq_dist(a: Column, b: Column) -> Column:
+    return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+                       F.lit(0.0), lambda acc, x: acc + x)
+
+
+def quantize(x: Column, scale: int) -> Column:
+    """x rounded half-up to multiples of 1/scale. Every score and
+    distance is quantized before it is compared or ranked, so the low
+    floating-point bits on which engines may differ never decide a
+    result; the DuckDB oracle applies the same floor(x·s + 0.5)/s."""
+    return F.floor(x * scale + 0.5) / scale
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return df.select(F.col(id_col).alias("vid"),
+                     as_double(F.col(vec_col)).alias("v"))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Rank each query's candidates on (cos_sim desc, neighbor_id asc)
+    and keep the first ``k``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"),
+                                               F.asc("neighbor_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
                      vec_col: str, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors: broadcast the query set, rank
-    per query on (rounded sim desc, id asc). Ranking on the ROUNDED
-    score keeps the result stable across engines' fp low bits."""
-    from pyspark.sql import Window
+    per query on (rounded sim desc, id asc)."""
     q = queries.select(F.col(id_col).alias("query_id"),
                        as_double(F.col(vec_col)).alias("qvec"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
                       as_double(F.col(vec_col)).alias("cvec"))
     pairs = c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = pairs.select(
+    return _top_k(pairs.select(
         "query_id", "neighbor_id",
-        (F.floor((cosine(F.col("qvec"), F.col("cvec"))) * 10000 + 0.5) / 10000).alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+        quantize(cosine(F.col("qvec"), F.col("cvec")), 10000).alias("cos_sim")), k)
 
 
 def near_dup_pairs(corpus: DataFrame, id_col: str, vec_col: str,
@@ -63,7 +86,7 @@ def near_dup_pairs(corpus: DataFrame, id_col: str, vec_col: str,
     b = corpus.select(F.col(id_col).alias("id2"), as_double(F.col(vec_col)).alias("v2"))
     pairs = a.join(b, F.col("id1") < F.col("id2"))
     return (pairs.select("id1", "id2",
-                         (F.floor((cosine(F.col("v1"), F.col("v2"))) * 10000 + 0.5) / 10000).alias("cos_sim"))
+                         quantize(cosine(F.col("v1"), F.col("v2")), 10000).alias("cos_sim"))
             .filter(F.col("cos_sim") >= threshold))
 
 
@@ -76,17 +99,42 @@ def auto_rows_per_band(n: int, target: int = LSH_TARGET_BUCKET_LOAD,
     with target · 2^r ≥ n, i.e. ⌈log2(n/target)⌉ clamped — expected
     bucket load n/2^r stays ≤ target, so candidate volume per band
     (Σ over buckets of load²) grows ~linearly with n instead of
-    quadratically at fixed width. The r9 scale laps measured exactly
-    this ladder by hand: r=3 at 2k vectors, r=6 at 20k (84s → 10.6s),
-    r=8 at 200k. INTEGER comparisons only — a float log2 could round
-    across the boundary differently per engine; the DuckDB oracle
-    mirrors the same ladder as a CASE over count(*). Recall retention
-    per +1 of r follows 1-(1-p^r)^b (see near_dup_pairs_bucketed);
-    raise `bands` if the retention math demands it at your threshold."""
+    quadratically at fixed width. INTEGER comparisons only — a float
+    log2 could round across the boundary differently per engine; the
+    DuckDB oracle mirrors the same ladder as a CASE over count(*).
+    Recall retention per +1 of r follows 1-(1-p^r)^b (see
+    near_dup_pairs_bucketed); raise `bands` if the retention math
+    demands it at your threshold."""
     r = r_min
     while r < r_max and n > target * (1 << r):
         r += 1
     return r
+
+
+def _banded(df: DataFrame, id_col: str, vec_col: str, dim: int,
+            bands: int, r: int) -> DataFrame:
+    """Persisted (vid, v, nv, band0..band{bands-1}) frame: the vector,
+    its norm (computed once per vector, not once per candidate pair)
+    and its ``bands`` LSH buckets of ``r`` planes each, band i using
+    planes [i·r, (i+1)·r). All bands·r projections come from ONE
+    vector traversal, staged as its own column before the buckets read
+    it (see hyperplane_projections). Persisted because it feeds both
+    sides of every band join (released at the harness clearCache
+    boundary)."""
+    vectors = _vectors(df, id_col, vec_col)
+    projected = vectors.select("vid", "v", hyperplane_projections(
+        F.col("v"), dim, bands * r).alias("__projs"))
+    return projected.select(
+        "vid", "v", norm(F.col("v")).alias("nv"),
+        *[bucket_from_projections(F.col("__projs"), i * r, r)
+          .alias(f"band{i}") for i in range(bands)]).persist()
+
+
+def _banded_cosine(a: str, b: str) -> Column:
+    """Quantized cosine of two _banded rows (frame aliases ``a``,
+    ``b``) from their staged norms: the same doubles as cosine()."""
+    return quantize(dot(F.col(f"{a}.v"), F.col(f"{b}.v"))
+                    / (F.col(f"{a}.nv") * F.col(f"{b}.nv")), 10000)
 
 
 def near_dup_pairs_bucketed(corpus: DataFrame, id_col: str, vec_col: str,
@@ -103,163 +151,98 @@ def near_dup_pairs_bucketed(corpus: DataFrame, id_col: str, vec_col: str,
     the same pair set exactly — band i uses planes [i*r, (i+1)*r).
 
     ``rows_per_band=None`` (default) derives r from the corpus row
-    count via auto_rows_per_band — the knob the 10×/100× scale laps
-    previously turned by hand. The count() is one metadata-cheap job
-    at plan-build time."""
+    count via auto_rows_per_band. The count() is one metadata-cheap
+    job at plan-build time."""
     from immoeliza_pipeline_spark.operators.dedup import banded_self_join
     r = (auto_rows_per_band(corpus.count())
          if rows_per_band is None else rows_per_band)
-    # All bands*r plane projections in ONE vector traversal (the
-    # staged __projs column), then the band buckets read elements of
-    # that materialized array — measured ~12% faster end-to-end than
-    # bands*r separate zip_with+aggregate chains. Norm precomputed
-    # ONCE per vector (not once per candidate pair); the frame is
-    # persisted because it feeds both sides of every band join.
-    c0 = corpus.select(F.col(id_col).alias("vid"),
-                       as_double(F.col(vec_col)).alias("v"))
-    c1 = c0.select("vid", "v", hyperplane_projections(
-        F.col("v"), dim, bands * r).alias("__projs"))
-    c = c1.select(
-        "vid", "v",
-        *[bucket_from_projections(F.col("__projs"), i * r, r)
-          .alias(f"band{i}") for i in range(bands)],
-        norm(F.col("v")).alias("nv")).persist()
+    c = _banded(corpus, id_col, vec_col, dim, bands, r)
 
     def pair_select(a, b):
-        sim = (F.floor((dot(F.col(f"{a}.v"), F.col(f"{b}.v"))
-                        / (F.col(f"{a}.nv") * F.col(f"{b}.nv"))) * 10000 + 0.5)
-               / 10000)
         return [F.col(f"{a}.vid").alias("id1"), F.col(f"{b}.vid").alias("id2"),
-                sim.alias("cos_sim")]
+                _banded_cosine(a, b).alias("cos_sim")]
 
     candidates = banded_self_join(
         c, [f"band{i}" for i in range(bands)], "vid", pair_select)
     return candidates.filter(F.col("cos_sim") >= threshold)
 
 
-def _struct_rows(frame: DataFrame, *cols: str) -> DataFrame:
-    """Collapse a small (centroid/seed) frame to ONE row holding the
-    array of its (cols...) structs — the broadcast payload for the
-    shuffle-free per-row argmin in the assignment operators below.
-    collect_list order is nondeterministic, but every consumer reduces
-    the array with an order-independent total order (array_min /
-    array_sort over (distance, id) structs), so results are exact."""
-    return frame.agg(F.collect_list(F.struct(*cols)).alias("__cs"))
+def nearest_centers(vectors: DataFrame, centers: DataFrame,
+                    dist: Callable[[Column, Column], Column],
+                    n: int = 1) -> DataFrame:
+    """(vid, v, cid, d): each (vid, v) row's ``n`` nearest centers of
+    the (cid, c) frame under ``dist(v, c)``, one row per center, d
+    quantized to integer millionths so every engine ranks the same
+    (d, cid) pairs. This is IVF's coarse quantizer and Lloyd's
+    assignment step.
+
+    The centers collapse to ONE broadcast array of (cid, c) structs
+    and each row ranks its own candidates, so assignment never
+    shuffles the vectors. collect_list order is nondeterministic, but
+    the ranking uses the total order on (d, cid) structs — a tie on d
+    goes to the smaller cid — so the result is exact. n = 1 takes the
+    array_min; n > 1 the first n slots of the array_sort. Empty
+    centers give no rows."""
+    cs = centers.agg(F.collect_list(F.struct("cid", "c")).alias("__cs"))
+    cands = F.transform(F.col("__cs"), lambda t: F.struct(
+        quantize(dist(F.col("v"), t["c"]), 1000000).alias("d"),
+        t["cid"].alias("cid")))
+    joined = vectors.crossJoin(F.broadcast(cs))
+    if n == 1:
+        best = F.array_min(cands)
+        # array_min of an empty array is NULL
+        return (joined.select("vid", "v", best["cid"].alias("cid"),
+                              best["d"].alias("d"))
+                .filter(F.col("cid").isNotNull()))
+    return (joined.select("vid", "v", F.explode(
+                F.slice(F.array_sort(cands), 1, n)).alias("__cand"))
+            .select("vid", "v", "__cand.cid", "__cand.d"))
 
 
-def ivf_assign(corpus: DataFrame, seeds: DataFrame, id_col: str,
-               vec_col: str) -> DataFrame:
-    """IVF coarse quantization: assign every vector to its nearest
-    seed centroid (deterministic seed set stands in for k-means —
-    same plan shape; swap in trained centroids without changing the
-    query). The seed set is collapsed to ONE array-of-structs row and
-    broadcast; the argmin runs per corpus row via array_min (r12
-    optimization pass, guide §2.4) — the previous crossJoin +
-    groupBy(vid, v) struct-min shuffled the ENTIRE vector table (and
-    hashed a 64-double group key per candidate row) for a decision
-    that is purely per-row. Bit-identical: same quantized negsim per
-    (v, seed) — same left-to-right fold — and array_min uses the same
-    struct total order (negsim, then seed_id) the min aggregate did.
-    The corpus is now never shuffled by assignment at any scale."""
-    c = corpus.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v"))
-    s = seeds.select(F.col(id_col).alias("seed_id"),
-                     as_double(F.col(vec_col)).alias("sv"))
-    best = F.array_min(F.transform(
-        F.col("__cs"),
-        lambda t: F.struct(
-            (F.floor((-cosine(F.col("v"), t["sv"])) * 1000000 + 0.5)
-             / 1000000).alias("negsim"),
-            t["seed_id"].alias("seed_id"))))
-    # empty seed set → array_min(NULL-less empty) = NULL → drop, the
-    # rows the old inner crossJoin never produced
-    return (c.crossJoin(F.broadcast(_struct_rows(s, "seed_id", "sv")))
-            .select("vid", "v", best["seed_id"].alias("cell"))
-            .filter(F.col("cell").isNotNull()))
+def _probe_rank(cells: DataFrame, probes: DataFrame,
+                sim: Callable[[Column, Column], Column], k: int) -> DataFrame:
+    """IVF search tail: pair each probe (query vid, v, probed cid) with
+    the corpus vectors assigned to that cell (``cells``: vid, v, cid),
+    score by quantized ``sim(query, neighbor)`` and keep each query's
+    top ``k``. Each corpus vector lives in exactly ONE cell, and a
+    query probes a cell at most once, so a (query, neighbor) pair
+    appears at most once — no dedup shuffle."""
+    q = probes.select(F.col("vid").alias("query_id"),
+                      F.col("v").alias("qv"), "cid")
+    pairs = cells.select("vid", "v", "cid").join(F.broadcast(q), "cid").filter(
+        F.col("vid") != F.col("query_id"))
+    return _top_k(pairs.select(
+        "query_id", F.col("vid").alias("neighbor_id"), F.col("cid").alias("cell"),
+        quantize(sim(F.col("qv"), F.col("v")), 10000).alias("cos_sim")), k)
 
 
-def ivf_assign_topn(df: DataFrame, seeds: DataFrame, id_col: str,
-                    vec_col: str, nprobe: int) -> DataFrame:
-    """The query-side multi-probe assignment: each vector's ``nprobe``
-    NEAREST seed cells (ordered by rounded negated cosine, seed-id
-    tie-break — slot 1 equals ivf_assign's argmin cell exactly).
-    One (vid, cell) row per probed cell. Same shuffle-free shape as
-    ivf_assign (r12 pass): the per-row candidate array is sorted by
-    the same (negsim, seed_id) total order the old row_number window
-    used — array_sort and the window sort share Spark's struct
-    ordering — and the first ``nprobe`` slots explode; the window's
-    per-vid shuffle is gone."""
-    c = df.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v"))
-    s = seeds.select(F.col(id_col).alias("seed_id"),
-                     as_double(F.col(vec_col)).alias("sv"))
-    ranked = F.slice(F.array_sort(F.transform(
-        F.col("__cs"),
-        lambda t: F.struct(
-            (F.floor((-cosine(F.col("v"), t["sv"])) * 1000000 + 0.5)
-             / 1000000).alias("negsim"),
-            t["seed_id"].alias("seed_id")))), 1, nprobe)
-    return (c.crossJoin(F.broadcast(_struct_rows(s, "seed_id", "sv")))
-            .select("vid", "v", F.explode(ranked).alias("__cand"))
-            .select("vid", "v", F.col("__cand.seed_id").alias("cell")))
+def _neg_cosine(a: Column, b: Column) -> Column:
+    return -cosine(a, b)
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, seeds: DataFrame,
              id_col: str, vec_col: str, k: int = 5,
              nprobe: int = 1) -> DataFrame:
-    """IVF search: rank candidates only within the query's ``nprobe``
-    nearest cells. At 100 TB the corpus is written partitioned by
-    cell, so a query scans nprobe/cells of the data — nprobe is the
-    recall knob (measured at sf0.01 vs brute force: recall@5 = 0.40 /
-    0.68 / 0.88 at nprobe 1/2/3 on near-uniform synthetic vectors).
-    Each corpus vector lives in exactly ONE cell, so a (query,
-    neighbor) pair appears at most once — no dedup shuffle needed."""
-    from pyspark.sql import Window
-    cells = ivf_assign(corpus, seeds, id_col, vec_col)
-    qcells = (ivf_assign_topn(queries, seeds, id_col, vec_col, nprobe)
-              .select(F.col("vid").alias("query_id"), F.col("v").alias("qv"),
-                      "cell"))
-    pairs = cells.join(F.broadcast(qcells), "cell").filter(
-        F.col("vid") != F.col("query_id"))
-    scored = pairs.select(
-        "query_id", F.col("vid").alias("neighbor_id"), "cell",
-        (F.floor((cosine(F.col("qv"), F.col("v"))) * 10000 + 0.5) / 10000).alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-
-
-def sq_dist(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                       F.lit(0.0), lambda acc, x: acc + x)
+    """IVF search: assign every corpus vector to its nearest seed
+    (deterministic seed set stands in for k-means — same plan shape),
+    then rank candidates only within each query's ``nprobe`` nearest
+    cells. At 100 TB the corpus is written partitioned by cell, so a
+    query scans nprobe/cells of the data — nprobe is the recall knob
+    (measured at sf0.01 vs brute force: recall@5 = 0.40 / 0.68 / 0.88
+    at nprobe 1/2/3 on near-uniform synthetic vectors)."""
+    centers = seeds.select(F.col(id_col).alias("cid"),
+                           as_double(F.col(vec_col)).alias("c"))
+    cells = nearest_centers(_vectors(corpus, id_col, vec_col), centers,
+                            _neg_cosine)
+    probes = nearest_centers(_vectors(queries, id_col, vec_col), centers,
+                             _neg_cosine, n=nprobe)
+    return _probe_rank(cells, probes, cosine, k)
 
 
 def kmeans_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
-    """One Lloyd assignment step: each (vid, v) row gets its nearest
-    centroid from the (cid, c) frame by squared euclidean distance.
-    Distances are quantized to integer millionths BEFORE the argmin
-    (ties then break on cid), so any engine picks the same cell.
-
-    Shuffle-free shape (r12 optimization pass, guide §2.4): the K-row
-    centroid frame collapses to ONE array-of-structs row, broadcasts,
-    and the argmin runs per corpus row via array_min. The previous
-    crossJoin + groupBy(vid, v) struct-min shuffled the ENTIRE vector
-    table once per assignment — and hashed a 64-double group key per
-    (row × centroid) candidate — for a purely per-row decision. At
-    100 TB the corpus is now assigned in a single map-only pass.
-    Bit-identical: the quantized distance expression folds the dims
-    in the same left-to-right order, and array_min reduces with the
-    same (d, cid) struct total order the min aggregate used."""
-    best = F.array_min(F.transform(
-        F.col("__cs"),
-        lambda t: F.struct(
-            (F.floor(sq_dist(F.col("v"), t["c"]) * 1000000 + 0.5)
-             / 1000000).alias("d"),
-            t["cid"].alias("cid"))))
-    # empty centroid set → array_min(empty) = NULL → drop, the rows
-    # the old inner crossJoin never produced
-    return (vectors.crossJoin(F.broadcast(_struct_rows(centroids, "cid", "c")))
-            .select("vid", "v", best["cid"].alias("cid"),
-                    best["d"].alias("sq_dist"))
-            .filter(F.col("cid").isNotNull()))
+    """One Lloyd assignment step: each (vid, v) row's nearest (cid, c)
+    centroid by quantized squared euclidean distance, as sq_dist."""
+    return nearest_centers(vectors, centroids, sq_dist).withColumnRenamed("d", "sq_dist")
 
 
 def kmeans_update(assigned: DataFrame) -> DataFrame:
@@ -275,7 +258,7 @@ def kmeans_update(assigned: DataFrame) -> DataFrame:
     exploded = assigned.select(
         "cid", F.posexplode(F.col("v")).alias("dim", "val"))
     means = exploded.groupBy("cid", "dim").agg(
-        (F.floor(F.avg("val") * 1000000 + 0.5) / 1000000).alias("m"))
+        quantize(F.avg("val"), 1000000).alias("m"))
     return (means.groupBy("cid")
             .agg(F.array_sort(F.collect_list(F.struct("dim", "m")))
                  .alias("dm"))
@@ -284,43 +267,29 @@ def kmeans_update(assigned: DataFrame) -> DataFrame:
 
 
 def md5_bucket16(id_col: Column) -> Column:
-    """Deterministic 16-bit bucket from md5(id) — the same systematic
-    sampler plans.corpus.temperature_sample uses; DuckDB mirror:
+    """Deterministic 16-bit bucket from md5(id) — the systematic
+    sampler of the k-means training set and of the temperature
+    sampler; DuckDB mirror:
     CAST(concat('0x', substr(md5(CAST(id AS VARCHAR)), 1, 4)) AS INT)."""
     return F.conv(F.substring(
         F.md5(id_col.cast("string").cast("binary")), 1, 4), 16, 10).cast("int")
 
 
-def kmeans_iterations(corpus: DataFrame, id_col: str, vec_col: str,
-                      seed_modulus: int, n_iter: int = 2,
-                      sample_threshold: int | None = None) -> DataFrame:
-    """Deterministic Lloyd's k-means over an embedding column — the
-    trainer that upgrades ivf_topk's seed cells into real centroids
-    (swap the seeds frame for kmeans_update output; the query plan
-    does not change). Init = every seed_modulus-th vec_id as a
-    centroid; ``n_iter`` assignment+update rounds, then a final
-    assignment. Everything is quantized (distances and centroid
-    components to integer millionths) so the full trajectory — not
-    just the last step — is reproducible cross-engine; the DuckDB
-    oracle unrolls the same rounds as a CTE chain.
+def lloyd_centroids(vectors: DataFrame, seed_modulus: int, n_iter: int,
+                    sample_threshold: int | None) -> DataFrame:
+    """(cid, c) centroids after ``n_iter`` deterministic Lloyd rounds
+    over the (vid, v) frame. Init = every seed_modulus-th vid as a
+    centroid. Distances and centroid components are quantized to
+    integer millionths, so the whole trajectory is reproducible
+    cross-engine; the DuckDB oracle unrolls the same rounds as a CTE
+    chain.
 
-    ``sample_threshold`` (a 16-bit md5-bucket cutoff, 65536 = keep
-    all) is the SCALE lever: the Lloyd rounds assign only the
-    deterministic sample (rows with md5_bucket16(id) < threshold)
-    while the final assignment still covers the full corpus. With the
-    plans-layer target of 256·k sample rows and k ∝ √n, per-round
-    training cost is 256·k² ≈ 16·n — LINEAR — and the one full n·k
-    assignment pass is the only super-linear term left (the
-    structural IVF cost). None = train on everything (the pre-r11
-    behavior; at oracle scale the threshold computes to 65536 anyway,
-    so both paths coincide exactly).
-
-    Per round: one broadcast of K centroids + one (cid, dim) shuffle —
-    at 100 TB the update runs on the assignment output without
-    rescanning the corpus (callers should persist ``corpus`` upstream
-    if the source scan is expensive, as plans.similarity does)."""
-    vectors = corpus.select(F.col(id_col).alias("vid"),
-                            as_double(F.col(vec_col)).alias("v"))
+    ``sample_threshold`` (a 16-bit md5-bucket cutoff, 65536 or None =
+    keep all) restricts the rounds to the deterministic sample of rows
+    with md5_bucket16(vid) < threshold. With the plans-layer target of
+    256·k sample rows and k ∝ √n, per-round cost is 256·k² ≈ 16·n —
+    linear. Per round: one broadcast of K centroids + one (cid, dim)
+    shuffle."""
     centroids = vectors.filter(F.col("vid") % seed_modulus == 0).select(
         F.col("vid").alias("cid"), F.col("v").alias("c"))
     training = vectors
@@ -328,16 +297,22 @@ def kmeans_iterations(corpus: DataFrame, id_col: str, vec_col: str,
         training = vectors.filter(
             md5_bucket16(F.col("vid")) < sample_threshold)
     for _ in range(n_iter):
-        assigned = kmeans_assign(training, centroids)
-        centroids = kmeans_update(assigned)
-    # NOTE (r11 optimization pass, measured): the trained centroids
-    # here have exactly ONE downstream consumer (the final broadcast
-    # assignment), so the nested Lloyd chain executes once either way
-    # and a per-round localCheckpoint only ADDS job/materialization
-    # overhead — measured 2.5s → 3.4s at sf0.1. ivf_kmeans_topk, whose
-    # trained centroids feed TWO broadcasts (corpus assignment + query
-    # probing), DOES checkpoint each round — see below.
-    return kmeans_assign(vectors, centroids)
+        centroids = kmeans_update(nearest_centers(training, centroids, sq_dist))
+    return centroids
+
+
+def kmeans_iterations(corpus: DataFrame, id_col: str, vec_col: str,
+                      seed_modulus: int, n_iter: int = 2,
+                      sample_threshold: int | None = None) -> DataFrame:
+    """Deterministic Lloyd's k-means over an embedding column: the
+    lloyd_centroids rounds, then ONE assignment of the full corpus
+    (vid, v, cid, sq_dist) — the only n·k pass. The trained centroids
+    have a single consumer here, so they are not checkpointed. Callers
+    should persist ``corpus`` upstream if the source scan is
+    expensive."""
+    vectors = _vectors(corpus, id_col, vec_col)
+    return kmeans_assign(vectors, lloyd_centroids(
+        vectors, seed_modulus, n_iter, sample_threshold))
 
 
 def unit_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -358,63 +333,28 @@ def ivf_kmeans_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
                     vec_col: str, seed_modulus: int, k: int = 5,
                     nprobe: int = 2, n_iter: int = 2,
                     sample_threshold: int | None = None) -> DataFrame:
-    """IVF search over TRAINED cells: unit-normalize, run
-    kmeans_iterations for the centroids, assign the corpus to its
-    nearest trained centroid, probe each query's ``nprobe`` nearest
-    centroids, rank candidates by exact cosine (= dot of unit
-    vectors, quantized like every other ranking in this module).
-    The full trajectory stays deterministic (quantized distances and
-    centroid components), so the DuckDB oracle reproduces cells,
-    probes, and ranking exactly. At 100 TB: training runs on the
-    deterministic md5-bucket sample (``sample_threshold``, see
-    kmeans_iterations — linear per Lloyd round at the plans-layer
-    256·k target), the corpus is assigned ONCE and written
-    partitioned by cell, and each query scans ~nprobe/k of the
-    data."""
-    from pyspark.sql import Window
+    """IVF search over TRAINED cells: unit-normalize, train the
+    lloyd_centroids, assign the corpus to its nearest trained
+    centroid, probe each query's ``nprobe`` nearest centroids, rank
+    candidates by exact cosine (= dot of unit vectors). The whole
+    trajectory is quantized, so the DuckDB oracle reproduces cells,
+    probes, and ranking exactly. At 100 TB the corpus is assigned ONCE
+    and written partitioned by cell, and each query scans ~nprobe/k of
+    the data."""
     # the unit-normalized corpus feeds the seed init, the training
     # sample, AND the final cell assignment — persist so the scan +
     # normalize pipeline runs once (released at the harness
     # clearCache boundary)
     c = unit_vectors(corpus, id_col, vec_col).persist()
-    centroids = c.filter(F.col("vid") % seed_modulus == 0).select(
-        F.col("vid").alias("cid"), F.col("v").alias("c"))
-    training = c
-    if sample_threshold is not None and sample_threshold < 65536:
-        training = c.filter(md5_bucket16(F.col("vid")) < sample_threshold)
-    for _ in range(n_iter):
-        # K-row round checkpoint: every later broadcast of the trained
-        # centroids (corpus assignment AND query probing) otherwise
-        # re-executes the whole nested Lloyd chain — see
-        # kmeans_iterations. Quantized values, bit-identical.
-        centroids = kmeans_update(
-            kmeans_assign(training, centroids)).localCheckpoint(eager=True)
-    cells = kmeans_assign(c, centroids).select("vid", "v", "cid")
-    q = unit_vectors(queries, id_col, vec_col).select(
-        F.col("vid").alias("query_id"), F.col("v").alias("qv"))
-    # nprobe nearest trained centroids per query via the same
-    # shuffle-free sorted-slice shape as ivf_assign_topn (r12 pass):
-    # identical (d, cid) total order as the old row_number window,
-    # without the per-query_id window shuffle
-    ranked = F.slice(F.array_sort(F.transform(
-        F.col("__cs"),
-        lambda t: F.struct(
-            (F.floor(sq_dist(F.col("qv"), t["c"]) * 1000000 + 0.5)
-             / 1000000).alias("d"),
-            t["cid"].alias("cid")))), 1, nprobe)
-    qcells = (q.crossJoin(F.broadcast(_struct_rows(centroids, "cid", "c")))
-              .select("query_id", "qv", F.explode(ranked).alias("__cand"))
-              .select("query_id", "qv", F.col("__cand.cid").alias("cid")))
-    pairs = cells.join(F.broadcast(qcells), "cid").filter(
-        F.col("vid") != F.col("query_id"))
-    scored = pairs.select(
-        "query_id", F.col("vid").alias("neighbor_id"), F.col("cid").alias("cell"),
-        (F.floor(dot(F.col("qv"), F.col("v")) * 10000 + 0.5) / 10000)
-        .alias("cos_sim"))
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"),
-                                                F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k))
+    # K-row checkpoint: the trained centroids feed TWO broadcasts
+    # (corpus assignment and query probing), each of which would
+    # otherwise re-execute the whole nested Lloyd chain
+    centroids = lloyd_centroids(c, seed_modulus, n_iter,
+                                sample_threshold).localCheckpoint(eager=True)
+    cells = nearest_centers(c, centroids, sq_dist)
+    probes = nearest_centers(unit_vectors(queries, id_col, vec_col),
+                             centroids, sq_dist, n=nprobe)
+    return _probe_rank(cells, probes, dot, k)
 
 
 def _rademacher(j: int, d: int) -> int:
@@ -465,112 +405,44 @@ def bucket_from_projections(projs_col: Column, start: int = 0,
     return bucket
 
 
-def hyperplane_bucket(vec_col: Column, dim: int, n_planes: int = 8,
-                      plane_offset: int = 0) -> Column:
-    """Single-expression LSH bucket (one plane set): n_planes separate
-    zip_with+aggregate projections. Kept for single-band callers that
-    cannot stage a projections column; multi-band probes should use
-    hyperplane_projections + bucket_from_projections staged as two
-    projections (one traversal instead of bands×rows)."""
-    v = F.transform(vec_col, lambda x: x.cast("double"))
-    bucket = F.lit(0)
-    for j in range(n_planes):
-        signs = F.array(*[
-            F.lit(float(_rademacher(plane_offset + j, d))) for d in range(dim)])
-        proj = F.aggregate(F.zip_with(v, signs, lambda x, s: x * s),
-                           F.lit(0.0), lambda acc, x: acc + x)
-        bucket = bucket + F.when(proj > 0, F.lit(2 ** j)).otherwise(0)
-    return bucket
-
-
 def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
                  vec_col: str, dim: int, k: int = 5, bands: int = 6,
                  rows_per_band: int = 3) -> DataFrame:
     """Approximate top-k via banded (multi-probe) hyperplane LSH:
     candidates are corpus vectors agreeing with the query on ANY of
     ``bands`` buckets of ``rows_per_band`` planes each, ranked exactly
-    within the candidate set. A single AND-only bucket has per-plane
-    miss-rate compounding — with 8 planes a true neighbor at cosine
-    ~0.4 (θ ≈ 66°, per-plane agreement ~0.63) survives with
-    probability 0.63⁸ ≈ 2.5%, i.e. recall ~0 (MEASURED: 0/25 at
-    sf0.01 before this OR-construction; 0.88 recall@5 after, with
-    candidates ~47% of all-pairs on these near-uniform synthetic
-    embeddings — real embedding corpora cluster far more and prune
-    far harder). Tune rows_per_band up for fewer candidates, bands up
-    for recall. At 100 TB the corpus is written bucketed by the band
-    keys once; each query probes ``bands`` buckets. First-matching-
-    band branches keep candidate pairs disjoint — no distinct shuffle.
+    within the candidate set. A single AND-only bucket compounds the
+    per-plane miss rate — with 8 planes a true neighbor at cosine
+    ~0.4 (per-plane agreement ~0.63) survives with probability
+    0.63⁸ ≈ 2.5%; the OR-construction measured 0.88 recall@5 at
+    sf0.01. Tune rows_per_band up for fewer candidates, bands up for
+    recall.
 
-    Join shape MEASURED against the symmetric exploded light-key form
-    that banded_self_join uses (r10 A/B, min-of-2): that form won at
-    sf0.1 (4.4s vs 5.25) but LOST at 10× (8.83s vs 6.44) — it pays a
-    distinct plus a corpus-side keyed join, while broadcast probes
-    never shuffle the corpus at all. The r11 pass replaced the
-    bands-way UNION of broadcast branches (which rescanned the
-    persisted corpus cache once per band — 2×bands cache scans and
-    joins per query run) with ONE broadcast join: the corpus side
-    posexplodes its band values (narrow, straight from the cache, no
-    shuffle), the tiny query side's exploded keys broadcast, and the
-    same first-matching-band predicate banded_self_join uses keeps
-    each agreeing pair exactly once — the identical candidate set the
-    branch union produced, in a single stage that still never
-    shuffles the corpus."""
-    from pyspark.sql import Window
-    r = rows_per_band
-    npl = bands * r
+    ONE broadcast join: the corpus side posexplodes its band values
+    (narrow, straight from the cache), the small query side's exploded
+    keys broadcast, so the corpus is never shuffled. The
+    first-matching-band predicate (as in banded_self_join) keeps each
+    agreeing pair exactly once — no distinct shuffle."""
+    c = _banded(corpus, id_col, vec_col, dim, bands, rows_per_band)
+    q = _banded(queries, id_col, vec_col, dim, bands, rows_per_band)
 
-    def banded(df, out_id):
-        projected = df.select(
-            F.col(id_col).alias(out_id),
-            as_double(F.col(vec_col)).alias(f"{out_id}_v"),
-            hyperplane_projections(F.col(vec_col), dim, npl).alias("__p"))
-        # norm computed ONCE per vector here (persisted below), not
-        # once per candidate pair in the scoring stage — same double
-        # (identical expression on identical input), fewer array folds
-        return projected.select(
-            out_id, f"{out_id}_v", norm(F.col(f"{out_id}_v")).alias(f"{out_id}_nv"),
-            *[bucket_from_projections(F.col("__p"), i * r, r).alias(f"band{i}")
-              for i in range(bands)])
-
-    # BOTH banded frames feed the exploded-key probe — persist so the
-    # 18-plane projection runs once per vector (released at the
-    # harness clearCache boundary)
-    c = banded(corpus, "neighbor_id").persist()
-    q = banded(queries, "query_id").persist()
-
-    def keyed(frame, out_id):
+    def keyed(frame):
         return frame.select(
-            out_id, f"{out_id}_v", f"{out_id}_nv",
-            *[F.col(f"band{i}") for i in range(bands - 1)],
+            "vid", "v", "nv", *[f"band{i}" for i in range(bands - 1)],
             F.posexplode(F.array(*[F.col(f"band{i}")
                                    for i in range(bands)]))
             .alias("__bi", "__bv"))
 
-    ck = keyed(c, "neighbor_id").alias("a")
-    qk = keyed(q, "query_id").alias("b")
     cond = ((F.col("a.__bi") == F.col("b.__bi"))
             & (F.col("a.__bv") == F.col("b.__bv"))
-            & (F.col("a.neighbor_id") != F.col("b.query_id")))
+            & (F.col("a.vid") != F.col("b.vid")))
     for p in range(bands - 1):
-        # first-match-only (see banded_self_join): a pair agreeing on
-        # an earlier band was already emitted by that band's key row
+        # first-match-only: a pair agreeing on an earlier band was
+        # already emitted by that band's key row
         cond &= F.when(F.col("a.__bi") <= p, F.lit(True)).otherwise(
             ~F.coalesce(F.col(f"a.band{p}") == F.col(f"b.band{p}"),
                         F.lit(False)))
-    pairs = ck.join(F.broadcast(qk), cond).select(
-        F.col("b.query_id").alias("query_id"),
-        F.col("a.neighbor_id").alias("neighbor_id"),
-        F.col("b.query_id_v").alias("qvec"),
-        F.col("a.neighbor_id_v").alias("cvec"),
-        F.col("b.query_id_nv").alias("qnv"),
-        F.col("a.neighbor_id_nv").alias("cnv"))
-    # dot/(nq·nc) with the PRE-COMPUTED norms — identical doubles to
-    # cosine()'s dot/(norm·norm), minus two array folds per candidate
-    scored = pairs.select(
-        "query_id", "neighbor_id",
-        (F.floor((dot(F.col("qvec"), F.col("cvec"))
-                  / (F.col("qnv") * F.col("cnv"))) * 10000 + 0.5) / 10000)
-        .alias("cos_sim"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    pairs = keyed(c).alias("a").join(F.broadcast(keyed(q).alias("b")), cond)
+    return _top_k(pairs.select(
+        F.col("b.vid").alias("query_id"), F.col("a.vid").alias("neighbor_id"),
+        _banded_cosine("b", "a").alias("cos_sim")), k)

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.functions import text as T
 from immoeliza_pipeline_spark.operators import dedup as D
+from immoeliza_pipeline_spark.operators.similarity import md5_bucket16, quantize
 from immoeliza_pipeline_spark.sources.readers import load_table
 
 # per-language sampling rates as md5-prefix hex thresholds:
@@ -60,6 +61,62 @@ _TOKS = "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
 _STOP_IN = ", ".join(f"'{s}'" for s in T.STOPWORDS)
 
 
+def _gate(docs: DataFrame, max_rep: float | None = None) -> DataFrame:
+    """(doc_id, lang, text, __n): the (doc_id, lang, text) docs that
+    pass the quality gates — ≥20 tokens, stopword ratio ≤ 0.5 and,
+    when ``max_rep`` is given, duplicate-trigram fraction ≤ max_rep.
+    __n is the token count, kept so the accounting sums it instead of
+    re-tokenizing.
+
+    The signal frame is PERSISTED between the signal projection and
+    the filter: an optimizer barrier, not a cache nicety. Predicate
+    pushdown would otherwise substitute the staged __toks/__g aliases
+    back into the filter condition, and inside word_shingles' per-gram
+    lambda there is no CSE — the tokenize chain would re-run per gram,
+    O(tokens²) per row. Production pipelines write the corpus +
+    signals at this same stage boundary."""
+    toks = docs.withColumn("__toks", T.tokens(F.col("text")))
+    signals = [
+        "doc_id", "lang", "text", F.size("__toks").alias("__n"),
+        # stopword ratio from the staged __toks (same token array ⇒
+        # identical value), not stopword_ratio(text) which re-splits
+        (F.size(F.filter(F.col("__toks"), lambda t: t.isin(*T.STOPWORDS)))
+         / F.size("__toks")).alias("__sw")]
+    keep = (F.col("__n") >= 20) & (F.col("__sw") <= 0.5)
+    if max_rep is not None:
+        toks = toks.withColumn("__g", T.word_shingles(F.col("__toks"), 3))
+        signals.append(quantize(
+            (F.size("__g") - F.size(F.array_distinct("__g"))) / F.size("__g"),
+            10000).alias("__rep"))
+        keep &= F.col("__rep") <= max_rep
+    return (toks.select(*signals).persist().filter(keep)
+            .select("doc_id", "lang", "text", "__n"))
+
+
+def _drop_near_dups(gated: DataFrame, edges: DataFrame) -> DataFrame:
+    """(doc_id, lang, __n) of ``gated`` minus every doc that is not its
+    near-dup cluster's canonical (min-id) doc: connected components
+    over the (id1, id2) ``edges``, then a left-anti join. Text is not
+    needed past the edge generation, so the anti-join runs on the
+    narrow projection."""
+    clusters = D.connected_components(edges, "id1", "id2")
+    non_canonical = clusters.filter(
+        F.col("doc_id") != F.col("cluster_rep")).select("doc_id")
+    return (gated.select("doc_id", "lang", "__n")
+            .join(non_canonical, "doc_id", "left_anti"))
+
+
+def _account(frame: DataFrame) -> DataFrame:
+    """Per-language corpus accounting: docs and tokens (sum of __n)."""
+    return (frame.groupBy("lang")
+            .agg(F.count(F.lit(1)).alias("n_docs"),
+                 F.sum("__n").alias("n_tokens")))
+
+
+def _blocklist(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame([(h,) for h in BLOCKED_HOSTS], "host string")
+
+
 def training_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full corpus build as ONE composed plan:
 
@@ -73,40 +130,12 @@ def training_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality gate already discarded is wasted shuffle at 100 TB), with
     the fractional stop-shingle guard on.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    # Stage the token array ONCE and persist the (doc_id, lang, text,
-    # __n, __sw) signal frame — the same barrier llm_corpus_build
-    # uses. Before (r11 optimization pass): the quality predicate,
-    # the fractional stop-shingle cap's count, and the final token
-    # accounting each re-tokenized the corpus from parquet — four
-    # full regex-split passes for one build. Now the gate chain runs
-    # once; every consumer reads the in-memory columnar frame, and
-    # the final agg sums the precomputed __n (same tokens() → same
-    # value). Production pipelines write the corpus + signals at this
-    # stage boundary, which is the same barrier.
-    toks = docs.withColumn("__toks", T.tokens(F.col("text")))
-    signals = toks.select(
-        "doc_id", "lang", "text",
-        F.size("__toks").alias("__n"),
-        (F.size(F.filter(F.col("__toks"),
-                         lambda t: t.isin(*T.STOPWORDS)))
-         / F.size("__toks")).alias("__sw")).persist()
-    quality = signals.filter((F.col("__n") >= 20) & (F.col("__sw") <= 0.5))
-
-    clusters = D.connected_components(
-        D.jaccard_pairs(quality, "doc_id", "text", n=3, threshold=0.8,
-                        max_df=D.DEFAULT_MAX_DF_FRAC), "id1", "id2")
-    non_canonical = clusters.filter(F.col("doc_id") != F.col("cluster_rep")) \
-        .select("doc_id")
-    # text is not needed past the edge generation: the anti-join and
-    # the accounting run on the narrow (doc_id, lang, __n) projection
-    deduped = (quality.select("doc_id", "lang", "__n")
-               .join(non_canonical, "doc_id", "left_anti"))
-
-    sampled = deduped.filter(_sample_keep(F.col("doc_id"), F.col("lang")))
-    return (sampled.groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum("__n").alias("n_tokens")))
+    quality = _gate(load_table(spark, sf_dir, "documents"))
+    deduped = _drop_near_dups(quality, D.jaccard_pairs(
+        quality, "doc_id", "text", n=3, threshold=0.8,
+        max_df=D.DEFAULT_MAX_DF_FRAC))
+    return _account(deduped.filter(_sample_keep(F.col("doc_id"),
+                                                F.col("lang"))))
 
 
 TRAINING_CORPUS_SQL = f"""
@@ -227,6 +256,24 @@ FROM laid
 TEMP_EXP = -0.3  # α = 0.7
 
 
+def _temper(frame: DataFrame) -> DataFrame:
+    """The rows of ``frame`` (doc_id, lang, ...) the temperature
+    sampler keeps: per language, md5_bucket16(doc_id) <
+    floor((n_l / n_min)^(α−1) · 65536). The K-row language stats are
+    persisted: they feed both the n_min broadcast and the rates
+    projection, and each un-persisted consumer would re-run the
+    corpus-sized subtree below them."""
+    stats = frame.groupBy("lang").agg(F.count(F.lit(1)).alias("n_l")).persist()
+    n_min = stats.agg(F.min("n_l").alias("n_min"))
+    rates = (stats.crossJoin(F.broadcast(n_min))
+             .select("lang",
+                     F.floor(F.pow(F.col("n_l") / F.col("n_min"),
+                                   F.lit(TEMP_EXP)) * 65536)
+                     .cast("int").alias("keep_thr")))
+    return (frame.join(F.broadcast(rates), "lang")
+            .filter(md5_bucket16(F.col("doc_id")) < F.col("keep_thr")))
+
+
 def temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-balanced language sampling (the multilingual
     pre-training mixer): target distribution q_l ∝ p_l^α flattens the
@@ -245,27 +292,7 @@ def temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     language ratio lands within ~1 ulp of a bucket boundary —
     probability ≈ K·65536·2⁻⁵² per dataset, ~10⁻¹¹ here. Every other
     cross-engine float in the repo sticks to IEEE-defined +/·/÷."""
-    docs = load_table(spark, sf_dir, "documents")
-    # persist the K-row language stats (r11 optimization pass, guide
-    # §2.4): ``stats`` feeds BOTH the n_min agg-of-agg broadcast and
-    # the rates projection, and without the persist the corpus-sized
-    # subtree below it executes once per consumer — the n_min
-    # broadcast build re-scanned the documents table just to re-count
-    # per-language rows it had already counted. One full corpus pass
-    # saved per query at any scale; the cache is #languages rows.
-    stats = docs.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_l")).persist()
-    n_min = stats.agg(F.min("n_l").alias("n_min"))
-    rates = (stats.crossJoin(F.broadcast(n_min))
-             .select("lang",
-                     F.floor(F.pow(F.col("n_l") / F.col("n_min"),
-                                   F.lit(TEMP_EXP)) * 65536)
-                     .cast("int").alias("keep_thr")))
-    bucket = F.conv(F.substring(
-        F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 4),
-        16, 10).cast("int")
-    return (docs.join(F.broadcast(rates), "lang")
-            .filter(bucket < F.col("keep_thr"))
+    return (_temper(load_table(spark, sf_dir, "documents"))
             .select("doc_id", "lang"))
 
 
@@ -310,9 +337,7 @@ def url_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     hosted = with_url.select(
         "doc_id", "url",
         F.regexp_extract("url", _HOST_RE, 1).alias("host"))
-    blocklist = spark.createDataFrame(
-        [(h,) for h in BLOCKED_HOSTS], "host string")
-    return (hosted.join(F.broadcast(blocklist), "host", "left_anti")
+    return (hosted.join(F.broadcast(_blocklist(spark)), "host", "left_anti")
             .select("doc_id", "host", "url"))
 
 
@@ -350,15 +375,11 @@ def packing_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     counted = docs.select(
         "lang", T.token_count(F.col("text")).alias("n"))
-    # ONE corpus pass (r11 optimization pass, guide §2.4): the
-    # tokenize pass used to run TWICE — `counted` fed both the
-    # per-doc padding aggregation and the per-language totals as two
-    # un-persisted consumers. One per-language aggregate now carries
-    # the language token total AND the per-seq-len padding sums;
-    # everything downstream is a #languages×#seq_lens-row reshape.
-    # Result-identical: integer addition regroups exactly (per-lang
-    # partials then a K-row total ≡ the direct global sum), and the
-    # per-element pad/ceil expressions are unchanged.
+    # ONE corpus pass: a single per-language aggregate carries the
+    # language token total AND the per-seq-len padding sums; everything
+    # downstream is a #languages×#seq_lens-row reshape. Integer
+    # addition regroups exactly, so per-language partials summed again
+    # equal the direct global sums the oracle computes.
     lang_stats = counted.groupBy("lang").agg(
         F.sum("n").alias("tot"),
         *[F.sum(F.ceil(F.col("n") / F.lit(s)) * s - F.col("n"))
@@ -454,40 +475,11 @@ def llm_corpus_build(spark: SparkSession, sf_dir: str,
         F.regexp_replace(F.regexp_replace(F.regexp_replace(
             F.col("text"), _PII_EMAIL, "[EMAIL]"), _PII_IP, "[IP]"),
             _PII_PHONE, "[PHONE]").alias("text"))
-    blocklist = spark.createDataFrame(
-        [(h,) for h in BLOCKED_HOSTS], "host string")
     allowed = (red.withColumn(
         "host", F.concat(F.col("source"), F.lit(".example.com")))
-        .join(F.broadcast(blocklist), "host", "left_anti")
+        .join(F.broadcast(_blocklist(spark)), "host", "left_anti")
         .select("doc_id", "lang", "text"))
-    toks = allowed.withColumn("__toks", T.tokens(F.col("text")))
-    grams = toks.withColumn("__g", T.word_shingles(F.col("__toks"), 3))
-    rep_frac = (F.floor(((F.size("__g") - F.size(F.array_distinct("__g")))
-                         / F.size("__g")) * 10000 + 0.5) / 10000)
-    # PERSIST BETWEEN the signal projection and the filter = an
-    # optimizer barrier this plan NEEDS, not a cache nicety:
-    # predicate pushdown substitutes the staged __g/__toks aliases
-    # back into the filter condition, and inside word_shingles'
-    # per-gram lambda there is no CSE — the redact+tokenize chain
-    # would re-run 3× PER GRAM, O(tokens²) per row (measured: 76s
-    # for this one filter at sf0.1). Production pipelines write the
-    # redacted corpus + signals at exactly this stage boundary,
-    # which is the same barrier.
-    signals = grams.select(
-        "doc_id", "lang", "text",
-        F.size("__toks").alias("__n"),
-        # stopword ratio from the staged __toks (same token array ⇒
-        # identical value), not stopword_ratio(text) which re-splits
-        (F.size(F.filter(F.col("__toks"),
-                         lambda t: t.isin(*T.STOPWORDS)))
-         / F.size("__toks")).alias("__sw"),
-        rep_frac.alias("__rep")).persist()
-    # keep __n: the final accounting sums it instead of re-tokenizing
-    # the sampled docs' text (same tokens() ⇒ same value)
-    gated = (signals.filter(
-        (F.col("__n") >= 20) & (F.col("__sw") <= 0.5)
-        & (F.col("__rep") <= 0.2))
-        .select("doc_id", "lang", "text", "__n"))
+    gated = _gate(allowed, max_rep=0.2)
 
     edges = D.jaccard_pairs(gated, "doc_id", "text", n=3, threshold=0.8,
                             max_df=D.DEFAULT_MAX_DF_FRAC).select("id1", "id2")
@@ -496,65 +488,25 @@ def llm_corpus_build(spark: SparkSession, sf_dir: str,
         from immoeliza_pipeline_spark.sources.readers import spread
 
         # spread() BEFORE the banding: the embeddings parquet is a
-        # couple of files, and near_dup_pairs_bucketed's projection +
-        # 5-band self-join would otherwise run at file-partition
-        # parallelism (measured ~2.6x slower at 10x than the
-        # registered standalone query, which spreads)
+        # couple of files, and the projection + band self-join would
+        # otherwise run at file-partition parallelism
         raw_emb = load_table(spark, sf_dir, "embeddings")
-        emb = spread(raw_emb)
-        # band width from the RAW embeddings count, not the gated
-        # subset: the raw count is a cheap parquet-metadata scan,
-        # while counting the gated semi-join would execute the whole
-        # redact→gate chain once extra just to pick r (~10s at 10x,
-        # a full corpus pass at 100 TB). An upper-bound n only ever
-        # picks an equal-or-finer r on the integer ladder —
-        # conservative for bucket load, and identical at every
-        # measured scale (both counts land in the same ladder step).
-        # Counted BEFORE spread: same value, no repartition exchange
-        # inside the count job.
+        # band width from the RAW embeddings count (a parquet-metadata
+        # scan), not the gated subset, whose count would execute the
+        # whole redact→gate chain once more. An upper-bound n only
+        # picks an equal-or-finer r on the integer ladder; the oracle
+        # mirrors the same count.
         r = S.auto_rows_per_band(raw_emb.count())
-        sem_src = emb.join(
+        sem_src = spread(raw_emb).join(
             gated.select(F.col("doc_id").alias("vec_id")),
             "vec_id", "left_semi")
-        sem_pairs = S.near_dup_pairs_bucketed(
+        # no .distinct(): connected_components symmetrizes and
+        # distincts its edge input
+        edges = edges.unionByName(S.near_dup_pairs_bucketed(
             sem_src, "vec_id", "embedding", dim=64,
             threshold=_SEMANTIC_COS, bands=5,
-            rows_per_band=r).select("id1", "id2")
-        # no .distinct() here: connected_components symmetrizes and
-        # distincts its edge input anyway — the extra shuffle bought
-        # nothing (result-identical)
-        edges = edges.unionByName(sem_pairs)
-    clusters = D.connected_components(edges, "id1", "id2")
-    non_canonical = clusters.filter(
-        F.col("doc_id") != F.col("cluster_rep")).select("doc_id")
-    # text is not needed past the edge generation: the dedup anti-join,
-    # sampler, and accounting all run on (doc_id, lang, __n)
-    deduped = (gated.select("doc_id", "lang", "__n")
-               .join(non_canonical, "doc_id", "left_anti"))
-
-    # persist the K-row per-language stats (r11 optimization pass,
-    # guide §2.4): ``stats`` feeds both the n_min agg-of-agg broadcast
-    # and the rates projection, and each un-persisted consumer re-ran
-    # the corpus-sized ``deduped`` subtree (signals-cache scan +
-    # anti-join against the CC labels). With the persist, deduped
-    # executes once here and once for the final sampled pass — two
-    # corpus passes instead of three.
-    stats = (deduped.groupBy("lang")
-             .agg(F.count(F.lit(1)).alias("n_l")).persist())
-    n_min = stats.agg(F.min("n_l").alias("n_min"))
-    rates = (stats.crossJoin(F.broadcast(n_min))
-             .select("lang",
-                     F.floor(F.pow(F.col("n_l") / F.col("n_min"),
-                                   F.lit(TEMP_EXP)) * 65536)
-                     .cast("int").alias("keep_thr")))
-    bucket = F.conv(F.substring(
-        F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 4),
-        16, 10).cast("int")
-    sampled = (deduped.join(F.broadcast(rates), "lang")
-               .filter(bucket < F.col("keep_thr")))
-    return (sampled.groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum("__n").alias("n_tokens")))
+            rows_per_band=r).select("id1", "id2"))
+    return _account(_temper(_drop_near_dups(gated, edges)))
 
 
 def llm_corpus_build_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:

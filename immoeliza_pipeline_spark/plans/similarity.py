@@ -233,6 +233,12 @@ WHERE rank <= 5
 _IVF_NPROBE = 2
 
 
+def _ivf_k(n: int) -> int:
+    """Cell count k = max(3, ⌈√n / 4⌉) for an n-vector corpus."""
+    import math
+    return max(3, math.ceil(math.sqrt(n) / 4))
+
+
 def _ivf_seed_modulus(n: int) -> int:
     """Seed-selection modulus for k ∝ √n coarse cells — the real IVF
     scaling law (k ≈ √n centroids makes assignment n·k and per-query
@@ -243,9 +249,7 @@ def _ivf_seed_modulus(n: int) -> int:
     Deterministic cross-engine: IEEE sqrt is correctly rounded, /4 is
     exact, // is integer floor — the DuckDB mirror computes the
     identical k and m from count(*)."""
-    import math
-    k = max(3, math.ceil(math.sqrt(n) / 4))
-    return max(1, n // k)
+    return max(1, n // _ivf_k(n))
 
 
 def ivf_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,12 +328,12 @@ _KMEANS_SAMPLE_PER_CELL = 256
 
 def _kmeans_sample_threshold(n: int) -> int:
     """16-bit md5-bucket cutoff targeting 256·k training rows.
-    Integer-exact cross-engine: k from _ivf_seed_modulus's rule,
-    then min(65536, (65536·256·k) // n) — the DuckDB mirror computes
-    the identical value from count(*)."""
-    import math
-    k = max(3, math.ceil(math.sqrt(n) / 4))
-    return min(65536, (65536 * _KMEANS_SAMPLE_PER_CELL * k) // n)
+    Integer-exact cross-engine: min(65536, (65536·256·k) // n) — the
+    DuckDB mirror computes the identical value from count(*). An empty
+    corpus keeps all (65536), as DuckDB's least(65536, NULL) does."""
+    if n == 0:
+        return 65536
+    return min(65536, (65536 * _KMEANS_SAMPLE_PER_CELL * _ivf_k(n)) // n)
 
 
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

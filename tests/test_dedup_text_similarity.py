@@ -1,5 +1,7 @@
 """Dedup / text-analysis / similarity queries vs DuckDB at sf0.001."""
 
+import os
+
 import pytest
 
 from immoeliza_pipeline_spark.plans import dedup, similarity, text
@@ -285,3 +287,52 @@ def test_connected_components_duplicate_edges_and_chains(spark):
     assert got == {3: 3, 5: 3, 7: 3,
                    10: 10, 11: 10, 12: 10, 13: 10, 14: 10,
                    30: 30, 31: 30}
+
+
+@pytest.mark.parametrize("case", ["top1_is_slot1", "tie_to_smaller_cid",
+                                  "empty_centers"])
+def test_nearest_centers(spark, case):
+    """The shared assignment primitive on hand-built frames: the n = 1
+    argmin is slot 1 of the n = 3 ranking, a tie on d goes to the
+    smaller cid, and no centers give no rows."""
+    from immoeliza_pipeline_spark.operators.similarity import (
+        nearest_centers, sq_dist)
+
+    vectors = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [1.0, 1.0]), (3, [3.0, 2.0])],
+        "vid long, v array<double>")
+    # vid 1 and vid 2 are at d = 1 from both cid 10 and cid 11
+    centers = spark.createDataFrame(
+        [(11, [1.0, 0.0]), (10, [0.0, 1.0]), (12, [3.0, 3.0])],
+        "cid long, c array<double>")
+    if case == "empty_centers":
+        empty = centers.limit(0)
+        assert nearest_centers(vectors, empty, sq_dist).count() == 0
+        assert nearest_centers(vectors, empty, sq_dist, n=3).count() == 0
+        return
+    top1 = {r.vid: (r.d, r.cid)
+            for r in nearest_centers(vectors, centers, sq_dist).collect()}
+    if case == "tie_to_smaller_cid":
+        assert top1 == {1: (1.0, 10), 2: (1.0, 10), 3: (1.0, 12)}
+        return
+    ranked: dict[int, list] = {}
+    for r in nearest_centers(vectors, centers, sq_dist, n=3).collect():
+        ranked.setdefault(r.vid, []).append((r.d, r.cid))
+    assert all(len(v) == 3 for v in ranked.values())
+    assert top1 == {vid: min(v) for vid, v in ranked.items()}
+
+
+def test_empty_embeddings_match_oracle(tmp_path, spark, sf_dir):
+    """An empty embeddings table is legal input: the k-means and IVF
+    queries return the oracle's zero rows instead of raising."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    for f in os.listdir(sf_dir):
+        shutil.copyfile(os.path.join(sf_dir, f), tmp_path / f)
+    emb = tmp_path / "embeddings.parquet"
+    pq.write_table(pq.read_table(emb).slice(0, 0), emb)
+    for name in ("kmeans_clusters", "ivf_kmeans_topk", "ivf_topk_neighbors"):
+        fn, sql = similarity.QUERIES[name]
+        assert_matches_oracle(fn(spark, str(tmp_path)), sql, str(tmp_path))

@@ -1,5 +1,5 @@
-"""Physical-plan regression guards: the scale properties PLANS.md
-documents (pushdown, broadcasts, no cross products) asserted as
+"""Physical-plan regression guards: the scale properties the engine
+relies on (pushdown, broadcasts, no cross products) asserted as
 tests, so a future edit that silently degrades a plan fails CI
 instead of only showing up in a 100 TB run."""
 
