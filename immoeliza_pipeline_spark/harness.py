@@ -23,42 +23,23 @@ def _modules():
 
 # The driver grades the FIRST `GRADED_WINDOW` registry entries.
 # Registry order is therefore coverage policy: every SURVEY §2
-# SUBSECTION keeps representatives inside the window, and any query
-# that is NEW this round or FAILED last round takes priority over
-# rows already holding a green driver verdict from an earlier round
-# (those rotate to the tail — their history plus the local oracle
-# replica still covers them). The redundant TPC-H shapes occupy the
-# deep tail.
+# subsection keeps representatives inside the window, and the
+# redundant TPC-H shapes occupy the deep tail.
 GRADED_WINDOW = 50
 
-# Round-12 rotation (optimization round 2 of 2): EVERY query whose
-# code changed this round takes the front for re-grading — the r12
-# pass touched (result-identical, all locally oracle-verified): the
-# connected-components observe() convergence fold (dedup_clusters,
-# dedup_threshold_sweep, training_corpus_build, both llm builds), the
-# jaccard repeated-shingles doc-freq restructure (those plus
-# ngram_jaccard_pairs), the semi-join distinct removals
-# (benchmark_decontamination ×2, incremental_near_dup), the
-# shuffle-free centroid assignment (kmeans_clusters, ivf_kmeans_topk,
-# ivf_topk_neighbors), and the single-pass rewrites (paragraph_dedup,
-# doc_fingerprints). The remaining 36 slots go to the rows holding
-# the OLDEST driver verdicts — exactly the r10-or-earlier set the
-# r11 window rotated out (PERF_r11's queries_dropped) — so every
-# registry row's newest grade is at most two rounds old after this
-# window. Everything rotated out was driver-graded green in r11 and
-# stays covered by the authoritative local gate
-# (tools/check_oracle.py runs ALL registry entries;
-# tools/run_all_gates.sh keeps it in CI).
+# The names that open the registry, in this order: the queries whose
+# driver grade is most due come first, then one group per SURVEY §2
+# subsection. Everything else follows in module order; all of it stays
+# covered by tools/check_oracle.py, which runs every registry entry.
 PRIORITY_FIRST = [
-    # code changed this round — re-grade first
+    # due for re-grading
     "llm_corpus_build_semantic", "llm_corpus_build",
     "training_corpus_build", "dedup_threshold_sweep", "dedup_clusters",
     "ngram_jaccard_pairs", "benchmark_decontamination",
     "benchmark_decontamination_fixed", "incremental_near_dup",
     "kmeans_clusters", "ivf_kmeans_topk", "ivf_topk_neighbors",
     "paragraph_dedup", "doc_fingerprints",
-    # oldest driver grades (r10 or earlier — the full r11 rotated-out
-    # set): §2.1 analytic/SQL-API
+    # §2.1 analytic/SQL-API
     "q1_pricing_summary", "q14_promo_revenue",
     "q16_supplier_part_counts", "q17_small_quantity_revenue",
     "q19_disjunctive_predicates", "sessionize_events",

@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from immoeliza_pipeline_spark.ml.regression import rmse_r2
+
 
 def _assemble(feature_cols: Sequence[str]):
     from pyspark.ml.feature import StandardScaler, VectorAssembler
@@ -71,18 +73,12 @@ def fit_gbt_pipeline(train: DataFrame, feature_cols: Sequence[str],
 
 def _score(scored: DataFrame, target: str,
            pred_cols: Sequence[str]) -> list[dict[str, float]]:
-    """RMSE + R² of every prediction column in ``pred_cols``, all in
-    ONE aggregate pass over ``scored`` (project.py:137-144). R² is
-    1 - MSE / var_pop(target), so no separate pass computes the label
-    mean. Both metrics are computed inside the aggregate: a constant
-    target gives NULL R², and an empty frame NULL for both."""
-    y = F.col(target)
+    """RMSE + R² (``regression.rmse_r2``) of every prediction column in
+    ``pred_cols``, all in ONE aggregate pass over ``scored``."""
     aggs = []
     for i, p in enumerate(pred_cols):
-        err = y - F.col(p)
-        mse = F.avg(err * err)
-        aggs += [F.sqrt(mse).alias(f"rmse{i}"),
-                 (1 - F.try_divide(mse, F.var_pop(y))).alias(f"r2{i}")]
+        rmse, r2 = rmse_r2(F.col(target), F.col(p))
+        aggs += [rmse.alias(f"rmse{i}"), r2.alias(f"r2{i}")]
     row = scored.agg(*aggs).first()
     return [{"rmse": row[f"rmse{i}"], "r2": row[f"r2{i}"]}
             for i in range(len(pred_cols))]

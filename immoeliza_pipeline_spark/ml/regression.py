@@ -4,13 +4,18 @@ Parity: model/project.py — correlation feature selection (64-69),
 StandardScaler pipeline (84-97), train/test split + RMSE/R²
 (120, 137-144), KFold CV (126-127).
 
-Spark-first design: simple OLS has a closed form over sufficient
-statistics (n, Σx, Σy, Σxy, Σx²), so training is ONE aggregate over
-the data — no iterative driver loop, no collect of rows. K-fold CV
-computes PER-FOLD sufficient statistics in one pass and derives each
-fold's leave-fold-out model by subtracting the fold's partial sums
-from the global sums: k models for the price of one shuffle. This is
-the pattern that holds at 100 TB (sklearn's in-memory fit does not).
+Spark-first design: simple OLS has a closed form over first- and
+second-order moments, so training is ONE aggregate over the data — no
+iterative driver loop, no collect of rows. K-fold CV computes per-fold
+moments in one pass and derives each fold's leave-fold-out model on
+the K-row frame: k models for the price of one shuffle.
+
+Invariant: every moment is centered. Spark's built-in ``regr_*`` and
+``var_pop`` aggregates update means and co-moments as they go
+(Welford), and folds are combined and removed with the pairwise update
+of Chan, Golub & LeVeque; no formula subtracts raw power sums such as
+n·Σxx − (Σx)², which cancel on inputs with a large offset. Rows whose
+x or y is NULL are skipped by every fit.
 
 pyspark.ml pipelines (StandardScaler + LinearRegression/RF) are
 wrapped in ``ml.pipelines`` for the multi-feature path; the closed
@@ -21,7 +26,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -61,81 +66,69 @@ def standard_scale(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     return out.drop(*drop)
 
 
-def ols_sufficient_stats(df: DataFrame, x: str, y: str,
-                         group_col: str | None = None) -> DataFrame:
-    """n, Σx, Σy, Σxy, Σx², Σy² (optionally per group)."""
-    aggs = [
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.col(x)).alias("sx"),
-        F.sum(F.col(y)).alias("sy"),
-        F.sum(F.col(x) * F.col(y)).alias("sxy"),
-        F.sum(F.col(x) * F.col(x)).alias("sxx"),
-        F.sum(F.col(y) * F.col(y)).alias("syy"),
-    ]
-    return df.groupBy(group_col).agg(*aggs) if group_col else df.agg(*aggs)
-
-
-def _params_from_stats(n, sx, sy, sxy, sxx):
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    intercept = (sy - slope * sx) / n
-    return slope, intercept
+def rmse_r2(y: Column, pred: Column) -> list[Column]:
+    """[rmse, r2] of ``pred`` against ``y`` as aggregate columns
+    (project.py:137-144). R² is 1 - MSE / var_pop(y), so no separate
+    pass computes the label mean: a constant target gives NULL R², an
+    empty frame NULL for both."""
+    mse = F.avg((y - pred) * (y - pred))
+    return [F.sqrt(mse).alias("rmse"),
+            (1 - F.try_divide(mse, F.var_pop(y))).alias("r2")]
 
 
 def fit_ols(df: DataFrame, x: str, y: str) -> DataFrame:
-    """1-row (slope, intercept, r2) from a single aggregate pass."""
-    s = ols_sufficient_stats(df, x, y)
-    n, sx, sy, sxy, sxx, syy = [F.col(c) for c in ("n", "sx", "sy", "sxy", "sxx", "syy")]
-    slope, intercept = _params_from_stats(n, sx, sy, sxy, sxx)
-    corr_num = n * sxy - sx * sy
-    corr_den = F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy)
-    r2 = (corr_num / corr_den) ** 2
-    return s.select(slope.alias("slope"), intercept.alias("intercept"), r2.alias("r2"))
+    """1-row (slope, intercept, r2) from a single aggregate pass over
+    the non-NULL (x, y) pairs. A constant target gives r2 = 1.0, as
+    DuckDB's regr_r2 does; a constant x gives NULLs."""
+    return df.agg(F.regr_slope(y, x).alias("slope"),
+                  F.regr_intercept(y, x).alias("intercept"),
+                  F.regr_r2(y, x).alias("r2"))
 
 
 def evaluate_ols(test: DataFrame, params: DataFrame, x: str, y: str) -> DataFrame:
-    """RMSE + out-of-sample R² of a (slope, intercept) model on a
-    test set — params and the test-mean broadcast, one aggregate."""
-    ybar = test.agg(F.avg(F.col(y)).alias("__ybar"))
+    """RMSE + out-of-sample R² of a 1-row (slope, intercept) model on
+    a test set: the params broadcast, one aggregate."""
     pred = F.col("slope") * F.col(x) + F.col("intercept")
-    err = F.col(y) - pred
-    dev = F.col(y) - F.col("__ybar")
-    scored = test.crossJoin(F.broadcast(params)).crossJoin(F.broadcast(ybar))
-    return scored.agg(
-        F.sqrt(F.avg(err * err)).alias("rmse"),
-        (1 - F.sum(err * err) / F.sum(dev * dev)).alias("r2"),
-    )
+    return test.crossJoin(F.broadcast(params)).agg(*rmse_r2(F.col(y), pred))
 
 
 def kfold_cv_ols(df: DataFrame, x: str, y: str, k_col: str) -> DataFrame:
     """Leave-fold-out OLS for every fold in ONE data pass.
 
-    Per-fold sufficient stats → global sums via a window over the
-    K-row stats frame → train stats = global − fold → per-fold
-    (slope, intercept). A second pass joins each row's fold params
-    and aggregates test RMSE/R² per fold.
+    Per-fold centered moments (n, x̄, ȳ, Sxx, Sxy) are combined over the
+    K-row frame into the total (Chan, Golub & LeVeque's pairwise
+    update), and each train set is the total with its fold removed by
+    the same update run backwards:
+        S_t = S_all − S_k − (n_k·n_t/N)·(x̄_k − x̄_t)(ȳ_k − ȳ_t),
+    written with x̄_k − x̄_t = (N/n_t)·(x̄_k − x̄), the fold's deviation
+    from the total mean. A second pass joins each row's fold params and
+    scores each fold.
     """
     from pyspark.sql import Window
-    stats = ols_sufficient_stats(df, x, y, group_col=k_col)
     w = Window.partitionBy()
-    train = stats.select(
-        F.col(k_col),
-        (F.sum("n").over(w) - F.col("n")).alias("n"),
-        (F.sum("sx").over(w) - F.col("sx")).alias("sx"),
-        (F.sum("sy").over(w) - F.col("sy")).alias("sy"),
-        (F.sum("sxy").over(w) - F.col("sxy")).alias("sxy"),
-        (F.sum("sxx").over(w) - F.col("sxx")).alias("sxx"),
-    )
-    n, sx, sy, sxy, sxx = [F.col(c) for c in ("n", "sx", "sy", "sxy", "sxx")]
-    slope, intercept = _params_from_stats(n, sx, sy, sxy, sxx)
-    params = train.select(k_col, slope.alias("slope"), intercept.alias("intercept"))
+    n, mx, my = F.col("n"), F.col("mx"), F.col("my")
+    folds = df.groupBy(k_col).agg(
+        F.regr_count(y, x).cast("double").alias("n"),
+        F.regr_avgx(y, x).alias("mx"), F.regr_avgy(y, x).alias("my"),
+        F.regr_sxx(y, x).alias("sxx"), F.regr_sxy(y, x).alias("sxy"))
+    folds = folds.select("*", F.sum(n).over(w).alias("n_all"),
+                         (F.sum(n * mx).over(w) / F.sum(n).over(w)).alias("gx"),
+                         (F.sum(n * my).over(w) / F.sum(n).over(w)).alias("gy"))
+    N = F.col("n_all")
+    nt = N - n
+    dx, dy = mx - F.col("gx"), my - F.col("gy")
 
-    scored = df.join(F.broadcast(params), on=k_col)
-    err = F.col(y) - (F.col("slope") * F.col(x) + F.col("intercept"))
-    dev = F.col(y) - F.avg(F.col(y)).over(Window.partitionBy(k_col))
-    return (
-        scored.withColumn("__err2", err * err)
-        .withColumn("__dev2", dev * dev)
-        .groupBy(k_col)
-        .agg(F.sqrt(F.avg("__err2")).alias("rmse"),
-             (1 - F.sum("__err2") / F.sum("__dev2")).alias("r2"))
-    )
+    def train_moment(s: str, da: Column, db: Column) -> Column:
+        # S_all (fold moments plus between-fold term) minus the fold
+        return (F.sum(s).over(w) + F.sum(n * da * db).over(w)
+                - F.col(s) - n * N / nt * da * db)
+
+    params = folds.select(
+        k_col, (F.col("gx") - n * dx / nt).alias("tx"),
+        (F.col("gy") - n * dy / nt).alias("ty"),
+        (train_moment("sxy", dx, dy) / train_moment("sxx", dx, dx)).alias("slope"))
+    params = params.select(
+        k_col, "slope", (F.col("ty") - F.col("slope") * F.col("tx")).alias("intercept"))
+    pred = F.col("slope") * F.col(x) + F.col("intercept")
+    return (df.join(F.broadcast(params), on=k_col)
+            .groupBy(k_col).agg(*rmse_r2(F.col(y), pred)))

@@ -63,10 +63,11 @@ def iqr_outlier_profile(df: DataFrame, columns: Iterable[str],
                         exact: bool = True) -> DataFrame:
     """Per-column (q1, q3, iqr, n_outliers, skewness).
 
-    Skewness uses the POPULATION moment formula m3 / m2^1.5 computed
-    from power sums so the DuckDB oracle can reproduce it exactly
-    (library skewness() implementations differ in bias correction).
-    One aggregate pass for quantiles+moments, one for outlier counts.
+    Skewness is the POPULATION skewness m3 / m2^1.5 of the non-NULL
+    values, from Spark's ``skewness`` aggregate, which updates centered
+    moments as it goes (no raw power sums, so a large offset does not
+    cancel digits away); a constant column gives NULL. One aggregate
+    pass for quantiles + skewness, one for outlier counts.
     """
     columns = list(columns)
     aggs = []
@@ -74,9 +75,7 @@ def iqr_outlier_profile(df: DataFrame, columns: Iterable[str],
         aggs += [
             _pct(c, 0.25, exact).alias(f"{c}__q1"),
             _pct(c, 0.75, exact).alias(f"{c}__q3"),
-            F.avg(F.col(c)).alias(f"{c}__m1"),
-            F.avg(F.col(c) * F.col(c)).alias(f"{c}__m2"),
-            F.avg(F.col(c) * F.col(c) * F.col(c)).alias(f"{c}__m3"),
+            F.skewness(c).alias(f"{c}__skew"),
         ]
     stats = df.agg(*aggs)
     counted = df.crossJoin(F.broadcast(stats))
@@ -90,19 +89,15 @@ def iqr_outlier_profile(df: DataFrame, columns: Iterable[str],
             F.first(q1).alias(f"{c}__q1"),
             F.first(q3).alias(f"{c}__q3"),
             F.sum(outlier.cast("long")).alias(f"{c}__n_out"),
-            F.first(F.col(f"{c}__m1")).alias(f"{c}__m1"),
-            F.first(F.col(f"{c}__m2")).alias(f"{c}__m2"),
-            F.first(F.col(f"{c}__m3")).alias(f"{c}__m3"),
+            F.first(F.col(f"{c}__skew")).alias(f"{c}__skew"),
         ]
     wide = counted.agg(*count_aggs)
     # unpivot via ONE stack over the 1-row frame — a per-column union
     # would re-run both full-table aggregate passes per branch
     pieces = []
     for c in columns:
-        m1, m2, m3 = F.col(f"{c}__m1"), F.col(f"{c}__m2"), F.col(f"{c}__m3")
-        var_pop = m2 - m1 * m1
-        skew = (m3 - 3 * m1 * m2 + 2 * m1 * m1 * m1) / F.pow(var_pop, 1.5)
-        wide = wide.withColumn(f"{c}__skew", (F.floor((skew) * 1000 + 0.5) / 1000))
+        wide = wide.withColumn(
+            f"{c}__skew", F.floor(F.col(f"{c}__skew") * 1000 + 0.5) / 1000)
         wide = wide.withColumn(f"{c}__iqr",
                                (F.floor((F.col(f"{c}__q3") - F.col(f"{c}__q1")) * 10000 + 0.5) / 10000))
         wide = wide.withColumn(f"{c}__q1r", (F.floor((F.col(f"{c}__q1")) * 10000 + 0.5) / 10000))

@@ -34,14 +34,12 @@ def global_rank_cumsum(df: DataFrame, order_cols: list[Column],
               .withColumn("__pid", F.spark_partition_id()))
     w = Window.partitionBy("__pid").orderBy(*order_cols)
     w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # persisted (r11 optimization pass, guide §2.4): ``local`` feeds
-    # BOTH the per-partition stats (under the offsets broadcast) and
-    # the final join, and without the persist the ENTIRE upstream
-    # pipeline — input subtree, range-boundary sampling job, range
-    # shuffle, local windows — executed once per consumer. The cache
-    # also pins ONE partitioning for both consumers: correctness of
-    # the __pid join otherwise rests on two separate executions
-    # sampling identical range boundaries.
+    # persisted: ``local`` feeds BOTH the per-partition stats (under
+    # the offsets broadcast) and the final join; without the cache the
+    # whole upstream pipeline (input subtree, range-boundary sampling
+    # job, range shuffle, local windows) runs once per consumer. The
+    # cache also pins ONE partitioning for both consumers: the __pid
+    # join is correct only if both see the same range boundaries.
     local = (ranged.withColumn("__lrank", F.row_number().over(w))
              .withColumn("__lcum", F.sum(value_col).over(w_cum))
              .persist())

@@ -97,12 +97,9 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     via banded segments, see simhash_near_dup)."""
     from pyspark.sql import Window
     docs = load_table(spark, sf_dir, "documents")
-    # bucket size via ONE window shuffle on the fingerprint (r11
-    # optimization pass): the previous groupBy + self-join shape
-    # shuffled fp twice and needed a persist so the tokenize/hash/vote
-    # pipeline would not run per consumer; with a single consumer the
-    # persist is gone too. Same result — the oracle already used
-    # count(*) OVER (PARTITION BY simhash).
+    # bucket size via ONE window shuffle on the fingerprint (the
+    # oracle's count(*) OVER (PARTITION BY simhash)): fp has a single
+    # consumer, so the tokenize/hash/vote pipeline runs once unpersisted
     fp = (D.simhash_table(docs, "doc_id", "text")
           .select(F.col("id").alias("doc_id"), "simhash"))
     return fp.withColumn(
@@ -406,10 +403,8 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold index into the node id (doc_id·k + i — edge sets
     # never cross indices, so components stay within one threshold
     # and the composite min decodes back to the per-threshold min
-    # doc_id). 3 separate CC loops measured 2x the wall of one —
-    # the iterative rounds' fixed costs dominate at small edge
-    # counts, and at 100 TB one loop means one edge shuffle per
-    # round instead of three.
+    # doc_id). One loop pays each round's fixed cost, and does one
+    # edge shuffle per round, once for all thresholds.
     subs = [pairs.filter(F.col("jaccard") >= t).select(
                 (F.col("id1") * k + i).alias("id1"),
                 (F.col("id2") * k + i).alias("id2"))

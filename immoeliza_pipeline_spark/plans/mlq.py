@@ -58,15 +58,10 @@ def ols_price_vs_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 OLS_SQL = """
-SELECT (floor(((n*sxy - sx*sy) / (n*sxx - sx*sx)) * 10000 + 0.5) / 10000) AS slope,
-       (floor(((sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n) * 10000 + 0.5) / 10000) AS intercept,
-       (floor((pow((n*sxy - sx*sy) / (sqrt(n*sxx - sx*sx) * sqrt(n*syy - sy*sy)), 2)) * 1000000 + 0.5) / 1000000) AS r2
-FROM (
-  SELECT count(*)::DOUBLE AS n, sum(l_quantity) AS sx, sum(l_extendedprice) AS sy,
-         sum(l_quantity*l_extendedprice) AS sxy, sum(l_quantity*l_quantity) AS sxx,
-         sum(l_extendedprice*l_extendedprice) AS syy
-  FROM lineitem
-)
+SELECT (floor((regr_slope(l_extendedprice, l_quantity)) * 10000 + 0.5) / 10000) AS slope,
+       (floor((regr_intercept(l_extendedprice, l_quantity)) * 10000 + 0.5) / 10000) AS intercept,
+       (floor((regr_r2(l_extendedprice, l_quantity)) * 1000000 + 0.5) / 1000000) AS r2
+FROM lineitem
 """
 
 
@@ -83,30 +78,23 @@ def holdout_eval_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 HOLDOUT_SQL = """
-WITH train AS (SELECT * FROM lineitem WHERE l_orderkey % 5 <> 0),
-test AS (SELECT * FROM lineitem WHERE l_orderkey % 5 = 0),
-s AS (
-  SELECT count(*)::DOUBLE AS n, sum(l_quantity) AS sx, sum(l_extendedprice) AS sy,
-         sum(l_quantity*l_extendedprice) AS sxy, sum(l_quantity*l_quantity) AS sxx
-  FROM train
-),
-p AS (
-  SELECT (n*sxy - sx*sy) / (n*sxx - sx*sx) AS slope,
-         (sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n AS intercept
-  FROM s
-),
-yb AS (SELECT avg(l_extendedprice) AS ybar FROM test)
+WITH p AS (
+  SELECT regr_slope(l_extendedprice, l_quantity) AS slope,
+         regr_intercept(l_extendedprice, l_quantity) AS intercept
+  FROM lineitem WHERE l_orderkey % 5 <> 0
+)
 SELECT (floor((sqrt(avg(pow(l_extendedprice - (p.slope*l_quantity + p.intercept), 2)))) * 10000 + 0.5) / 10000) AS rmse,
-       (floor((1 - sum(pow(l_extendedprice - (p.slope*l_quantity + p.intercept), 2))
-               / sum(pow(l_extendedprice - yb.ybar, 2))) * 1000000 + 0.5) / 1000000) AS r2
-FROM test, p, yb
+       (floor((1 - avg(pow(l_extendedprice - (p.slope*l_quantity + p.intercept), 2))
+               / var_pop(l_extendedprice)) * 1000000 + 0.5) / 1000000) AS r2
+FROM lineitem, p
+WHERE l_orderkey % 5 = 0
 """
 
 
 def kfold_cv_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KFold CV parity (project.py:126-127): 6 leave-fold-out models
-    from ONE stats pass (global sums − fold sums), then per-fold
-    out-of-fold RMSE/R²."""
+    from ONE moments pass (total minus fold, centered), then per-fold
+    out-of-fold RMSE/R². The oracle fits each train set directly."""
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "fold", (F.col("l_orderkey") % 6).cast("int"))
     cv = R.kfold_cv_ols(li, "l_quantity", "l_extendedprice", "fold")
@@ -116,29 +104,17 @@ def kfold_cv_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 KFOLD_SQL = """
 WITH d AS (SELECT *, CAST(l_orderkey % 6 AS INT) AS fold FROM lineitem),
-fold_stats AS (
-  SELECT fold, count(*)::DOUBLE AS n, sum(l_quantity) AS sx, sum(l_extendedprice) AS sy,
-         sum(l_quantity*l_extendedprice) AS sxy, sum(l_quantity*l_quantity) AS sxx
-  FROM d GROUP BY fold
-),
-train AS (
-  SELECT fold,
-         sum(n) OVER () - n AS n, sum(sx) OVER () - sx AS sx,
-         sum(sy) OVER () - sy AS sy, sum(sxy) OVER () - sxy AS sxy,
-         sum(sxx) OVER () - sxx AS sxx
-  FROM fold_stats
-),
 p AS (
-  SELECT fold, (n*sxy - sx*sy) / (n*sxx - sx*sx) AS slope,
-         (sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n AS intercept
-  FROM train
-),
-yb AS (SELECT fold, avg(l_extendedprice) AS ybar FROM d GROUP BY fold)
+  SELECT f.fold, regr_slope(d.l_extendedprice, d.l_quantity) AS slope,
+         regr_intercept(d.l_extendedprice, d.l_quantity) AS intercept
+  FROM (SELECT DISTINCT fold FROM d) f JOIN d ON d.fold <> f.fold
+  GROUP BY f.fold
+)
 SELECT d.fold,
        (floor((sqrt(avg(pow(l_extendedprice - (p.slope*l_quantity + p.intercept), 2)))) * 10000 + 0.5) / 10000) AS rmse,
-       (floor((1 - sum(pow(l_extendedprice - (p.slope*l_quantity + p.intercept), 2))
-               / sum(pow(l_extendedprice - yb.ybar, 2))) * 1000000 + 0.5) / 1000000) AS r2
-FROM d JOIN p ON d.fold = p.fold JOIN yb ON d.fold = yb.fold
+       (floor((1 - avg(pow(l_extendedprice - (p.slope*l_quantity + p.intercept), 2))
+               / var_pop(l_extendedprice)) * 1000000 + 0.5) / 1000000) AS r2
+FROM d JOIN p ON d.fold = p.fold
 GROUP BY d.fold
 """
 

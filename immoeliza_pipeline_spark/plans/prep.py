@@ -334,37 +334,31 @@ def iqr_outlier_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 IQR_SQL = """
 WITH stats AS (
-  SELECT quantile_cont(l_quantity, 0.25) AS q1_q, quantile_cont(l_quantity, 0.75) AS q3_q,
-         avg(l_quantity) AS m1_q, avg(l_quantity*l_quantity) AS m2_q, avg(l_quantity*l_quantity*l_quantity) AS m3_q,
-         quantile_cont(l_extendedprice, 0.25) AS q1_p, quantile_cont(l_extendedprice, 0.75) AS q3_p,
-         avg(l_extendedprice) AS m1_p, avg(l_extendedprice*l_extendedprice) AS m2_p, avg(l_extendedprice*l_extendedprice*l_extendedprice) AS m3_p,
-         quantile_cont(l_discount, 0.25) AS q1_d, quantile_cont(l_discount, 0.75) AS q3_d,
-         avg(l_discount) AS m1_d, avg(l_discount*l_discount) AS m2_d, avg(l_discount*l_discount*l_discount) AS m3_d
+  SELECT quantile_cont(l_quantity, 0.25) AS q1_q, quantile_cont(l_quantity, 0.75) AS q3_q, avg(l_quantity) AS m_q,
+         quantile_cont(l_extendedprice, 0.25) AS q1_p, quantile_cont(l_extendedprice, 0.75) AS q3_p, avg(l_extendedprice) AS m_p,
+         quantile_cont(l_discount, 0.25) AS q1_d, quantile_cont(l_discount, 0.75) AS q3_d, avg(l_discount) AS m_d
   FROM lineitem
 ), counts AS (
   SELECT
-    CAST(sum(CASE WHEN l_quantity < (SELECT q1_q - 1.5*(q3_q-q1_q) FROM stats)
-          OR l_quantity > (SELECT q3_q + 1.5*(q3_q-q1_q) FROM stats) THEN 1 ELSE 0 END) AS BIGINT) AS n_q,
-    CAST(sum(CASE WHEN l_extendedprice < (SELECT q1_p - 1.5*(q3_p-q1_p) FROM stats)
-          OR l_extendedprice > (SELECT q3_p + 1.5*(q3_p-q1_p) FROM stats) THEN 1 ELSE 0 END) AS BIGINT) AS n_p,
-    CAST(sum(CASE WHEN l_discount < (SELECT q1_d - 1.5*(q3_d-q1_d) FROM stats)
-          OR l_discount > (SELECT q3_d + 1.5*(q3_d-q1_d) FROM stats) THEN 1 ELSE 0 END) AS BIGINT) AS n_d
-  FROM lineitem
+    CAST(sum(CASE WHEN l_quantity < q1_q - 1.5*(q3_q-q1_q) OR l_quantity > q3_q + 1.5*(q3_q-q1_q) THEN 1 ELSE 0 END) AS BIGINT) AS n_q,
+    CAST(sum(CASE WHEN l_extendedprice < q1_p - 1.5*(q3_p-q1_p) OR l_extendedprice > q3_p + 1.5*(q3_p-q1_p) THEN 1 ELSE 0 END) AS BIGINT) AS n_p,
+    CAST(sum(CASE WHEN l_discount < q1_d - 1.5*(q3_d-q1_d) OR l_discount > q3_d + 1.5*(q3_d-q1_d) THEN 1 ELSE 0 END) AS BIGINT) AS n_d,
+    avg(pow(l_quantity - m_q, 3)) / pow(avg(pow(l_quantity - m_q, 2)), 1.5) AS sk_q,
+    avg(pow(l_extendedprice - m_p, 3)) / pow(avg(pow(l_extendedprice - m_p, 2)), 1.5) AS sk_p,
+    avg(pow(l_discount - m_d, 3)) / pow(avg(pow(l_discount - m_d, 2)), 1.5) AS sk_d
+  FROM lineitem, stats
 )
 SELECT 'l_quantity' AS column_name, (floor((q1_q) * 10000 + 0.5) / 10000) AS q1, (floor((q3_q) * 10000 + 0.5) / 10000) AS q3, (floor((q3_q-q1_q) * 10000 + 0.5) / 10000) AS iqr,
-       (SELECT n_q FROM counts) AS n_outliers,
-       (floor(((m3_q - 3*m1_q*m2_q + 2*m1_q*m1_q*m1_q) / pow(m2_q - m1_q*m1_q, 1.5)) * 1000 + 0.5) / 1000) AS skewness
-FROM stats
+       n_q AS n_outliers, (floor((sk_q) * 1000 + 0.5) / 1000) AS skewness
+FROM stats, counts
 UNION ALL
 SELECT 'l_extendedprice', (floor((q1_p) * 10000 + 0.5) / 10000), (floor((q3_p) * 10000 + 0.5) / 10000), (floor((q3_p-q1_p) * 10000 + 0.5) / 10000),
-       (SELECT n_p FROM counts),
-       (floor(((m3_p - 3*m1_p*m2_p + 2*m1_p*m1_p*m1_p) / pow(m2_p - m1_p*m1_p, 1.5)) * 1000 + 0.5) / 1000)
-FROM stats
+       n_p, (floor((sk_p) * 1000 + 0.5) / 1000)
+FROM stats, counts
 UNION ALL
 SELECT 'l_discount', (floor((q1_d) * 10000 + 0.5) / 10000), (floor((q3_d) * 10000 + 0.5) / 10000), (floor((q3_d-q1_d) * 10000 + 0.5) / 10000),
-       (SELECT n_d FROM counts),
-       (floor(((m3_d - 3*m1_d*m2_d + 2*m1_d*m1_d*m1_d) / pow(m2_d - m1_d*m1_d, 1.5)) * 1000 + 0.5) / 1000)
-FROM stats
+       n_d, (floor((sk_d) * 1000 + 0.5) / 1000)
+FROM stats, counts
 """
 
 

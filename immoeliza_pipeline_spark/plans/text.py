@@ -98,11 +98,8 @@ FROM scored
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """md5-of-normalized-text fingerprints + per-fingerprint dup
     counts (exact content dedup at any scale). ONE window shuffle on
-    the fingerprint (r12 optimization pass, guide §2.4 — the same
-    rewrite simhash_fingerprints got in r11): the previous
-    groupBy + join shuffled the un-persisted fingerprint frame twice
-    and normalized+hashed every document twice. The oracle already
-    used count(*) OVER (PARTITION BY fp)."""
+    the fingerprint, so every document is normalized and hashed once
+    (the oracle's count(*) OVER (PARTITION BY fp))."""
     from pyspark.sql import Window
     docs = load_table(spark, sf_dir, "documents")
     fp = docs.select("doc_id", T.fingerprint(F.col("text")).alias("fp"))
@@ -209,10 +206,9 @@ def vocabulary_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = global_rank_cumsum(
         counts, [F.col("n_occurrences").desc(), F.col("token").asc()],
         "n_occurrences")
-    # coverage denominator = total token occurrences — computed from a
-    # doc-level scan (sum of per-doc token counts; identical integer)
-    # instead of re-running the explode + vocab groupBy a second time
-    # just to sum it (r11 optimization pass)
+    # coverage denominator = total token occurrences, from a doc-level
+    # scan (sum of per-doc token counts; the same integer) so the
+    # explode + vocab groupBy runs once
     total = docs.agg(
         F.sum(T.token_count(F.col("text")).cast("long")).alias("__total"))
     return (ranked.crossJoin(F.broadcast(total))
@@ -460,14 +456,10 @@ def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what AQE skew-join handles. Docs with <2 tokens have no
     bigram and are (deliberately) absent."""
     docs = load_table(spark, sf_dir, "documents")
-    # NOT persisted (r11 optimization pass, measured then REVERTED):
-    # caching the staged token arrays so the unigram side skips the
-    # second regex tokenize measured SLOWER at both scales (isolated
-    # min-of-2: 1.51->1.62s sf0.1, 8.31->8.87s at 10x, order-swapped
-    # confirmation 7.76 vs 8.31) — materializing the wide array cache
-    # costs more than the tokenize pass it saves. The bigram
-    # OCCURRENCE table below stays persisted (it feeds two count
-    # tables and the scoring join — three consumers, heavy to rebuild).
+    # The token arrays are NOT persisted: materializing the wide array
+    # cache costs more than the second tokenize it saves. The bigram
+    # OCCURRENCE table below is persisted: it feeds two count tables
+    # and the scoring join, three consumers, heavy to rebuild.
     toks = docs.select("doc_id", T.tokens(F.col("text")).alias("__toks"))
     pair_t = "array<struct<w1:string,w2:string>>"
     bi = (toks.select(

@@ -135,3 +135,77 @@ def test_model_save_roundtrip(tmp_path, spark, sf_dir):
     P.save_model(model, path)
     loaded = PipelineModel.load(path)
     assert loaded.transform(li).columns  # usable after reload
+
+
+# Hostile inputs for the moment-based fits: NULL pairs, and an x offset
+# of 1e6 that cancels every digit a raw power-sum formula like
+# n·Σxx − (Σx)² could keep.
+NULL_PAIRS = [(1.0, 2.0), (2.0, 4.1), (3.0, None), (4.0, 8.2), (None, 5.0)]
+OFFSET_ROWS = [(i / 8 + 1e6, 3 * (i / 8 + 1e6) + 1000 + ((7919 * i) % 17 - 8) / 4)
+               for i in range(20_000)]
+
+
+def _duck_query(ddl, rows, sql):
+    """Rows of DuckDB ``sql`` over ``rows`` loaded as table t."""
+    import duckdb
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE t ({ddl})")
+    con.executemany(f"INSERT INTO t VALUES ({', '.join('?' * len(rows[0]))})", rows)
+    return con.sql(sql).fetchall()
+
+
+def _duck_ols(rows):
+    return _duck_query("x DOUBLE, y DOUBLE", rows,
+                       "SELECT regr_slope(y, x), regr_intercept(y, x), regr_r2(y, x) FROM t")[0]
+
+
+def _exact_ols(rows):
+    from fractions import Fraction
+    xs = [Fraction(x) for x, _ in rows]
+    ys = [Fraction(y) for _, y in rows]
+    mx, my = sum(xs) / len(xs), sum(ys) / len(ys)
+    slope = (sum((x - mx) * (y - my) for x, y in zip(xs, ys))
+             / sum((x - mx) ** 2 for x in xs))
+    return float(slope), float(my - slope * mx)
+
+
+@pytest.mark.parametrize("rows,reference,rel_tol", [
+    (NULL_PAIRS, _duck_ols, (1e-12, 1e-12, 1e-12)),
+    (OFFSET_ROWS, _exact_ols, (1e-10, 1e-8)),
+], ids=["null_pairs_vs_duckdb", "offset_1e6_vs_exact"])
+def test_fit_ols_hostile(spark, rows, reference, rel_tol):
+    from immoeliza_pipeline_spark.ml import regression as R
+    df = spark.createDataFrame(rows, "x double, y double")
+    got = R.fit_ols(df, "x", "y").first()
+    for g, want, tol in zip(got, reference(rows), rel_tol):
+        assert g == pytest.approx(want, rel=tol, abs=0)
+
+
+def test_kfold_cv_ols_offset_matches_direct_fit(spark):
+    """Each fold's leave-fold-out model, derived from per-fold moments,
+    scores as the train set fitted directly (DuckDB regr_*) does."""
+    from immoeliza_pipeline_spark.ml import regression as R
+    rows = [(i % 6, x, y) for i, (x, y) in enumerate(OFFSET_ROWS)]
+    want = dict(_duck_query("fold INT, x DOUBLE, y DOUBLE", rows, """
+        WITH p AS (
+          SELECT f.fold, regr_slope(t.y, t.x) AS slope, regr_intercept(t.y, t.x) AS icpt
+          FROM (SELECT DISTINCT fold FROM t) f JOIN t ON t.fold <> f.fold
+          GROUP BY f.fold)
+        SELECT t.fold, sqrt(avg(pow(t.y - (p.slope * t.x + p.icpt), 2)))
+        FROM t JOIN p ON t.fold = p.fold GROUP BY t.fold"""))
+    df = spark.createDataFrame(rows, "fold int, x double, y double")
+    got = {r["fold"]: r["rmse"] for r in R.kfold_cv_ols(df, "x", "y", "fold").collect()}
+    assert set(got) == set(want)
+    for fold, rmse in want.items():
+        assert got[fold] == pytest.approx(rmse, rel=1e-8, abs=0)
+
+
+@pytest.mark.parametrize("value,skew", [
+    ("(id % 7) + 1e6", 0.001),  # offset: a power-sum formula says -96.176
+    ("0.1", None),              # constant: no spread, skewness undefined
+], ids=["offset_1e6", "constant"])
+def test_iqr_profile_skewness_hostile(spark, value, skew):
+    from immoeliza_pipeline_spark.operators import outliers
+    df = spark.range(1000).selectExpr(f"CAST({value} AS DOUBLE) AS v")
+    row = outliers.iqr_outlier_profile(df, ["v"]).first()
+    assert row["skewness"] == skew

@@ -4,6 +4,10 @@ Runs each __spark_entry__.queries() entry at sf0.01 and compares
 against the DuckDB oracle: row count, column names, and an
 order-insensitive value hash over columns sorted by name.
 
+Each PASS line carries the query's value hash, so two runs, with the
+trailing [seconds] stripped, diff clean when a change kept every answer:
+    python tools/check_oracle.py | sed 's/ \[.*s\]$//' > a.txt
+
 Usage: python tools/check_oracle.py [query ...]
 """
 
@@ -143,7 +147,7 @@ def main():
             print(f"FAIL {name}: {'; '.join(problems)} [{dt:.1f}s]")
             n_fail += 1
         else:
-            print(f"PASS {name}: {len(srows)} rows [{dt:.1f}s]")
+            print(f"PASS {name}: {len(srows)} rows {sh} [{dt:.1f}s]")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {len(wanted)} total")
     spark.stop()
