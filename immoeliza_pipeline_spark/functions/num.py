@@ -14,6 +14,10 @@ long, and SUM INTEGERS. The integer total is identical on every
 engine regardless of order; all downstream scalar math (divide,
 round) then operates on identical inputs and stays deterministic.
 
+Derived scores and distances (ratios, Jaccard, cosine, km) go
+through ``quantize``, the one half-up rounding rule both engines
+apply before a value is compared, ranked or returned.
+
 The matching oracle-SQL text builders live here too so the two
 sides can never drift.
 """
@@ -44,9 +48,12 @@ def avg_money(expr: Column, out_dp: int = 4) -> Column:
                     / (SCALE * F.count(expr)) * so + 0.5) / so)
 
 
-def sum_units(expr: Column) -> Column:
-    """Raw exact integer total (millionths) — for ratios of sums."""
-    return F.sum(exact_units(expr))
+def quantize(x: Column, scale: int) -> Column:
+    """x rounded half-up to multiples of 1/scale. Every score and
+    distance is quantized before it is compared or ranked, so the low
+    floating-point bits on which engines may differ never decide a
+    result; the DuckDB oracle applies the same floor(x·s + 0.5)/s."""
+    return F.floor(x * scale + 0.5) / scale
 
 
 # ---- oracle-SQL text builders (identical semantics) ----
@@ -68,7 +75,3 @@ def sql_avg_money(expr: str, out_dp: int = 4) -> str:
     so = 10 ** out_dp
     return (f"(floor(sum({sql_exact_units(expr)})"
             f" / ({SCALE}e0 * count({expr})) * {so} + 0.5) / {so}e0)")
-
-
-def sql_sum_units(expr: str) -> str:
-    return f"sum({sql_exact_units(expr)})"

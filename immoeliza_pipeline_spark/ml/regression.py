@@ -29,6 +29,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from immoeliza_pipeline_spark.functions.num import quantize
+
 
 def correlation_selection(df: DataFrame, feature_cols: Sequence[str],
                           target_col: str, threshold: float = 0.10) -> DataFrame:
@@ -47,7 +49,7 @@ def correlation_selection(df: DataFrame, feature_cols: Sequence[str],
         out = out.filter(F.abs(F.col("corr")) >= threshold)
     return out.select(
         "column_name",
-        (F.floor((F.col("corr")) * 1000000 + 0.5) / 1000000).alias("corr"))
+        quantize(F.col("corr"), 1000000).alias("corr"))
 
 
 def standard_scale(df: DataFrame, cols: Sequence[str]) -> DataFrame:

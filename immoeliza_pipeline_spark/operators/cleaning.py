@@ -21,6 +21,8 @@ from collections.abc import Iterable, Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from immoeliza_pipeline_spark.functions.num import quantize
+
 
 def drop_columns(df: DataFrame, *cols: str) -> DataFrame:
     """Drop columns if present (missing names are ignored, like the
@@ -136,7 +138,7 @@ def null_fraction_profile(df: DataFrame, columns: Iterable[str] | None = None) -
     stack_expr = ", ".join(f"'{c}', `{c}`" for c in columns)
     return wide.selectExpr(
         f"stack({len(columns)}, {stack_expr}) as (column_name, null_frac)"
-    ).select("column_name", (F.floor((F.col("null_frac")) * 10000 + 0.5) / 10000).alias("null_frac"))
+    ).select("column_name", quantize(F.col("null_frac"), 10000).alias("null_frac"))
 
 
 def drop_high_null_columns(df: DataFrame, threshold: float = 0.3,

@@ -23,7 +23,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from immoeliza_pipeline_spark.functions.num import quantize
 from immoeliza_pipeline_spark.functions.text import tokens, word_shingles
+from immoeliza_pipeline_spark.sources.readers import spread as _spread
 
 DEFAULT_NUM_HASHES = 12
 DEFAULT_BANDS = 4
@@ -33,17 +35,9 @@ DEFAULT_BANDS = 4
 DEFAULT_MAX_DF_FRAC = 0.02
 
 
-from immoeliza_pipeline_spark.sources.readers import spread as _spread  # noqa: E402
-
-
-def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 3,
-                  max_df: int | float | None = None) -> DataFrame:
-    """(id, shingle) pairs, distinct per doc. ``max_df`` (scale knob)
-    drops shingles present in more than max_df docs — they generate
-    O(df²) candidate pairs while carrying no dedup signal. An int is
-    an absolute cap; a float in (0, 1) is a fraction of the input doc
-    count (cap = ceil(frac * n_docs)), which keeps the guard
-    proportional as the corpus grows.
+def shingle_table(df: DataFrame, id_col: str, text_col: str,
+                  n: int = 3) -> DataFrame:
+    """(id, shingle) pairs, distinct per doc.
 
     The token array is MATERIALIZED as its own projection before the
     n-gram transform: expressions inside higher-order-function
@@ -52,113 +46,99 @@ def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     """
     toks = _spread(df).select(
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("__toks"))
-    sh = toks.select(
+    return toks.select(
         "id",
         F.explode(F.array_distinct(
             word_shingles(F.col("__toks"), n))).alias("shingle"),
     )
-    if max_df is not None:
-        doc_freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-        if isinstance(max_df, float):
-            # fractional cap: scalar corpus count broadcast to every
-            # doc_freq row — stays lazy and distributed, no collect
-            cap = df.agg(F.ceil(F.count(F.lit(1)) * max_df).alias("__cap"))
-            doc_freq = (doc_freq.crossJoin(F.broadcast(cap))
-                        .filter(F.col("__df") <= F.col("__cap")))
-        else:
-            doc_freq = doc_freq.filter(F.col("__df") <= max_df)
-        sh = sh.join(doc_freq, "shingle", "left_semi")
-    return sh
+
+
+def _doc_freq(sh: DataFrame) -> DataFrame:
+    """(shingle, __df): the number of docs of ``sh`` holding each shingle."""
+    return sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
+
+
+def _sizes(sh: DataFrame) -> DataFrame:
+    """(id, __n): each doc's shingle count — a Jaccard denominator term."""
+    return sh.groupBy("id").agg(F.count(F.lit(1)).alias("__n"))
+
+
+def _cap(frame: DataFrame, max_df: float) -> DataFrame:
+    """1-row ``__cap`` = ceil(max_df × rows of ``frame``): the
+    stop-shingle cap as a share of the corpus, so the guard stays
+    proportional as the corpus grows. A scalar frame crossed onto the
+    doc-freq rows keeps it lazy and distributed — no collect."""
+    return frame.agg(F.ceil(F.count(F.lit(1)) * max_df).alias("__cap"))
+
+
+def _scored_pairs(a: DataFrame, b: DataFrame, on: Column | str,
+                  names: tuple[str, str],
+                  sizes_a: DataFrame, sizes_b: DataFrame,
+                  threshold: float) -> DataFrame:
+    """The near-dup pair rule: (names[0], names[1], jaccard) for every
+    doc pair of the (id, shingle) frames ``a`` ⋈ ``b`` (aliased "a"
+    and "b" for ``on``) with quantized |A∩B| / |A∪B| ≥ threshold.
+    |A∩B| is the joined shingle count; |A∪B| = n_a + n_b − |A∩B| from
+    the (id, __n) ``sizes_*``, which must count the same shingle
+    universe as the join sides' stop-shingle filter."""
+    id1, id2 = names
+    common = (a.alias("a").join(b.alias("b"), on)
+              .groupBy(F.col("a.id").alias(id1), F.col("b.id").alias(id2))
+              .agg(F.count(F.lit(1)).alias("common")))
+    jac = F.col("common") / (F.col("__n1") + F.col("__n2") - F.col("common"))
+    return (common
+            .join(sizes_a.select(F.col("id").alias(id1),
+                                 F.col("__n").alias("__n1")), id1)
+            .join(sizes_b.select(F.col("id").alias(id2),
+                                 F.col("__n").alias("__n2")), id2)
+            .withColumn("jaccard", quantize(jac, 10000))
+            .filter(F.col("jaccard") >= threshold)
+            .select(id1, id2, "jaccard"))
 
 
 def jaccard_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
                   threshold: float = 0.8,
-                  max_df: int | float | None = None) -> DataFrame:
+                  max_df: float | None = None) -> DataFrame:
     """Exact n-gram Jaccard similarity for all candidate pairs
-    sharing ≥1 shingle; returns pairs ≥ threshold.
+    sharing ≥1 shingle; returns pairs ≥ threshold. ``max_df`` drops
+    stop-shingles held by more than ceil(max_df × docs) docs from
+    both the join and the sizes.
 
-    The shingle table feeds three consumers (both join sides + the
-    per-doc sizes); persist it so the explode/md5 stage runs once.
+    Candidate prefilter (result-identical): a shingle with document
+    frequency 1 can never produce a pair, and in a real corpus most
+    shingles are unique, so both join sides are semi-joined down to
+    df ≥ 2 shingles first. Sizes keep counting every non-stop
+    shingle: the Jaccard denominator includes a doc's unique ones.
 
-    Candidate prefilter (pure plan optimization — the result set is
-    identical): a shingle with document frequency 1 can never produce
-    a pair, yet it still pays two shuffles and a hash probe in the
-    self-join. In a real corpus MOST shingles are unique, so both join
-    sides are semi-joined down to df ≥ 2 shingles first — one extra
-    map-side-combined agg buys a several-fold smaller self-join input
-    (measured 76→44s on the 100× corpus-build probe). Sizes keep
-    counting the FULL shingle table: the Jaccard denominator includes
-    a doc's unique shingles.
-
-    The persist sits on the RAW shingle table (r11 optimization
-    pass): previously it sat ABOVE the max_df semi-join, so while the
-    cache was being materialized the guard's doc-frequency aggregation
-    re-executed the whole parquet→tokenize→explode pipeline a second
-    time. The doc-frequency is aggregated over the cached table once;
-    only its REPEATED rows (df ≥ 2) are kept and persisted (r12 pass —
-    see the inline comment), because both df-filter branches live
-    inside them: ``df > cap`` is the stop set the sizes universe
-    anti-joins away, ``2 ≤ df ≤ cap`` is the candidate keep set. The
-    per-doc sizes stay persisted too (they feed the n1 and n2 joins,
-    and runtime exchange reuse does not fire across those branches —
-    verified in the formatted plan). Results are identical: the cap
-    filter only drops rows — it never changes a surviving shingle's
-    df — and df ≤ cap ≡ NOT (df > cap) over a total doc-freq table.
+    The persist sits on the RAW shingle table, so the doc-frequency
+    aggregation reads the cache instead of re-running the
+    tokenize/explode pipeline. Only the doc-freq rows with df ≥ 2 are
+    kept (and persisted): the candidate keep set is 2 ≤ df ≤ cap, and
+    the stop set df > cap implies df ≥ 2 because cap ≥ 1, so the
+    sizes universe is an ANTI-join against the tiny stop set
+    (df ≤ cap ≡ NOT df > cap over a total doc-freq table). The per-doc
+    sizes stay persisted too: they feed both size joins.
     """
     sh_raw = shingle_table(df, id_col, text_col, n).persist()
-    doc_freq = sh_raw.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    # Keep only the REPEATED shingles' doc-frequencies (r12
-    # optimization pass, guide §2.3/§3.1): the previous form persisted
-    # the per-distinct-shingle `capped` table — vocab-sized, since most
-    # shingles in a real corpus are unique — and probed it three times
-    # (sizes universe + both candidate sides), so the probes built a
-    # vocab-sized broadcast/join side. But every df-filter branch only
-    # ever needs df ≥ 2 rows: the candidate keep set is 2 ≤ df ≤ cap by
-    # definition, and the sizes universe (df ≤ cap) is the COMPLEMENT
-    # of the stop set (df > cap ⟹ df ≥ 2 because cap ≥ 1), so it
-    # becomes a broadcast ANTI-join against the tiny stop set — the
-    # exact shape jaccard_pairs_against_index already uses. The cache
-    # and every join build side shrink from all-distinct-shingles to
-    # repeated-shingles-only; results are identical by the complement
-    # identity (df ≤ cap ≡ NOT df > cap over a total doc_freq).
-    rep = doc_freq.filter(F.col("__df") >= 2)
-    if isinstance(max_df, float):
-        cap = df.agg(F.ceil(F.count(F.lit(1)) * max_df).alias("__cap"))
-        rep = rep.crossJoin(F.broadcast(cap))
-        stop_cond = F.col("__df") > F.col("__cap")
-    elif max_df is not None:
-        stop_cond = F.col("__df") > max_df
-    else:
+    rep = _doc_freq(sh_raw).filter(F.col("__df") >= 2)
+    if max_df is None:
         stop_cond = F.lit(False)
+    else:
+        rep = rep.crossJoin(F.broadcast(_cap(df, max_df)))
+        stop_cond = F.col("__df") > F.col("__cap")
     # one small cache feeds every probe: stop = rep[stop_cond],
     # candidate keep set = rep[~stop_cond]
     rep = rep.persist()
-    if max_df is None:
-        sh = sh_raw
-    else:
-        sh = sh_raw.join(rep.filter(stop_cond).select("shingle"),
-                         "shingle", "left_anti")
-    # doc-count-sized; feeds BOTH the n1 and n2 joins below
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh")).persist()
+    sh = sh_raw if max_df is None else sh_raw.join(
+        rep.filter(stop_cond).select("shingle"), "shingle", "left_anti")
+    sizes = _sizes(sh).persist()
     sh_c = sh_raw.join(rep.filter(~stop_cond).select("shingle"),
                        "shingle", "left_semi")
-    a = sh_c.alias("a")
-    b = sh_c.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col("id").alias("id1"), F.col("n_sh").alias("n1"))
-    sb = sizes.select(F.col("id").alias("id2"), F.col("n_sh").alias("n2"))
-    jac = F.col("common") / (F.col("n1") + F.col("n2") - F.col("common"))
-    return (
-        common.join(sa, "id1").join(sb, "id2")
-        .withColumn("jaccard", (F.floor((jac) * 10000 + 0.5) / 10000))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
-    )
+    return _scored_pairs(
+        sh_c, sh_c,
+        (F.col("a.shingle") == F.col("b.shingle"))
+        & (F.col("a.id") < F.col("b.id")),
+        ("id1", "id2"), sizes, sizes, threshold)
 
 
 def banded_self_join(frame: DataFrame, band_cols: list[str], id_col: str,
@@ -176,31 +156,12 @@ def banded_self_join(frame: DataFrame, band_cols: list[str], id_col: str,
     predicate inside the join (for every band p before the matched
     one, the two rows' band-p values must differ) keeps each pair
     exactly once — the same pair set a distinct would produce,
-    without shuffling the (much larger) candidate set. The frame
+    without shuffling the (much larger) candidate set. Earlier-band
+    comparisons use NULL→no-match semantics (~coalesce(=, false)),
+    so NULL bands neither match nor suppress later matches. The frame
     then joins back once per side to feed pair_select. ``frame``
     should be persisted by the caller — it feeds the key table and
-    both payload sides.
-
-    The first-match predicate replaced ``.distinct()`` (r11
-    optimization pass, guide §2.4): the distinct was the single
-    biggest stage of every caller — one Exchange + HashAggregate over
-    the full candidate multiset (≈1M rows at sf0.1 for the embedding
-    caller, measured 2.07s of its 2.62s wall) — while the predicate
-    is B-1 extra integer/string comparisons per joined row and the
-    key rows widen by the B-1 earlier band values, which is tiny
-    relative to a candidate-set shuffle at every scale. Earlier-band
-    comparisons use NULL→no-match semantics (~coalesce(=, false)),
-    so NULL bands neither match nor suppress later matches — the
-    property the tests pin.
-
-    This replaced a bands-way union of first-matching-band join
-    branches (r≤10 history): the branch form rescans the persisted
-    frame 2×bands times, which MEASURED 2.7–3.7× slower at 10× docs
-    across all three callers (SimHash 16.3→4.9s, MinHash 7.4→2.8s,
-    embedding-LSH 80.8→22.1s isolated) — the light-key explode +
-    two payload joins win even when the payload is a 64-double
-    vector, because the pair count after banding is tiny relative to
-    the frame."""
+    both payload sides."""
     keys = frame.select(
         F.col(id_col).alias("__id"),
         *[F.col(c).alias(f"__b{i}") for i, c in enumerate(band_cols[:-1])],
@@ -235,18 +196,13 @@ def contamination_overlap(df: DataFrame, id_col: str, text_col: str,
     hygiene op: drop/flag training docs that leak eval data.
 
     Scale shape: benchmark sets are small (eval suites), so their
-    distinct-shingle table broadcasts; candidate generation is a
-    broadcast semi-join keyed on the shingle — corpus-side work is
-    one shingle scan, no self-join. The shingle table feeds both the
-    benchmark side and the corpus side, so it is persisted to keep
-    the tokenize/explode pass single."""
+    shingle table broadcasts; candidate generation is a broadcast
+    semi-join keyed on the shingle — corpus-side work is one shingle
+    scan, no self-join. The semi-join's hash build dedups the
+    benchmark shingles itself, so the probe side takes no distinct.
+    The shingle table feeds both the benchmark side and the corpus
+    side, so it is persisted to keep the tokenize/explode pass single."""
     sh = shingle_table(df, id_col, text_col, n).persist()
-    # no .distinct() on the benchmark probe side (r12 pass, guide
-    # §2.4): the left-semi join's broadcast hash build dedups keys
-    # itself, so the distinct was an extra shuffle+agg of the
-    # benchmark shingle set per query for an identical result (the
-    # broadcast collect grows by the benchmark's internal repeats,
-    # which a fixed-size eval suite keeps bounded)
     bench_shingles = (sh.filter(bench_filter(F.col("id")))
                       .select("shingle"))
     return (sh.filter(~bench_filter(F.col("id")))
@@ -258,7 +214,7 @@ def contamination_overlap(df: DataFrame, id_col: str, text_col: str,
 def jaccard_pairs_between(new_df: DataFrame, old_df: DataFrame,
                           id_col: str, text_col: str, n: int = 3,
                           threshold: float = 0.8,
-                          max_df: int | float | None = None) -> DataFrame:
+                          max_df: float | None = None) -> DataFrame:
     """Incremental near-dup detection: Jaccard ≥ threshold pairs of a
     NEW batch against an EXISTING corpus — the ingestion-time shape at
     100 TB, where re-shingling the whole corpus per batch is the thing
@@ -266,7 +222,7 @@ def jaccard_pairs_between(new_df: DataFrame, old_df: DataFrame,
     production pipeline persists between batches (id, shingle) —
     candidate generation is a new-side shingle scan joined against
     that index, so per-batch cost is proportional to the BATCH, not
-    the corpus. ``max_df`` (fractional = share of the existing corpus)
+    the corpus. ``max_df`` (a share of the existing corpus's docs)
     drops STOP-shingles (existing-corpus doc freq above the cap) from
     BOTH sides — sizes must count the same shingle universe as the
     intersection, or a boilerplate-heavy exact duplicate scores 0.7
@@ -277,31 +233,24 @@ def jaccard_pairs_between(new_df: DataFrame, old_df: DataFrame,
     and a semi-join would silently drop it from n_new — a new doc
     that merely CONTAINS a small old doc plus novel text would then
     score jaccard 1.0 and be falsely flagged as a near-dup."""
-    idx = shingle_table(old_df, id_col, text_col, n)
-    cap_frame = (old_df.agg(F.ceil(F.count(F.lit(1)) * max_df).alias("__cap"))
-                 if isinstance(max_df, float) else None)
     return jaccard_pairs_against_index(
-        new_df, idx, id_col, text_col, n=n, threshold=threshold,
-        max_df=max_df, cap_frame=cap_frame)
+        new_df, shingle_table(old_df, id_col, text_col, n), id_col,
+        text_col, n=n, threshold=threshold,
+        cap=None if max_df is None else _cap(old_df, max_df))
 
 
 def jaccard_pairs_against_index(new_df: DataFrame, index: DataFrame,
                                 id_col: str, text_col: str, n: int = 3,
                                 threshold: float = 0.8,
-                                max_df: int | float | None = None,
-                                cap_frame: DataFrame | None = None) -> DataFrame:
+                                cap: DataFrame | None = None) -> DataFrame:
     """jaccard_pairs_between with the existing corpus already in
     shingle-index form — ``index`` is an (id, shingle) frame, e.g.
     read back from the parquet a production pipeline persists between
     ingestion batches. The corpus is never re-shingled here; every
     per-batch cost is driven by the batch and the index join.
-
-    ``cap_frame`` (1-row ``__cap``) fixes the fractional stop-shingle
-    cap; when omitted with a float ``max_df``, the cap falls back to
-    ``ceil(max_df × countDistinct(index.id))`` — the doc count as the
-    INDEX sees it (docs too short to produce any shingle are invisible
-    to it, which is also the only corpus-size signal a pure index
-    carries).
+    ``cap`` (a 1-row ``__cap`` frame, see _cap) turns on the
+    stop-shingle guard: index shingles held by more than __cap index
+    docs are anti-joined away from both sides.
 
     Persist scope: the returned plan depends on persisted
     intermediates (stop/index/batch shingles), which therefore cannot
@@ -310,55 +259,30 @@ def jaccard_pairs_against_index(new_df: DataFrame, index: DataFrame,
     ``spark.catalog.clearCache()`` per batch (what the registry's
     _pinned boundary and the multi-batch test do), or executor
     storage grows by ~3 frames per batch."""
-    # Persist the RAW shingle tables (r11 optimization pass): the
-    # persists used to sit ABOVE the stop-shingle anti-joins, so while
-    # the index cache materialized, the stop set's doc-frequency agg
-    # had already re-executed the index's tokenize/explode pipeline a
-    # second time (and stop itself derives from idx). Caching the raw
-    # frames instead means the (corpus-sized) index pipeline runs
-    # exactly once; the cheap broadcast anti-join against the tiny
-    # stop set is re-evaluated per consumer from the cache.
+    # the RAW shingle tables are persisted, so the (corpus-sized)
+    # index pipeline runs once even though the stop set derives from
+    # it; the broadcast anti-join against the tiny stop set is
+    # re-evaluated per consumer from the cache
     sh_new = shingle_table(new_df, id_col, text_col, n).persist()
     idx = index.select(F.col("id"), F.col("shingle")).persist()
-    if max_df is not None:
-        doc_freq = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-        if isinstance(max_df, float):
-            if cap_frame is None:
-                cap_frame = idx.agg(
-                    F.ceil(F.countDistinct("id") * max_df).alias("__cap"))
-            stop = (doc_freq.crossJoin(F.broadcast(cap_frame))
-                    .filter(F.col("__df") > F.col("__cap")))
-        else:
-            stop = doc_freq.filter(F.col("__df") > max_df)
+    if cap is not None:
         # stop sets are tiny by construction (boilerplate only) —
         # persist so the existing-corpus doc-freq agg runs once for
         # the anti-join consumers
-        stop = stop.select("shingle").persist()
+        stop = (_doc_freq(idx).crossJoin(F.broadcast(cap))
+                .filter(F.col("__df") > F.col("__cap"))
+                .select("shingle").persist())
         idx = idx.join(stop, "shingle", "left_anti")
         sh_new = sh_new.join(stop, "shingle", "left_anti")
-    sizes_new = sh_new.groupBy("id").agg(F.count(F.lit(1)).alias("n_new"))
-    sizes_old = idx.groupBy("id").agg(F.count(F.lit(1)).alias("n_old"))
     # candidate prefilter (result-identical): only index shingles that
     # also occur in the BATCH can produce a pair, so the (corpus-sized)
     # index join side is semi-joined down to the batch's shingle set —
-    # batch-sized, so AQE turns this into a broadcast semi-join and the
-    # candidate join's corpus-side input shrinks to the overlap.
-    # No .distinct() on the probe side (r12 pass, guide §2.4): a
-    # semi-join ignores right-side multiplicity — its hash build
-    # dedups keys anyway — so the distinct was a full extra shuffle of
-    # the batch shingle set for an identical result.
+    # batch-sized, so AQE turns this into a broadcast semi-join. A
+    # semi-join ignores right-side multiplicity, so the probe side
+    # takes no distinct.
     idx_c = idx.join(sh_new.select("shingle"), "shingle", "left_semi")
-    common = (
-        sh_new.alias("a").join(idx_c.alias("b"), "shingle")
-        .groupBy(F.col("a.id").alias("new_id"), F.col("b.id").alias("old_id"))
-        .agg(F.count(F.lit(1)).alias("common")))
-    jac = F.col("common") / (F.col("n_new") + F.col("n_old") - F.col("common"))
-    return (common
-            .join(sizes_new.select(F.col("id").alias("new_id"), "n_new"), "new_id")
-            .join(sizes_old.select(F.col("id").alias("old_id"), "n_old"), "old_id")
-            .withColumn("jaccard", (F.floor((jac) * 10000 + 0.5) / 10000))
-            .filter(F.col("jaccard") >= threshold)
-            .select("new_id", "old_id", "jaccard"))
+    return _scored_pairs(sh_new, idx_c, "shingle", ("new_id", "old_id"),
+                         _sizes(sh_new), _sizes(idx), threshold)
 
 
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
@@ -408,7 +332,7 @@ def lsh_candidates(signatures: DataFrame,
     return (candidates
             .filter(F.col("est_sim") >= est_threshold)
             .select("id1", "id2",
-                    (F.floor((F.col("est_sim")) * 10000 + 0.5) / 10000).alias("est_sim")))
+                    quantize(F.col("est_sim"), 10000).alias("est_sim")))
 
 
 def connected_components(pairs: DataFrame, id1: str = "id1",

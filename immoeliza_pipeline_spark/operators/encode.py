@@ -18,6 +18,8 @@ from collections.abc import Iterable, Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from immoeliza_pipeline_spark.functions.num import quantize
+
 
 def target_encoding_map(df: DataFrame, categorical_col: str,
                         target_col: str) -> DataFrame:
@@ -72,7 +74,7 @@ def category_counts(df: DataFrame, column: str,
         .select(
             column,
             "cnt",
-            (F.floor((F.col("cnt") / F.col("__total")) * 1000000 + 0.5) / 1000000).alias("pct"),
+            quantize(F.col("cnt") / F.col("__total"), 1000000).alias("pct"),
             (F.col("cnt") / F.col("__total") < rare_threshold).alias("is_rare"),
         )
     )

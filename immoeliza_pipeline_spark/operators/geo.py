@@ -18,6 +18,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from immoeliza_pipeline_spark.functions.num import quantize
+
 EARTH_RADIUS_KM = 6371.0
 
 # The reference's 10 Belgian cities (preprocessing.py:489-493).
@@ -49,8 +51,8 @@ def assign_city_by_proximity(df: DataFrame, id_col: str, lat_col: str, lon_col: 
     """Per row: has_city_<r> flag for each radius + the nearest city
     within the largest radius. One broadcast cross join + one groupBy
     on the row id — no geometry library, no per-row Python."""
-    dist = (F.floor((haversine_km(F.col(lat_col), F.col(lon_col),
-                                F.col("city_lat"), F.col("city_lon"))) * 1000000 + 0.5) / 1000000)
+    dist = quantize(haversine_km(F.col(lat_col), F.col(lon_col),
+                                 F.col("city_lat"), F.col("city_lon")), 1000000)
     scored = (
         df.select(id_col, lat_col, lon_col)
         .crossJoin(F.broadcast(cities))
@@ -81,8 +83,8 @@ def assign_city_by_proximity_literal(df: DataFrame, lat_col: str, lon_col: str,
     zero exchanges. Semantically identical to
     assign_city_by_proximity (same rounding and tie-breaks)."""
     dists = [
-        (F.floor((haversine_km(F.col(lat_col), F.col(lon_col),
-                             F.lit(clat), F.lit(clon))) * 1000000 + 0.5) / 1000000).alias(f"__d_{i}")
+        quantize(haversine_km(F.col(lat_col), F.col(lon_col),
+                              F.lit(clat), F.lit(clon)), 1000000).alias(f"__d_{i}")
         for i, (_name, clat, clon) in enumerate(cities)
     ]
     out = df.select("*", *dists)

@@ -18,6 +18,8 @@ from collections.abc import Iterable, Mapping, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from immoeliza_pipeline_spark.functions.num import quantize
+
 
 def _pct(col: str, p: float, exact: bool):
     if exact:
@@ -97,11 +99,11 @@ def iqr_outlier_profile(df: DataFrame, columns: Iterable[str],
     pieces = []
     for c in columns:
         wide = wide.withColumn(
-            f"{c}__skew", F.floor(F.col(f"{c}__skew") * 1000 + 0.5) / 1000)
-        wide = wide.withColumn(f"{c}__iqr",
-                               (F.floor((F.col(f"{c}__q3") - F.col(f"{c}__q1")) * 10000 + 0.5) / 10000))
-        wide = wide.withColumn(f"{c}__q1r", (F.floor((F.col(f"{c}__q1")) * 10000 + 0.5) / 10000))
-        wide = wide.withColumn(f"{c}__q3r", (F.floor((F.col(f"{c}__q3")) * 10000 + 0.5) / 10000))
+            f"{c}__skew", quantize(F.col(f"{c}__skew"), 1000))
+        wide = wide.withColumn(f"{c}__iqr", quantize(
+            F.col(f"{c}__q3") - F.col(f"{c}__q1"), 10000))
+        wide = wide.withColumn(f"{c}__q1r", quantize(F.col(f"{c}__q1"), 10000))
+        wide = wide.withColumn(f"{c}__q3r", quantize(F.col(f"{c}__q3"), 10000))
         pieces.append(
             f"'{c}', `{c}__q1r`, `{c}__q3r`, `{c}__iqr`, `{c}__n_out`, `{c}__skew`")
     stack = ", ".join(pieces)

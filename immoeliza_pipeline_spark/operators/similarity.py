@@ -16,6 +16,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from immoeliza_pipeline_spark.functions.num import quantize
+
 
 def as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -38,14 +40,6 @@ def cosine(a: Column, b: Column) -> Column:
 def sq_dist(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
                        F.lit(0.0), lambda acc, x: acc + x)
-
-
-def quantize(x: Column, scale: int) -> Column:
-    """x rounded half-up to multiples of 1/scale. Every score and
-    distance is quantized before it is compared or ranked, so the low
-    floating-point bits on which engines may differ never decide a
-    result; the DuckDB oracle applies the same floor(x·s + 0.5)/s."""
-    return F.floor(x * scale + 0.5) / scale
 
 
 def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:

@@ -1,5 +1,5 @@
 """Reusable window-based operators: as-of join, sessionization,
-top-k per group, salted joins for skew.
+salted joins for skew.
 
 The as-of join is the union-tag/window form: tag both sides, sort by
 (key, time, tag), carry the last non-null right-side value forward —
@@ -69,14 +69,6 @@ def sessionize(df: DataFrame, key: str, ts_col: str, gap_seconds: int,
         F.sum("__is_new").over(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     ).drop("__is_new")
-
-
-def topk_per_group(df: DataFrame, group: str, order_col: str, k: int,
-                   tiebreak: str, ascending: bool = False) -> DataFrame:
-    order = [F.asc(order_col) if ascending else F.desc(order_col), F.asc(tiebreak)]
-    w = Window.partitionBy(group).orderBy(*order)
-    return (df.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
 
 
 def salted_join(big: DataFrame, skewed_small: DataFrame, key: str,

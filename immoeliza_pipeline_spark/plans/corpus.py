@@ -17,7 +17,10 @@ from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.functions import text as T
 from immoeliza_pipeline_spark.operators import dedup as D
-from immoeliza_pipeline_spark.operators.similarity import md5_bucket16, quantize
+from immoeliza_pipeline_spark.functions.num import quantize
+from immoeliza_pipeline_spark.operators.similarity import md5_bucket16
+from immoeliza_pipeline_spark.plans.dedup import components_ctes, pairs_ctes
+from immoeliza_pipeline_spark.plans.text import _STOP_IN, _TOKS
 from immoeliza_pipeline_spark.sources.readers import load_table
 
 # per-language sampling rates as md5-prefix hex thresholds:
@@ -56,10 +59,6 @@ SELECT doc_id, lang
 FROM documents
 WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < {_THRESH_CASE}
 """
-
-_TOKS = "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
-_STOP_IN = ", ".join(f"'{s}'" for s in T.STOPWORDS)
-
 
 def _gate(docs: DataFrame, max_rep: float | None = None) -> DataFrame:
     """(doc_id, lang, text, __n): the (doc_id, lang, text) docs that
@@ -146,39 +145,8 @@ quality AS (
   WHERE len(t) >= 20
     AND len(list_filter(t, x -> x IN ({_STOP_IN}))) / len(t)::DOUBLE <= 0.5
 ),
-sh_all AS (
-  SELECT DISTINCT q.doc_id AS id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-  FROM quality q, unnest(range(1, len(t) - 1)) AS u(i)
-  WHERE len(t) >= 3
-),
-keep AS (
-  SELECT shingle FROM sh_all GROUP BY shingle
-  HAVING count(*) <= ceil((SELECT count(*) FROM quality) * {D.DEFAULT_MAX_DF_FRAC})
-),
-sh AS (SELECT sh_all.id, sh_all.shingle FROM sh_all JOIN keep USING (shingle)),
-cnt AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-common AS (
-  SELECT a.id AS id1, b.id AS id2, count(*) AS common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT id1, id2
-  FROM common JOIN cnt ca ON ca.id = id1 JOIN cnt cb ON cb.id = id2
-  WHERE (floor((common * 1.0 / (ca.n_sh + cb.n_sh - common)) * 10000 + 0.5) / 10000) >= 0.8
-),
-edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
-          UNION SELECT id2, id1 FROM pairs),
-reach AS (
-  WITH RECURSIVE r(src, dst) AS (
-    SELECT src, dst FROM edges
-    UNION
-    SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src
-  )
-  SELECT * FROM r
-),
-reps AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
-         FROM reach GROUP BY src),
+{pairs_ctes("quality", 0.8)},
+{components_ctes("pairs")},
 non_canonical AS (SELECT doc_id FROM reps WHERE doc_id <> cluster_rep),
 deduped AS (
   SELECT * FROM quality
@@ -569,39 +537,8 @@ gated AS (
     AND len(list_filter(t, x -> x IN ({_STOP_IN}))) / len(t)::DOUBLE <= 0.5
     AND {rep} <= 0.2
 ),
-sh_all AS (
-  SELECT DISTINCT q.doc_id AS id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-  FROM gated q, unnest(range(1, len(t) - 1)) AS u(i)
-  WHERE len(t) >= 3
-),
-keep AS (
-  SELECT shingle FROM sh_all GROUP BY shingle
-  HAVING count(*) <= ceil((SELECT count(*) FROM gated) * {D.DEFAULT_MAX_DF_FRAC})
-),
-sh AS (SELECT sh_all.id, sh_all.shingle FROM sh_all JOIN keep USING (shingle)),
-cnt AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-common AS (
-  SELECT a.id AS id1, b.id AS id2, count(*) AS common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT id1, id2
-  FROM common JOIN cnt ca ON ca.id = id1 JOIN cnt cb ON cb.id = id2
-  WHERE (floor((common * 1.0 / (ca.n_sh + cb.n_sh - common)) * 10000 + 0.5) / 10000) >= 0.8
-),
-{_semantic_ctes() if semantic else ''}edges AS (SELECT id1 AS src, id2 AS dst FROM {ep}
-          UNION SELECT id2, id1 FROM {ep}),
-reach AS (
-  WITH RECURSIVE r(src, dst) AS (
-    SELECT src, dst FROM edges
-    UNION
-    SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src
-  )
-  SELECT * FROM r
-),
-reps AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
-         FROM reach GROUP BY src),
+{pairs_ctes("gated", 0.8)},
+{_semantic_ctes() if semantic else ''}{components_ctes(ep)},
 non_canonical AS (SELECT doc_id FROM reps WHERE doc_id <> cluster_rep),
 deduped AS (
   SELECT * FROM gated

@@ -12,29 +12,72 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.operators import dedup as D
+from immoeliza_pipeline_spark.plans.text import _TOKS
 from immoeliza_pipeline_spark.sources.readers import load_table
 
-_TOKS = "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
+_DOC_TOKS = f"toks AS (SELECT doc_id, {_TOKS} AS t FROM documents)"
 # distinct word trigrams per doc (DuckDB); range(1, n) excludes n
 _SHINGLES_CTE = f"""
-  toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+  {_DOC_TOKS},
   sh AS (
     SELECT DISTINCT doc_id AS id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
     FROM toks, unnest(range(1, len(t) - 1)) AS u(i)
     WHERE len(t) >= 3
   )
 """
-# jaccard/clusters run with the stop-shingle guard ON: shingles in
-# more than DEFAULT_MAX_DF_FRAC of docs are dropped before the
-# inverted-index join (mirrors operators.dedup.shingle_table's
-# fractional max_df)
-_SHINGLES_FILTERED_CTE = _SHINGLES_CTE.replace("sh AS (", "sh_all AS (") + f""",
-  keep AS (
-    SELECT shingle FROM sh_all GROUP BY shingle
-    HAVING count(*) <= ceil((SELECT count(*) FROM documents) * {D.DEFAULT_MAX_DF_FRAC})
-  ),
-  sh AS (SELECT sh_all.id, sh_all.shingle FROM sh_all JOIN keep USING (shingle))
-"""
+
+
+def pairs_ctes(src: str, threshold: float) -> str:
+    """DuckDB CTEs ending in ``pairs(id1, id2, jaccard)``: the
+    near-dup pair rule of operators.dedup.jaccard_pairs with
+    ``max_df=DEFAULT_MAX_DF_FRAC`` over the (doc_id, t) token arrays
+    of the ``src`` CTE. Distinct word trigrams held by more than
+    ceil(DEFAULT_MAX_DF_FRAC × rows of src) docs are dropped from the
+    join and the sizes alike; jaccard is |A∩B| / |A∪B| quantized to
+    1/10000 and kept at ≥ threshold."""
+    return f"""sh_all AS (
+  SELECT DISTINCT q.doc_id AS id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
+  FROM {src} q, unnest(range(1, len(t) - 1)) AS u(i)
+  WHERE len(t) >= 3
+),
+keep AS (
+  SELECT shingle FROM sh_all GROUP BY shingle
+  HAVING count(*) <= ceil((SELECT count(*) FROM {src}) * {D.DEFAULT_MAX_DF_FRAC})
+),
+sh AS (SELECT sh_all.id, sh_all.shingle FROM sh_all JOIN keep USING (shingle)),
+cnt AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
+common AS (
+  SELECT a.id AS id1, b.id AS id2, count(*) AS common
+  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
+  GROUP BY 1, 2
+),
+scored AS (
+  SELECT id1, id2,
+         floor((common * 1.0 / (ca.n_sh + cb.n_sh - common)) * 10000 + 0.5)
+           / 10000 AS jaccard
+  FROM common JOIN cnt ca ON ca.id = id1 JOIN cnt cb ON cb.id = id2
+),
+pairs AS (SELECT id1, id2, jaccard FROM scored WHERE jaccard >= {threshold!r})"""
+
+
+def components_ctes(pairs: str) -> str:
+    """DuckDB CTEs ending in ``reps(doc_id, cluster_rep)``: every doc
+    of the (id1, id2) ``pairs`` CTE with the minimum id of its
+    connected component, by recursive transitive closure — the
+    answer operators.dedup.connected_components reaches by label
+    propagation."""
+    return f"""edges AS (SELECT id1 AS src, id2 AS dst FROM {pairs}
+          UNION SELECT id2, id1 FROM {pairs}),
+reach AS (
+  WITH RECURSIVE r(src, dst) AS (
+    SELECT src, dst FROM edges
+    UNION
+    SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src
+  )
+  SELECT * FROM r
+),
+reps AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
+         FROM reach GROUP BY src)"""
 
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,16 +90,9 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 JACCARD_SQL = f"""
-WITH {_SHINGLES_FILTERED_CTE},
-cnt AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-common AS (
-  SELECT a.id AS id1, b.id AS id2, count(*) AS common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-  GROUP BY 1, 2
-)
-SELECT id1, id2, (floor((common * 1.0 / (ca.n_sh + cb.n_sh - common)) * 10000 + 0.5) / 10000) AS jaccard
-FROM common JOIN cnt ca ON ca.id = id1 JOIN cnt cb ON cb.id = id2
-WHERE (floor((common * 1.0 / (ca.n_sh + cb.n_sh - common)) * 10000 + 0.5) / 10000) >= 0.8
+WITH {_DOC_TOKS},
+{pairs_ctes("toks", 0.8)}
+SELECT id1, id2, jaccard FROM pairs
 """
 
 _H = D.DEFAULT_NUM_HASHES
@@ -348,30 +384,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CLUSTERS_SQL = f"""
-WITH {_SHINGLES_FILTERED_CTE},
-cnt AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-common AS (
-  SELECT a.id AS id1, b.id AS id2, count(*) AS common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT id1, id2
-  FROM common JOIN cnt ca ON ca.id = id1 JOIN cnt cb ON cb.id = id2
-  WHERE (floor((common * 1.0 / (ca.n_sh + cb.n_sh - common)) * 10000 + 0.5) / 10000) >= 0.8
-),
-edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
-          UNION SELECT id2, id1 FROM pairs),
-reach AS (
-  WITH RECURSIVE r(src, dst) AS (
-    SELECT src, dst FROM edges
-    UNION
-    SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src
-  )
-  SELECT * FROM r
-)
-SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
-FROM reach GROUP BY src
+WITH {_DOC_TOKS},
+{pairs_ctes("toks", 0.8)},
+{components_ctes("pairs")}
+SELECT doc_id, cluster_rep FROM reps
 """
 
 
@@ -431,21 +447,8 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 _THR_VALUES = ", ".join(f"({t!r})" for t in SWEEP_THRESHOLDS)
 
 THRESHOLD_SWEEP_SQL = f"""
-WITH {_SHINGLES_FILTERED_CTE},
-cnt AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-common AS (
-  SELECT a.id AS id1, b.id AS id2, count(*) AS common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT id1, id2,
-         (floor((common * 1.0 / (ca.n_sh + cb.n_sh - common)) * 10000 + 0.5)
-          / 10000) AS jaccard
-  FROM common JOIN cnt ca ON ca.id = id1 JOIN cnt cb ON cb.id = id2
-  WHERE (floor((common * 1.0 / (ca.n_sh + cb.n_sh - common)) * 10000 + 0.5)
-         / 10000) >= {min(SWEEP_THRESHOLDS)!r}
-),
+WITH {_DOC_TOKS},
+{pairs_ctes("toks", min(SWEEP_THRESHOLDS))},
 thr AS (SELECT * FROM (VALUES {_THR_VALUES}) t(threshold)),
 tp AS (SELECT threshold, id1, id2 FROM pairs CROSS JOIN thr
        WHERE jaccard >= threshold),

@@ -21,8 +21,7 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = E.read_event_stream(spark, sf_dir)
     agg = E.windowed_counts(stream, window="1 hour", watermark="2 hours")
     name = "stream_windowed_counts_out"
-    result = E.process_all(agg, spark, name, output_mode="complete",
-                           shuffle_partitions=4)
+    result = E.process_all(agg, spark, name, output_mode="complete")
     # memory-sink tables are session-scoped; materialize the columns.
     # window_start is exported as epoch-µs BIGINT, never as a raw
     # TIMESTAMP: PySpark's collect() renders TimestampType through the
@@ -52,7 +51,7 @@ def stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = E.read_event_stream(spark, sf_dir)
     sess = E.session_windows(stream, gap="30 minutes")
     result = E.process_all(sess, spark, "stream_sessionization_out",
-                           output_mode="complete", shuffle_partitions=4)
+                           output_mode="complete")
     return result.select(
         "user_id",
         F.unix_micros(F.col("session_start").cast("timestamp"))
@@ -137,11 +136,8 @@ def stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = attribution_join(
         _event_side(src, "view", "view_id", "view_ts"),
         _event_side(src, "purchase", "purchase_id", "purchase_ts"))
-    # state here is ~a watermark horizon of views/purchases (KB at
-    # any SF) — 4 state partitions cut fixed micro-batch machinery
-    # (9.2s -> ~4s at sf0.1) without touching results
     return E.process_all(out, spark, "stream_attribution_out",
-                         output_mode="append", shuffle_partitions=4)
+                         output_mode="append")
 
 
 STREAM_ATTRIBUTION_SQL = """
@@ -174,7 +170,7 @@ def stream_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("w.start").cast("timestamp")).alias("day_start_us"),
         "c_mktsegment", "n_events", "sum_value")
     return E.process_all(out, spark, "stream_enriched_out",
-                         output_mode="complete", shuffle_partitions=4)
+                         output_mode="complete")
 
 
 # time_bucket's default origin (2000-01-03) differs from Spark's

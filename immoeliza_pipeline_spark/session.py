@@ -33,11 +33,10 @@ def _default_driver_mem() -> str:
 
 
 def get_spark(app_name: str = "immoeliza-pipeline-spark",
-              cpus: str | int | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's tuned conf."""
+              cpus: str | int | None = None) -> SparkSession:
+    """Build (or fetch) a SparkSession with the engine's tuned conf;
+    shuffle partitions = cpus."""
     cpus = str(cpus or DEFAULT_CPUS)
-    shuffle_partitions = int(shuffle_partitions or int(cpus))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -47,7 +46,7 @@ def get_spark(app_name: str = "immoeliza-pipeline-spark",
         # exceptions: one empty document must not kill a 100 TB job,
         # and the DuckDB oracle returns NULL for these cases.
         .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

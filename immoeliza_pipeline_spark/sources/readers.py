@@ -44,70 +44,13 @@ def spread(df: DataFrame) -> DataFrame:
     as ONE partition (parquet splits stop at row-group granularity) —
     without this, per-row-heavy expression work (hashing, trig, array
     folds) runs on one core until the first shuffle, no matter how
-    wide the cluster is.
-
-    The exact partition count needs a DataFrame→RDD plan conversion
-    (df.rdd), so it is only probed when cheap plan-side facts leave
-    the answer in doubt. File count alone is NOT enough: Spark
-    bin-packs small files (maxPartitionBytes / openCostInBytes), so
-    64 tiny files on a 32-core box can still land in 2 scan
-    partitions. The shortcut therefore also checks the bin-packing
-    byte math (Σ size + files·openCost ≥ cores·maxPartitionBytes)
-    when the files are locally stat-able; non-local storage falls
-    back to the RDD probe rather than guessing."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if len(files) >= target and _binpack_partitions(spark, files) >= target:
-        return df  # the scan itself already fans out to ≥cores tasks
+    wide the cluster is. The partition count comes from the planned
+    scan (df.rdd), which already accounts for Spark's bin-packing of
+    small files."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
-    """Parse a Spark byte-size conf value. Accepts both single- and
-    two-letter unit suffixes ('128m' and '128mb', etc. — Spark's
-    JavaUtils.byteStringAs takes either). Unparseable values return 0
-    so _binpack_partitions falls back to the RDD probe instead of
-    silently using a wrong partition-count estimate."""
-    raw = str(spark.conf.get(key, str(default))).strip().lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40,
-             "p": 1 << 50, "b": 1}
-    if raw.endswith("b") and len(raw) > 1 and raw[-2] in units and raw[-2] != "b":
-        raw = raw[:-1]  # '128mb' -> '128m'
-    mult = units.get(raw[-1:], None)
-    try:
-        return int(raw[:-1]) * mult if mult else int(raw)
-    except ValueError:
-        return 0
-
-
-def _binpack_partitions(spark: SparkSession, files: list[str]) -> int:
-    """Estimate the scan partition count the way FilePartition bin-
-    packing does (total bytes + per-file open cost over
-    maxPartitionBytes). Returns 0 — 'in doubt, probe' — when any file
-    is not local/stat-able."""
-    import urllib.parse
-    total = 0
-    for u in files:
-        p = urllib.parse.urlparse(u)
-        if p.scheme not in ("file", ""):
-            return 0
-        try:
-            total += os.path.getsize(urllib.parse.unquote(p.path))
-        except OSError:
-            return 0
-    max_pb = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes",
-                         128 << 20)
-    open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes",
-                            4 << 20)
-    if max_pb <= 0 or open_cost <= 0:
-        return 0  # unparseable conf: in doubt, probe
-    return (total + len(files) * open_cost) // max_pb
 
 
 def read_csv(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:

@@ -23,6 +23,9 @@ from immoeliza_pipeline_spark.functions import num as N
 
 EVENTS_SCHEMA = ("event_id bigint, ts timestamp, user_id bigint, "
                  "event_type string, value double, props string")
+# shuffle and state-store partitions of every process_all query (see
+# its docstring): streaming state is KB-to-MB scale at any SF
+STREAM_SHUFFLE_PARTITIONS = 4
 
 
 def _as_stream_dir(path: str) -> str:
@@ -130,25 +133,23 @@ def write_stream_exactly_once(df: DataFrame, out_dir: str,
 
 
 def process_all(agg: DataFrame, spark: SparkSession, name: str,
-                output_mode: str = "complete",
-                shuffle_partitions: int | None = None) -> DataFrame:
+                output_mode: str = "complete") -> DataFrame:
     """Drive a finite stream to completion into a memory sink and
     return the batch result (deterministic: all input consumed).
 
-    ``shuffle_partitions`` sizes the micro-batch shuffles AND the
+    STREAM_SHUFFLE_PARTITIONS sizes the micro-batch shuffles AND the
     state-store partition count (fixed at first start from
     spark.sql.shuffle.partitions) for THIS query, restoring the
     session conf after. Stateful streaming state is usually KB-to-MB
     scale (windows × keys, watermark-bounded), so inheriting a batch
     session's partitioning (32 here, 200+ on clusters) spends most of
     each micro-batch on empty-task + state-store-instance overhead —
-    measured 9.2s → 4.0s on stream_attribution_join at sf0.1. Pick it
-    by expected STATE size, not data rate; a restarted production
-    query keeps whatever its checkpoint was created with."""
+    measured 9.2s → 4.0s on stream_attribution_join at sf0.1. It is
+    sized by expected STATE size, not data rate; a restarted
+    production query keeps whatever its checkpoint was created with."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(STREAM_SHUFFLE_PARTITIONS))
     try:
         q = (agg.writeStream.outputMode(output_mode)
              .format("memory").queryName(name).start())
@@ -157,6 +158,5 @@ def process_all(agg: DataFrame, spark: SparkSession, name: str,
         finally:
             q.stop()
     finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)

@@ -44,8 +44,7 @@ def read_shingle_index(spark: SparkSession, index_dir: str) -> DataFrame:
 
 def dedup_ingest_stream(stream: DataFrame, id_col: str, text_col: str,
                         index_dir: str, out_dir: str, checkpoint_dir: str,
-                        n: int = 3, threshold: float = 0.8,
-                        max_df: int | float | None = None) -> None:
+                        n: int = 3, threshold: float = 0.8) -> None:
     """Drive the finite document stream to completion. Per micro-batch:
 
     1. flag near-dups: batch vs the persisted index (cross) UNION
@@ -70,10 +69,9 @@ def dedup_ingest_stream(stream: DataFrame, id_col: str, text_col: str,
         spark = batch_df.sparkSession
         index = read_shingle_index(spark, index_dir)
         cross = jaccard_pairs_against_index(
-            batch_df, index, id_col, text_col, n=n, threshold=threshold,
-            max_df=max_df)
+            batch_df, index, id_col, text_col, n=n, threshold=threshold)
         within = jaccard_pairs(batch_df, id_col, text_col, n=n,
-                               threshold=threshold, max_df=max_df)
+                               threshold=threshold)
         dup_ids = (cross.select(F.col("new_id").alias("__dup"))
                    .unionByName(within.select(F.col("id2").alias("__dup")))
                    .distinct())

@@ -1,6 +1,8 @@
 """Dedup / text-analysis / similarity queries vs DuckDB at sf0.001."""
 
+import math
 import os
+from collections import Counter
 
 import pytest
 
@@ -211,6 +213,86 @@ def test_operators_tolerate_empty_input(spark, sf_dir):
     empty_counts = docs.select("doc_id", "lang",
                                F.lit(0).cast("long").alias("n_tokens"))
     assert pack_layout(empty_counts).count() == 0
+
+
+def _pairs(df, *cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+@pytest.mark.parametrize("max_df", [None, 0.5])
+def test_pair_rule_on_hostile_docs(spark, max_df):
+    """NULL, empty, blank and 2-token docs yield no shingle and no
+    pair, and do not disturb the pairs of an exact duplicate (4, 5)
+    and its one-word extension (6: 6 of 7 trigrams shared), on the
+    self-join and — even ids new, odd ids old — on the batch-vs-corpus
+    join."""
+    from pyspark.sql import functions as F
+
+    from immoeliza_pipeline_spark.operators import dedup as D
+
+    base = "the quick brown fox jumps over lazy dog"
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "   "), (4, base), (5, base),
+         (6, base + " today"), (7, "two words")],
+        "doc_id long, text string")
+    assert _pairs(D.jaccard_pairs(docs, "doc_id", "text", max_df=max_df),
+                  "id1", "id2", "jaccard") == [
+        (4, 5, 1.0), (4, 6, 0.8571), (5, 6, 0.8571)]
+    between = D.jaccard_pairs_between(
+        docs.filter(F.col("doc_id") % 2 == 0),
+        docs.filter(F.col("doc_id") % 2 == 1),
+        "doc_id", "text", max_df=max_df)
+    assert _pairs(between, "new_id", "old_id", "jaccard") == [
+        (4, 5, 1.0), (6, 5, 0.8571)]
+
+
+def test_stop_shingle_cap_drops_boilerplate_from_both_sides(spark):
+    """A trigram held by more than ceil(max_df × old docs) old docs is
+    a stop-shingle: it leaves the intersection AND both sizes, while
+    trigrams only the new batch holds stay in the new doc's size (an
+    anti-join against the stop set, not a semi-join against the kept
+    set — that would score the containing doc 1.0). Expected values
+    come from Python set arithmetic over the same trigrams."""
+    from immoeliza_pipeline_spark.operators import dedup as D
+
+    old_rows = [(i, f"alpha{i} beta{i} gamma{i} click here now")
+                for i in range(60)]
+    old_rows.append((999, "small old doc text here"))
+    new_rows = [(1000, "small old doc text here plus novel words "
+                       "follow click here now")]
+
+    def trigrams(text):
+        t = text.split()
+        return {" ".join(t[i:i + 3]) for i in range(len(t) - 2)}
+
+    def expected(max_df):
+        old = {i: trigrams(t) for i, t in old_rows}
+        stop = set()
+        if max_df is not None:
+            cap = math.ceil(max_df * len(old_rows))
+            df = Counter(s for sh in old.values() for s in sh)
+            stop = {s for s, c in df.items() if c > cap}
+        out = []
+        for j, t in new_rows:
+            a = trigrams(t) - stop
+            for i, b in old.items():
+                b = b - stop
+                if a & b:
+                    jac = len(a & b) / len(a | b)
+                    out.append((j, i, math.floor(jac * 10000 + 0.5) / 10000))
+        return sorted(out)
+
+    old = spark.createDataFrame(old_rows, "doc_id long, text string")
+    new = spark.createDataFrame(new_rows, "doc_id long, text string")
+    capped = _pairs(D.jaccard_pairs_between(
+        new, old, "doc_id", "text", threshold=0.0, max_df=0.02),
+        "new_id", "old_id", "jaccard")
+    assert capped == expected(0.02) == [(1000, 999, 0.3333)]
+    uncapped = _pairs(D.jaccard_pairs_between(
+        new, old, "doc_id", "text", threshold=0.0, max_df=None),
+        "new_id", "old_id", "jaccard")
+    assert uncapped == expected(None)
+    assert len(uncapped) == 61 and (1000, 999, 0.3) in uncapped
 
 
 def test_embedding_bucketed_pair_recall():

@@ -445,27 +445,3 @@ def test_streaming_dedup_ingest_matches_batch(tmp_path, spark, sf_dir):
     after = read_shingle_index(spark, index_dir)
     assert after.count() == n_before
     assert after.distinct().count() == n_before
-
-
-def test_conf_bytes_accepts_two_letter_units():
-    """Spark accepts '128mb' as well as '128m' for byte confs; the
-    bin-packing estimate must parse both, and an unparseable value
-    must force the RDD-probe fallback (return 0) rather than silently
-    using the default. (Stub conf: SparkConf validates at set-time,
-    so the unparseable case can't be injected through a live
-    session.)"""
-    from immoeliza_pipeline_spark.sources.readers import _conf_bytes
-
-    class _Stub:
-        def __init__(self, raw):
-            self.conf = self
-            self._raw = raw
-
-        def get(self, key, default=None):
-            return self._raw
-
-    for raw, want in [("64m", 64 << 20), ("64mb", 64 << 20),
-                      ("1gb", 1 << 30), ("2k", 2 << 10),
-                      ("128b", 128), ("4096", 4096),
-                      ("bogus", 0), ("12xb", 0)]:
-        assert _conf_bytes(_Stub(raw), "k", 128 << 20) == want, raw
