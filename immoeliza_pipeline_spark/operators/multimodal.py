@@ -16,9 +16,6 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = ("id bigint, payload binary, media_type string, "
-                "n_bytes int, checksum string")
-
 FEATURE_SCHEMA = ("id bigint, media_type string, n_bytes int, "
                   "feat_mean double, feat_dim int")
 
@@ -35,14 +32,6 @@ def to_media_table(df: DataFrame, id_col: str, payload_col: str,
         F.length(payload).cast("int").alias("n_bytes"),
         F.md5(payload).alias("checksum"),
     )
-
-
-def decode_not_implemented(*_args, **_kwargs):
-    """Real decoder entry point — intentionally unimplemented here.
-    Production: pillow/libjpeg (image), soundfile/ffmpeg (audio)."""
-    raise NotImplementedError(
-        "media decode requires image/audio libraries not present in "
-        "this container; use fake_decode for plumbing tests")
 
 
 def decode_with(media: DataFrame, kernel) -> DataFrame:

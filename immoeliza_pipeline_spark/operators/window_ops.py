@@ -15,13 +15,13 @@ from pyspark.sql import functions as F
 
 
 def asof_join(left: DataFrame, right: DataFrame, key: str, time_col: str,
-              value_cols: tuple[str, ...], strict: bool = False,
+              value_cols: tuple[str, ...],
               tiebreak: str | None = None) -> DataFrame:
     """For each left row, the most recent right row with
-    right.time <= left.time (``strict``: <). Both inputs must expose
-    ``key`` and ``time_col``; right's ``value_cols`` are appended as
-    ``<col>_asof``. At equal timestamps the right row sorts before
-    the left row iff the join is non-strict.
+    right.time <= left.time. Both inputs must expose ``key`` and
+    ``time_col``; right's ``value_cols`` are appended as
+    ``<col>_asof``. At equal timestamps the right row (tag 0) sorts
+    before the left row (tag 1), which makes the bound inclusive.
 
     ``tiebreak`` (a right-side column in value_cols) makes the pick
     deterministic when multiple right rows share (key, time) — the
@@ -30,15 +30,14 @@ def asof_join(left: DataFrame, right: DataFrame, key: str, time_col: str,
     ltypes = dict(left.dtypes)
     rtypes = dict(right.dtypes)
     extra = [c for c in left.columns if c not in (key, time_col)]
-    left_tag, right_tag = (1, 0) if not strict else (0, 1)
     l = left.select(
         F.col(key), F.col(time_col), *extra,
-        F.lit(left_tag).alias("__tag"),
+        F.lit(1).alias("__tag"),
         *[F.lit(None).cast(rtypes[c]).alias(f"__v_{c}") for c in value_cols])
     r = right.select(
         F.col(key), F.col(time_col),
         *[F.lit(None).cast(ltypes[c]).alias(c) for c in extra],
-        F.lit(right_tag).alias("__tag"),
+        F.lit(0).alias("__tag"),
         *[F.col(c).alias(f"__v_{c}") for c in value_cols])
     unioned = l.unionByName(r)
     order = [F.col(time_col), F.col("__tag")]
@@ -50,7 +49,7 @@ def asof_join(left: DataFrame, right: DataFrame, key: str, time_col: str,
     out = unioned
     for c in value_cols:
         out = out.withColumn(f"{c}_asof", F.last(f"__v_{c}", ignorenulls=True).over(w))
-    return (out.filter(F.col("__tag") == left_tag)
+    return (out.filter(F.col("__tag") == 1)
             .select(key, time_col, *extra,
                     *[F.col(f"{c}_asof") for c in value_cols]))
 

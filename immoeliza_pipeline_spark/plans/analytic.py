@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.functions import num as N
+from immoeliza_pipeline_spark.operators import window_ops as W
 from immoeliza_pipeline_spark.sources.readers import load_table
 
 
@@ -31,11 +32,11 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= "1998-09-02")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            (F.floor((F.sum("l_quantity")) * 100 + 0.5) / 100).alias("sum_qty"),
+            N.quantize(F.sum("l_quantity"), 100).alias("sum_qty"),
             N.sum_money(F.col("l_extendedprice"), 2).alias("sum_base_price"),
             N.sum_money(disc_price, 2).alias("sum_disc_price"),
             N.sum_money(charge, 2).alias("sum_charge"),
-            (F.floor((F.avg("l_quantity")) * 10000 + 0.5) / 10000).alias("avg_qty"),
+            N.quantize(F.avg("l_quantity"), 10000).alias("avg_qty"),
             N.avg_money(F.col("l_extendedprice"), 4).alias("avg_price"),
             N.avg_money(F.col("l_discount"), 4).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
@@ -137,7 +138,7 @@ def topk_customers_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cust.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 5)
-        .select("c_mktsegment", "c_custkey", (F.floor((F.col("c_acctbal")) * 100 + 0.5) / 100).alias("acctbal"), "rank")
+        .select("c_mktsegment", "c_custkey", N.quantize(F.col("c_acctbal"), 100).alias("acctbal"), "rank")
     )
 
 
@@ -221,17 +222,12 @@ GROUP BY CUBE (o_orderpriority, o_orderstatus)
 
 
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch sessionization: gap > 30 min starts a new session.
-    lag + running-sum windows — one shuffle on user_id."""
+    """Batch sessionization: gap > 30 min starts a new session
+    (window_ops.sessionize: lag + running-sum windows, one shuffle on
+    user_id)."""
     ev = load_table(spark, sf_dir, "events").withColumn(
         "ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    gap = F.col("ts_us") - F.lag("ts_us").over(w)
-    with_new = ev.withColumn(
-        "is_new", F.when(gap.isNull() | (gap > 1800 * 1_000_000), 1).otherwise(0))
-    with_sess = with_new.withColumn(
-        "session_id", F.sum("is_new").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    with_sess = W.sessionize(ev, "user_id", "ts", 1800, "event_id")
     return (
         with_sess.groupBy("user_id", "session_id")
         .agg(F.count(F.lit(1)).alias("n_events"),
@@ -265,9 +261,10 @@ GROUP BY user_id, session_id
 def asof_last_event_before_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: for each order of a (synthetic) user key, the most
     recent event at-or-before a reference time derived from the
-    order. Spark lacks a native as-of join; the scalable form is
-    union-tag + one window over (key, time) — a single shuffle,
-    linear state, no cross product (SURVEY §2.1 #9).
+    order. Spark lacks a native as-of join; window_ops.asof_join is
+    the scalable union-tag + one window over (key, time) form — a
+    single shuffle, linear state, no cross product (SURVEY §2.1 #9).
+    At equal times the larger event_id wins, as in the oracle.
 
     Keys: events.user_id ↔ o_custkey % 150; time: order rows get a
     2024-01 timestamp derived from o_orderdate's day-of-year so the
@@ -276,27 +273,16 @@ def asof_last_event_before_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         F.col("user_id").alias("key"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-        F.col("event_id"),
-        F.lit(None).cast("long").alias("o_orderkey"),
-        F.lit(0).alias("is_order"),
-    )
+        F.col("event_id"))
     orders = load_table(spark, sf_dir, "orders").select(
         (F.col("o_custkey") % 150).alias("key"),
         ((F.lit(1704067200) + F.dayofyear("o_orderdate").cast("long") * 86400
           + (F.col("o_orderkey") % 86400)) * F.lit(1_000_000)).alias("t"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.col("o_orderkey"),
-        F.lit(1).alias("is_order"),
-    )
-    unioned = ev.unionByName(orders)
-    w = (Window.partitionBy("key")
-         .orderBy("t", "is_order", "event_id")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    matched = unioned.withColumn("last_event_id", F.last("event_id", ignorenulls=True).over(w))
-    return (
-        matched.filter(F.col("is_order") == 1)
-        .select("o_orderkey", F.col("key").alias("user_key"), "last_event_id")
-    )
+        F.col("o_orderkey"))
+    return (W.asof_join(orders, ev, "key", "t", ("event_id",),
+                        tiebreak="event_id")
+            .select("o_orderkey", F.col("key").alias("user_key"),
+                    F.col("event_id_asof").alias("last_event_id")))
 
 
 ASOF_SQL = """
@@ -424,7 +410,7 @@ def json_extract_event_props(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"),
              F.sum("k").alias("sum_k"),
-             (F.floor((F.avg("k")) * 10000 + 0.5) / 10000).alias("avg_k"))
+             N.quantize(F.avg("k"), 10000).alias("avg_k"))
     )
 
 
@@ -441,10 +427,10 @@ def order_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles per priority class."""
     orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
-        (F.floor((F.expr("percentile(o_totalprice, 0.25)")) * 100 + 0.5) / 100).alias("p25"),
-        (F.floor((F.expr("percentile(o_totalprice, 0.50)")) * 100 + 0.5) / 100).alias("p50"),
-        (F.floor((F.expr("percentile(o_totalprice, 0.75)")) * 100 + 0.5) / 100).alias("p75"),
-        (F.floor((F.expr("percentile(o_totalprice, 0.95)")) * 100 + 0.5) / 100).alias("p95"),
+        N.quantize(F.expr("percentile(o_totalprice, 0.25)"), 100).alias("p25"),
+        N.quantize(F.expr("percentile(o_totalprice, 0.50)"), 100).alias("p50"),
+        N.quantize(F.expr("percentile(o_totalprice, 0.75)"), 100).alias("p75"),
+        N.quantize(F.expr("percentile(o_totalprice, 0.95)"), 100).alias("p95"),
     )
 
 
@@ -468,7 +454,7 @@ def running_revenue_by_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return orders.select(
         "o_orderkey", "o_custkey",
-        (F.floor((F.sum("o_totalprice").over(w)) * 100 + 0.5) / 100).alias("running_total"),
+        N.quantize(F.sum("o_totalprice").over(w), 100).alias("running_total"),
     )
 
 
@@ -558,8 +544,8 @@ def orders_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (gaps.join(F.broadcast(cust), gaps.o_custkey == cust.c_custkey)
             .groupBy("c_mktsegment")
             .agg(F.count(F.lit(1)).alias("n_gaps"),
-                 (F.floor((F.avg("gap_days")) * 10000 + 0.5) / 10000).alias("avg_gap_days"),
-                 (F.floor((F.expr("percentile(gap_days, 0.5)")) * 10000 + 0.5) / 10000).alias("median_gap_days")))
+                 N.quantize(F.avg("gap_days"), 10000).alias("avg_gap_days"),
+                 N.quantize(F.expr("percentile(gap_days, 0.5)"), 10000).alias("median_gap_days")))
 
 
 INTERARRIVAL_SQL = """

@@ -365,9 +365,8 @@ def packing_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.sum(F.ceil(F.col("tot") / F.col("seq_len"))
                          * F.col("seq_len") - F.col("tot"))
                    .alias("concat_pad")))
-    frac = (F.floor((F.col("per_doc_pad")
-                     / (F.col("n_tokens") + F.col("per_doc_pad")))
-                    * 10000 + 0.5) / 10000)
+    frac = quantize(F.col("per_doc_pad")
+                    / (F.col("n_tokens") + F.col("per_doc_pad")), 10000)
     return report.select("seq_len", "n_tokens", "per_doc_pad",
                          "concat_pad", frac.alias("per_doc_pad_frac"))
 
@@ -498,7 +497,7 @@ def _semantic_ctes() -> str:
 rr AS (SELECT {PS._R_LADDER} AS r
        FROM (SELECT count(*) AS n FROM embeddings)),
 proj AS (SELECT vec_id, v, {PS._PROJ_COLS} FROM emb_g),
-banded AS (SELECT vec_id, v, {PS._BAND_CASES} FROM proj, rr),
+banded AS MATERIALIZED (SELECT vec_id, v, {PS._BAND_CASES} FROM proj, rr),
 sem_pairs AS (
   SELECT a.vec_id AS id1, b.vec_id AS id2
   FROM banded a JOIN banded b ON a.vec_id < b.vec_id AND ({PS._ANY_BAND})
@@ -531,7 +530,7 @@ allowed AS (
   WHERE source || '.example.com' NOT IN ({blocked})
 ),
 d AS (SELECT doc_id, lang, text, {_TOKS} AS t FROM allowed),
-gated AS (
+gated AS MATERIALIZED (
   SELECT doc_id, lang, text, t FROM d
   WHERE len(t) >= 20
     AND len(list_filter(t, x -> x IN ({_STOP_IN}))) / len(t)::DOUBLE <= 0.5

@@ -27,37 +27,50 @@ _SHINGLES_CTE = f"""
 """
 
 
-def pairs_ctes(src: str, threshold: float) -> str:
+def pairs_ctes(src: str, threshold: float, old: str | None = None) -> str:
     """DuckDB CTEs ending in ``pairs(id1, id2, jaccard)``: the
-    near-dup pair rule of operators.dedup.jaccard_pairs with
-    ``max_df=DEFAULT_MAX_DF_FRAC`` over the (doc_id, t) token arrays
-    of the ``src`` CTE. Distinct word trigrams held by more than
-    ceil(DEFAULT_MAX_DF_FRAC × rows of src) docs are dropped from the
-    join and the sizes alike; jaccard is |A∩B| / |A∪B| quantized to
-    1/10000 and kept at ≥ threshold."""
-    return f"""sh_all AS (
+    near-dup pair rule of operators.dedup over the (doc_id, t) token
+    arrays of the ``src`` CTE. Without ``old`` it is jaccard_pairs'
+    self-join (id1 < id2); with ``old`` it is jaccard_pairs_between,
+    id1 from ``src`` and id2 from ``old``. Distinct word trigrams held
+    by more than ceil(DEFAULT_MAX_DF_FRAC × rows) docs of the indexed
+    side (``old``, else ``src``) are anti-joined away from the join
+    and the sizes alike — an anti-join, so a batch-only shingle still
+    counts in its doc's size; jaccard is |A∩B| / |A∪B| quantized to
+    1/10000 and kept at ≥ threshold. Shared CTEs are MATERIALIZED:
+    DuckDB otherwise re-evaluates a CTE at every reference."""
+    sides = {"a": src} if old is None else {"a": src, "b": old}
+    b = "a" if old is None else "b"
+    shingled = ",\n".join(f"""sh_{k}_all AS MATERIALIZED (
   SELECT DISTINCT q.doc_id AS id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-  FROM {src} q, unnest(range(1, len(t) - 1)) AS u(i)
+  FROM {q} q, unnest(range(1, len(t) - 1)) AS u(i)
   WHERE len(t) >= 3
+)""" for k, q in sides.items())
+    kept = ",\n".join(
+        f"sh_{k} AS MATERIALIZED (SELECT id, shingle FROM sh_{k}_all "
+        f"ANTI JOIN stop USING (shingle)),\n"
+        f"cnt_{k} AS (SELECT id, count(*) AS n_sh FROM sh_{k} GROUP BY id)"
+        for k in sides)
+    return f"""{shingled},
+stop AS (
+  SELECT shingle FROM sh_{b}_all GROUP BY shingle
+  HAVING count(*) > ceil((SELECT count(*) FROM {sides[b]}) * {D.DEFAULT_MAX_DF_FRAC})
 ),
-keep AS (
-  SELECT shingle FROM sh_all GROUP BY shingle
-  HAVING count(*) <= ceil((SELECT count(*) FROM {src}) * {D.DEFAULT_MAX_DF_FRAC})
-),
-sh AS (SELECT sh_all.id, sh_all.shingle FROM sh_all JOIN keep USING (shingle)),
-cnt AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
+{kept},
 common AS (
   SELECT a.id AS id1, b.id AS id2, count(*) AS common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
+  FROM sh_a a JOIN sh_{b} b ON a.shingle = b.shingle{" AND a.id < b.id" if old is None else ""}
   GROUP BY 1, 2
 ),
 scored AS (
   SELECT id1, id2,
          floor((common * 1.0 / (ca.n_sh + cb.n_sh - common)) * 10000 + 0.5)
            / 10000 AS jaccard
-  FROM common JOIN cnt ca ON ca.id = id1 JOIN cnt cb ON cb.id = id2
+  FROM common JOIN cnt_a ca ON ca.id = id1 JOIN cnt_{b} cb ON cb.id = id2
 ),
-pairs AS (SELECT id1, id2, jaccard FROM scored WHERE jaccard >= {threshold!r})"""
+pairs AS MATERIALIZED (
+  SELECT id1, id2, jaccard FROM scored WHERE jaccard >= {threshold!r}
+)"""
 
 
 def components_ctes(pairs: str) -> str:
@@ -214,27 +227,11 @@ def incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 INCREMENTAL_SQL = f"""
-WITH {_SHINGLES_CTE.replace("sh AS (", "sh0 AS (")},
-old_sh_all AS (SELECT * FROM sh0 WHERE id % 5 != 0),
-stop AS (
-  SELECT shingle FROM old_sh_all GROUP BY shingle
-  HAVING count(*) > ceil((SELECT count(*) FROM documents WHERE doc_id % 5 != 0)
-                         * {D.DEFAULT_MAX_DF_FRAC})
-),
-old_sh AS (SELECT old_sh_all.id, old_sh_all.shingle
-           FROM old_sh_all ANTI JOIN stop USING (shingle)),
-new_sh AS (SELECT sh0.id, sh0.shingle FROM sh0 ANTI JOIN stop USING (shingle)
-           WHERE id % 5 = 0),
-nn AS (SELECT id, count(*) AS n_new FROM new_sh GROUP BY id),
-no_ AS (SELECT id, count(*) AS n_old FROM old_sh GROUP BY id),
-common AS (
-  SELECT a.id AS new_id, b.id AS old_id, count(*) AS common
-  FROM new_sh a JOIN old_sh b USING (shingle) GROUP BY 1, 2
-)
-SELECT new_id, old_id,
-       (floor((common * 1.0 / (n_new + n_old - common)) * 10000 + 0.5) / 10000) AS jaccard
-FROM common JOIN nn ON nn.id = new_id JOIN no_ ON no_.id = old_id
-WHERE (floor((common * 1.0 / (n_new + n_old - common)) * 10000 + 0.5) / 10000) >= 0.8
+WITH {_DOC_TOKS},
+new AS (SELECT * FROM toks WHERE doc_id % 5 = 0),
+old AS (SELECT * FROM toks WHERE doc_id % 5 != 0),
+{pairs_ctes("new", 0.8, old="old")}
+SELECT id1 AS new_id, id2 AS old_id, jaccard FROM pairs
 """
 
 

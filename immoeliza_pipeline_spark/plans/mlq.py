@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from immoeliza_pipeline_spark.functions import num as N
 from immoeliza_pipeline_spark.ml import regression as R
 from immoeliza_pipeline_spark.sources.readers import load_table
 
@@ -36,7 +37,7 @@ def standard_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """StandardScaler parity (project.py:94-97)."""
     cust = load_table(spark, sf_dir, "customer")
     return R.standard_scale(cust, ["c_acctbal"]).select(
-        "c_custkey", (F.floor((F.col("c_acctbal_scaled")) * 1000000 + 0.5) / 1000000).alias("acctbal_scaled"))
+        "c_custkey", N.quantize(F.col("c_acctbal_scaled"), 1000000).alias("acctbal_scaled"))
 
 
 SCALE_SQL = """
@@ -52,9 +53,9 @@ def ols_price_vs_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass (no iterative solver, no driver-side data)."""
     li = load_table(spark, sf_dir, "lineitem")
     fit = R.fit_ols(li, "l_quantity", "l_extendedprice")
-    return fit.select((F.floor((F.col("slope")) * 10000 + 0.5) / 10000).alias("slope"),
-                      (F.floor((F.col("intercept")) * 10000 + 0.5) / 10000).alias("intercept"),
-                      (F.floor((F.col("r2")) * 1000000 + 0.5) / 1000000).alias("r2"))
+    return fit.select(N.quantize(F.col("slope"), 10000).alias("slope"),
+                      N.quantize(F.col("intercept"), 10000).alias("intercept"),
+                      N.quantize(F.col("r2"), 1000000).alias("r2"))
 
 
 OLS_SQL = """
@@ -74,7 +75,7 @@ def holdout_eval_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     test = li.filter(F.col("l_orderkey") % 5 == 0)
     params = R.fit_ols(train, "l_quantity", "l_extendedprice").select("slope", "intercept")
     ev = R.evaluate_ols(test, params, "l_quantity", "l_extendedprice")
-    return ev.select((F.floor((F.col("rmse")) * 10000 + 0.5) / 10000).alias("rmse"), (F.floor((F.col("r2")) * 1000000 + 0.5) / 1000000).alias("r2"))
+    return ev.select(N.quantize(F.col("rmse"), 10000).alias("rmse"), N.quantize(F.col("r2"), 1000000).alias("r2"))
 
 
 HOLDOUT_SQL = """
@@ -98,8 +99,8 @@ def kfold_cv_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "fold", (F.col("l_orderkey") % 6).cast("int"))
     cv = R.kfold_cv_ols(li, "l_quantity", "l_extendedprice", "fold")
-    return cv.select("fold", (F.floor((F.col("rmse")) * 10000 + 0.5) / 10000).alias("rmse"),
-                     (F.floor((F.col("r2")) * 1000000 + 0.5) / 1000000).alias("r2"))
+    return cv.select("fold", N.quantize(F.col("rmse"), 10000).alias("rmse"),
+                     N.quantize(F.col("r2"), 1000000).alias("r2"))
 
 
 KFOLD_SQL = """

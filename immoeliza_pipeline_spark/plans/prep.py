@@ -226,7 +226,7 @@ def impute_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         F.when(F.col("o_orderkey") % 11 == 0, None).otherwise(F.col("o_totalprice")))
     filled = impute.fill_missing_with_stat(orders, ["o_totalprice"], method="median")
-    return filled.select("o_orderkey", (F.floor((F.col("o_totalprice")) * 100 + 0.5) / 100).alias("price_filled"))
+    return filled.select("o_orderkey", N.quantize(F.col("o_totalprice"), 100).alias("price_filled"))
 
 
 IMPUTE_MEDIAN_SQL = """
@@ -309,7 +309,7 @@ def quantile_clip_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     to its exact [p05, p95]."""
     orders = load_table(spark, sf_dir, "orders")
     clipped = outliers.clip_to_quantiles(orders, {"o_totalprice": (0.05, 0.95)}, exact=True)
-    return clipped.select("o_orderkey", (F.floor((F.col("o_totalprice")) * 100 + 0.5) / 100).alias("price_clipped"))
+    return clipped.select("o_orderkey", N.quantize(F.col("o_totalprice"), 100).alias("price_clipped"))
 
 
 CLIP_SQL = """
@@ -422,7 +422,7 @@ def grade_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EPC banding parity (scraper.py:262-287) + rare-grade remap
     (preprocessing.py:532): kWh bands → grade, then {A+→A, G→F}."""
     ev = load_table(spark, sf_dir, "events").withColumn(
-        "kwh", (F.floor((F.col("value") * 2 - 100) * 100 + 0.5) / 100))
+        "kwh", N.quantize(F.col("value") * 2 - 100, 100))
     banded = ev.withColumn(
         "epc_raw",
         F.when(F.col("kwh") < 0, "A+")
@@ -493,7 +493,7 @@ def export_column_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         F.col("o_orderkey").alias("id"),
-        (F.floor((F.col("o_totalprice")) * 100 + 0.5) / 100).alias("Price"),
+        N.quantize(F.col("o_totalprice"), 100).alias("Price"),
         F.col("o_orderpriority").alias("Subtype"),
         F.col("o_orderstatus").alias("State_of_building"),
         F.lit(None).cast("string").alias("Type_of_sale"),
@@ -526,7 +526,7 @@ def ingest_nested_json(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.concat(F.lit('"location": '), loc, F.lit(', '))).otherwise(F.lit("")),
         F.lit('"type": "'), F.col("o_orderstatus"),
         F.lit('"}, "transaction": {"sale": {"price": '),
-        (F.floor((F.col("o_totalprice")) * 100 + 0.5) / 100).cast("string"), F.lit("}}}"))
+        N.quantize(F.col("o_totalprice"), 100).cast("string"), F.lit("}}}"))
     schema = ("struct<property: struct<location: struct<locality: string, "
               "postalCode: string>, type: string>, "
               "transaction: struct<sale: struct<price: double>>>")
@@ -536,7 +536,7 @@ def ingest_nested_json(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rec.property.location.locality").alias("locality"),
         F.col("rec.property.location.postalCode").alias("postal_code"),
         F.col("rec.property.type").alias("property_type"),
-        (F.floor((F.col("rec.transaction.sale.price")) * 100 + 0.5) / 100).alias("price"),
+        N.quantize(F.col("rec.transaction.sale.price"), 100).alias("price"),
     )
 
 
@@ -624,10 +624,10 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         aggs += [
             F.count(c).alias(f"{c}__cnt"),
             F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
-            (F.floor((F.min(c)) * 10000 + 0.5) / 10000).alias(f"{c}__min"),
-            (F.floor((F.max(c)) * 10000 + 0.5) / 10000).alias(f"{c}__max"),
+            N.quantize(F.min(c), 10000).alias(f"{c}__min"),
+            N.quantize(F.max(c), 10000).alias(f"{c}__max"),
             N.avg_money(F.col(c), 4).alias(f"{c}__mean"),
-            (F.floor((F.stddev_samp(c)) * 10000 + 0.5) / 10000).alias(f"{c}__std"),
+            N.quantize(F.stddev_samp(c), 10000).alias(f"{c}__std"),
         ]
     wide = li.agg(*aggs)
     stack = ", ".join(

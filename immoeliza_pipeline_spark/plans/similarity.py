@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from immoeliza_pipeline_spark.functions import num as N
 from immoeliza_pipeline_spark.operators import similarity as S
 from immoeliza_pipeline_spark.sources.readers import load_table, spread
 
@@ -171,7 +172,7 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label", F.posexplode(F.col("embedding").cast("array<double>"))
         .alias("dim", "val"))
     return (exploded.groupBy("label", "dim")
-            .agg((F.floor((F.avg("val")) * 1000000 + 0.5) / 1000000).alias("mean_val"),
+            .agg(N.quantize(F.avg("val"), 1000000).alias("mean_val"),
                  F.count(F.lit(1)).alias("n_vectors")))
 
 

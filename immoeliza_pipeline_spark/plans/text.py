@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from immoeliza_pipeline_spark.functions import num as N
 from immoeliza_pipeline_spark.functions import text as T
 from immoeliza_pipeline_spark.sources.readers import load_table
 
@@ -33,9 +34,9 @@ def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         T.token_count(F.col("text")).alias("n_tokens"),
-        (F.floor((T.stopword_ratio(F.col("text"))) * 10000 + 0.5) / 10000).alias("stopword_ratio"),
-        (F.floor((T.avg_word_len(F.col("text"))) * 10000 + 0.5) / 10000).alias("avg_word_len"),
-        (F.floor((T.punct_ratio(F.col("text"))) * 10000 + 0.5) / 10000).alias("punct_ratio"),
+        N.quantize(T.stopword_ratio(F.col("text")), 10000).alias("stopword_ratio"),
+        N.quantize(T.avg_word_len(F.col("text")), 10000).alias("avg_word_len"),
+        N.quantize(T.punct_ratio(F.col("text")), 10000).alias("punct_ratio"),
         ((T.token_count(F.col("text")) >= 20)
          & (T.stopword_ratio(F.col("text")) <= 0.5)).alias("passes_quality"),
     )
@@ -155,8 +156,8 @@ def doc_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size("__grams").alias("n_trigrams"),
         F.size(F.array_distinct("__grams")).alias("n_distinct_trigrams"))
-    frac = (F.floor(((F.col("n_trigrams") - F.col("n_distinct_trigrams"))
-                     / F.col("n_trigrams")) * 10000 + 0.5) / 10000)
+    frac = N.quantize((F.col("n_trigrams") - F.col("n_distinct_trigrams"))
+                      / F.col("n_trigrams"), 10000)
     return counted.select(
         "doc_id", "n_trigrams", "n_distinct_trigrams",
         F.when(F.col("n_trigrams") > 0, frac).alias("dup_trigram_frac"),
@@ -213,8 +214,8 @@ def vocabulary_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(T.token_count(F.col("text")).cast("long")).alias("__total"))
     return (ranked.crossJoin(F.broadcast(total))
             .select("token", "n_occurrences", "n_docs", "rank",
-                    (F.floor((F.col("cum_value") / F.col("__total"))
-                             * 10000 + 0.5) / 10000).alias("cum_coverage")))
+                    N.quantize(F.col("cum_value") / F.col("__total"), 10000)
+                    .alias("cum_coverage")))
 
 
 VOCAB_SQL = f"""
@@ -255,9 +256,9 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (tf.join(doc_len, "doc_id").join(df_, "token")
               .crossJoin(F.broadcast(n_docs))
               .select("doc_id", "token",
-                      (F.floor(((F.col("tf_count") / F.col("doc_len"))
-                                * (F.col("n_total") / F.col("df"))) * 1000000 + 0.5)
-                       / 1000000).alias("score")))
+                      N.quantize((F.col("tf_count") / F.col("doc_len"))
+                                 * (F.col("n_total") / F.col("df")), 1000000)
+                      .alias("score")))
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("token"))
     return (scored.withColumn("term_rank", F.row_number().over(w))
             .filter(F.col("term_rank") <= 3))
@@ -540,8 +541,8 @@ def chunk_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_per = ch.groupBy("chunk_md5").agg(
         F.countDistinct("doc_id").alias("nd"))
     joined = ch.join(docs_per, "chunk_md5")
-    frac = (F.floor((F.sum((F.col("nd") >= 2).cast("int"))
-                     / F.count(F.lit(1))) * 10000 + 0.5) / 10000)
+    frac = N.quantize(F.sum((F.col("nd") >= 2).cast("int"))
+                      / F.count(F.lit(1)), 10000)
     return (joined.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_chunks"),
                  F.sum((F.col("nd") >= 2).cast("int")).cast("long")
@@ -581,8 +582,8 @@ def quality_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__sw", F.size("__toks").alias("__n"),
         T.word_shingles(F.col("__toks"), 3).alias("__g"))
     rep = (F.col("__n") >= 3) & (
-        (F.floor(((F.size("__g") - F.size(F.array_distinct("__g")))
-                  / F.size("__g")) * 10000 + 0.5) / 10000) > 0.2)
+        N.quantize((F.size("__g") - F.size(F.array_distinct("__g")))
+                   / F.size("__g"), 10000) > 0.2)
     pass_len = F.col("__n") >= 20
     pass_sw = pass_len & (F.col("__sw") <= 0.5)
     pass_rep = pass_sw & ~rep

@@ -62,53 +62,3 @@ def read_csv(spark: SparkSession, path: str, schema=None, **options) -> DataFram
     if schema is not None:
         reader = reader.schema(schema)
     return reader.csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:
-    reader = spark.read
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str, **options) -> DataFrame:
-    """ORC source (columnar, predicate-pushdown-capable like parquet;
-    schema travels in the file footer)."""
-    reader = spark.read
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite",
-              partition_by: tuple[str, ...] = ()) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def read_binary_files(spark: SparkSession, path: str,
-                      glob: str | None = None) -> DataFrame:
-    """Whole-file binary source (path, modificationTime, length,
-    content) — the ingest front door for media corpora: each file
-    becomes one row with an opaque binary payload that
-    operators.multimodal.to_media_table wraps with typed metadata."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
-                  partition_by: tuple[str, ...] = ()) -> None:
-    """Partitioned parquet sink (reference: save_dataframe,
-    preprocessing.py:409-427, wrote one CSV + one pickle).
-    ``partition_by`` enables partition pruning for downstream scans.
-    """
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

@@ -246,6 +246,51 @@ def test_pair_rule_on_hostile_docs(spark, max_df):
         (4, 5, 1.0), (6, 5, 0.8571)]
 
 
+def test_pair_rule_oracle_matches_engine_on_hostile_docs(spark):
+    """The oracle's pairs_ctes, run in DuckDB, returns exactly the
+    pairs of jaccard_pairs (self-join) and jaccard_pairs_between (even
+    ids new, odd ids old) at the default stop-shingle cap. The hostile
+    docs of test_pair_rule_on_hostile_docs sit among 100 fillers that
+    share one boilerplate trigram: the fillers lift the cap to 3 docs,
+    so the duplicate triple keeps its trigrams, and the boilerplate
+    is a stop-shingle on both shapes."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from immoeliza_pipeline_spark.operators import dedup as D
+    from immoeliza_pipeline_spark.plans import dedup as P
+
+    base = "the quick brown fox jumps over lazy dog"
+    rows = [(1, None), (2, ""), (3, "   "), (4, base), (5, base),
+            (6, base + " today"), (7, "two words")]
+    rows += [(i, f"u{i} v{i} w{i} click here now") for i in range(100, 200)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+
+    def oracle(ctes):
+        return sorted(con.execute(
+            f"WITH {P._DOC_TOKS},\n{ctes}\n"
+            "SELECT id1, id2, jaccard FROM pairs").fetchall())
+
+    engine = _pairs(D.jaccard_pairs(docs, "doc_id", "text",
+                                    max_df=D.DEFAULT_MAX_DF_FRAC),
+                    "id1", "id2", "jaccard")
+    assert engine == [(4, 5, 1.0), (4, 6, 0.8571), (5, 6, 0.8571)]
+    assert oracle(P.pairs_ctes("toks", 0.8)) == engine
+
+    between = _pairs(D.jaccard_pairs_between(
+        docs.filter(F.col("doc_id") % 2 == 0),
+        docs.filter(F.col("doc_id") % 2 == 1),
+        "doc_id", "text", max_df=D.DEFAULT_MAX_DF_FRAC),
+        "new_id", "old_id", "jaccard")
+    assert between == [(4, 5, 1.0), (6, 5, 0.8571)]
+    assert oracle("new AS (SELECT * FROM toks WHERE doc_id % 2 = 0),\n"
+                  "old AS (SELECT * FROM toks WHERE doc_id % 2 = 1),\n"
+                  + P.pairs_ctes("new", 0.8, old="old")) == between
+
+
 def test_stop_shingle_cap_drops_boilerplate_from_both_sides(spark):
     """A trigram held by more than ceil(max_df × old docs) old docs is
     a stop-shingle: it leaves the intersection AND both sizes, while

@@ -68,26 +68,27 @@ def test_approx_count_distinct_near_exact(spark, sf_dir):
     assert abs(row.approx - row.exact) / max(row.exact, 1) < 0.1
 
 
-def test_generic_asof_join_matches_query(spark, sf_dir):
-    """The reusable asof_join must reproduce the registry query's
-    union-tag implementation."""
+def test_asof_join_ties_and_inclusive_bound(spark):
+    """asof_join, which the registry's asof_last_event_before_order
+    runs: two events share (key, t) and an order sits exactly at t,
+    so with tiebreak="event_id" the order gets the larger event_id
+    (right.t <= left.t). An event one microsecond after an order never
+    matches, and an order before every event of its key gets NULL.
+    Every pick equals a brute-force max over (t, event_id)."""
     from immoeliza_pipeline_spark.operators.window_ops import asof_join
-    from immoeliza_pipeline_spark.plans.analytic import asof_last_event_before_order
-    from immoeliza_pipeline_spark.sources.readers import load_table
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("user_id").alias("key"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-        F.col("event_id"))
-    orders = load_table(spark, sf_dir, "orders").select(
-        (F.col("o_custkey") % 150).alias("key"),
-        ((F.lit(1704067200) + F.dayofyear("o_orderdate").cast("long") * 86400
-          + (F.col("o_orderkey") % 86400)) * F.lit(1_000_000)).alias("t"),
-        F.col("o_orderkey"))
-    got = asof_join(orders, ev, "key", "t", ("event_id",))
-    expected = asof_last_event_before_order(spark, sf_dir)
-    a = {(r.o_orderkey, r.event_id_asof) for r in got.collect()}
-    b = {(r.o_orderkey, r.last_event_id) for r in expected.collect()}
-    assert a == b
+    ev_rows = [(1, 100, 9), (1, 100, 7), (1, 101, 11), (2, 50, 3)]
+    order_rows = [(1, 100, 1000), (1, 99, 1001), (2, 50, 1002),
+                  (2, 49, 1003), (3, 100, 1004)]
+    ev = spark.createDataFrame(ev_rows, "key long, t long, event_id long")
+    orders = spark.createDataFrame(order_rows,
+                                   "key long, t long, o_orderkey long")
+    got = {r.o_orderkey: r.event_id_asof for r in asof_join(
+        orders, ev, "key", "t", ("event_id",), tiebreak="event_id").collect()}
+    assert got == {1000: 9, 1001: None, 1002: 3, 1003: None, 1004: None}
+    brute = {o: max(((t, e) for k2, t, e in ev_rows if k2 == k and t <= ot),
+                    default=(None, None))[1]
+             for k, ot, o in order_rows}
+    assert got == brute
 
 
 def test_global_rank_cumsum_matches_global_window(spark):

@@ -39,12 +39,6 @@ def test_multimodal_fake_decode(spark, sf_dir):
     assert all(r.feat_dim == 1 for r in rows)
 
 
-def test_real_decode_is_stubbed():
-    from immoeliza_pipeline_spark.operators.multimodal import decode_not_implemented
-    with pytest.raises(NotImplementedError):
-        decode_not_implemented(b"\xff\xd8")
-
-
 def test_decoder_seam_swaps_without_plan_change(spark, sf_dir):
     """The real-decoder seam: swap the fake mean-byte kernel for a
     RECORDED byte→feature table (standing in for a real libjpeg/ffmpeg
