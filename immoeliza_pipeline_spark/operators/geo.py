@@ -3,19 +3,19 @@
 Parity: assign_city_based_on_proximity_multiple_radii
 (preprocessing.py:218-254, geopandas buffer + sjoin) and
 geocode_and_fill (preprocessing.py:138-216, Nominatim with a JSON
-cache). Spark-first: the city list / geocode cache are dimension
-tables broadcast against the fact side — a spatial "join" against a
-10-row dim is a codegen'd cross product + haversine filter, no
-spatial index needed. Network geocoding is inherently a driver-side
-external call; here the CACHE LOOKUP is the operator and the network
-fallback is stubbed (no network in a cluster hot path anyway).
+cache). Spark-first: the 10-city list unrolls into literal haversine
+expressions (no join, no spatial index) and the geocode cache is a
+dimension table broadcast against the fact side. Network geocoding
+is inherently a driver-side external call; here the CACHE LOOKUP is
+the operator and the network fallback is stubbed (no network in a
+cluster hot path anyway).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.functions.num import quantize
@@ -41,47 +41,14 @@ def haversine_km(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colu
     return 2 * EARTH_RADIUS_KM * F.asin(F.sqrt(a))
 
 
-def cities_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(CITIES, "city string, city_lat double, city_lon double")
-
-
-def assign_city_by_proximity(df: DataFrame, id_col: str, lat_col: str, lon_col: str,
-                             cities: DataFrame,
-                             radii_km: Sequence[float] = (5, 10, 15)) -> DataFrame:
-    """Per row: has_city_<r> flag for each radius + the nearest city
-    within the largest radius. One broadcast cross join + one groupBy
-    on the row id — no geometry library, no per-row Python."""
-    dist = quantize(haversine_km(F.col(lat_col), F.col(lon_col),
-                                 F.col("city_lat"), F.col("city_lon")), 1000000)
-    scored = (
-        df.select(id_col, lat_col, lon_col)
-        .crossJoin(F.broadcast(cities))
-        .withColumn("dist_km", dist)
-    )
-    max_r = max(radii_km)
-    aggs = [
-        F.max((F.col("dist_km") <= r).cast("int")).alias(f"has_city_{int(r)}")
-        for r in radii_km
-    ]
-    aggs.append(
-        F.min(F.when(F.col("dist_km") <= max_r,
-                     F.struct(F.col("dist_km"), F.col("city"))))
-        .alias("__nearest"))
-    return (
-        scored.groupBy(id_col).agg(*aggs)
-        .withColumn("nearest_city", F.col("__nearest.city"))
-        .drop("__nearest")
-    )
-
-
 def assign_city_by_proximity_literal(df: DataFrame, lat_col: str, lon_col: str,
                                      cities: list[tuple[str, float, float]] = CITIES,
                                      radii_km: Sequence[float] = (5, 10, 15)) -> DataFrame:
-    """Shuffle-free variant for a LITERAL city list: the distances
+    """Per row: has_city_<r> flag for each radius + the nearest city
+    within the largest radius, for a LITERAL city list. The distances
     unroll into one projection (codegen'd fma/trig chain) and the
     flags/argmin fold over an array of structs — no join, no groupBy,
-    zero exchanges. Semantically identical to
-    assign_city_by_proximity (same rounding and tie-breaks)."""
+    zero exchanges."""
     dists = [
         quantize(haversine_km(F.col(lat_col), F.col(lon_col),
                               F.lit(clat), F.lit(clon)), 1000000).alias(f"__d_{i}")

@@ -54,20 +54,23 @@ def asof_join(left: DataFrame, right: DataFrame, key: str, time_col: str,
                     *[F.col(f"{c}_asof") for c in value_cols]))
 
 
-def sessionize(df: DataFrame, key: str, ts_col: str, gap_seconds: int,
+def sessionize(df: DataFrame, key: str, us_col: str, gap_seconds: int,
                order_tiebreak: str) -> DataFrame:
-    """Gap-based sessionization: lag + running sum over (key, time)."""
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    w = Window.partitionBy(key).orderBy(ts_us, order_tiebreak)
-    gap = ts_us - F.lag(ts_us).over(w)
-    marked = df.withColumn(
+    """Gap-based sessionization: lag + running sum over (key, time),
+    with time as epoch microseconds in ``us_col``. The gap is one
+    column, so the plan holds one lag window however often it is
+    read."""
+    w = Window.partitionBy(key).orderBy(us_col, order_tiebreak)
+    gapped = df.withColumn("__gap", F.col(us_col) - F.lag(us_col).over(w))
+    marked = gapped.withColumn(
         "__is_new",
-        F.when(gap.isNull() | (gap > gap_seconds * 1_000_000), 1).otherwise(0))
+        F.when(F.col("__gap").isNull()
+               | (F.col("__gap") > gap_seconds * 1_000_000), 1).otherwise(0))
     return marked.withColumn(
         "session_id",
         F.sum("__is_new").over(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    ).drop("__is_new")
+    ).drop("__gap", "__is_new")
 
 
 def salted_join(big: DataFrame, skewed_small: DataFrame, key: str,

@@ -44,15 +44,15 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q1_SQL = """
+Q1_SQL = f"""
 SELECT l_returnflag, l_linestatus,
        (floor((sum(l_quantity)) * 100 + 0.5) / 100)                                        AS sum_qty,
-       (floor(sum(CAST(floor((l_extendedprice) * 1000000 + 0.5) AS BIGINT)) / 1000000e0 * 100 + 0.5) / 100)                                   AS sum_base_price,
-       (floor(sum(CAST(floor((l_extendedprice * (1 - l_discount)) * 1000000 + 0.5) AS BIGINT)) / 1000000e0 * 100 + 0.5) / 100)                AS sum_disc_price,
-       (floor(sum(CAST(floor((l_extendedprice * (1 - l_discount) * (1 + l_tax)) * 1000000 + 0.5) AS BIGINT)) / 1000000e0 * 100 + 0.5) / 100)  AS sum_charge,
+       {N.sql_sum_money("l_extendedprice")}                                   AS sum_base_price,
+       {N.sql_sum_money("l_extendedprice * (1 - l_discount)")}                AS sum_disc_price,
+       {N.sql_sum_money("l_extendedprice * (1 - l_discount) * (1 + l_tax)")}  AS sum_charge,
        (floor((avg(l_quantity)) * 10000 + 0.5) / 10000)                                        AS avg_qty,
-       (floor(sum(CAST(floor((l_extendedprice) * 1000000 + 0.5) AS BIGINT)) / (1000000e0 * count(l_extendedprice)) * 10000 + 0.5) / 10000)                                   AS avg_price,
-       (floor(sum(CAST(floor((l_discount) * 1000000 + 0.5) AS BIGINT)) / (1000000e0 * count(l_discount)) * 10000 + 0.5) / 10000)                                        AS avg_disc,
+       {N.sql_avg_money("l_extendedprice")}                                   AS avg_price,
+       {N.sql_avg_money("l_discount")}                                        AS avg_disc,
        count(*)                                                         AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02'
@@ -78,9 +78,9 @@ def q3_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q3_SQL = """
+Q3_SQL = f"""
 SELECT l_orderkey, o_orderdate, o_orderpriority,
-       (floor(sum(CAST(floor((l_extendedprice * (1 - l_discount)) * 1000000 + 0.5) AS BIGINT)) / 1000000e0 * 100 + 0.5) / 100) AS revenue
+       {N.sql_sum_money("l_extendedprice * (1 - l_discount)")} AS revenue
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -115,8 +115,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q5_SQL = """
-SELECT n_name, (floor(sum(CAST(floor((l_extendedprice * (1 - l_discount)) * 1000000 + 0.5) AS BIGINT)) / 1000000e0 * 100 + 0.5) / 100) AS revenue
+Q5_SQL = f"""
+SELECT n_name, {N.sql_sum_money("l_extendedprice * (1 - l_discount)")} AS revenue
 FROM lineitem
 JOIN orders   ON l_orderkey = o_orderkey
 JOIN supplier ON l_suppkey = s_suppkey
@@ -192,9 +192,9 @@ def rollup_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROLLUP_SQL = """
+ROLLUP_SQL = f"""
 SELECT o_orderpriority, o_orderstatus,
-       count(*) AS n_orders, (floor(sum(CAST(floor((o_totalprice) * 1000000 + 0.5) AS BIGINT)) / 1000000e0 * 100 + 0.5) / 100) AS total_price
+       count(*) AS n_orders, {N.sql_sum_money("o_totalprice")} AS total_price
 FROM orders
 GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
 """
@@ -212,9 +212,9 @@ def cube_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CUBE_SQL = """
+CUBE_SQL = f"""
 SELECT o_orderpriority, o_orderstatus,
-       count(*) AS n_orders, (floor(sum(CAST(floor((o_totalprice) * 1000000 + 0.5) AS BIGINT)) / (1000000e0 * count(o_totalprice)) * 10000 + 0.5) / 10000) AS avg_price,
+       count(*) AS n_orders, {N.sql_avg_money("o_totalprice")} AS avg_price,
        grouping(o_orderpriority) * 2 + grouping(o_orderstatus) AS gid
 FROM orders
 GROUP BY CUBE (o_orderpriority, o_orderstatus)
@@ -227,7 +227,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id)."""
     ev = load_table(spark, sf_dir, "events").withColumn(
         "ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
-    with_sess = W.sessionize(ev, "user_id", "ts", 1800, "event_id")
+    with_sess = W.sessionize(ev, "user_id", "ts_us", 1800, "event_id")
     return (
         with_sess.groupBy("user_id", "session_id")
         .agg(F.count(F.lit(1)).alias("n_events"),
@@ -521,11 +521,11 @@ def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # DuckDB has no width_bucket; the floor arithmetic below is its exact
 # definition for (min=0, max=600000, n=12): width 50000, overflow → 13.
-HISTOGRAM_SQL = """
+HISTOGRAM_SQL = f"""
 SELECT CASE WHEN o_totalprice < 0 THEN 0
             WHEN o_totalprice >= 600000 THEN 13
             ELSE CAST(floor(o_totalprice / 50000) AS BIGINT) + 1 END AS bucket,
-       count(*) AS n, (floor(sum(CAST(floor((o_totalprice) * 1000000 + 0.5) AS BIGINT)) / (1000000e0 * count(o_totalprice)) * 100 + 0.5) / 100) AS avg_price
+       count(*) AS n, {N.sql_avg_money("o_totalprice", 2)} AS avg_price
 FROM orders
 GROUP BY 1
 """

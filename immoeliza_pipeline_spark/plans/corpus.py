@@ -501,7 +501,7 @@ banded AS MATERIALIZED (SELECT vec_id, v, {PS._BAND_CASES} FROM proj, rr),
 sem_pairs AS (
   SELECT a.vec_id AS id1, b.vec_id AS id2
   FROM banded a JOIN banded b ON a.vec_id < b.vec_id AND ({PS._ANY_BAND})
-  WHERE (floor(({PS._COS_AB}) * 10000 + 0.5) / 10000) >= {_SEMANTIC_COS!r}
+  WHERE (floor(({PS._cos_sql('a.v', 'b.v')}) * 10000 + 0.5) / 10000) >= {_SEMANTIC_COS!r}
 ),
 all_pairs AS (SELECT id1, id2 FROM pairs
               UNION SELECT id1, id2 FROM sem_pairs),

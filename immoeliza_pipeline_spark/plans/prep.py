@@ -128,7 +128,7 @@ def drop_rows_conditions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DROP_ROWS_SQL = f"""
 WITH d AS ({_EVENTS_NULLS_CTE})
-SELECT event_type, count(*) AS n_kept, (floor(sum(CAST(floor((value) * 1000000 + 0.5) AS BIGINT)) / 1000000e0 * 100 + 0.5) / 100) AS sum_value
+SELECT event_type, count(*) AS n_kept, {sql_sum_money("value")} AS sum_value
 FROM d
 WHERE NOT (user_id % 50 = 0) AND value IS NOT NULL
 GROUP BY event_type
@@ -250,10 +250,10 @@ def target_encode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("o_orderkey", "o_orderpriority", "priority_encoded"))
 
 
-TARGET_ENCODE_SQL = """
+TARGET_ENCODE_SQL = f"""
 SELECT o_orderkey, o_orderpriority, priority_encoded
 FROM orders JOIN (
-  SELECT o_orderpriority AS pr, (floor(sum(CAST(floor((o_totalprice) * 1000000 + 0.5) AS BIGINT)) / (1000000e0 * count(o_totalprice)) * 10000 + 0.5) / 10000) AS priority_encoded
+  SELECT o_orderpriority AS pr, {sql_avg_money("o_totalprice")} AS priority_encoded
   FROM orders GROUP BY o_orderpriority
 ) ON o_orderpriority = pr
 """
@@ -436,7 +436,7 @@ def grade_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
         N.avg_money(F.col("kwh"), 4).alias("avg_kwh"))
 
 
-GRADE_SQL = """
+GRADE_SQL = f"""
 WITH banded AS (
   SELECT (floor((value * 2 - 100) * 100 + 0.5) / 100) AS kwh,
          CASE WHEN (floor((value * 2 - 100) * 100 + 0.5) / 100) < 0 THEN 'A+'
@@ -449,7 +449,7 @@ WITH banded AS (
   FROM events
 )
 SELECT CASE epc_raw WHEN 'A+' THEN 'A' WHEN 'G' THEN 'F' ELSE epc_raw END AS epc,
-       count(*) AS n, (floor(sum(CAST(floor((kwh) * 1000000 + 0.5) AS BIGINT)) / (1000000e0 * count(kwh)) * 10000 + 0.5) / 10000) AS avg_kwh
+       count(*) AS n, {sql_avg_money("kwh")} AS avg_kwh
 FROM banded
 GROUP BY 1
 """

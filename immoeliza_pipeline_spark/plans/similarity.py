@@ -10,9 +10,13 @@ from immoeliza_pipeline_spark.functions import num as N
 from immoeliza_pipeline_spark.operators import similarity as S
 from immoeliza_pipeline_spark.sources.readers import load_table, spread
 
-# dot/norm with the same left-to-right double accumulation Spark uses
-_DOT = ("list_sum(list_transform(list_zip(a.v, q.v), p -> p[1] * p[2]))")
-_NORM = "sqrt(list_sum(list_transform({t}.v, x -> x * x)))"
+
+def _cos_sql(a: str, b: str) -> str:
+    """Cosine of DuckDB lists ``a`` and ``b``: dot and norms with the
+    same left-to-right double accumulation Spark uses."""
+    return (f"list_sum(list_transform(list_zip({a}, {b}), p -> p[1] * p[2]))"
+            f" / (sqrt(list_sum(list_transform({a}, x -> x * x)))"
+            f" * sqrt(list_sum(list_transform({b}, x -> x * x))))")
 
 
 def cosine_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -28,7 +32,7 @@ WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 q AS (SELECT vec_id, v FROM e WHERE vec_id % 100 = 0),
 scored AS (
   SELECT q.vec_id AS query_id, a.vec_id AS neighbor_id,
-         (floor(({_DOT} / ({_NORM.format(t='q')} * {_NORM.format(t='a')})) * 10000 + 0.5) / 10000) AS cos_sim
+         (floor(({_cos_sql('a.v', 'q.v')}) * 10000 + 0.5) / 10000) AS cos_sim
   FROM e a, q
   WHERE a.vec_id <> q.vec_id
 )
@@ -50,16 +54,12 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.near_dup_pairs(emb, "vec_id", "embedding", threshold=0.45)
 
 
-NEAR_DUP_SQL = """
+NEAR_DUP_SQL = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
 SELECT a.vec_id AS id1, b.vec_id AS id2,
-       (floor((list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))
-             / (sqrt(list_sum(list_transform(a.v, x -> x * x)))
-                * sqrt(list_sum(list_transform(b.v, x -> x * x))))) * 10000 + 0.5) / 10000) AS cos_sim
+       (floor(({_cos_sql('a.v', 'b.v')}) * 10000 + 0.5) / 10000) AS cos_sim
 FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE (floor((list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))
-            / (sqrt(list_sum(list_transform(a.v, x -> x * x)))
-               * sqrt(list_sum(list_transform(b.v, x -> x * x))))) * 10000 + 0.5) / 10000) >= 0.45
+WHERE (floor(({_cos_sql('a.v', 'b.v')}) * 10000 + 0.5) / 10000) >= 0.45
 """
 
 
@@ -89,29 +89,23 @@ def embedding_near_dup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      rows_per_band=r)
 
 
-def _band_sql(table_alias: str, band: int, rows_per_band: int,
-              dim: int = 64) -> str:
-    """DuckDB mirror of one LSH band (planes [band*rows_per_band,
-    (band+1)*rows_per_band) of operators.similarity.
-    hyperplane_projections — same accumulation order per plane): the same
-    ±1.0 sign list (md5-derived at build time) multiplied into the
-    vector and left-to-right summed — list_sum(list_transform(zip))
-    matches Spark's zip_with+aggregate bit-for-bit."""
-    planes = []
-    for jj in range(rows_per_band):
-        j = band * rows_per_band + jj
-        signs = "[" + ", ".join(
-            ("1.0" if S._rademacher(j, d) > 0 else "-1.0")
-            for d in range(dim)) + "]"
-        proj = (f"list_sum(list_transform(list_zip({table_alias}, {signs}), "
-                "p -> p[1] * p[2]))")
-        planes.append(f"(CASE WHEN {proj} > 0 THEN {2 ** jj} ELSE 0 END)")
-    return " + ".join(planes)
+def _proj_sql(j: int, dim: int = 64) -> str:
+    """DuckDB mirror of plane ``j`` of operators.similarity.
+    hyperplane_projections over the list ``v``: the same ±1.0 sign
+    list (md5-derived at build time) multiplied into the vector and
+    left-to-right summed — list_sum(list_transform(zip)) matches
+    Spark's zip_with+aggregate bit-for-bit."""
+    signs = "[" + ", ".join(
+        ("1.0" if S._rademacher(j, d) > 0 else "-1.0")
+        for d in range(dim)) + "]"
+    return f"list_sum(list_transform(list_zip(v, {signs}), p -> p[1] * p[2]))"
 
 
-_COS_AB = ("list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))"
-           " / (sqrt(list_sum(list_transform(a.v, x -> x * x)))"
-           " * sqrt(list_sum(list_transform(b.v, x -> x * x))))")
+def _bucket_sql(planes: list[str]) -> str:
+    """LSH band bucket: bit jj set where projection planes[jj] > 0."""
+    return " + ".join(f"(CASE WHEN {p} > 0 THEN {1 << jj} ELSE 0 END)"
+                      for jj, p in enumerate(planes))
+
 
 _ANY_BAND = " OR ".join(f"a.band{i} = b.band{i}" for i in range(_LSH_BANDS))
 
@@ -127,24 +121,14 @@ _R_LADDER = "CASE " + " ".join(
     for r in range(_LSH_R_MIN, _LSH_R_MAX)) + f" ELSE {_LSH_R_MAX} END"
 
 
-def _proj_sql(j: int, dim: int = 64) -> str:
-    signs = "[" + ", ".join(
-        ("1.0" if S._rademacher(j, d) > 0 else "-1.0")
-        for d in range(dim)) + "]"
-    return f"list_sum(list_transform(list_zip(v, {signs}), p -> p[1] * p[2]))"
-
-
 _PROJ_COLS = ", ".join(f"{_proj_sql(j)} AS p{j}"
                        for j in range(_LSH_BANDS * _LSH_R_MAX))
 
 
 def _band_case(i: int) -> str:
-    branches = []
-    for r in range(_LSH_R_MIN, _LSH_R_MAX + 1):
-        expr = " + ".join(
-            f"(CASE WHEN p{i * r + jj} > 0 THEN {1 << jj} ELSE 0 END)"
-            for jj in range(r))
-        branches.append(f"WHEN {r} THEN {expr}")
+    branches = [
+        f"WHEN {r} THEN {_bucket_sql([f'p{i * r + jj}' for jj in range(r)])}"
+        for r in range(_LSH_R_MIN, _LSH_R_MAX + 1)]
     return "CASE r " + " ".join(branches) + f" END AS band{i}"
 
 
@@ -156,9 +140,9 @@ rr AS (SELECT {_R_LADDER} AS r FROM (SELECT count(*) AS n FROM e)),
 proj AS (SELECT vec_id, v, {_PROJ_COLS} FROM e),
 banded AS (SELECT vec_id, v, {_BAND_CASES} FROM proj, rr)
 SELECT a.vec_id AS id1, b.vec_id AS id2,
-       (floor(({_COS_AB}) * 10000 + 0.5) / 10000) AS cos_sim
+       (floor(({_cos_sql('a.v', 'b.v')}) * 10000 + 0.5) / 10000) AS cos_sim
 FROM banded a JOIN banded b ON a.vec_id < b.vec_id AND ({_ANY_BAND})
-WHERE (floor(({_COS_AB}) * 10000 + 0.5) / 10000) >= 0.45
+WHERE (floor(({_cos_sql('a.v', 'b.v')}) * 10000 + 0.5) / 10000) >= 0.45
 """
 
 
@@ -206,7 +190,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ANN_BAND_COLS = ", ".join(
-    f"{_band_sql('v', i, _ANN_ROWS)} AS band{i}" for i in range(_ANN_BANDS))
+    f"{_bucket_sql([_proj_sql(i * _ANN_ROWS + jj) for jj in range(_ANN_ROWS)])}"
+    f" AS band{i}" for i in range(_ANN_BANDS))
 _ANN_ANY_BAND = " OR ".join(
     f"a.band{i} = q.band{i}" for i in range(_ANN_BANDS))
 
@@ -218,9 +203,7 @@ q AS (SELECT vec_id AS query_id, v AS qv,
       FROM b WHERE vec_id % 100 = 0),
 scored AS (
   SELECT q.query_id, a.vec_id AS neighbor_id,
-         (floor((list_sum(list_transform(list_zip(q.qv, a.v), p -> p[1] * p[2]))
-               / (sqrt(list_sum(list_transform(q.qv, x -> x * x)))
-                  * sqrt(list_sum(list_transform(a.v, x -> x * x))))) * 10000 + 0.5) / 10000) AS cos_sim
+         (floor(({_cos_sql('q.qv', 'a.v')}) * 10000 + 0.5) / 10000) AS cos_sim
   FROM b a JOIN q ON ({_ANN_ANY_BAND}) AND a.vec_id <> q.query_id
 )
 SELECT query_id, neighbor_id, cos_sim, rank
@@ -270,13 +253,6 @@ def ivf_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id", "cell", "cos_sim", "rank")
 
 
-_COS_ES = ("list_sum(list_transform(list_zip(e.v, s.v), p -> p[1] * p[2]))"
-           " / (sqrt(list_sum(list_transform(e.v, x -> x * x)))"
-           " * sqrt(list_sum(list_transform(s.v, x -> x * x))))")
-_COS_AQ = ("list_sum(list_transform(list_zip(q.qv, a.v), p -> p[1] * p[2]))"
-           " / (sqrt(list_sum(list_transform(q.qv, x -> x * x)))"
-           " * sqrt(list_sum(list_transform(a.v, x -> x * x))))")
-
 IVF_SQL = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 -- mirror of _ivf_seed_modulus: m = max(1, n // max(3, ceil(sqrt(n)/4)))
@@ -288,7 +264,7 @@ params AS (
 seeds AS (SELECT vec_id AS seed_id, v FROM e, params WHERE vec_id % m = 0),
 assign AS (
   SELECT e.vec_id AS vid, e.v,
-         min(struct_pack(negsim := (floor((-({_COS_ES})) * 1000000 + 0.5) / 1000000), seed_id := s.seed_id)).seed_id AS cell
+         min(struct_pack(negsim := (floor((-({_cos_sql('e.v', 's.v')})) * 1000000 + 0.5) / 1000000), seed_id := s.seed_id)).seed_id AS cell
   FROM e CROSS JOIN (SELECT seed_id, v FROM seeds) s(seed_id, v)
   GROUP BY e.vec_id, e.v
 ),
@@ -298,7 +274,7 @@ q AS (
     SELECT e.vec_id AS vid, e.v, s.seed_id,
            row_number() OVER (
              PARTITION BY e.vec_id
-             ORDER BY (floor((-({_COS_ES})) * 1000000 + 0.5) / 1000000),
+             ORDER BY (floor((-({_cos_sql('e.v', 's.v')})) * 1000000 + 0.5) / 1000000),
                       s.seed_id) AS rn
     FROM e CROSS JOIN (SELECT seed_id, v FROM seeds) s(seed_id, v)
     WHERE e.vec_id % 100 = 0
@@ -307,7 +283,7 @@ q AS (
 ),
 scored AS (
   SELECT q.query_id, a.vid AS neighbor_id, a.cell,
-         (floor(({_COS_AQ}) * 10000 + 0.5) / 10000) AS cos_sim
+         (floor(({_cos_sql('q.qv', 'a.v')}) * 10000 + 0.5) / 10000) AS cos_sim
   FROM assign a JOIN q ON a.cell = q.cell AND a.vid <> q.query_id
 )
 SELECT query_id, neighbor_id, cell, cos_sim, rank

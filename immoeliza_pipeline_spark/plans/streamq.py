@@ -33,9 +33,9 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "n_events", "sum_value")
 
 
-STREAM_WINDOWED_SQL = """
+STREAM_WINDOWED_SQL = f"""
 SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS window_start_us, event_type,
-       count(*) AS n_events, (floor(sum(CAST(floor((value) * 1000000 + 0.5) AS BIGINT)) / 1000000e0 * 100 + 0.5) / 100e0) AS sum_value
+       count(*) AS n_events, {sql_sum_money("value")} AS sum_value
 FROM events
 GROUP BY 1, 2
 """

@@ -20,26 +20,6 @@ def test_query(spark, sf_dir, mod, name):
         assert_matches_oracle(sdf, sql, sf_dir)
 
 
-def test_geo_literal_path_matches_join_path(spark, sf_dir):
-    """The shuffle-free literal city assignment must equal the
-    general broadcast-join operator row for row."""
-    from pyspark.sql import functions as F
-
-    from immoeliza_pipeline_spark.operators import geo as G
-    from immoeliza_pipeline_spark.sources.readers import load_table
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.expr("49.6 + (c_custkey % 300) / 150.0").alias("lat"),
-        F.expr("2.6 + ((c_custkey * 7) % 350) / 100.0").alias("lon"))
-    join_path = G.assign_city_by_proximity(
-        cust, "c_custkey", "lat", "lon", G.cities_df(spark))
-    lit_path = G.assign_city_by_proximity_literal(cust, "lat", "lon").select(
-        "c_custkey", "has_city_5", "has_city_10", "has_city_15", "nearest_city")
-    a = {tuple(r) for r in join_path.collect()}
-    b = {tuple(r) for r in lit_path.collect()}
-    assert a == b
-
-
 def test_linear_pipeline_fits(spark, sf_dir):
     from immoeliza_pipeline_spark.ml import pipelines as P
     from immoeliza_pipeline_spark.sources.readers import load_table

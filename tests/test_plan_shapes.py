@@ -134,3 +134,14 @@ def test_llm_build_semantic_keeps_signal_barrier(spark, sf_dir):
     plan = _plan(spark, sf_dir, "llm_corpus_build_semantic")
     assert "InMemoryTableScan" in plan, plan[:2000]
     assert "CartesianProduct" not in plan
+
+
+def test_sessionize_reads_micros_once(spark, sf_dir):
+    """sessionize_events derives epoch micros once and sessionize
+    orders by that column: the optimized plan holds one unix_micros
+    and one lag window (a gap expression read twice used to plan
+    two lag windows, and sessionize re-derived the micros itself)."""
+    df = ent.queries()["sessionize_events"](spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("unix_micros(") == 1, plan
+    assert plan.count("lag(") == 1, plan

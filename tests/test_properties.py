@@ -37,7 +37,8 @@ def test_sessionize_matches_python(spark, rows):
     base = dt.datetime(2024, 1, 1)
     data = [(i, u, base + dt.timedelta(seconds=s)) for i, (u, s) in enumerate(rows)]
     df = spark.createDataFrame(data, "event_id long, user_id long, ts timestamp")
-    out = sessionize(df, "user_id", "ts", gap_seconds=600,
+    df = df.withColumn("ts_us", F.unix_micros("ts"))
+    out = sessionize(df, "user_id", "ts_us", gap_seconds=600,
                      order_tiebreak="event_id")
     got = {(r.event_id): r.session_id for r in out.collect()}
 
