@@ -18,8 +18,8 @@ Derived scores and distances (ratios, Jaccard, cosine, km) go
 through ``quantize``, the one half-up rounding rule both engines
 apply before a value is compared, ranked or returned.
 
-The matching oracle-SQL text builders live here too so the two
-sides can never drift.
+Every rounding is ``half_up`` (Spark) or ``sql_half_up`` (oracle
+SQL), floor(y + 0.5), so the two sides can never drift.
 """
 
 from __future__ import annotations
@@ -30,48 +30,55 @@ from pyspark.sql import functions as F
 SCALE = 1_000_000  # millionths: covers 2/4/6-decimal money products
 
 
+def half_up(y: Column) -> Column:
+    """y rounded half-up to an integer: floor(y + 0.5)."""
+    return F.floor(y + 0.5)
+
+
 def exact_units(expr: Column) -> Column:
     """Per-row exact integer millionths of a ≤6-decimal value."""
-    return F.floor(expr * SCALE + 0.5).cast("long")
-
-
-def sum_money(expr: Column, out_dp: int = 2) -> Column:
-    """Order-independent SUM rounded to out_dp decimals."""
-    so = 10 ** out_dp
-    return F.floor(F.sum(exact_units(expr)) / SCALE * so + 0.5) / so
-
-
-def avg_money(expr: Column, out_dp: int = 4) -> Column:
-    """Order-independent AVG rounded to out_dp decimals."""
-    so = 10 ** out_dp
-    return (F.floor(F.sum(exact_units(expr))
-                    / (SCALE * F.count(expr)) * so + 0.5) / so)
+    return half_up(expr * SCALE).cast("long")
 
 
 def quantize(x: Column, scale: int) -> Column:
     """x rounded half-up to multiples of 1/scale. Every score and
     distance is quantized before it is compared or ranked, so the low
     floating-point bits on which engines may differ never decide a
-    result; the DuckDB oracle applies the same floor(x·s + 0.5)/s."""
-    return F.floor(x * scale + 0.5) / scale
+    result; ``sql_quantize`` is the oracle's twin."""
+    return half_up(x * scale) / scale
+
+
+def sum_money(expr: Column, out_dp: int = 2) -> Column:
+    """Order-independent SUM rounded to out_dp decimals."""
+    return quantize(F.sum(exact_units(expr)) / SCALE, 10 ** out_dp)
+
+
+def avg_money(expr: Column, out_dp: int = 4) -> Column:
+    """Order-independent AVG rounded to out_dp decimals."""
+    return quantize(F.sum(exact_units(expr)) / (SCALE * F.count(expr)), 10 ** out_dp)
 
 
 # ---- oracle-SQL text builders (identical semantics) ----
 
+def sql_half_up(y: str) -> str:
+    return f"floor({y} + 0.5)"
+
+
 def sql_exact_units(expr: str) -> str:
-    return f"CAST(floor(({expr}) * {SCALE} + 0.5) AS BIGINT)"
+    return f"CAST({sql_half_up(f'({expr}) * {SCALE}')} AS BIGINT)"
+
+
+def sql_quantize(x: str, scale: int) -> str:
+    return f"({sql_half_up(f'({x}) * {scale}')} / {scale})"
 
 
 def sql_sum_money(expr: str, out_dp: int = 2) -> str:
-    # e-notation literals: a "1000000.0" literal is DECIMAL in
-    # Spark SQL (propagating decimal types into the result) but
-    # DOUBLE in DuckDB — 1e6 is DOUBLE in both.
-    so = 10 ** out_dp
-    return (f"(floor(sum({sql_exact_units(expr)}) / {SCALE}e0 * {so} + 0.5)"
-            f" / {so}e0)")
+    # e-notation literals: a "1000000.0" literal is DECIMAL in Spark
+    # SQL (propagating decimal types into the result) but DOUBLE in
+    # DuckDB — 1e6 is DOUBLE in both.
+    return sql_quantize(f"sum({sql_exact_units(expr)}) / {SCALE}e0", 10 ** out_dp)
 
 
 def sql_avg_money(expr: str, out_dp: int = 4) -> str:
-    so = 10 ** out_dp
-    return (f"(floor(sum({sql_exact_units(expr)})"
-            f" / ({SCALE}e0 * count({expr})) * {so} + 0.5) / {so}e0)")
+    total = f"sum({sql_exact_units(expr)})"
+    return sql_quantize(f"{total} / ({SCALE}e0 * count({expr}))", 10 ** out_dp)

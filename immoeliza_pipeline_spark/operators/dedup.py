@@ -335,8 +335,11 @@ def lsh_candidates(signatures: DataFrame,
                     quantize(F.col("est_sim"), 10000).alias("est_sim")))
 
 
+CC_MAX_ROUNDS = 20
+
+
 def connected_components(pairs: DataFrame, id1: str = "id1",
-                         id2: str = "id2", max_iter: int = 20) -> DataFrame:
+                         id2: str = "id2") -> DataFrame:
     """Cluster near-dup candidate pairs into connected components and
     assign each member the component's minimum id as representative
     (the 'keep one canonical doc per dup cluster' step).
@@ -347,33 +350,10 @@ def connected_components(pairs: DataFrame, id1: str = "id1",
     are small, so this converges in 2-4 rounds; each round is one
     shuffle on the edge key, no driver-side graph.
     """
-    # Symmetrize via ONE explode, not a self-union (r11 optimization
-    # pass, guide §2.4): ``pairs`` may carry an arbitrarily deep
-    # upstream plan (the corpus builds feed a full jaccard(+semantic
-    # LSH) pipeline here), and a union referencing it twice embeds
-    # that whole subtree TWICE in the edge job — the un-persisted
-    # tails (candidate joins, scoring aggregations) execute twice and
-    # the doubled plan is re-optimized/compiled per CC call. The
-    # explode keeps a single reference, so the pair pipeline runs
-    # exactly once per edge materialization. Interleaved A/B
-    # (fresh-session min-of-2, both orders): llm_corpus_build_semantic
-    # 20.5/14.9s → 13.4/11.9s, dedup_threshold_sweep 8.2/6.1 →
-    # 4.6/4.7, dedup_clusters 6.0/4.9 → 4.1/3.9 — every CC consumer
-    # faster in both rounds.
-    # NO .distinct() (r11 optimization pass): duplicate edges
-    # cannot change a min-label propagation — the per-round
-    # groupBy(src).min(label) absorbs them — so deduping here was
-    # a full extra shuffle+aggregate of the edge set per CC call.
-    # Every current producer emits distinct (id1 < id2) pairs
-    # already; the one union caller (lexical ∪ semantic corpus
-    # edges) has multiplicity ≤ 2 on the overlap, which costs
-    # less in the round joins than its own distinct did.
-    # pre-partition on the per-round join key and CHECKPOINT the
-    # SHUFFLED form: every round's edges.dst = labels.id join then
-    # reuses this partitioning and only the (small) label frame
-    # moves. localCheckpoint (not persist) also TRUNCATES the edge
-    # lineage — without truncation every round re-plans the whole
-    # upstream lineage.
+    # Symmetrized by one explode, so ``pairs``' upstream plan is
+    # referenced (and run) once. Duplicate edges need no distinct: the
+    # per-round min absorbs them. The edge checkpoint is shuffled on
+    # dst, the per-round join key, and truncates the pair lineage.
     both_dirs = F.explode(F.array(
         F.struct(F.col(id1).alias("src"), F.col(id2).alias("dst")),
         F.struct(F.col(id2).alias("src"), F.col(id1).alias("dst"))))
@@ -382,13 +362,7 @@ def connected_components(pairs: DataFrame, id1: str = "id1",
         .repartition(F.col("dst"))
         .localCheckpoint(eager=True)
     )
-    # Round 1 folded into the label INITIALIZATION (r11 pass): with
-    # identity starting labels, round 1's result for node s is exactly
-    # least(s, min over incident edges of dst) — one groupBy over the
-    # checkpointed edges replaces the old id-distinct shuffle PLUS the
-    # first propagate round's join+groupBy+checkpoint. The node set is
-    # identical (symmetrized edges put every node in src), and the
-    # label trajectory from round 1 onward is bit-identical.
+    # Round 1 from identity labels is least(s, min neighbour) per src.
     labels = (
         edges.groupBy("src")
         .agg(F.min("dst").alias("nmin"))
@@ -412,24 +386,11 @@ def connected_components(pairs: DataFrame, id1: str = "id1",
 
     from pyspark.sql import Observation
     changed = 0
-    # the init above already performed propagation round 1 (and round
-    # 1 needs no convergence count — it always changes a label when
-    # any edge exists), so the loop starts at round 2
-    for _ in range(1, max_iter):
-        # one hop per round, lineage TRUNCATED each round: propagate()
-        # references `labels` twice, so without truncation the logical
-        # plan doubles per iteration — a diameter-30 graph OOMs the
-        # optimizer before any data moves. localCheckpoint both
-        # materializes the round (shared by the convergence check and
-        # the next round) and resets the plan to a leaf. (On a real
-        # cluster use checkpoint() to reliable storage.)
-        # The convergence count RIDES the checkpoint job (r12
-        # optimization pass, guide §2.4 — don't run a second action
-        # for a value the first one computed): observe() attaches a
-        # CollectMetrics accumulator to the plan the eager checkpoint
-        # executes, so each round is ONE job instead of checkpoint +
-        # count. Sum over zero rows is NULL → treated as converged
-        # (no rows = no labels = nothing can change).
+    for _ in range(1, CC_MAX_ROUNDS):
+        # Each round is localCheckpointed: propagate() references
+        # `labels` twice, so an untruncated plan doubles per round.
+        # The convergence count rides the checkpoint job through
+        # observe(); a sum over zero rows is NULL, i.e. converged.
         obs = Observation()
         updated = (propagate(labels)
                    .observe(obs, F.sum(F.col("changed").cast("long"))
@@ -441,9 +402,9 @@ def connected_components(pairs: DataFrame, id1: str = "id1",
             break
     if changed != 0:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
+            f"connected_components did not converge in {CC_MAX_ROUNDS} "
             f"iterations ({changed} labels still changing); the graph "
-            f"diameter exceeds max_iter — raise it")
+            f"diameter exceeds CC_MAX_ROUNDS")
     # labels is checkpointed; the edge list is no longer reachable
     edges.unpersist()
     return labels.select(F.col("id").alias("doc_id"),

@@ -46,11 +46,11 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q1_SQL = f"""
 SELECT l_returnflag, l_linestatus,
-       (floor((sum(l_quantity)) * 100 + 0.5) / 100)                                        AS sum_qty,
+       {N.sql_quantize("sum(l_quantity)", 100)}                               AS sum_qty,
        {N.sql_sum_money("l_extendedprice")}                                   AS sum_base_price,
        {N.sql_sum_money("l_extendedprice * (1 - l_discount)")}                AS sum_disc_price,
        {N.sql_sum_money("l_extendedprice * (1 - l_discount) * (1 + l_tax)")}  AS sum_charge,
-       (floor((avg(l_quantity)) * 10000 + 0.5) / 10000)                                        AS avg_qty,
+       {N.sql_quantize("avg(l_quantity)", 10000)}                             AS avg_qty,
        {N.sql_avg_money("l_extendedprice")}                                   AS avg_price,
        {N.sql_avg_money("l_discount")}                                        AS avg_disc,
        count(*)                                                         AS count_order
@@ -142,8 +142,8 @@ def topk_customers_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TOPK_SQL = """
-SELECT c_mktsegment, c_custkey, (floor((c_acctbal) * 100 + 0.5) / 100) AS acctbal, rank
+TOPK_SQL = f"""
+SELECT c_mktsegment, c_custkey, {N.sql_quantize("c_acctbal", 100)} AS acctbal, rank
 FROM (
   SELECT c_mktsegment, c_custkey, c_acctbal,
          row_number() OVER (PARTITION BY c_mktsegment
@@ -414,10 +414,10 @@ def json_extract_event_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-JSON_SQL = """
+JSON_SQL = f"""
 SELECT event_type, count(*) AS n,
        CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-       (floor((avg(CAST(json_extract_string(props, '$.k') AS BIGINT))) * 10000 + 0.5) / 10000) AS avg_k
+       {N.sql_quantize("avg(CAST(json_extract_string(props, '$.k') AS BIGINT))", 10000)} AS avg_k
 FROM events
 GROUP BY event_type
 """
@@ -434,12 +434,12 @@ def order_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUANTILES_SQL = """
+QUANTILES_SQL = f"""
 SELECT o_orderpriority,
-       (floor((quantile_cont(o_totalprice, 0.25)) * 100 + 0.5) / 100) AS p25,
-       (floor((quantile_cont(o_totalprice, 0.50)) * 100 + 0.5) / 100) AS p50,
-       (floor((quantile_cont(o_totalprice, 0.75)) * 100 + 0.5) / 100) AS p75,
-       (floor((quantile_cont(o_totalprice, 0.95)) * 100 + 0.5) / 100) AS p95
+       {N.sql_quantize("quantile_cont(o_totalprice, 0.25)", 100)} AS p25,
+       {N.sql_quantize("quantile_cont(o_totalprice, 0.50)", 100)} AS p50,
+       {N.sql_quantize("quantile_cont(o_totalprice, 0.75)", 100)} AS p75,
+       {N.sql_quantize("quantile_cont(o_totalprice, 0.95)", 100)} AS p95
 FROM orders
 GROUP BY o_orderpriority
 """
@@ -458,11 +458,13 @@ def running_revenue_by_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-RUNNING_SQL = """
-SELECT o_orderkey, o_custkey,
-       (floor((sum(o_totalprice) OVER (PARTITION BY o_custkey
+_RUNNING_SUM = """sum(o_totalprice) OVER (PARTITION BY o_custkey
                                      ORDER BY o_orderdate, o_orderkey
-                                     ROWS UNBOUNDED PRECEDING)) * 100 + 0.5) / 100) AS running_total
+                                     ROWS UNBOUNDED PRECEDING)"""
+
+RUNNING_SQL = f"""
+SELECT o_orderkey, o_custkey,
+       {N.sql_quantize(_RUNNING_SUM, 100)} AS running_total
 FROM orders
 """
 
@@ -548,7 +550,7 @@ def orders_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
                  N.quantize(F.expr("percentile(gap_days, 0.5)"), 10000).alias("median_gap_days")))
 
 
-INTERARRIVAL_SQL = """
+INTERARRIVAL_SQL = f"""
 WITH gaps AS (
   SELECT o_custkey,
          (epoch_us(o_orderdate) - lag(epoch_us(o_orderdate)) OVER (
@@ -557,8 +559,8 @@ WITH gaps AS (
   FROM orders
 )
 SELECT c_mktsegment, count(*) AS n_gaps,
-       (floor((avg(gap_days)) * 10000 + 0.5) / 10000) AS avg_gap_days,
-       (floor((quantile_cont(gap_days, 0.5)) * 10000 + 0.5) / 10000) AS median_gap_days
+       {N.sql_quantize("avg(gap_days)", 10000)} AS avg_gap_days,
+       {N.sql_quantize("quantile_cont(gap_days, 0.5)", 10000)} AS median_gap_days
 FROM gaps JOIN customer ON o_custkey = c_custkey
 WHERE gap_days IS NOT NULL
 GROUP BY c_mktsegment

@@ -17,10 +17,10 @@ from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.functions import text as T
 from immoeliza_pipeline_spark.operators import dedup as D
-from immoeliza_pipeline_spark.functions.num import quantize
+from immoeliza_pipeline_spark.functions.num import quantize, sql_quantize
 from immoeliza_pipeline_spark.operators.similarity import md5_bucket16
 from immoeliza_pipeline_spark.plans.dedup import components_ctes, pairs_ctes
-from immoeliza_pipeline_spark.plans.text import _STOP_IN, _TOKS
+from immoeliza_pipeline_spark.plans.text import _REP_FRAC, _STOP_IN, _TOKS
 from immoeliza_pipeline_spark.sources.readers import load_table
 
 # per-language sampling rates as md5-prefix hex thresholds:
@@ -390,8 +390,8 @@ concat_pad AS (
   FROM lang_tot CROSS JOIN seqs GROUP BY seq_len
 )
 SELECT seq_len, n_tokens, per_doc_pad, concat_pad,
-       floor((per_doc_pad / (n_tokens + per_doc_pad)::DOUBLE) * 10000 + 0.5)
-           / 10000 AS per_doc_pad_frac
+       {sql_quantize("per_doc_pad / (n_tokens + per_doc_pad)::DOUBLE", 10000)}
+           AS per_doc_pad_frac
 FROM per_doc JOIN concat_pad USING (seq_len)
 """
 
@@ -501,7 +501,7 @@ banded AS MATERIALIZED (SELECT vec_id, v, {PS._BAND_CASES} FROM proj, rr),
 sem_pairs AS (
   SELECT a.vec_id AS id1, b.vec_id AS id2
   FROM banded a JOIN banded b ON a.vec_id < b.vec_id AND ({PS._ANY_BAND})
-  WHERE (floor(({PS._cos_sql('a.v', 'b.v')}) * 10000 + 0.5) / 10000) >= {_SEMANTIC_COS!r}
+  WHERE {sql_quantize(PS._cos_sql('a.v', 'b.v'), 10000)} >= {_SEMANTIC_COS!r}
 ),
 all_pairs AS (SELECT id1, id2 FROM pairs
               UNION SELECT id1, id2 FROM sem_pairs),
@@ -513,9 +513,6 @@ def _llm_build_sql(semantic: bool = False) -> str:
                                                      _PII_PHONE)
     blocked = ", ".join(f"'{h}'" for h in BLOCKED_HOSTS)
     ep = "all_pairs" if semantic else "pairs"
-    rep = ("floor(((len(t) - 2 - len(list_distinct(list_transform("
-           "range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' "
-           "|| t[i+2])))) / (len(t) - 2)::DOUBLE) * 10000 + 0.5) / 10000")
     return f"""
 WITH red AS (
   SELECT doc_id, lang, source,
@@ -534,7 +531,7 @@ gated AS MATERIALIZED (
   SELECT doc_id, lang, text, t FROM d
   WHERE len(t) >= 20
     AND len(list_filter(t, x -> x IN ({_STOP_IN}))) / len(t)::DOUBLE <= 0.5
-    AND {rep} <= 0.2
+    AND {_REP_FRAC} <= 0.2
 ),
 {pairs_ctes("gated", 0.8)},
 {_semantic_ctes() if semantic else ''}{components_ctes(ep)},

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from immoeliza_pipeline_spark.functions import num as N
 from immoeliza_pipeline_spark.operators import dedup as D
 from immoeliza_pipeline_spark.plans.text import _TOKS
 from immoeliza_pipeline_spark.sources.readers import load_table
@@ -64,8 +65,7 @@ common AS (
 ),
 scored AS (
   SELECT id1, id2,
-         floor((common * 1.0 / (ca.n_sh + cb.n_sh - common)) * 10000 + 0.5)
-           / 10000 AS jaccard
+         {N.sql_quantize("common * 1.0 / (ca.n_sh + cb.n_sh - common)", 10000)} AS jaccard
   FROM common JOIN cnt_a ca ON ca.id = id1 JOIN cnt_{b} cb ON cb.id = id2
 ),
 pairs AS MATERIALIZED (
@@ -134,7 +134,7 @@ WITH {_SHINGLES_CTE},
 sigs AS (SELECT id, {_SIG_AGGS} FROM sh GROUP BY id),
 banded AS (SELECT *, {_BAND_EXPRS} FROM sigs)
 SELECT a.id AS id1, b.id AS id2,
-       (floor((({_MATCHES}) / {_H}.0) * 10000 + 0.5) / 10000) AS est_sim
+       {N.sql_quantize(f"({_MATCHES}) / {_H}.0", 10000)} AS est_sim
 FROM banded a JOIN banded b ON a.id < b.id AND ({_ANY_BAND})
 WHERE ({_MATCHES}) / {_H}.0 >= 0.5
 """

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from immoeliza_pipeline_spark.functions.num import sql_quantize
 from immoeliza_pipeline_spark.operators import geo as G
 from immoeliza_pipeline_spark.sources.readers import load_table
 
@@ -31,6 +32,11 @@ def city_radius_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CITY_VALUES = ", ".join(f"('{c}', {la}, {lo})" for c, la, lo in G.CITIES)
+# G.haversine_km from (lat, lon) to (city_lat, city_lon)
+_DIST_KM = """2 * 6371.0 * asin(sqrt(
+             pow(sin(radians(city_lat - lat) / 2), 2)
+             + cos(radians(lat)) * cos(radians(city_lat))
+               * pow(sin(radians(city_lon - lon) / 2), 2)))"""
 
 CITY_RADIUS_SQL = f"""
 WITH cust AS (
@@ -39,10 +45,7 @@ WITH cust AS (
 cities(city, city_lat, city_lon) AS (VALUES {_CITY_VALUES}),
 scored AS (
   SELECT c_custkey,
-         (floor((2 * 6371.0 * asin(sqrt(
-             pow(sin(radians(city_lat - lat) / 2), 2)
-             + cos(radians(lat)) * cos(radians(city_lat))
-               * pow(sin(radians(city_lon - lon) / 2), 2)))) * 1000000 + 0.5) / 1000000) AS dist_km,
+         {sql_quantize(_DIST_KM, 1000000)} AS dist_km,
          city
   FROM cust CROSS JOIN cities
 )

@@ -24,7 +24,7 @@ def correlation_feature_selection(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 _CORR_SELECTS = " UNION ALL ".join(
-    f"SELECT '{c}' AS column_name, (floor((corr({c}, l_extendedprice)) * 1000000 + 0.5) / 1000000) AS corr FROM lineitem"
+    f"SELECT '{c}' AS column_name, {N.sql_quantize(f'corr({c}, l_extendedprice)', 1000000)} AS corr FROM lineitem"
     for c in _FEATURES)
 
 CORR_SQL = f"""
@@ -40,9 +40,9 @@ def standard_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", N.quantize(F.col("c_acctbal_scaled"), 1000000).alias("acctbal_scaled"))
 
 
-SCALE_SQL = """
+SCALE_SQL = f"""
 SELECT c_custkey,
-       (floor(((c_acctbal - avg(c_acctbal) OVER ()) / stddev_samp(c_acctbal) OVER ()) * 1000000 + 0.5) / 1000000)
+       {N.sql_quantize("(c_acctbal - avg(c_acctbal) OVER ()) / stddev_samp(c_acctbal) OVER ()", 1000000)}
            AS acctbal_scaled
 FROM customer
 """
@@ -58,10 +58,10 @@ def ols_price_vs_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
                       N.quantize(F.col("r2"), 1000000).alias("r2"))
 
 
-OLS_SQL = """
-SELECT (floor((regr_slope(l_extendedprice, l_quantity)) * 10000 + 0.5) / 10000) AS slope,
-       (floor((regr_intercept(l_extendedprice, l_quantity)) * 10000 + 0.5) / 10000) AS intercept,
-       (floor((regr_r2(l_extendedprice, l_quantity)) * 1000000 + 0.5) / 1000000) AS r2
+OLS_SQL = f"""
+SELECT {N.sql_quantize("regr_slope(l_extendedprice, l_quantity)", 10000)} AS slope,
+       {N.sql_quantize("regr_intercept(l_extendedprice, l_quantity)", 10000)} AS intercept,
+       {N.sql_quantize("regr_r2(l_extendedprice, l_quantity)", 1000000)} AS r2
 FROM lineitem
 """
 
@@ -78,15 +78,18 @@ def holdout_eval_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(N.quantize(F.col("rmse"), 10000).alias("rmse"), N.quantize(F.col("r2"), 1000000).alias("r2"))
 
 
-HOLDOUT_SQL = """
+# RMSE and R² of the fit p over the scored rows
+_MSE = "avg(pow(l_extendedprice - (p.slope*l_quantity + p.intercept), 2))"
+_EVAL = (f"{N.sql_quantize(f'sqrt({_MSE})', 10000)} AS rmse, "
+         f"{N.sql_quantize(f'1 - {_MSE} / var_pop(l_extendedprice)', 1000000)} AS r2")
+
+HOLDOUT_SQL = f"""
 WITH p AS (
   SELECT regr_slope(l_extendedprice, l_quantity) AS slope,
          regr_intercept(l_extendedprice, l_quantity) AS intercept
   FROM lineitem WHERE l_orderkey % 5 <> 0
 )
-SELECT (floor((sqrt(avg(pow(l_extendedprice - (p.slope*l_quantity + p.intercept), 2)))) * 10000 + 0.5) / 10000) AS rmse,
-       (floor((1 - avg(pow(l_extendedprice - (p.slope*l_quantity + p.intercept), 2))
-               / var_pop(l_extendedprice)) * 1000000 + 0.5) / 1000000) AS r2
+SELECT {_EVAL}
 FROM lineitem, p
 WHERE l_orderkey % 5 = 0
 """
@@ -103,7 +106,7 @@ def kfold_cv_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
                      N.quantize(F.col("r2"), 1000000).alias("r2"))
 
 
-KFOLD_SQL = """
+KFOLD_SQL = f"""
 WITH d AS (SELECT *, CAST(l_orderkey % 6 AS INT) AS fold FROM lineitem),
 p AS (
   SELECT f.fold, regr_slope(d.l_extendedprice, d.l_quantity) AS slope,
@@ -112,9 +115,7 @@ p AS (
   GROUP BY f.fold
 )
 SELECT d.fold,
-       (floor((sqrt(avg(pow(l_extendedprice - (p.slope*l_quantity + p.intercept), 2)))) * 10000 + 0.5) / 10000) AS rmse,
-       (floor((1 - avg(pow(l_extendedprice - (p.slope*l_quantity + p.intercept), 2))
-               / var_pop(l_extendedprice)) * 1000000 + 0.5) / 1000000) AS r2
+       {_EVAL}
 FROM d JOIN p ON d.fold = p.fold
 GROUP BY d.fold
 """

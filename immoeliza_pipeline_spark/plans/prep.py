@@ -108,9 +108,9 @@ w AS (
          avg(CASE WHEN props IS NULL THEN 1.0 ELSE 0.0 END) AS props
   FROM d
 )
-SELECT 'event_type' AS column_name, (floor((event_type) * 10000 + 0.5) / 10000) AS null_frac FROM w
-UNION ALL SELECT 'value', (floor((value) * 10000 + 0.5) / 10000) FROM w
-UNION ALL SELECT 'props', (floor((props) * 10000 + 0.5) / 10000) FROM w
+SELECT 'event_type' AS column_name, {N.sql_quantize("event_type", 10000)} AS null_frac FROM w
+UNION ALL SELECT 'value', {N.sql_quantize("value", 10000)} FROM w
+UNION ALL SELECT 'props', {N.sql_quantize("props", 10000)} FROM w
 """
 
 
@@ -149,14 +149,14 @@ def normalize_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select(
         F.col("o_orderkey").alias("orderkey_str"),
         F.col("is_open_raw").alias("is_open"),
-        (F.floor((F.col("o_totalprice") * 100) + 0.5)).cast("bigint").alias("price_cents"),
+        N.half_up(F.col("o_totalprice") * 100).cast("bigint").alias("price_cents"),
     )
 
 
-NORMALIZE_SQL = """
+NORMALIZE_SQL = f"""
 SELECT CAST(o_orderkey AS VARCHAR) AS orderkey_str,
        CAST(coalesce(CASE WHEN o_orderstatus = 'O' THEN TRUE END, FALSE) AS INT) AS is_open,
-       CAST((floor((o_totalprice * 100) + 0.5)) AS BIGINT) AS price_cents
+       CAST({N.sql_half_up("o_totalprice * 100")} AS BIGINT) AS price_cents
 FROM orders
 """
 
@@ -229,13 +229,13 @@ def impute_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     return filled.select("o_orderkey", N.quantize(F.col("o_totalprice"), 100).alias("price_filled"))
 
 
-IMPUTE_MEDIAN_SQL = """
+IMPUTE_MEDIAN_SQL = f"""
 WITH d AS (
   SELECT o_orderkey,
          CASE WHEN o_orderkey % 11 = 0 THEN NULL ELSE o_totalprice END AS price
   FROM orders
 )
-SELECT o_orderkey, (floor((coalesce(price, (SELECT median(price) FROM d))) * 100 + 0.5) / 100) AS price_filled
+SELECT o_orderkey, {N.sql_quantize("coalesce(price, (SELECT median(price) FROM d))", 100)} AS price_filled
 FROM d
 """
 
@@ -272,7 +272,7 @@ def combine_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("priority_group"), "cnt", "pct", "is_rare")
 
 
-COMBINE_SQL = """
+COMBINE_SQL = f"""
 WITH g AS (
   SELECT CASE o_orderpriority
            WHEN '1-URGENT' THEN 'CRITICAL' WHEN '2-HIGH' THEN 'CRITICAL'
@@ -281,7 +281,7 @@ WITH g AS (
   FROM orders
 )
 SELECT priority_group, count(*) AS cnt,
-       (floor((count(*) / (SELECT count(*)::DOUBLE FROM g)) * 1000000 + 0.5) / 1000000) AS pct,
+       {N.sql_quantize("count(*) / (SELECT count(*)::DOUBLE FROM g)", 1000000)} AS pct,
        (count(*) / (SELECT count(*)::DOUBLE FROM g)) < 0.05 AS is_rare
 FROM g
 GROUP BY priority_group
@@ -295,9 +295,9 @@ def rare_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
     return encode.category_counts(part, "p_brand", rare_threshold=0.05)
 
 
-RARE_SQL = """
+RARE_SQL = f"""
 SELECT p_brand, count(*) AS cnt,
-       (floor((count(*) / (SELECT count(*)::DOUBLE FROM part)) * 1000000 + 0.5) / 1000000) AS pct,
+       {N.sql_quantize("count(*) / (SELECT count(*)::DOUBLE FROM part)", 1000000)} AS pct,
        (count(*) / (SELECT count(*)::DOUBLE FROM part)) < 0.05 AS is_rare
 FROM part
 GROUP BY p_brand
@@ -312,14 +312,14 @@ def quantile_clip_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clipped.select("o_orderkey", N.quantize(F.col("o_totalprice"), 100).alias("price_clipped"))
 
 
-CLIP_SQL = """
+CLIP_SQL = f"""
 WITH q AS (
   SELECT quantile_cont(o_totalprice, 0.05) AS lo,
          quantile_cont(o_totalprice, 0.95) AS hi
   FROM orders
 )
 SELECT o_orderkey,
-       (floor((least(greatest(o_totalprice, (SELECT lo FROM q)), (SELECT hi FROM q))) * 100 + 0.5) / 100) AS price_clipped
+       {N.sql_quantize("least(greatest(o_totalprice, (SELECT lo FROM q)), (SELECT hi FROM q))", 100)} AS price_clipped
 FROM orders
 """
 
@@ -332,7 +332,7 @@ def iqr_outlier_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         li, ["l_quantity", "l_extendedprice", "l_discount"], exact=True)
 
 
-IQR_SQL = """
+IQR_SQL = f"""
 WITH stats AS (
   SELECT quantile_cont(l_quantity, 0.25) AS q1_q, quantile_cont(l_quantity, 0.75) AS q3_q, avg(l_quantity) AS m_q,
          quantile_cont(l_extendedprice, 0.25) AS q1_p, quantile_cont(l_extendedprice, 0.75) AS q3_p, avg(l_extendedprice) AS m_p,
@@ -348,16 +348,16 @@ WITH stats AS (
     avg(pow(l_discount - m_d, 3)) / pow(avg(pow(l_discount - m_d, 2)), 1.5) AS sk_d
   FROM lineitem, stats
 )
-SELECT 'l_quantity' AS column_name, (floor((q1_q) * 10000 + 0.5) / 10000) AS q1, (floor((q3_q) * 10000 + 0.5) / 10000) AS q3, (floor((q3_q-q1_q) * 10000 + 0.5) / 10000) AS iqr,
-       n_q AS n_outliers, (floor((sk_q) * 1000 + 0.5) / 1000) AS skewness
+SELECT 'l_quantity' AS column_name, {N.sql_quantize("q1_q", 10000)} AS q1, {N.sql_quantize("q3_q", 10000)} AS q3, {N.sql_quantize("q3_q-q1_q", 10000)} AS iqr,
+       n_q AS n_outliers, {N.sql_quantize("sk_q", 1000)} AS skewness
 FROM stats, counts
 UNION ALL
-SELECT 'l_extendedprice', (floor((q1_p) * 10000 + 0.5) / 10000), (floor((q3_p) * 10000 + 0.5) / 10000), (floor((q3_p-q1_p) * 10000 + 0.5) / 10000),
-       n_p, (floor((sk_p) * 1000 + 0.5) / 1000)
+SELECT 'l_extendedprice', {N.sql_quantize("q1_p", 10000)}, {N.sql_quantize("q3_p", 10000)}, {N.sql_quantize("q3_p-q1_p", 10000)},
+       n_p, {N.sql_quantize("sk_p", 1000)}
 FROM stats, counts
 UNION ALL
-SELECT 'l_discount', (floor((q1_d) * 10000 + 0.5) / 10000), (floor((q3_d) * 10000 + 0.5) / 10000), (floor((q3_d-q1_d) * 10000 + 0.5) / 10000),
-       n_d, (floor((sk_d) * 1000 + 0.5) / 1000)
+SELECT 'l_discount', {N.sql_quantize("q1_d", 10000)}, {N.sql_quantize("q3_d", 10000)}, {N.sql_quantize("q3_d-q1_d", 10000)},
+       n_d, {N.sql_quantize("sk_d", 1000)}
 FROM stats, counts
 """
 
@@ -438,15 +438,12 @@ def grade_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 GRADE_SQL = f"""
 WITH banded AS (
-  SELECT (floor((value * 2 - 100) * 100 + 0.5) / 100) AS kwh,
-         CASE WHEN (floor((value * 2 - 100) * 100 + 0.5) / 100) < 0 THEN 'A+'
-              WHEN (floor((value * 2 - 100) * 100 + 0.5) / 100) < 100 THEN 'A'
-              WHEN (floor((value * 2 - 100) * 100 + 0.5) / 100) < 200 THEN 'B'
-              WHEN (floor((value * 2 - 100) * 100 + 0.5) / 100) < 300 THEN 'C'
-              WHEN (floor((value * 2 - 100) * 100 + 0.5) / 100) < 400 THEN 'D'
-              WHEN (floor((value * 2 - 100) * 100 + 0.5) / 100) < 500 THEN 'E'
+  SELECT kwh,
+         CASE WHEN kwh < 0 THEN 'A+' WHEN kwh < 100 THEN 'A'
+              WHEN kwh < 200 THEN 'B' WHEN kwh < 300 THEN 'C'
+              WHEN kwh < 400 THEN 'D' WHEN kwh < 500 THEN 'E'
               ELSE 'F' END AS epc_raw
-  FROM events
+  FROM (SELECT {N.sql_quantize("value * 2 - 100", 100)} AS kwh FROM events)
 )
 SELECT CASE epc_raw WHEN 'A+' THEN 'A' WHEN 'G' THEN 'F' ELSE epc_raw END AS epc,
        count(*) AS n, {sql_avg_money("kwh")} AS avg_kwh
@@ -501,8 +498,8 @@ def export_column_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXPORT_SQL = """
-SELECT o_orderkey AS id, (floor((o_totalprice) * 100 + 0.5) / 100) AS Price,
+EXPORT_SQL = f"""
+SELECT o_orderkey AS id, {N.sql_quantize("o_totalprice", 100)} AS Price,
        o_orderpriority AS Subtype, o_orderstatus AS State_of_building,
        CAST(NULL AS VARCHAR) AS Type_of_sale, CAST(NULL AS DOUBLE) AS sale_annuity
 FROM orders
@@ -540,25 +537,25 @@ def ingest_nested_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-INGEST_JSON_SQL = """
+INGEST_JSON_SQL = f"""
 WITH payload AS (
   SELECT o_orderkey,
-         '{"property": {'
+         '{{"property": {{'
          || CASE WHEN o_orderkey % 3 <> 0
-                 THEN '"location": {"locality": "L' || CAST(o_orderkey % 50 AS VARCHAR)
+                 THEN '"location": {{"locality": "L' || CAST(o_orderkey % 50 AS VARCHAR)
                       || '", "postalCode": "' || CAST(1000 + o_orderkey % 9000 AS VARCHAR)
-                      || '"}, '
+                      || '"}}, '
                  ELSE '' END
          || '"type": "' || o_orderstatus
-         || '"}, "transaction": {"sale": {"price": '
-         || CAST((floor((o_totalprice) * 100 + 0.5) / 100) AS VARCHAR) || '}}}' AS j
+         || '"}}, "transaction": {{"sale": {{"price": '
+         || CAST({N.sql_quantize("o_totalprice", 100)} AS VARCHAR) || '}}}}}}' AS j
   FROM orders
 )
 SELECT o_orderkey,
        json_extract_string(j, '$.property.location.locality') AS locality,
        json_extract_string(j, '$.property.location.postalCode') AS postal_code,
        json_extract_string(j, '$.property.type') AS property_type,
-       (floor((CAST(json_extract(j, '$.transaction.sale.price') AS DOUBLE)) * 100 + 0.5) / 100) AS price
+       {N.sql_quantize("CAST(json_extract(j, '$.transaction.sale.price') AS DOUBLE)", 100)} AS price
 FROM payload
 """
 
@@ -641,8 +638,8 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PROFILE_SELECTS = " UNION ALL ".join(
     f"SELECT '{c}' AS column_name, count({c}) AS cnt, "
     f"CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls, "
-    f"(floor((min({c})) * 10000 + 0.5) / 10000) AS min_val, (floor((max({c})) * 10000 + 0.5) / 10000) AS max_val, "
-    f"{sql_avg_money(c, 4)} AS mean_val, (floor((stddev_samp({c})) * 10000 + 0.5) / 10000) AS std_val "
+    f"{N.sql_quantize(f'min({c})', 10000)} AS min_val, {N.sql_quantize(f'max({c})', 10000)} AS max_val, "
+    f"{sql_avg_money(c, 4)} AS mean_val, {N.sql_quantize(f'stddev_samp({c})', 10000)} AS std_val "
     f"FROM lineitem"
     for c in _PROFILE_COLS)
 

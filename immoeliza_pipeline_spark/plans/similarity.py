@@ -32,7 +32,7 @@ WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 q AS (SELECT vec_id, v FROM e WHERE vec_id % 100 = 0),
 scored AS (
   SELECT q.vec_id AS query_id, a.vec_id AS neighbor_id,
-         (floor(({_cos_sql('a.v', 'q.v')}) * 10000 + 0.5) / 10000) AS cos_sim
+         {N.sql_quantize(_cos_sql('a.v', 'q.v'), 10000)} AS cos_sim
   FROM e a, q
   WHERE a.vec_id <> q.vec_id
 )
@@ -57,9 +57,9 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 NEAR_DUP_SQL = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
 SELECT a.vec_id AS id1, b.vec_id AS id2,
-       (floor(({_cos_sql('a.v', 'b.v')}) * 10000 + 0.5) / 10000) AS cos_sim
+       {N.sql_quantize(_cos_sql('a.v', 'b.v'), 10000)} AS cos_sim
 FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE (floor(({_cos_sql('a.v', 'b.v')}) * 10000 + 0.5) / 10000) >= 0.45
+WHERE cos_sim >= 0.45
 """
 
 
@@ -140,9 +140,9 @@ rr AS (SELECT {_R_LADDER} AS r FROM (SELECT count(*) AS n FROM e)),
 proj AS (SELECT vec_id, v, {_PROJ_COLS} FROM e),
 banded AS (SELECT vec_id, v, {_BAND_CASES} FROM proj, rr)
 SELECT a.vec_id AS id1, b.vec_id AS id2,
-       (floor(({_cos_sql('a.v', 'b.v')}) * 10000 + 0.5) / 10000) AS cos_sim
+       {N.sql_quantize(_cos_sql('a.v', 'b.v'), 10000)} AS cos_sim
 FROM banded a JOIN banded b ON a.vec_id < b.vec_id AND ({_ANY_BAND})
-WHERE (floor(({_cos_sql('a.v', 'b.v')}) * 10000 + 0.5) / 10000) >= 0.45
+WHERE cos_sim >= 0.45
 """
 
 
@@ -162,9 +162,9 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # dim bound derived from the data (see _kmeans_round): a changed
 # embedding width diverges loudly instead of silently truncating
-CENTROIDS_SQL = """
+CENTROIDS_SQL = f"""
 SELECT label, i - 1 AS dim,
-       (floor((avg(e[i])) * 1000000 + 0.5) / 1000000) AS mean_val, count(*) AS n_vectors
+       {N.sql_quantize("avg(e[i])", 1000000)} AS mean_val, count(*) AS n_vectors
 FROM (SELECT label, embedding::DOUBLE[] AS e FROM embeddings),
      unnest(range(1, len(e) + 1)) t(i)
 GROUP BY label, i
@@ -203,7 +203,7 @@ q AS (SELECT vec_id AS query_id, v AS qv,
       FROM b WHERE vec_id % 100 = 0),
 scored AS (
   SELECT q.query_id, a.vec_id AS neighbor_id,
-         (floor(({_cos_sql('q.qv', 'a.v')}) * 10000 + 0.5) / 10000) AS cos_sim
+         {N.sql_quantize(_cos_sql('q.qv', 'a.v'), 10000)} AS cos_sim
   FROM b a JOIN q ON ({_ANN_ANY_BAND}) AND a.vec_id <> q.query_id
 )
 SELECT query_id, neighbor_id, cos_sim, rank
@@ -253,6 +253,8 @@ def ivf_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id", "cell", "cos_sim", "rank")
 
 
+_NEG_COS_ES = N.sql_quantize(f"-({_cos_sql('e.v', 's.v')})", 1000000)
+
 IVF_SQL = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 -- mirror of _ivf_seed_modulus: m = max(1, n // max(3, ceil(sqrt(n)/4)))
@@ -264,7 +266,7 @@ params AS (
 seeds AS (SELECT vec_id AS seed_id, v FROM e, params WHERE vec_id % m = 0),
 assign AS (
   SELECT e.vec_id AS vid, e.v,
-         min(struct_pack(negsim := (floor((-({_cos_sql('e.v', 's.v')})) * 1000000 + 0.5) / 1000000), seed_id := s.seed_id)).seed_id AS cell
+         min(struct_pack(negsim := {_NEG_COS_ES}, seed_id := s.seed_id)).seed_id AS cell
   FROM e CROSS JOIN (SELECT seed_id, v FROM seeds) s(seed_id, v)
   GROUP BY e.vec_id, e.v
 ),
@@ -274,7 +276,7 @@ q AS (
     SELECT e.vec_id AS vid, e.v, s.seed_id,
            row_number() OVER (
              PARTITION BY e.vec_id
-             ORDER BY (floor((-({_cos_sql('e.v', 's.v')})) * 1000000 + 0.5) / 1000000),
+             ORDER BY {_NEG_COS_ES},
                       s.seed_id) AS rn
     FROM e CROSS JOIN (SELECT seed_id, v FROM seeds) s(seed_id, v)
     WHERE e.vec_id % 100 = 0
@@ -283,7 +285,7 @@ q AS (
 ),
 scored AS (
   SELECT q.query_id, a.vid AS neighbor_id, a.cell,
-         (floor(({_cos_sql('q.qv', 'a.v')}) * 10000 + 0.5) / 10000) AS cos_sim
+         {N.sql_quantize(_cos_sql('q.qv', 'a.v'), 10000)} AS cos_sim
   FROM assign a JOIN q ON a.cell = q.cell AND a.vid <> q.query_id
 )
 SELECT query_id, neighbor_id, cell, cos_sim, rank
@@ -336,8 +338,8 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dq(a: str, b: str) -> str:
     """Quantized squared euclidean distance (DuckDB), matching
     operators.similarity.sq_dist + the millionths floor."""
-    return (f"floor(list_sum(list_transform(list_zip({a}, {b}), "
-            f"p -> (p[1]-p[2])*(p[1]-p[2]))) * 1e6 + 0.5)/1e6")
+    return N.sql_quantize(f"list_sum(list_transform(list_zip({a}, {b}), "
+                          f"p -> (p[1]-p[2])*(p[1]-p[2])))", 1000000)
 
 
 def _kmeans_round(src_c: str, out_a: str, out_m: str, out_c: str,
@@ -356,7 +358,7 @@ def _kmeans_round(src_c: str, out_a: str, out_m: str, out_c: str,
 ),
 {out_m} AS (
   SELECT best.cid AS cid, i - 1 AS dim,
-         floor(avg(v[i]) * 1e6 + 0.5)/1e6 AS mv
+         {N.sql_quantize("avg(v[i])", 1000000)} AS mv
   FROM {out_a}, unnest(range(1, len(v) + 1)) t(i) GROUP BY 1, 2
 ),
 {out_c} AS (SELECT cid, list(mv ORDER BY dim) AS c FROM {out_m} GROUP BY cid)"""
@@ -443,8 +445,8 @@ q AS (
 ),
 scored AS (
   SELECT q.query_id, a.vid AS neighbor_id, a.cid AS cell,
-         floor(list_sum(list_transform(list_zip(q.qv, a.v), p -> p[1] * p[2]))
-               * 10000 + 0.5) / 10000 AS cos_sim
+         {N.sql_quantize("list_sum(list_transform(list_zip(q.qv, a.v), p -> p[1] * p[2]))", 10000)}
+           AS cos_sim
   FROM cells a JOIN q USING (cid) WHERE a.vid <> q.query_id
 )
 SELECT query_id, neighbor_id, cell, cos_sim, rank

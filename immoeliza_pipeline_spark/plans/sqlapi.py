@@ -13,7 +13,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from immoeliza_pipeline_spark.functions.num import sql_exact_units, sql_sum_money
+from immoeliza_pipeline_spark.functions.num import sql_exact_units, sql_quantize, sql_sum_money
 from immoeliza_pipeline_spark.sources.readers import TABLES, load_table
 
 
@@ -75,9 +75,9 @@ ORDER BY revenue DESC, c_custkey ASC
 LIMIT 20
 """
 
-Q18_SQL = """
+Q18_SQL = f"""
 SELECT c_custkey, o_orderkey, o_orderdate,
-       (floor((o_totalprice) * 100 + 0.5) / 100) AS total_price,
+       {sql_quantize("o_totalprice", 100)} AS total_price,
        sum(l_quantity) AS total_qty
 FROM customer
 JOIN orders   ON c_custkey = o_custkey
@@ -114,7 +114,7 @@ GROUP BY l_returnflag
 
 _PROMO = f"CASE WHEN p_type = 'PROMO' THEN {_REVENUE} ELSE 0 END"
 Q14_SQL = f"""
-SELECT (floor((100e0 * sum({sql_exact_units(_PROMO)}) / sum({sql_exact_units(_REVENUE)})) * 10000 + 0.5) / 10000) AS promo_revenue_pct
+SELECT {sql_quantize(f"100e0 * sum({sql_exact_units(_PROMO)}) / sum({sql_exact_units(_REVENUE)})", 10000)} AS promo_revenue_pct
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE l_shipdate >= TIMESTAMP '1997-03-01'
   AND l_shipdate <  TIMESTAMP '1997-04-01'
@@ -170,7 +170,7 @@ GROUP BY p_brand, p_type
 """
 
 Q17_SQL = f"""
-SELECT (floor(sum({sql_exact_units("l_extendedprice")}) / 1000000e0 / 7.0 * 100 + 0.5) / 100e0) AS avg_yearly
+SELECT {sql_quantize(f"sum({sql_exact_units('l_extendedprice')}) / 1000000e0 / 7.0", 100)} AS avg_yearly
 FROM lineitem JOIN part ON p_partkey = l_partkey
 WHERE p_type = 'ECONOMY'
   AND l_quantity < (
@@ -181,7 +181,7 @@ WHERE p_type = 'ECONOMY'
 _NATION_9 = "CASE WHEN supp_nation = 'NATION_9' THEN volume ELSE 0 END"
 Q8_SQL = f"""
 SELECT o_year,
-       (floor((sum({sql_exact_units(_NATION_9)}) * 1e0 / sum({sql_exact_units("volume")})) * 1000000 + 0.5) / 1000000) AS mkt_share
+       {sql_quantize(f"sum({sql_exact_units(_NATION_9)}) * 1e0 / sum({sql_exact_units('volume')})", 1000000)} AS mkt_share
 FROM (
   SELECT year(o_orderdate) AS o_year,
          l_extendedprice * (1 - l_discount) AS volume,

@@ -48,9 +48,9 @@ QUALITY_SQL = f"""
 WITH d AS (SELECT doc_id, text, {_TOKS} AS t FROM documents)
 SELECT doc_id,
        len(t) AS n_tokens,
-       (floor((len(list_filter(t, x -> x IN ({_STOP_IN}))) / len(t)::DOUBLE) * 10000 + 0.5) / 10000) AS stopword_ratio,
-       (floor((list_sum(list_transform(t, x -> length(x)::DOUBLE)) / len(t)) * 10000 + 0.5) / 10000) AS avg_word_len,
-       (floor(((length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g'))) / length(text)::DOUBLE) * 10000 + 0.5) / 10000) AS punct_ratio,
+       {N.sql_quantize(f"len(list_filter(t, x -> x IN ({_STOP_IN}))) / len(t)::DOUBLE", 10000)} AS stopword_ratio,
+       {N.sql_quantize("list_sum(list_transform(t, x -> length(x)::DOUBLE)) / len(t)", 10000)} AS avg_word_len,
+       {N.sql_quantize("(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g'))) / length(text)::DOUBLE", 10000)} AS punct_ratio,
        (len(t) >= 20 AND len(list_filter(t, x -> x IN ({_STOP_IN}))) / len(t)::DOUBLE <= 0.5) AS passes_quality
 FROM d
 """
@@ -180,11 +180,9 @@ g AS (
 )
 SELECT doc_id, n_trigrams, n_distinct_trigrams,
        CASE WHEN n_trigrams > 0
-            THEN floor(((n_trigrams - n_distinct_trigrams) / n_trigrams::DOUBLE) * 10000 + 0.5) / 10000
+            THEN {N.sql_quantize("(n_trigrams - n_distinct_trigrams) / n_trigrams::DOUBLE", 10000)}
        END AS dup_trigram_frac,
-       CASE WHEN n_trigrams > 0
-            THEN floor(((n_trigrams - n_distinct_trigrams) / n_trigrams::DOUBLE) * 10000 + 0.5) / 10000 <= 0.2
-       END AS passes_repetition
+       dup_trigram_frac <= 0.2 AS passes_repetition
 FROM g
 """
 
@@ -218,6 +216,10 @@ def vocabulary_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("cum_coverage")))
 
 
+_COVERAGE = """CAST(sum(n_occurrences) OVER (ORDER BY n_occurrences DESC, token ASC
+                                             ROWS UNBOUNDED PRECEDING) AS BIGINT)
+               / CAST(sum(n_occurrences) OVER () AS BIGINT)::DOUBLE"""
+
 VOCAB_SQL = f"""
 WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS token FROM documents),
 counts AS (
@@ -228,10 +230,7 @@ counts AS (
 SELECT token, n_occurrences, n_docs,
        CAST(row_number() OVER (ORDER BY n_occurrences DESC, token ASC) AS BIGINT)
            AS rank,
-       (floor((CAST(sum(n_occurrences) OVER (ORDER BY n_occurrences DESC, token ASC
-                                             ROWS UNBOUNDED PRECEDING) AS BIGINT)
-               / CAST(sum(n_occurrences) OVER () AS BIGINT)::DOUBLE) * 10000 + 0.5) / 10000)
-           AS cum_coverage
+       {N.sql_quantize(_COVERAGE, 10000)} AS cum_coverage
 FROM counts
 """
 
@@ -272,7 +271,7 @@ df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
 n AS (SELECT count(*) AS n_total FROM documents),
 scored AS (
   SELECT tf.doc_id, tf.token,
-         (floor(((tf_count / doc_len::DOUBLE) * (n_total / df::DOUBLE)) * 1000000 + 0.5) / 1000000) AS score
+         {N.sql_quantize("(tf_count / doc_len::DOUBLE) * (n_total / df::DOUBLE)", 1000000)} AS score
   FROM tf JOIN doc_len USING (doc_id) JOIN df USING (token) CROSS JOIN n
 )
 SELECT doc_id, token, score, term_rank
@@ -392,6 +391,15 @@ FROM e2
 """
 
 
+def _mean_logprob():
+    """Mean of a doc's integer-millionth log-probs, half-up to 1e-4:
+    the exact sum divided once by count·100 (``_MEAN_LP_SQL``)."""
+    return N.half_up(F.sum("lp_units") / (F.count(F.lit(1)) * F.lit(100.0))) / 10000
+
+
+_MEAN_LP_SQL = f"{N.sql_half_up('CAST(sum(lp) AS BIGINT) / (count(*) * 100e0)')} / 1e4"
+
+
 def unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM quality score (the CCNet-style perplexity signal,
     self-trained on the corpus): per doc, the mean over its tokens of
@@ -416,12 +424,11 @@ def unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (toks.join(counts, "token")
               .crossJoin(F.broadcast(total))
               .select("doc_id",
-                      F.floor(F.log(F.col("n_tok") / F.col("__N"))
-                              * 1000000 + 0.5).cast("long").alias("lp_units")))
+                      N.exact_units(F.log(F.col("n_tok") / F.col("__N")))
+                      .alias("lp_units")))
     return (scored.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_tokens"),
-                 (F.floor(F.sum("lp_units") / (F.count(F.lit(1)) * F.lit(100.0))
-                          + 0.5) / 10000).alias("mean_logprob")))
+                 _mean_logprob().alias("mean_logprob")))
 
 
 UNIGRAM_LP_SQL = f"""
@@ -430,11 +437,11 @@ counts AS (SELECT token, count(*) AS n_tok FROM toks GROUP BY token),
 tot AS (SELECT count(*) AS n FROM toks),
 scored AS (
   SELECT doc_id,
-         CAST(floor(ln(n_tok / (SELECT n FROM tot)) * 1e6 + 0.5) AS BIGINT) AS lp
+         {N.sql_exact_units("ln(n_tok / (SELECT n FROM tot))")} AS lp
   FROM toks JOIN counts USING (token)
 )
 SELECT doc_id, count(*) AS n_tokens,
-       floor(CAST(sum(lp) AS BIGINT) / (count(*) * 100e0) + 0.5) / 1e4 AS mean_logprob
+       {_MEAN_LP_SQL} AS mean_logprob
 FROM scored GROUP BY doc_id
 """
 
@@ -492,12 +499,10 @@ def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
               .join(uc, F.col("w2") == F.col("token"))
               .crossJoin(F.broadcast(total))
               .select("doc_id",
-                      F.floor(F.log(prob) * 1000000 + 0.5)
-                      .cast("long").alias("lp_units")))
+                      N.exact_units(F.log(prob)).alias("lp_units")))
     return (scored.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_bigrams"),
-                 (F.floor(F.sum("lp_units") / (F.count(F.lit(1)) * F.lit(100.0))
-                          + 0.5) / 10000).alias("mean_logprob")))
+                 _mean_logprob().alias("mean_logprob")))
 
 
 BIGRAM_LP_SQL = f"""
@@ -514,15 +519,13 @@ uc AS (SELECT token, count(*) AS c2 FROM uni GROUP BY token),
 tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM uni),
 scored AS (
   SELECT doc_id,
-         CAST(floor(ln(0.5 * (c12 / CAST(c1 AS DOUBLE))
-                       + 0.5 * (c2 / CAST((SELECT n FROM tot) AS DOUBLE)))
-                    * 1e6 + 0.5) AS BIGINT) AS lp
+         {N.sql_exact_units('''ln(0.5 * (c12 / CAST(c1 AS DOUBLE))
+                       + 0.5 * (c2 / CAST((SELECT n FROM tot) AS DOUBLE)))''')} AS lp
   FROM bi JOIN bc USING (w1, w2) JOIN pc USING (w1)
           JOIN uc ON uc.token = bi.w2
 )
 SELECT doc_id, count(*) AS n_bigrams,
-       floor(CAST(sum(lp) AS BIGINT) / (count(*) * 100e0) + 0.5) / 1e4
-           AS mean_logprob
+       {_MEAN_LP_SQL} AS mean_logprob
 FROM scored GROUP BY doc_id
 """
 
@@ -558,8 +561,7 @@ docs_per AS (
 SELECT doc_id, count(*) AS n_chunks,
        CAST(sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS BIGINT)
            AS n_shared_chunks,
-       floor((sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END)
-              / count(*)::DOUBLE) * 10000 + 0.5) / 10000
+       {N.sql_quantize("sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) / count(*)::DOUBLE", 10000)}
            AS shared_chunk_frac
 FROM chunks JOIN docs_per USING (chunk_md5)
 GROUP BY doc_id
@@ -595,9 +597,10 @@ def quality_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(pass_rep.cast("int")).cast("long").alias("pass_repetition"))
 
 
-_REP_FRAC = ("floor(((len(t) - 2 - len(list_distinct(list_transform("
-             "range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' "
-             "|| t[i+2])))) / (len(t) - 2)::DOUBLE) * 10000 + 0.5) / 10000")
+_REP_FRAC = N.sql_quantize(
+    "(len(t) - 2 - len(list_distinct(list_transform("
+    "range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' "
+    "|| t[i+2])))) / (len(t) - 2)::DOUBLE", 10000)
 
 QUALITY_FUNNEL_SQL = f"""
 WITH d AS (SELECT doc_id, {_TOKS} AS t FROM documents),

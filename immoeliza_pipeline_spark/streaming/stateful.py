@@ -19,6 +19,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from immoeliza_pipeline_spark.functions.num import SCALE
+
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double, last_ts timestamp"
 STATE_SCHEMA = "n bigint, total double, last_ts timestamp"
 
@@ -35,7 +37,7 @@ def _update_user_profile(key, pdfs, state: GroupState):
     n, total, last_ts = state.get if state.exists else (0, 0.0, None)
     for pdf in pdfs:
         n += len(pdf)
-        total += float(sum(math.floor(v * 1_000_000 + 0.5)
+        total += float(sum(math.floor(v * SCALE + 0.5)
                            for v in pdf["value"].dropna()))
         batch_max = pdf["ts"].max()  # NaT if the batch's ts are all null
         if pd.notna(batch_max):
@@ -47,7 +49,7 @@ def _update_user_profile(key, pdfs, state: GroupState):
     yield pd.DataFrame({
         "user_id": [key[0]],
         "n_events": [n],
-        "sum_value": [math.floor(total / 1_000_000 * 100 + 0.5) / 100],
+        "sum_value": [math.floor(total / SCALE * 100 + 0.5) / 100],
         "last_ts": [last_ts],
     })
 

@@ -3,7 +3,10 @@
 or accumulation order, and half-tie values must round identically to
 the oracle-SQL builders."""
 
+import math
+
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.functions import num as N
@@ -73,3 +76,25 @@ def test_avg_money_matches_oracle_on_ties(spark):
     oracle = con.execute(
         f"SELECT {N.sql_avg_money('x', 2)} FROM t").fetchone()[0]
     assert got == oracle == 0.02  # half-up
+
+
+@pytest.mark.parametrize("scale", [100, 1000, 10000, 1000000])
+def test_quantize_matches_sql_quantize(spark, scale):
+    """quantize (Spark) and sql_quantize (DuckDB) are one rule: both
+    give Python's floor(x·s + 0.5)/s on exact half-ties, negative
+    ties, magnitudes near 1e12 and NULL."""
+    tie = 1 / (2 * (scale & -scale))  # tie·scale is exactly k + 0.5
+    vals = [tie, 3 * tie, -tie, -3 * tie, 0.0,
+            1e12 + tie, -(1e12 + tie), 999999999999.995, None]
+    want = [None if v is None else math.floor(v * scale + 0.5) / scale
+            for v in vals]
+    rows = list(enumerate(vals))
+    df = spark.createDataFrame(rows, "i int, x double")
+    got = [r.q for r in df.orderBy("i")
+           .select(N.quantize(F.col("x"), scale).alias("q")).collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(i INT, x DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    oracle = [r[0] for r in con.execute(
+        f"SELECT {N.sql_quantize('x', scale)} FROM t ORDER BY i").fetchall()]
+    assert got == oracle == want

@@ -7,7 +7,11 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== pytest =="
-python -m pytest tests/ -q
+# the tier-1 configuration: one Spark core per host CPU, a dedicated
+# local dir, no pytest cache in the tree
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}" \
+SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}" \
+    python -m pytest tests/ -q -p no:cacheprovider
 
 echo "== benchmark smoke =="
 python3 perfbench/smoke.py
