@@ -1,14 +1,17 @@
-"""Text-analysis column functions (SURVEY.md §2.5).
-
-All pure JVM expressions (split/transform/filter/md5) so they run
-inside whole-stage codegen — no Python in the hot path. Every
-construct has an exact DuckDB equivalent for the oracle.
-"""
+"""Text-analysis column functions (SURVEY.md §2.5): pure JVM
+expressions, so they run inside whole-stage codegen. Each rule's
+oracle twin (``sql_*``, SQL text in and out) sits beside it; plans
+stage token and gram lists under a name and pass the name."""
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from immoeliza_pipeline_spark.functions.num import quantize, sql_quantize
 
 # Deterministic stopword sets for the language-ID heuristic and
 # quality scoring. Tiny on purpose: they broadcast as literals inside
@@ -22,6 +25,22 @@ LANG_STOPWORDS = {
     "de": ("der", "die", "und", "von"),
     "zh": ("de", "le", "shi", "he"),
 }
+
+# The quality gate: ≥ MIN_TOKENS tokens, stopword ratio ≤
+# MAX_STOPWORD_RATIO and a duplicate-trigram fraction (Gopher's
+# repetition rule, Rae et al. 2021) ≤ MAX_DUP_TRIGRAM_FRAC.
+MIN_TOKENS = 20
+MAX_STOPWORD_RATIO = 0.5
+MAX_DUP_TRIGRAM_FRAC = 0.2
+
+# PII (pattern, mark) rules in application order — IPs before phones,
+# so a dotted digit run becomes one [IP] — in the regex subset Java
+# and RE2 evaluate identically.
+PII_RULES = (
+    (r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "[EMAIL]"),
+    (r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b", "[IP]"),
+    (r"\+?\d[\d().\- ]{6,}\d", "[PHONE]"),
+)
 
 
 def tokens(col: Column) -> Column:
@@ -39,11 +58,13 @@ def punct_ratio(col: Column) -> Column:
     return (F.length(col) - F.length(stripped)) / F.length(col)
 
 
-def stopword_ratio(col: Column, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
-    """Fraction of tokens that are stopwords (counting repeats)."""
-    toks = tokens(col)
-    matched = F.filter(toks, lambda t: t.isin(*stopwords))
-    return F.size(matched) / F.size(toks)
+def _count_in(toks: Column, words: tuple[str, ...]) -> Column:
+    return F.size(F.filter(toks, lambda t: t.isin(*words)))
+
+
+def stopword_ratio(toks: Column) -> Column:
+    """Fraction of the token array ``toks`` that are stopwords."""
+    return _count_in(toks, STOPWORDS) / F.size(toks)
 
 
 def avg_word_len(col: Column) -> Column:
@@ -56,8 +77,7 @@ def avg_word_len(col: Column) -> Column:
 
 def lang_score(col: Column, lang: str) -> Column:
     """Count of tokens in the language's stopword set."""
-    toks = tokens(col)
-    return F.size(F.filter(toks, lambda t: t.isin(*LANG_STOPWORDS[lang])))
+    return _count_in(tokens(col), LANG_STOPWORDS[lang])
 
 
 def fingerprint(col: Column) -> Column:
@@ -65,6 +85,10 @@ def fingerprint(col: Column) -> Column:
     text (preprocessing normalize + hash; stable across engines)."""
     normalized = F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
     return F.md5(normalized.cast("binary"))
+
+
+def redact_pii(col: Column) -> Column:
+    return reduce(lambda c, rule: F.regexp_replace(c, *rule), PII_RULES, col)
 
 
 def word_shingles(tokens_col: Column, n: int = 3) -> Column:
@@ -80,3 +104,68 @@ def word_shingles(tokens_col: Column, n: int = 3) -> Column:
                                      for j in range(n)]),
     )
     return F.when(k >= 1, grams).otherwise(F.array().cast("array<string>"))
+
+
+def dup_trigram_frac(grams: Column) -> Column:
+    """Quantized share of the staged ``grams`` repeating an earlier
+    gram of the doc; NULL when there is no gram."""
+    return quantize((F.size(grams) - F.size(F.array_distinct(grams)))
+                    / F.size(grams), 10000)
+
+
+def _gate_tests(n, sw, rep, ge, le) -> list:
+    """The gate's tests on the given signals, in the build's order."""
+    tests = ((n, ge, MIN_TOKENS), (sw, le, MAX_STOPWORD_RATIO),
+             (rep, le, MAX_DUP_TRIGRAM_FRAC))
+    return [cmp(x, bound) for x, cmp, bound in tests if x is not None]
+
+
+def quality_gate(n: Column | None = None, sw: Column | None = None,
+                 rep: Column | None = None) -> Column:
+    """True when every given signal passes the quality gate."""
+    return reduce(operator.and_, _gate_tests(n, sw, rep, operator.ge, operator.le))
+
+
+# ---- oracle-SQL text builders (identical semantics) ----
+
+def sql_tokens(text: str) -> str:
+    return f"string_split(trim(regexp_replace({text}, '\\s+', ' ', 'g')), ' ')"
+
+
+def sql_token_count(text: str) -> str:
+    return f"len({sql_tokens(text)})"
+
+
+def _sql_count_in(t: str, words: tuple[str, ...]) -> str:
+    return f"len(list_filter({t}, x -> x IN ({', '.join(repr(w) for w in words)})))"
+
+
+def sql_stopword_ratio(t: str) -> str:
+    return f"{_sql_count_in(t, STOPWORDS)} / len({t})::DOUBLE"
+
+
+def sql_lang_score(t: str, lang: str) -> str:
+    return _sql_count_in(t, LANG_STOPWORDS[lang])
+
+
+def sql_redact_pii(text: str) -> str:
+    return reduce(lambda s, rule: f"regexp_replace({s}, '{rule[0]}', '{rule[1]}', 'g')",
+                  PII_RULES, text)
+
+
+def sql_word_shingles(t: str, n: int = 3) -> str:
+    # the CASE gives a NULL token list the empty list Spark gives it
+    gram = " || ' ' || ".join(f"{t}[i+{j}]" if j else f"{t}[i]" for j in range(n))
+    return (f"CASE WHEN len({t}) >= {n} THEN list_transform("
+            f"range(1, len({t}) - {n - 2}), i -> {gram}) ELSE [] END")
+
+
+def sql_dup_trigram_frac(g: str) -> str:
+    # in a WHERE, g's 3 reads re-run unless g comes from a MATERIALIZED CTE
+    return sql_quantize(f"(len({g}) - len(list_distinct({g}))) / len({g})::DOUBLE", 10000)
+
+
+def sql_quality_gate(n: str | None = None, sw: str | None = None,
+                     rep: str | None = None) -> str:
+    return "(" + " AND ".join(_gate_tests(
+        n, sw, rep, lambda x, b: f"{x} >= {b!r}", lambda x, b: f"{x} <= {b!r}")) + ")"

@@ -141,6 +141,25 @@ def jaccard_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
         ("id1", "id2"), sizes, sizes, threshold)
 
 
+def _band_keys(frame: DataFrame, cols: list, band_cols: list[str]) -> DataFrame:
+    """``cols`` once per band of ``band_cols``, with its (__bi, __bv)."""
+    return frame.select(*cols, F.posexplode(F.array(*[
+        F.col(c) for c in band_cols])).alias("__bi", "__bv"))
+
+
+def _first_band_match(a: str, b: str, pair: Column,
+                      earlier: list[str]) -> Column:
+    """banded_self_join's first-matching-band condition on two
+    _band_keys tables aliased ``a``/``b`` (``earlier``: the band
+    columns before the last), ANDed with ``pair`` after the key."""
+    cond = ((F.col(f"{a}.__bi") == F.col(f"{b}.__bi"))
+            & (F.col(f"{a}.__bv") == F.col(f"{b}.__bv")) & pair)
+    for p, c in enumerate(earlier):
+        cond &= F.when(F.col(f"{a}.__bi") <= p, F.lit(True)).otherwise(
+            ~F.coalesce(F.col(f"{a}.{c}") == F.col(f"{b}.{c}"), F.lit(False)))
+    return cond
+
+
 def banded_self_join(frame: DataFrame, band_cols: list[str], id_col: str,
                      pair_select) -> DataFrame:
     """OR-construction candidate generation shared by every banded-LSH
@@ -162,21 +181,11 @@ def banded_self_join(frame: DataFrame, band_cols: list[str], id_col: str,
     then joins back once per side to feed pair_select. ``frame``
     should be persisted by the caller — it feeds the key table and
     both payload sides."""
-    keys = frame.select(
-        F.col(id_col).alias("__id"),
-        *[F.col(c).alias(f"__b{i}") for i, c in enumerate(band_cols[:-1])],
-        F.posexplode(F.array(*[F.col(c) for c in band_cols]))
-        .alias("__bi", "__bv"))
-    cond = ((F.col("ka.__bi") == F.col("kb.__bi"))
-            & (F.col("ka.__bv") == F.col("kb.__bv"))
-            & (F.col("ka.__id") < F.col("kb.__id")))
-    for p in range(len(band_cols) - 1):
-        # first-match-only: when the matched band index is past band
-        # p, band p must NOT also match (else that earlier join row
-        # already emitted this pair)
-        cond &= F.when(F.col("ka.__bi") <= p, F.lit(True)).otherwise(
-            ~F.coalesce(F.col(f"ka.__b{p}") == F.col(f"kb.__b{p}"),
-                        F.lit(False)))
+    earlier = [f"__b{i}" for i in range(len(band_cols) - 1)]
+    keys = _band_keys(frame, [F.col(id_col).alias("__id"), *[
+        F.col(c).alias(e) for c, e in zip(band_cols, earlier)]], band_cols)
+    cond = _first_band_match("ka", "kb", F.col("ka.__id") < F.col("kb.__id"),
+                             earlier)
     pairs = (keys.alias("ka").join(keys.alias("kb"), cond)
         .select(F.col("ka.__id").alias("__id1"),
                 F.col("kb.__id").alias("__id2")))

@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.functions.num import quantize
+from immoeliza_pipeline_spark.operators.dedup import (_band_keys, _first_band_match,
+                                                      banded_self_join)
 
 
 def as_double(col: Column) -> Column:
@@ -147,7 +149,6 @@ def near_dup_pairs_bucketed(corpus: DataFrame, id_col: str, vec_col: str,
     ``rows_per_band=None`` (default) derives r from the corpus row
     count via auto_rows_per_band. The count() is one metadata-cheap
     job at plan-build time."""
-    from immoeliza_pipeline_spark.operators.dedup import banded_self_join
     r = (auto_rows_per_band(corpus.count())
          if rows_per_band is None else rows_per_band)
     c = _banded(corpus, id_col, vec_col, dim, bands, r)
@@ -417,26 +418,13 @@ def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     keys broadcast, so the corpus is never shuffled. The
     first-matching-band predicate (as in banded_self_join) keeps each
     agreeing pair exactly once — no distinct shuffle."""
-    c = _banded(corpus, id_col, vec_col, dim, bands, rows_per_band)
-    q = _banded(queries, id_col, vec_col, dim, bands, rows_per_band)
-
-    def keyed(frame):
-        return frame.select(
-            "vid", "v", "nv", *[f"band{i}" for i in range(bands - 1)],
-            F.posexplode(F.array(*[F.col(f"band{i}")
-                                   for i in range(bands)]))
-            .alias("__bi", "__bv"))
-
-    cond = ((F.col("a.__bi") == F.col("b.__bi"))
-            & (F.col("a.__bv") == F.col("b.__bv"))
-            & (F.col("a.vid") != F.col("b.vid")))
-    for p in range(bands - 1):
-        # first-match-only: a pair agreeing on an earlier band was
-        # already emitted by that band's key row
-        cond &= F.when(F.col("a.__bi") <= p, F.lit(True)).otherwise(
-            ~F.coalesce(F.col(f"a.band{p}") == F.col(f"b.band{p}"),
-                        F.lit(False)))
-    pairs = keyed(c).alias("a").join(F.broadcast(keyed(q).alias("b")), cond)
+    band_cols = [f"band{i}" for i in range(bands)]
+    c, q = (_band_keys(_banded(f, id_col, vec_col, dim, bands, rows_per_band),
+                       ["vid", "v", "nv", *band_cols[:-1]], band_cols)
+            for f in (corpus, queries))
+    cond = _first_band_match("a", "b", F.col("a.vid") != F.col("b.vid"),
+                             band_cols[:-1])
+    pairs = c.alias("a").join(F.broadcast(q.alias("b")), cond)
     return _top_k(pairs.select(
         F.col("b.vid").alias("query_id"), F.col("a.vid").alias("neighbor_id"),
         _banded_cosine("b", "a").alias("cos_sim")), k)

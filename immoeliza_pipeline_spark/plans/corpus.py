@@ -19,8 +19,8 @@ from immoeliza_pipeline_spark.functions import text as T
 from immoeliza_pipeline_spark.operators import dedup as D
 from immoeliza_pipeline_spark.functions.num import quantize, sql_quantize
 from immoeliza_pipeline_spark.operators.similarity import md5_bucket16
-from immoeliza_pipeline_spark.plans.dedup import components_ctes, pairs_ctes
-from immoeliza_pipeline_spark.plans.text import _REP_FRAC, _STOP_IN, _TOKS
+from immoeliza_pipeline_spark.plans.dedup import (any_band_sql, components_ctes,
+                                                  pairs_ctes)
 from immoeliza_pipeline_spark.sources.readers import load_table
 
 # per-language sampling rates as md5-prefix hex thresholds:
@@ -60,11 +60,11 @@ FROM documents
 WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < {_THRESH_CASE}
 """
 
-def _gate(docs: DataFrame, max_rep: float | None = None) -> DataFrame:
+def _gate(docs: DataFrame, repetition: bool = False) -> DataFrame:
     """(doc_id, lang, text, __n): the (doc_id, lang, text) docs that
-    pass the quality gates — ≥20 tokens, stopword ratio ≤ 0.5 and,
-    when ``max_rep`` is given, duplicate-trigram fraction ≤ max_rep.
-    __n is the token count, kept so the accounting sums it instead of
+    pass functions.text.quality_gate on token count and stopword ratio
+    and, with ``repetition``, on duplicate-trigram fraction. __n is the
+    token count, kept so the accounting sums it instead of
     re-tokenizing.
 
     The signal frame is PERSISTED between the signal projection and
@@ -75,19 +75,13 @@ def _gate(docs: DataFrame, max_rep: float | None = None) -> DataFrame:
     O(tokens²) per row. Production pipelines write the corpus +
     signals at this same stage boundary."""
     toks = docs.withColumn("__toks", T.tokens(F.col("text")))
-    signals = [
-        "doc_id", "lang", "text", F.size("__toks").alias("__n"),
-        # stopword ratio from the staged __toks (same token array ⇒
-        # identical value), not stopword_ratio(text) which re-splits
-        (F.size(F.filter(F.col("__toks"), lambda t: t.isin(*T.STOPWORDS)))
-         / F.size("__toks")).alias("__sw")]
-    keep = (F.col("__n") >= 20) & (F.col("__sw") <= 0.5)
-    if max_rep is not None:
+    signals = ["doc_id", "lang", "text", F.size("__toks").alias("__n"),
+               T.stopword_ratio(F.col("__toks")).alias("__sw")]
+    if repetition:
         toks = toks.withColumn("__g", T.word_shingles(F.col("__toks"), 3))
-        signals.append(quantize(
-            (F.size("__g") - F.size(F.array_distinct("__g"))) / F.size("__g"),
-            10000).alias("__rep"))
-        keep &= F.col("__rep") <= max_rep
+        signals.append(T.dup_trigram_frac(F.col("__g")).alias("__rep"))
+    keep = T.quality_gate(F.col("__n"), F.col("__sw"),
+                          F.col("__rep") if repetition else None)
     return (toks.select(*signals).persist().filter(keep)
             .select("doc_id", "lang", "text", "__n"))
 
@@ -119,7 +113,7 @@ def _blocklist(spark: SparkSession) -> DataFrame:
 def training_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full corpus build as ONE composed plan:
 
-    1. quality gate (≥20 tokens, stopword ratio ≤ 0.5),
+    1. the quality gate on token count and stopword ratio,
     2. drop near-dup cluster members, keeping the min-id canonical
        doc of each Jaccard≥0.8 cluster,
     3. deterministic stratified sample per language,
@@ -138,12 +132,11 @@ def training_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TRAINING_CORPUS_SQL = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {T.sql_tokens("text")} AS t FROM documents),
 quality AS (
   SELECT d.doc_id, d.lang, toks.t
   FROM documents d JOIN toks ON d.doc_id = toks.doc_id
-  WHERE len(t) >= 20
-    AND len(list_filter(t, x -> x IN ({_STOP_IN}))) / len(t)::DOUBLE <= 0.5
+  WHERE {T.sql_quality_gate("len(t)", T.sql_stopword_ratio("t"))}
 ),
 {pairs_ctes("quality", 0.8)},
 {components_ctes("pairs")},
@@ -198,7 +191,7 @@ def sequence_pack_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SEQUENCE_PACK_SQL = f"""
-WITH toks AS (SELECT doc_id, lang, len({_TOKS}) AS n_tokens FROM documents),
+WITH toks AS (SELECT doc_id, lang, {T.sql_token_count("text")} AS n_tokens FROM documents),
 laid AS (
   SELECT doc_id, lang, n_tokens,
          CAST(sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
@@ -264,18 +257,26 @@ def temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "lang"))
 
 
-TEMPERATURE_SQL = f"""
-WITH stats AS (SELECT lang, count(*) AS n_l FROM documents GROUP BY lang),
+def _temper_ctes(src: str) -> str:
+    """DuckDB CTEs ending in ``tempered``: the rows of ``src`` that
+    _temper keeps."""
+    return f"""stats AS (SELECT lang, count(*) AS n_l FROM {src} GROUP BY lang),
 mn AS (SELECT min(n_l) AS n_min FROM stats),
 rates AS (
   SELECT lang, CAST(floor(pow(n_l / n_min, {TEMP_EXP!r}e0) * 65536) AS INT)
            AS keep_thr
   FROM stats, mn
-)
-SELECT doc_id, lang
-FROM documents JOIN rates USING (lang)
-WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INT)
-      < keep_thr
+),
+tempered AS (
+  SELECT {src}.* FROM {src} JOIN rates USING (lang)
+  WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INT)
+        < keep_thr
+)"""
+
+
+TEMPERATURE_SQL = f"""
+WITH {_temper_ctes("documents")}
+SELECT doc_id, lang FROM tempered
 """
 
 
@@ -374,7 +375,7 @@ def packing_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEQ_VALUES = ", ".join(f"({s})" for s in PACK_SEQ_LENS)
 
 PACKING_EFFICIENCY_SQL = f"""
-WITH counted AS (SELECT lang, len({_TOKS}) AS n FROM documents),
+WITH counted AS (SELECT lang, {T.sql_token_count("text")} AS n FROM documents),
 seqs AS (SELECT * FROM (VALUES {_SEQ_VALUES}) s(seq_len)),
 per_doc AS (
   SELECT seq_len, CAST(sum(n) AS BIGINT) AS n_tokens,
@@ -415,8 +416,8 @@ def llm_corpus_build(spark: SparkSession, sf_dir: str,
     1. PII redaction (emails → IPv4 → phone runs, the pii_redaction
        order) — redact FIRST so tokens/shingles never see raw PII;
     2. URL/domain blocklist (broadcast anti-join on the host);
-    3. quality gates on the redacted text: ≥20 tokens, stopword
-       ratio ≤ 0.5, duplicate-trigram fraction ≤ 0.2;
+    3. the quality gate on the redacted text: token count, stopword
+       ratio and duplicate-trigram fraction;
     4. near-dup removal at Jaccard ≥ 0.8 (df≥2-prefiltered
        inverted-index join, fractional stop-shingle guard sized to
        the GATED corpus, connected components, keep min-id). With
@@ -434,19 +435,14 @@ def llm_corpus_build(spark: SparkSession, sf_dir: str,
     Stage order is load-bearing and mirrored verbatim by the oracle:
     redaction changes tokens, dedup runs only on surviving docs, and
     the sampler's rates see post-dedup counts."""
-    from immoeliza_pipeline_spark.plans.text import (_PII_EMAIL, _PII_IP,
-                                                     _PII_PHONE)
     docs = load_table(spark, sf_dir, "documents")
-    red = docs.select(
-        "doc_id", "lang", "source",
-        F.regexp_replace(F.regexp_replace(F.regexp_replace(
-            F.col("text"), _PII_EMAIL, "[EMAIL]"), _PII_IP, "[IP]"),
-            _PII_PHONE, "[PHONE]").alias("text"))
+    red = docs.select("doc_id", "lang", "source",
+                      T.redact_pii(F.col("text")).alias("text"))
     allowed = (red.withColumn(
         "host", F.concat(F.col("source"), F.lit(".example.com")))
         .join(F.broadcast(_blocklist(spark)), "host", "left_anti")
         .select("doc_id", "lang", "text"))
-    gated = _gate(allowed, max_rep=0.2)
+    gated = _gate(allowed, repetition=True)
 
     edges = D.jaccard_pairs(gated, "doc_id", "text", n=3, threshold=0.8,
                             max_df=D.DEFAULT_MAX_DF_FRAC).select("id1", "id2")
@@ -500,7 +496,7 @@ proj AS (SELECT vec_id, v, {PS._PROJ_COLS} FROM emb_g),
 banded AS MATERIALIZED (SELECT vec_id, v, {PS._BAND_CASES} FROM proj, rr),
 sem_pairs AS (
   SELECT a.vec_id AS id1, b.vec_id AS id2
-  FROM banded a JOIN banded b ON a.vec_id < b.vec_id AND ({PS._ANY_BAND})
+  FROM banded a JOIN banded b ON a.vec_id < b.vec_id AND ({any_band_sql(PS._LSH_BANDS)})
   WHERE {sql_quantize(PS._cos_sql('a.v', 'b.v'), 10000)} >= {_SEMANTIC_COS!r}
 ),
 all_pairs AS (SELECT id1, id2 FROM pairs
@@ -509,29 +505,22 @@ all_pairs AS (SELECT id1, id2 FROM pairs
 
 
 def _llm_build_sql(semantic: bool = False) -> str:
-    from immoeliza_pipeline_spark.plans.text import (_PII_EMAIL, _PII_IP,
-                                                     _PII_PHONE)
-    blocked = ", ".join(f"'{h}'" for h in BLOCKED_HOSTS)
     ep = "all_pairs" if semantic else "pairs"
     return f"""
 WITH red AS (
-  SELECT doc_id, lang, source,
-         regexp_replace(regexp_replace(regexp_replace(text,
-             '{_PII_EMAIL}', '[EMAIL]', 'g'),
-             '{_PII_IP}', '[IP]', 'g'),
-             '{_PII_PHONE}', '[PHONE]', 'g') AS text
+  SELECT doc_id, lang, source, {T.sql_redact_pii("text")} AS text
   FROM documents
 ),
 allowed AS (
   SELECT doc_id, lang, text FROM red
-  WHERE source || '.example.com' NOT IN ({blocked})
+  WHERE source || '.example.com' NOT IN ({_BLOCKED_IN})
 ),
-d AS (SELECT doc_id, lang, text, {_TOKS} AS t FROM allowed),
+d AS (SELECT doc_id, lang, text, {T.sql_tokens("text")} AS t FROM allowed),
+dg AS MATERIALIZED (SELECT *, {T.sql_word_shingles("t", 3)} AS g FROM d),
 gated AS MATERIALIZED (
-  SELECT doc_id, lang, text, t FROM d
-  WHERE len(t) >= 20
-    AND len(list_filter(t, x -> x IN ({_STOP_IN}))) / len(t)::DOUBLE <= 0.5
-    AND {_REP_FRAC} <= 0.2
+  SELECT doc_id, lang, text, t FROM dg
+  WHERE {T.sql_quality_gate("len(t)", T.sql_stopword_ratio("t"),
+                            T.sql_dup_trigram_frac("g"))}
 ),
 {pairs_ctes("gated", 0.8)},
 {_semantic_ctes() if semantic else ''}{components_ctes(ep)},
@@ -540,20 +529,9 @@ deduped AS (
   SELECT * FROM gated
   WHERE doc_id NOT IN (SELECT doc_id FROM non_canonical)
 ),
-stats AS (SELECT lang, count(*) AS n_l FROM deduped GROUP BY lang),
-mn AS (SELECT min(n_l) AS n_min FROM stats),
-rates AS (
-  SELECT lang, CAST(floor(pow(n_l / n_min, {TEMP_EXP!r}e0) * 65536) AS INT)
-           AS keep_thr
-  FROM stats, mn
-),
-sampled AS (
-  SELECT deduped.* FROM deduped JOIN rates USING (lang)
-  WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INT)
-        < keep_thr
-)
+{_temper_ctes("deduped")}
 SELECT lang, count(*) AS n_docs, CAST(sum(len(t)) AS BIGINT) AS n_tokens
-FROM sampled GROUP BY lang
+FROM tempered GROUP BY lang
 """
 
 

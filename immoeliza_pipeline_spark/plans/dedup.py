@@ -12,20 +12,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.functions import num as N
+from immoeliza_pipeline_spark.functions import text as T
 from immoeliza_pipeline_spark.operators import dedup as D
-from immoeliza_pipeline_spark.plans.text import _TOKS
 from immoeliza_pipeline_spark.sources.readers import load_table
 
+_TOKS = T.sql_tokens("text")
 _DOC_TOKS = f"toks AS (SELECT doc_id, {_TOKS} AS t FROM documents)"
-# distinct word trigrams per doc (DuckDB); range(1, n) excludes n
-_SHINGLES_CTE = f"""
-  {_DOC_TOKS},
-  sh AS (
-    SELECT DISTINCT doc_id AS id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-    FROM toks, unnest(range(1, len(t) - 1)) AS u(i)
-    WHERE len(t) >= 3
-  )
-"""
+
+
+def _shingle_rows(src: str, n: int = 3) -> str:
+    """DuckDB SELECT of the distinct (id, shingle) word n-grams of the
+    (doc_id, t) rows of ``src`` — operators.dedup.shingle_table."""
+    return (f"SELECT DISTINCT q.doc_id AS id, shingle\n"
+            f"  FROM {src} q, unnest({T.sql_word_shingles('t', n)}) AS u(shingle)")
+
+
+def any_band_sql(bands: int, b: str = "b") -> str:
+    """DuckDB join condition: rows ``a`` and ``b`` agree on at least one
+    of ``bands`` band columns — the OR-construction banded_self_join
+    evaluates as a key join."""
+    return " OR ".join(f"a.band{i} = {b}.band{i}" for i in range(bands))
 
 
 def pairs_ctes(src: str, threshold: float, old: str | None = None) -> str:
@@ -42,11 +48,8 @@ def pairs_ctes(src: str, threshold: float, old: str | None = None) -> str:
     DuckDB otherwise re-evaluates a CTE at every reference."""
     sides = {"a": src} if old is None else {"a": src, "b": old}
     b = "a" if old is None else "b"
-    shingled = ",\n".join(f"""sh_{k}_all AS MATERIALIZED (
-  SELECT DISTINCT q.doc_id AS id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-  FROM {q} q, unnest(range(1, len(t) - 1)) AS u(i)
-  WHERE len(t) >= 3
-)""" for k, q in sides.items())
+    shingled = ",\n".join(f"sh_{k}_all AS MATERIALIZED ({_shingle_rows(q)})"
+                         for k, q in sides.items())
     kept = ",\n".join(
         f"sh_{k} AS MATERIALIZED (SELECT id, shingle FROM sh_{k}_all "
         f"ANTI JOIN stop USING (shingle)),\n"
@@ -73,24 +76,28 @@ pairs AS MATERIALIZED (
 )"""
 
 
-def components_ctes(pairs: str) -> str:
+def components_ctes(pairs: str, by: str | None = None) -> str:
     """DuckDB CTEs ending in ``reps(doc_id, cluster_rep)``: every doc
     of the (id1, id2) ``pairs`` CTE with the minimum id of its
     connected component, by recursive transitive closure — the
     answer operators.dedup.connected_components reaches by label
-    propagation."""
-    return f"""edges AS (SELECT id1 AS src, id2 AS dst FROM {pairs}
-          UNION SELECT id2, id1 FROM {pairs}),
+    propagation. With ``by``, a column of ``pairs``, each of its
+    values has its own components. ``edges`` is MATERIALIZED: every
+    recursion step reads it, and would re-evaluate ``pairs``."""
+    k, r = (f"{by}, ", f"r.{by}, ") if by else ("", "")
+    same = f" AND r.{by} = e.{by}" if by else ""
+    return f"""edges AS MATERIALIZED (SELECT {k}id1 AS src, id2 AS dst FROM {pairs}
+                       UNION SELECT {k}id2, id1 FROM {pairs}),
 reach AS (
-  WITH RECURSIVE r(src, dst) AS (
-    SELECT src, dst FROM edges
+  WITH RECURSIVE r({k}src, dst) AS (
+    SELECT {k}src, dst FROM edges
     UNION
-    SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src
+    SELECT {r}r.src, e.dst FROM r JOIN edges e ON r.dst = e.src{same}
   )
   SELECT * FROM r
 ),
-reps AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
-         FROM reach GROUP BY src)"""
+reps AS (SELECT {k}src AS doc_id, least(src, min(dst)) AS cluster_rep
+         FROM reach GROUP BY {k}src)"""
 
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,16 +133,16 @@ _SIG_AGGS = ", ".join(
 _BAND_EXPRS = ", ".join(
     "md5(" + " || '|' || ".join(f"h{b * _R + r}" for r in range(_R)) + f") AS band{b}"
     for b in range(_B))
-_ANY_BAND = " OR ".join(f"a.band{b} = b.band{b}" for b in range(_B))
 _MATCHES = " + ".join(f"CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END" for i in range(_H))
 
 MINHASH_SQL = f"""
-WITH {_SHINGLES_CTE},
+WITH {_DOC_TOKS},
+sh AS ({_shingle_rows("toks")}),
 sigs AS (SELECT id, {_SIG_AGGS} FROM sh GROUP BY id),
 banded AS (SELECT *, {_BAND_EXPRS} FROM sigs)
 SELECT a.id AS id1, b.id AS id2,
        {N.sql_quantize(f"({_MATCHES}) / {_H}.0", 10000)} AS est_sim
-FROM banded a JOIN banded b ON a.id < b.id AND ({_ANY_BAND})
+FROM banded a JOIN banded b ON a.id < b.id AND ({any_band_sql(_B)})
 WHERE ({_MATCHES}) / {_H}.0 >= 0.5
 """
 
@@ -200,13 +207,12 @@ FROM hexed
 
 _XOR_HAMMING = " + ".join(
     f"bit_count(xor(a.band{i}, b.band{i}))" for i in range(4))
-_ANY_SIM_BAND = " OR ".join(f"a.band{i} = b.band{i}" for i in range(4))
 
 SIMHASH_NEAR_DUP_SQL = f"""
 WITH {_SIMHASH_FP_CTE}
 SELECT a.doc_id AS id1, b.doc_id AS id2,
        CAST({_XOR_HAMMING} AS INT) AS hamming
-FROM fp a JOIN fp b ON a.doc_id < b.doc_id AND ({_ANY_SIM_BAND})
+FROM fp a JOIN fp b ON a.doc_id < b.doc_id AND ({any_band_sql(4)})
 WHERE {_XOR_HAMMING} <= 3
 """
 
@@ -269,15 +275,12 @@ def benchmark_decontamination_fixed(spark: SparkSession,
         lambda i: (i % 29 == 0) & (i < _BENCH_MAX_ID), n=5)
 
 
-_SH5 = "t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]"
+# distinct word 5-grams per doc, shared by both decontamination oracles
+_SH5_CTES = f"""{_DOC_TOKS},
+sh AS ({_shingle_rows("toks", 5)})"""
 
 DECONTAMINATION_FIXED_SQL = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id AS id, {_SH5} AS shingle
-  FROM toks, unnest(range(1, len(t) - 3)) AS u(i)
-  WHERE len(t) >= 5
-),
+WITH {_SH5_CTES},
 bench AS (SELECT DISTINCT shingle FROM sh
           WHERE id % 29 = 0 AND id < {_BENCH_MAX_ID})
 SELECT id AS doc_id, count(*) AS n_overlap
@@ -288,12 +291,7 @@ GROUP BY id
 """
 
 DECONTAMINATION_SQL = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id AS id, {_SH5} AS shingle
-  FROM toks, unnest(range(1, len(t) - 3)) AS u(i)
-  WHERE len(t) >= 5
-),
+WITH {_SH5_CTES},
 bench AS (SELECT DISTINCT shingle FROM sh WHERE id % 29 = 0)
 SELECT id AS doc_id, count(*) AS n_overlap
 FROM sh
@@ -449,21 +447,9 @@ WITH {_DOC_TOKS},
 thr AS (SELECT * FROM (VALUES {_THR_VALUES}) t(threshold)),
 tp AS (SELECT threshold, id1, id2 FROM pairs CROSS JOIN thr
        WHERE jaccard >= threshold),
-edges AS (SELECT threshold, id1 AS src, id2 AS dst FROM tp
-          UNION SELECT threshold, id2, id1 FROM tp),
-reach AS (
-  WITH RECURSIVE r(threshold, src, dst) AS (
-    SELECT threshold, src, dst FROM edges
-    UNION
-    SELECT r.threshold, r.src, e.dst FROM r JOIN edges e
-      ON r.dst = e.src AND r.threshold = e.threshold
-  )
-  SELECT * FROM r
-),
-reps AS (SELECT threshold, src AS doc_id, least(src, min(dst)) AS rep
-         FROM reach GROUP BY threshold, src),
+{components_ctes("tp", by="threshold")},
 rem AS (SELECT threshold, count(*) AS n_docs_removed FROM reps
-        WHERE doc_id <> rep GROUP BY threshold),
+        WHERE doc_id <> cluster_rep GROUP BY threshold),
 np AS (SELECT threshold, count(*) AS n_pairs FROM tp GROUP BY threshold)
 SELECT t.threshold,
        CAST(coalesce(n_pairs, 0) AS BIGINT) AS n_pairs,

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.functions import num as N
 from immoeliza_pipeline_spark.operators import similarity as S
+from immoeliza_pipeline_spark.plans.dedup import any_band_sql
 from immoeliza_pipeline_spark.sources.readers import load_table, spread
 
 
@@ -107,8 +108,6 @@ def _bucket_sql(planes: list[str]) -> str:
                       for jj, p in enumerate(planes))
 
 
-_ANY_BAND = " OR ".join(f"a.band{i} = b.band{i}" for i in range(_LSH_BANDS))
-
 # Dynamic-r mirror: the same integer ladder over count(*) as
 # operators.similarity.auto_rows_per_band (smallest r in [3, 8] with
 # 512·2^r ≥ n — integer comparisons, no cross-engine log2), all
@@ -141,7 +140,7 @@ proj AS (SELECT vec_id, v, {_PROJ_COLS} FROM e),
 banded AS (SELECT vec_id, v, {_BAND_CASES} FROM proj, rr)
 SELECT a.vec_id AS id1, b.vec_id AS id2,
        {N.sql_quantize(_cos_sql('a.v', 'b.v'), 10000)} AS cos_sim
-FROM banded a JOIN banded b ON a.vec_id < b.vec_id AND ({_ANY_BAND})
+FROM banded a JOIN banded b ON a.vec_id < b.vec_id AND ({any_band_sql(_LSH_BANDS)})
 WHERE cos_sim >= 0.45
 """
 
@@ -192,8 +191,6 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ANN_BAND_COLS = ", ".join(
     f"{_bucket_sql([_proj_sql(i * _ANN_ROWS + jj) for jj in range(_ANN_ROWS)])}"
     f" AS band{i}" for i in range(_ANN_BANDS))
-_ANN_ANY_BAND = " OR ".join(
-    f"a.band{i} = q.band{i}" for i in range(_ANN_BANDS))
 
 ANN_LSH_SQL = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -204,7 +201,7 @@ q AS (SELECT vec_id AS query_id, v AS qv,
 scored AS (
   SELECT q.query_id, a.vec_id AS neighbor_id,
          {N.sql_quantize(_cos_sql('q.qv', 'a.v'), 10000)} AS cos_sim
-  FROM b a JOIN q ON ({_ANN_ANY_BAND}) AND a.vec_id <> q.query_id
+  FROM b a JOIN q ON ({any_band_sql(_ANN_BANDS, "q")}) AND a.vec_id <> q.query_id
 )
 SELECT query_id, neighbor_id, cos_sim, rank
 FROM (SELECT *, row_number() OVER (PARTITION BY query_id

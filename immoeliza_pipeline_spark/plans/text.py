@@ -9,7 +9,7 @@ from immoeliza_pipeline_spark.functions import num as N
 from immoeliza_pipeline_spark.functions import text as T
 from immoeliza_pipeline_spark.sources.readers import load_table
 
-_TOKS = "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
+_TOKS = T.sql_tokens("text")
 
 
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -22,7 +22,7 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TOKEN_COUNTS_SQL = f"""
-SELECT doc_id, len({_TOKS}) AS n_tokens, length(text) AS n_chars_actual
+SELECT doc_id, {T.sql_token_count("text")} AS n_tokens, length(text) AS n_chars_actual
 FROM documents
 """
 
@@ -31,27 +31,26 @@ def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length / stopword / punctuation / word-length quality signals
     — the standard cheap pre-training text filters."""
     docs = load_table(spark, sf_dir, "documents")
+    text = F.col("text")
     return docs.select(
         "doc_id",
-        T.token_count(F.col("text")).alias("n_tokens"),
-        N.quantize(T.stopword_ratio(F.col("text")), 10000).alias("stopword_ratio"),
-        N.quantize(T.avg_word_len(F.col("text")), 10000).alias("avg_word_len"),
-        N.quantize(T.punct_ratio(F.col("text")), 10000).alias("punct_ratio"),
-        ((T.token_count(F.col("text")) >= 20)
-         & (T.stopword_ratio(F.col("text")) <= 0.5)).alias("passes_quality"),
+        T.token_count(text).alias("n_tokens"),
+        N.quantize(T.stopword_ratio(T.tokens(text)), 10000).alias("stopword_ratio"),
+        N.quantize(T.avg_word_len(text), 10000).alias("avg_word_len"),
+        N.quantize(T.punct_ratio(text), 10000).alias("punct_ratio"),
+        T.quality_gate(T.token_count(text), T.stopword_ratio(T.tokens(text)))
+        .alias("passes_quality"),
     )
 
-
-_STOP_IN = ", ".join(f"'{s}'" for s in T.STOPWORDS)
 
 QUALITY_SQL = f"""
 WITH d AS (SELECT doc_id, text, {_TOKS} AS t FROM documents)
 SELECT doc_id,
        len(t) AS n_tokens,
-       {N.sql_quantize(f"len(list_filter(t, x -> x IN ({_STOP_IN}))) / len(t)::DOUBLE", 10000)} AS stopword_ratio,
+       {N.sql_quantize(T.sql_stopword_ratio("t"), 10000)} AS stopword_ratio,
        {N.sql_quantize("list_sum(list_transform(t, x -> length(x)::DOUBLE)) / len(t)", 10000)} AS avg_word_len,
        {N.sql_quantize("(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g'))) / length(text)::DOUBLE", 10000)} AS punct_ratio,
-       (len(t) >= 20 AND len(list_filter(t, x -> x IN ({_STOP_IN}))) / len(t)::DOUBLE <= 0.5) AS passes_quality
+       {T.sql_quality_gate("len(t)", T.sql_stopword_ratio("t"))} AS passes_quality
 FROM d
 """
 
@@ -78,12 +77,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lang_score_sql(lang: str) -> str:
-    words = ", ".join(f"'{w}'" for w in T.LANG_STOPWORDS[lang])
-    return f"len(list_filter(t, x -> x IN ({words})))"
-
-
-_SCORES = ", ".join(f"{_lang_score_sql(lang)} AS s_{lang}" for lang in _LANGS)
+_SCORES = ", ".join(f"{T.sql_lang_score('t', lang)} AS s_{lang}" for lang in _LANGS)
 _MAXS = "greatest(" + ", ".join(f"s_{lang}" for lang in _LANGS) + ")"
 _PRED = "CASE " + " ".join(
     f"WHEN s_{lang} = {_MAXS} THEN '{lang}'" for lang in _LANGS) + " END"
@@ -146,8 +140,8 @@ def doc_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram fraction' quality rule): fraction of a doc's word trigrams
     that are repeats of an earlier trigram in the SAME doc. Pure
     array expressions per row — embarrassingly parallel, no shuffle.
-    The pass threshold (≤ 0.2) is compared on the rounded fraction so
-    both engines decide ties identically."""
+    NULL without trigrams; the pass threshold compares the rounded
+    fraction, so both engines decide ties identically."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", T.tokens(F.col("text")).alias("__toks"))
     grams = toks.select(
@@ -155,35 +149,24 @@ def doc_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted = grams.select(
         "doc_id",
         F.size("__grams").alias("n_trigrams"),
-        F.size(F.array_distinct("__grams")).alias("n_distinct_trigrams"))
-    frac = N.quantize((F.col("n_trigrams") - F.col("n_distinct_trigrams"))
-                      / F.col("n_trigrams"), 10000)
+        F.size(F.array_distinct("__grams")).alias("n_distinct_trigrams"),
+        T.dup_trigram_frac(F.col("__grams")).alias("dup_trigram_frac"))
     return counted.select(
-        "doc_id", "n_trigrams", "n_distinct_trigrams",
-        F.when(F.col("n_trigrams") > 0, frac).alias("dup_trigram_frac"),
-        F.when(F.col("n_trigrams") > 0, frac <= 0.2).alias("passes_repetition"))
+        "*", T.quality_gate(rep=F.col("dup_trigram_frac")).alias("passes_repetition"))
 
 
 REPETITION_SQL = f"""
 WITH d AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-g AS (
-  SELECT doc_id,
-         -- CAST AS INT: Spark emits these via F.size (IntegerType);
-         -- DuckDB len() is BIGINT and the driver's normalizer is
-         -- integer-width-sensitive (the r07 HUGEINT lesson)
-         CAST(CASE WHEN len(t) >= 3 THEN len(t) - 2 ELSE 0 END AS INT) AS n_trigrams,
-         CAST(CASE WHEN len(t) >= 3
-              THEN len(list_distinct(list_transform(range(1, len(t) - 1),
-                        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])))
-              ELSE 0 END AS INT) AS n_distinct_trigrams
-  FROM d
-)
-SELECT doc_id, n_trigrams, n_distinct_trigrams,
-       CASE WHEN n_trigrams > 0
-            THEN {N.sql_quantize("(n_trigrams - n_distinct_trigrams) / n_trigrams::DOUBLE", 10000)}
-       END AS dup_trigram_frac,
-       dup_trigram_frac <= 0.2 AS passes_repetition
-FROM g
+gr AS (SELECT doc_id, {T.sql_word_shingles("t", 3)} AS g FROM d)
+SELECT doc_id,
+       -- CAST AS INT: Spark emits these via F.size (IntegerType);
+       -- DuckDB len() is BIGINT and the driver's normalizer is
+       -- integer-width-sensitive (the r07 HUGEINT lesson)
+       CAST(len(g) AS INT) AS n_trigrams,
+       CAST(len(list_distinct(g)) AS INT) AS n_distinct_trigrams,
+       {T.sql_dup_trigram_frac("g")} AS dup_trigram_frac,
+       {T.sql_quality_gate(rep="dup_trigram_frac")} AS passes_repetition
+FROM gr
 """
 
 
@@ -336,16 +319,9 @@ FROM chunked
 """
 
 
-# PII redaction (standard pre-training hygiene): conservative
-# patterns, applied in a fixed order (emails, then IPv4, then
-# phone-ish digit runs — IPs before phones so a dotted digit run
-# becomes one [IP], not half a phone match). Counts are taken on the
-# progressively-redacted text so categories never double-count the
-# same span. Patterns stay within the regex subset Java (Spark) and
-# RE2 (DuckDB) evaluate identically.
-_PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-_PII_IP = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
-_PII_PHONE = r"\+?\d[\d().\- ]{6,}\d"
+# per-rule match counts of functions.text.PII_RULES, taken on the
+# progressively-redacted text so no span is counted twice
+_PII_COUNTS = ("n_emails", "n_ips", "n_phones")
 
 
 def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -353,41 +329,27 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     document, reporting per-category counts and the redacted text.
     Pure JVM-side regexp_replace/extract_all — one scan, no shuffle,
     embarrassingly parallel at 100 TB."""
-    docs = load_table(spark, sf_dir, "documents")
-    e1 = docs.select(
-        "doc_id",
-        F.size(F.regexp_extract_all("text", F.lit(_PII_EMAIL), F.lit(0)))
-        .alias("n_emails"),
-        F.regexp_replace("text", _PII_EMAIL, "[EMAIL]").alias("__t"))
-    e2 = e1.select(
-        "doc_id", "n_emails",
-        F.size(F.regexp_extract_all("__t", F.lit(_PII_IP), F.lit(0)))
-        .alias("n_ips"),
-        F.regexp_replace("__t", _PII_IP, "[IP]").alias("__t"))
-    return e2.select(
-        "doc_id", "n_emails", "n_ips",
-        F.size(F.regexp_extract_all("__t", F.lit(_PII_PHONE), F.lit(0)))
-        .alias("n_phones"),
-        F.regexp_replace("__t", _PII_PHONE, "[PHONE]").alias("text_redacted"))
+    out = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.col("text").alias("__t"))
+    for (pattern, mark), name in zip(T.PII_RULES, _PII_COUNTS):
+        out = out.select(
+            *out.columns[:-1],
+            F.size(F.regexp_extract_all("__t", F.lit(pattern), F.lit(0))).alias(name),
+            F.regexp_replace("__t", pattern, mark).alias("__t"))
+    return out.withColumnRenamed("__t", "text_redacted")
 
+
+_PII_CTES = ",\n".join(["e0 AS (SELECT doc_id, text AS t FROM documents)"] + [
+    f"""e{i} AS (
+  SELECT {", ".join(("doc_id",) + _PII_COUNTS[:i - 1])},
+         CAST(len(regexp_extract_all(t, '{pattern}')) AS INT) AS {name},
+         regexp_replace(t, '{pattern}', '{mark}', 'g') AS t
+  FROM e{i - 1}
+)""" for i, ((pattern, mark), name) in enumerate(zip(T.PII_RULES, _PII_COUNTS), 1)])
 
 PII_SQL = f"""
-WITH e1 AS (
-  SELECT doc_id,
-         CAST(len(regexp_extract_all(text, '{_PII_EMAIL}')) AS INT) AS n_emails,
-         regexp_replace(text, '{_PII_EMAIL}', '[EMAIL]', 'g') AS t
-  FROM documents
-),
-e2 AS (
-  SELECT doc_id, n_emails,
-         CAST(len(regexp_extract_all(t, '{_PII_IP}')) AS INT) AS n_ips,
-         regexp_replace(t, '{_PII_IP}', '[IP]', 'g') AS t
-  FROM e1
-)
-SELECT doc_id, n_emails, n_ips,
-       CAST(len(regexp_extract_all(t, '{_PII_PHONE}')) AS INT) AS n_phones,
-       regexp_replace(t, '{_PII_PHONE}', '[PHONE]', 'g') AS text_redacted
-FROM e2
+WITH {_PII_CTES}
+SELECT {", ".join(("doc_id",) + _PII_COUNTS)}, t AS text_redacted FROM e{len(_PII_COUNTS)}
 """
 
 
@@ -486,15 +448,10 @@ def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = uc.agg(F.sum("c2").alias("__N"))
     prob = (F.lit(0.5) * (F.col("c12") / F.col("c1"))
             + F.lit(0.5) * (F.col("c2") / F.col("__N")))
-    # Join shape MEASURED, not guessed: assembling a per-distinct-
-    # bigram lp table first (bc⋈pc⋈uc, then ONE bi join) looks
-    # cheaper but measured 123.7s vs this form's 23.3s at the 100×
-    # probe — when near-dup-free corpora push distinct-bigram count
-    # toward occurrence count, the "vocab-sized" assembly is itself
-    # corpus-sized and adds a fourth big shuffle. Chaining the count
-    # joins onto the occurrence table keeps every shuffle pipelined
-    # off the persisted bi (1.28s vs 1.66s at sf0.1 favored the vocab
-    # form — scale won the argument).
+    # The count joins chain onto the persisted bi: a per-distinct-
+    # bigram lp table first (bc⋈pc⋈uc, then one bi join) is itself
+    # corpus-sized on near-dup-free corpora and adds a fourth big
+    # shuffle (123.7 s vs 23.3 s at 100×; 1.28 s vs 1.66 s at sf0.1).
     scored = (bi.join(bc, ["w1", "w2"]).join(pc, "w1")
               .join(uc, F.col("w2") == F.col("token"))
               .crossJoin(F.broadcast(total))
@@ -568,54 +525,47 @@ GROUP BY doc_id
 """
 
 
+# the funnel's cumulative gates: length, + stopword ratio, + repetition
+_FUNNEL = ("pass_length", "pass_stopword", "pass_repetition")
+
+
 def quality_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus-build ops report: how many docs each quality gate
     drops, cumulatively in the build's filter order (length →
     stopword ratio → within-doc repetition). One scan with
     conditional aggregates — no shuffle beyond the single-row agg;
-    the per-doc signals are the same expressions the registered
-    filters use, so the report is the build's ground truth, not an
+    signals and gate are functions.text's, the ones corpus._gate
+    applies, so the report is the build's ground truth, not an
     estimate."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", T.tokens(F.col("text")).alias("__toks"),
-        T.stopword_ratio(F.col("text")).alias("__sw"))
+        T.stopword_ratio(T.tokens(F.col("text"))).alias("__sw"))
     grams = toks.select(
         "__sw", F.size("__toks").alias("__n"),
         T.word_shingles(F.col("__toks"), 3).alias("__g"))
-    rep = (F.col("__n") >= 3) & (
-        N.quantize((F.size("__g") - F.size(F.array_distinct("__g")))
-                   / F.size("__g"), 10000) > 0.2)
-    pass_len = F.col("__n") >= 20
-    pass_sw = pass_len & (F.col("__sw") <= 0.5)
-    pass_rep = pass_sw & ~rep
-    one = F.lit(1)
+    signals = (F.col("__n"), F.col("__sw"), T.dup_trigram_frac(F.col("__g")))
     return grams.agg(
-        F.count(one).alias("n_docs"),
-        F.sum(pass_len.cast("int")).cast("long").alias("pass_length"),
-        F.sum(pass_sw.cast("int")).cast("long").alias("pass_stopword"),
-        F.sum(pass_rep.cast("int")).cast("long").alias("pass_repetition"))
+        F.count(F.lit(1)).alias("n_docs"),
+        *[F.sum(T.quality_gate(*signals[:k]).cast("int")).cast("long").alias(name)
+          for k, name in enumerate(_FUNNEL, 1)])
 
 
-_REP_FRAC = N.sql_quantize(
-    "(len(t) - 2 - len(list_distinct(list_transform("
-    "range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' "
-    "|| t[i+2])))) / (len(t) - 2)::DOUBLE", 10000)
+_FUNNEL_SUMS = ",\n       ".join(
+    f"CAST(sum(CASE WHEN {T.sql_quality_gate(*('n', 'sw', 'rep')[:k])} "
+    f"THEN 1 ELSE 0 END) AS BIGINT) AS {name}"
+    for k, name in enumerate(_FUNNEL, 1))
 
 QUALITY_FUNNEL_SQL = f"""
 WITH d AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+gr AS (SELECT t, {T.sql_word_shingles("t", 3)} AS g FROM d),
 sig AS (
-  SELECT len(t) AS n,
-         len(list_filter(t, x -> x IN ({_STOP_IN}))) / len(t)::DOUBLE AS sw,
-         (len(t) >= 3 AND {_REP_FRAC} > 0.2) AS rep
-  FROM d
+  SELECT len(t) AS n, {T.sql_stopword_ratio("t")} AS sw,
+         {T.sql_dup_trigram_frac("g")} AS rep
+  FROM gr
 )
 SELECT count(*) AS n_docs,
-       CAST(sum(CASE WHEN n >= 20 THEN 1 ELSE 0 END) AS BIGINT) AS pass_length,
-       CAST(sum(CASE WHEN n >= 20 AND sw <= 0.5 THEN 1 ELSE 0 END) AS BIGINT)
-           AS pass_stopword,
-       CAST(sum(CASE WHEN n >= 20 AND sw <= 0.5 AND NOT rep THEN 1 ELSE 0 END)
-            AS BIGINT) AS pass_repetition
+       {_FUNNEL_SUMS}
 FROM sig
 """
 

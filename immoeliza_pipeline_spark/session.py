@@ -15,6 +15,24 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# Runtime conf that plan shape and oracle agreement depend on: get_spark
+# builds with it, tune_existing sets it on a session built elsewhere.
+_RUNTIME_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    # SQL-standard NULL-on-degenerate semantics (x/0, corr of a
+    # constant, log of 0) instead of Spark 4's default ANSI
+    # exceptions: one empty document must not kill a 100 TB job,
+    # and the DuckDB oracle returns NULL for these cases.
+    "spark.sql.ansi.enabled": "false",
+    # size(NULL) is NULL, as DuckDB's len(NULL), not -1: with ANSI off
+    # the legacy -1 would give a NULL doc a token count of -1
+    "spark.sql.legacy.sizeOfNull": "false",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
 
 def _default_driver_mem() -> str:
     """Local mode puts the driver AND every executor thread in ONE
@@ -40,18 +58,9 @@ def get_spark(app_name: str = "immoeliza-pipeline-spark",
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        # SQL-standard NULL-on-degenerate semantics (x/0, corr of a
-        # constant, log of 0) instead of Spark 4's default ANSI
-        # exceptions: one empty document must not kill a 100 TB job,
-        # and the DuckDB oracle returns NULL for these cases.
-        .config("spark.sql.ansi.enabled", "false")
+        .config(map=_RUNTIME_CONF)
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM",
@@ -77,14 +86,7 @@ def tune_existing(spark: SparkSession) -> SparkSession:
     the settings that matter for plan shape and oracle agreement are
     runtime-settable.
     """
-    for k, v in [
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.ansi.enabled", "false"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-    ]:
+    for k, v in _RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:

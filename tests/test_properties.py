@@ -158,8 +158,7 @@ def test_pii_redaction_is_idempotent_and_conservative(spark):
     tokens match none of the patterns), and a second pass finds zero
     occurrences — the property that makes re-running the hygiene
     stage safe."""
-    from immoeliza_pipeline_spark.plans.text import (_PII_EMAIL, _PII_IP,
-                                                     _PII_PHONE)
+    from immoeliza_pipeline_spark.functions.text import PII_RULES
     samples = [
         "contact me at jane.doe+spam@mail.example.org today",
         "server 192.168.001.1 answered, backup at 10.0.0.7.",
@@ -172,8 +171,7 @@ def test_pii_redaction_is_idempotent_and_conservative(spark):
 
     def redact(frame, col):
         out = frame.withColumn("t", F.col(col))
-        for pat, rep in ((_PII_EMAIL, "[EMAIL]"), (_PII_IP, "[IP]"),
-                         (_PII_PHONE, "[PHONE]")):
+        for pat, rep in PII_RULES:
             out = out.withColumn("t", F.regexp_replace("t", pat, rep))
         return out
 
