@@ -13,6 +13,15 @@ from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.functions.num import quantize, sql_quantize
 
+# Whitespace is Java's \s spelled out (RE2's \s lacks U+000B): every
+# whitespace regex on either engine builds from WS, never from \s.
+_WS_CHARS = r" \t\n\x0B\f\r"
+WS = f"[{_WS_CHARS}]"
+
+# GPT-style pre-tokenizer pieces: letter runs, digits, other non-spaces
+SUBWORD = rf"[a-z]+|[0-9]|[^a-z0-9{_WS_CHARS}]"
+PUNCT = "[.,!?;:]"
+
 # Deterministic stopword sets for the language-ID heuristic and
 # quality scoring. Tiny on purpose: they broadcast as literals inside
 # the expression tree.
@@ -43,9 +52,13 @@ PII_RULES = (
 )
 
 
+def _squeezed(col: Column) -> Column:  # WS runs → one space, trimmed
+    return F.trim(F.regexp_replace(col, WS + "+", " "))
+
+
 def tokens(col: Column) -> Column:
     """Whitespace tokenization: collapse runs, trim, split."""
-    return F.split(F.trim(F.regexp_replace(col, r"\s+", " ")), " ")
+    return F.split(_squeezed(col), " ")
 
 
 def token_count(col: Column) -> Column:
@@ -54,7 +67,7 @@ def token_count(col: Column) -> Column:
 
 def punct_ratio(col: Column) -> Column:
     """Fraction of characters in a fixed punctuation class."""
-    stripped = F.regexp_replace(col, r"[.,!?;:]", "")
+    stripped = F.regexp_replace(col, PUNCT, "")
     return (F.length(col) - F.length(stripped)) / F.length(col)
 
 
@@ -67,8 +80,8 @@ def stopword_ratio(toks: Column) -> Column:
     return _count_in(toks, STOPWORDS) / F.size(toks)
 
 
-def avg_word_len(col: Column) -> Column:
-    toks = tokens(col)
+def avg_word_len(toks: Column) -> Column:
+    """Mean character length of the token array ``toks``."""
     total = F.aggregate(
         F.transform(toks, lambda t: F.length(t).cast("double")),
         F.lit(0.0), lambda acc, x: acc + x)
@@ -82,9 +95,8 @@ def lang_score(col: Column, lang: str) -> Column:
 
 def fingerprint(col: Column) -> Column:
     """Document fingerprint: md5 of whitespace-normalized lowercase
-    text (preprocessing normalize + hash; stable across engines)."""
-    normalized = F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
-    return F.md5(normalized.cast("binary"))
+    text (preprocessing normalize + hash)."""
+    return F.md5(F.lower(_squeezed(col)).cast("binary"))
 
 
 def redact_pii(col: Column) -> Column:
@@ -104,6 +116,18 @@ def word_shingles(tokens_col: Column, n: int = 3) -> Column:
                                      for j in range(n)]),
     )
     return F.when(k >= 1, grams).otherwise(F.array().cast("array<string>"))
+
+
+def window_count(n: Column, width: int, step: int) -> Column:
+    """How many ``width``-token windows at stride ``step`` cover ``n`` tokens:
+    1 if n ≤ width, else ceil((n − width) / step) + 1 (window_slice i < count)."""
+    return F.when(n <= width, F.lit(1)).otherwise(
+        F.floor((n - width + step - 1) / F.lit(float(step))).cast("int") + 1)
+
+
+def window_slice(toks: Column, i: Column, width: int, step: int) -> Column:
+    """Window ``i`` of the token array ``toks``."""
+    return F.slice(toks, i * step + 1, width)
 
 
 def dup_trigram_frac(grams: Column) -> Column:
@@ -128,12 +152,29 @@ def quality_gate(n: Column | None = None, sw: Column | None = None,
 
 # ---- oracle-SQL text builders (identical semantics) ----
 
+def _sql_squeezed(text: str) -> str:
+    return f"trim(regexp_replace({text}, '{WS}+', ' ', 'g'))"
+
+
 def sql_tokens(text: str) -> str:
-    return f"string_split(trim(regexp_replace({text}, '\\s+', ' ', 'g')), ' ')"
+    return f"string_split({_sql_squeezed(text)}, ' ')"
 
 
 def sql_token_count(text: str) -> str:
     return f"len({sql_tokens(text)})"
+
+
+def sql_punct_ratio(text: str) -> str:
+    return (f"(length({text}) - length(regexp_replace({text}, '{PUNCT}', '', 'g')))"
+            f" / length({text})::DOUBLE")
+
+
+def sql_avg_word_len(t: str) -> str:
+    return f"list_sum(list_transform({t}, x -> length(x)::DOUBLE)) / len({t})"
+
+
+def sql_fingerprint(text: str) -> str:
+    return f"md5(lower({_sql_squeezed(text)}))"
 
 
 def _sql_count_in(t: str, words: tuple[str, ...]) -> str:
@@ -158,6 +199,16 @@ def sql_word_shingles(t: str, n: int = 3) -> str:
     gram = " || ' ' || ".join(f"{t}[i+{j}]" if j else f"{t}[i]" for j in range(n))
     return (f"CASE WHEN len({t}) >= {n} THEN list_transform("
             f"range(1, len({t}) - {n - 2}), i -> {gram}) ELSE [] END")
+
+
+def sql_window_count(n: str, width: int, step: int) -> str:
+    # stage as a column: DuckDB 1.0.0 unnests range(0, col) faster than range(0, expr)
+    return (f"CASE WHEN {n} <= {width} THEN 1 ELSE CAST(floor(({n} - {width} + "
+            f"{step} - 1) / {step}e0) AS INT) + 1 END")
+
+
+def sql_window_slice(t: str, i: str, width: int, step: int) -> str:
+    return f"list_slice({t}, {i} * {step} + 1, {i} * {step} + {width})"
 
 
 def sql_dup_trigram_frac(g: str) -> str:

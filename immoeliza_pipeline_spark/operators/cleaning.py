@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.functions.num import quantize
+from immoeliza_pipeline_spark.functions.text import WS
 
 
 def drop_columns(df: DataFrame, *cols: str) -> DataFrame:
@@ -86,9 +87,12 @@ def capitalize_sentence(col: Column) -> Column:
                     F.lower(col.substr(F.lit(2), F.length(col))))
 
 
+ZIP_BLOCK = WS + r"*\(\d+\)"  # a " (1234)" block, removed everywhere
+
+
 def strip_parenthesized_zip(col: Column) -> Column:
-    """Remove trailing ``" (1234)"`` blocks (preprocessing.py:67)."""
-    return F.regexp_replace(col, r"\s*\(\d+\)", "")
+    """Remove every ZIP_BLOCK (preprocessing.py:67)."""
+    return F.regexp_replace(col, ZIP_BLOCK, "")
 
 
 def edit_text_columns(df: DataFrame,

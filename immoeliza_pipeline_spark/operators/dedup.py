@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.functions.num import quantize
-from immoeliza_pipeline_spark.functions.text import tokens, word_shingles
+from immoeliza_pipeline_spark.functions.text import WS, tokens, word_shingles
 from immoeliza_pipeline_spark.sources.readers import spread as _spread
 
 DEFAULT_NUM_HASHES = 12
@@ -532,28 +532,9 @@ def blank_line_paragraphs(df: DataFrame, id_col: str,
     position in the ORIGINAL document, so reassembly preserves order."""
     paras = df.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), r"\n\s*\n"))
+        F.posexplode(F.split(F.col(text_col), rf"\n{WS}*\n"))
         .alias("idx", "para"))
     return paras.filter(F.trim(F.col("para")) != "")
-
-
-def word_block_paragraphs(df: DataFrame, id_col: str, text_col: str,
-                          block: int = 32) -> DataFrame:
-    """(doc_id, idx, para): fixed ``block``-word segments — the
-    paragraphizer for text without layout structure (the synthetic
-    testdata has no newlines). Same non-overlapping slice shape as
-    plans.text.doc_chunks: one narrow transform per doc, no shuffle."""
-    toks = _spread(df).select(F.col(id_col).alias("doc_id"),
-                              tokens(F.col(text_col)).alias("__toks"))
-    n = F.size("__toks")
-    n_blocks = F.when(n <= block, F.lit(1)).otherwise(
-        F.floor((n + block - 1) / F.lit(float(block))).cast("int"))
-    exploded = toks.select(
-        "doc_id", "__toks",
-        F.posexplode(F.sequence(F.lit(0), n_blocks - 1)).alias("idx", "_i"))
-    piece = F.slice(F.col("__toks"), F.col("idx") * block + 1, block)
-    return exploded.select("doc_id", "idx",
-                           F.concat_ws(" ", piece).alias("para"))
 
 
 def dedup_paragraphs(paras: DataFrame) -> DataFrame:
@@ -568,8 +549,8 @@ def dedup_paragraphs(paras: DataFrame) -> DataFrame:
 
     Shuffle shape: ONE hash-keyed window (row_number over
     md5(para)) — linear at 100 TB; no joins, no candidate pairs.
-    Input is the (doc_id, idx, para) frame of blank_line_paragraphs /
-    word_block_paragraphs; output is the kept subset."""
+    Input is a (doc_id, idx, para) frame, e.g. blank_line_paragraphs'
+    output; output is the kept subset."""
     return (paras.withColumn("__keep", first_paragraph_occurrence())
             .filter(F.col("__keep"))
             .select("doc_id", "idx", "para"))

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.functions.num import quantize
+from immoeliza_pipeline_spark.functions.text import WS
 
 EARTH_RADIUS_KM = 6371.0
 
@@ -81,7 +82,14 @@ def normalize_address(col: Column) -> Column:
     out = F.lower(F.trim(col))
     for src, dst in _ABBREV:
         out = F.replace(out, F.lit(src), F.lit(dst))
-    return F.regexp_replace(out, r"\s+", " ")
+    return F.regexp_replace(out, WS + "+", " ")
+
+
+def sql_normalize_address(text: str) -> str:
+    out = f"lower(trim({text}))"
+    for src, dst in _ABBREV:
+        out = f"replace({out}, '{src}', '{dst}')"
+    return f"regexp_replace({out}, '{WS}+', ' ', 'g')"
 
 
 def geocode_from_cache(df: DataFrame, address_col: str, cache: DataFrame) -> DataFrame:

@@ -261,13 +261,23 @@ def kmeans_update(assigned: DataFrame) -> DataFrame:
                                        lambda s: s["m"]).alias("c")))
 
 
+def md5_prefix(id_col: Column, k: int) -> Column:
+    """First ``k`` hex digits of md5(id as text): the sampling key."""
+    return F.substring(F.md5(id_col.cast("string").cast("binary")), 1, k)
+
+
+def sql_md5_prefix(id_sql: str, k: int) -> str:
+    return f"substr(md5(CAST({id_sql} AS VARCHAR)), 1, {k})"
+
+
 def md5_bucket16(id_col: Column) -> Column:
-    """Deterministic 16-bit bucket from md5(id) — the systematic
-    sampler of the k-means training set and of the temperature
-    sampler; DuckDB mirror:
-    CAST(concat('0x', substr(md5(CAST(id AS VARCHAR)), 1, 4)) AS INT)."""
-    return F.conv(F.substring(
-        F.md5(id_col.cast("string").cast("binary")), 1, 4), 16, 10).cast("int")
+    """Deterministic 16-bit bucket from md5(id) — the systematic sampler
+    of the k-means training set and of the temperature sampler."""
+    return F.conv(md5_prefix(id_col, 4), 16, 10).cast("int")
+
+
+def sql_md5_bucket16(id_sql: str) -> str:
+    return f"CAST(concat('0x', {sql_md5_prefix(id_sql, 4)}) AS INT)"
 
 
 def lloyd_centroids(vectors: DataFrame, seed_modulus: int, n_iter: int,

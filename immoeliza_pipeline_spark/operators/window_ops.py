@@ -1,5 +1,4 @@
-"""Reusable window-based operators: as-of join, sessionization,
-salted joins for skew.
+"""Reusable window-based operators: as-of join and sessionization.
 
 The as-of join is the union-tag/window form: tag both sides, sort by
 (key, time, tag), carry the last non-null right-side value forward —
@@ -72,26 +71,3 @@ def sessionize(df: DataFrame, key: str, us_col: str, gap_seconds: int,
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     ).drop("__gap", "__is_new")
 
-
-def salted_join(big: DataFrame, skewed_small: DataFrame, key: str,
-                salt_buckets: int = 8, how: str = "inner") -> DataFrame:
-    """Skew-resistant equi-join: salt the big side's hot keys across
-    ``salt_buckets`` partitions and replicate the small side per
-    bucket, so one hot key fans out over many tasks instead of one
-    straggler. (AQE's skew-join handles this adaptively; explicit
-    salting is the belt-and-braces form for known-degenerate keys.)
-
-    Only inner/left: with right/full joins the replicated small side
-    would emit salt_buckets duplicates per unmatched small-side key.
-    ``pmod`` (not abs%) — abs(hash)=Int.MIN_VALUE stays negative and
-    would silently drop those rows."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    big_salted = big.withColumn(
-        "__salt", F.pmod(F.hash(*[F.col(c) for c in big.columns]),
-                         F.lit(salt_buckets)))
-    small_rep = skewed_small.crossJoin(
-        F.broadcast(big.sparkSession.range(salt_buckets)
-                    .select(F.col("id").cast("int").alias("__salt"))))
-    out = big_salted.join(small_rep, on=[key, "__salt"], how=how)
-    return out.drop("__salt")

@@ -18,13 +18,13 @@ from pyspark.sql import functions as F
 from immoeliza_pipeline_spark.functions import text as T
 from immoeliza_pipeline_spark.operators import dedup as D
 from immoeliza_pipeline_spark.functions.num import quantize, sql_quantize
-from immoeliza_pipeline_spark.operators.similarity import md5_bucket16
+from immoeliza_pipeline_spark.operators import similarity as S
 from immoeliza_pipeline_spark.plans.dedup import (any_band_sql, components_ctes,
                                                   pairs_ctes)
 from immoeliza_pipeline_spark.sources.readers import load_table
 
 # per-language sampling rates as md5-prefix hex thresholds:
-# keep iff substr(md5(doc_id), 1, 2) < threshold  →  rate ≈ int(hex)/256
+# keep iff md5_prefix(doc_id, 2) < threshold  →  rate ≈ int(hex)/256
 SAMPLE_THRESHOLDS = {
     "en": "cc",   # ≈ 80%
     "de": "66",   # ≈ 40%
@@ -35,7 +35,7 @@ SAMPLE_THRESHOLDS = {
 
 
 def _sample_keep(doc_id_col, lang_col):
-    prefix = F.substring(F.md5(doc_id_col.cast("string").cast("binary")), 1, 2)
+    prefix = S.md5_prefix(doc_id_col, 2)
     expr = None
     for lang, thr in SAMPLE_THRESHOLDS.items():
         cond = lang_col == lang
@@ -50,14 +50,14 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "lang"))
 
 
-_THRESH_CASE = "CASE " + " ".join(
+_SAMPLE_KEEP_SQL = f"{S.sql_md5_prefix('doc_id', 2)} < CASE " + " ".join(
     f"WHEN lang = '{lang}' THEN '{thr}'" for lang, thr in SAMPLE_THRESHOLDS.items()
 ) + " ELSE '00' END"
 
 STRATIFIED_SQL = f"""
 SELECT doc_id, lang
 FROM documents
-WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < {_THRESH_CASE}
+WHERE {_SAMPLE_KEEP_SQL}
 """
 
 def _gate(docs: DataFrame, repetition: bool = False) -> DataFrame:
@@ -147,7 +147,7 @@ deduped AS (
 ),
 sampled AS (
   SELECT * FROM deduped
-  WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < {_THRESH_CASE}
+  WHERE {_SAMPLE_KEEP_SQL}
 )
 SELECT lang, count(*) AS n_docs, CAST(sum(len(t)) AS BIGINT) AS n_tokens
 FROM sampled
@@ -232,7 +232,7 @@ def _temper(frame: DataFrame) -> DataFrame:
                                    F.lit(TEMP_EXP)) * 65536)
                      .cast("int").alias("keep_thr")))
     return (frame.join(F.broadcast(rates), "lang")
-            .filter(md5_bucket16(F.col("doc_id")) < F.col("keep_thr")))
+            .filter(S.md5_bucket16(F.col("doc_id")) < F.col("keep_thr")))
 
 
 def temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -269,7 +269,7 @@ rates AS (
 ),
 tempered AS (
   SELECT {src}.* FROM {src} JOIN rates USING (lang)
-  WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INT)
+  WHERE {S.sql_md5_bucket16("doc_id")}
         < keep_thr
 )"""
 
@@ -447,7 +447,6 @@ def llm_corpus_build(spark: SparkSession, sf_dir: str,
     edges = D.jaccard_pairs(gated, "doc_id", "text", n=3, threshold=0.8,
                             max_df=D.DEFAULT_MAX_DF_FRAC).select("id1", "id2")
     if semantic:
-        from immoeliza_pipeline_spark.operators import similarity as S
         from immoeliza_pipeline_spark.sources.readers import spread
 
         # spread() BEFORE the banding: the embeddings parquet is a

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from immoeliza_pipeline_spark.functions import num as N
 from immoeliza_pipeline_spark.functions import text as T
 from immoeliza_pipeline_spark.operators import dedup as D
-from immoeliza_pipeline_spark.sources.readers import load_table
+from immoeliza_pipeline_spark.sources.readers import load_table, spread
 
 _TOKS = T.sql_tokens("text")
 _DOC_TOKS = f"toks AS (SELECT doc_id, {_TOKS} AS t FROM documents)"
@@ -300,9 +300,8 @@ GROUP BY id
 """
 
 
-# fixed word-block paragraphizer width for the registered query (the
-# synthetic corpus has no blank lines; production text would use
-# operators.dedup.blank_line_paragraphs instead — same dedup stage)
+# a paragraph is a 32-token window of the doc: the synthetic corpus has no
+# blank lines (real text: operators.dedup.blank_line_paragraphs)
 _PARA_BLOCK = 32
 
 
@@ -316,9 +315,12 @@ def paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on the paragraph hash + one doc-keyed reassembly groupBy,
     no candidate pairs, no join — totals and kept stats fold into the
     single reassembly aggregation via a keep flag."""
-    docs = load_table(spark, sf_dir, "documents")
-    paras = D.word_block_paragraphs(docs, "doc_id", "text",
-                                    block=_PARA_BLOCK)
+    toks = spread(load_table(spark, sf_dir, "documents")).select(
+        "doc_id", T.tokens(F.col("text")).alias("__toks"))
+    idx = toks.select("doc_id", "__toks", F.posexplode(F.sequence(F.lit(0), T.window_count(
+        F.size("__toks"), _PARA_BLOCK, _PARA_BLOCK) - 1)).alias("idx", "_i"))
+    paras = idx.select("doc_id", "idx", F.concat_ws(" ", T.window_slice(
+        F.col("__toks"), F.col("idx"), _PARA_BLOCK, _PARA_BLOCK)).alias("para"))
     # ONE pass over the paragraph frame: flag each paragraph with the
     # keep-first rule and fold totals and kept stats into one
     # groupBy(doc_id). collect_list skips the NULLs F.when leaves on
@@ -339,18 +341,11 @@ def paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PARAGRAPH_DEDUP_SQL = f"""
 WITH d AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-sized AS (
-  SELECT doc_id, t,
-         CASE WHEN len(t) <= {_PARA_BLOCK} THEN 1
-              ELSE CAST(floor((len(t) + {_PARA_BLOCK} - 1)
-                              / {_PARA_BLOCK}e0) AS INT)
-         END AS nb
-  FROM d
-),
+sized AS (SELECT doc_id, t, {T.sql_window_count("len(t)", _PARA_BLOCK, _PARA_BLOCK)} AS k FROM d),
 paras AS (
   SELECT doc_id, CAST(i AS INT) AS idx,
-         array_to_string(t[(i*{_PARA_BLOCK}+1):(i*{_PARA_BLOCK}+{_PARA_BLOCK})], ' ') AS para
-  FROM sized, unnest(range(0, nb)) u(i)
+         array_to_string({T.sql_window_slice("t", "i", _PARA_BLOCK, _PARA_BLOCK)}, ' ') AS para
+  FROM sized, unnest(range(0, k)) u(i)
 ),
 kept AS (
   SELECT doc_id, idx, para FROM (

@@ -92,16 +92,9 @@ WITH cust AS (
          'TestStr. ' || CAST(c_custkey % 5 AS VARCHAR) || '  Brussels' AS address
   FROM customer
 ),
-cache(normalized_address, lat, lon) AS (VALUES {_CACHE_VALUES}),
-norm AS (
-  SELECT c_custkey,
-         regexp_replace(replace(replace(replace(lower(trim(address)),
-             'str.', 'straat'), 'blvd', 'boulevard'), 'ave', 'avenue'),
-             '\\s+', ' ', 'g') AS addr_norm
-  FROM cust
-)
+cache(normalized_address, lat, lon) AS (VALUES {_CACHE_VALUES})
 SELECT c_custkey, lat, lon, (lat IS NOT NULL) AS cache_hit
-FROM norm LEFT JOIN cache ON addr_norm = normalized_address
+FROM cust LEFT JOIN cache ON {G.sql_normalize_address("address")} = normalized_address
 """
 
 

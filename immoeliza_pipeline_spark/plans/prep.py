@@ -39,7 +39,7 @@ def clean_text_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CLEAN_TEXT_SQL = """
+CLEAN_TEXT_SQL = f"""
 WITH derived AS (
   SELECT c_custkey,
          'state_of ' || lower(c_mktsegment)               AS subtype_raw,
@@ -51,7 +51,7 @@ SELECT c_custkey,
        upper(replace(subtype_raw, '_', ' ')[1]) || lower(replace(subtype_raw, '_', ' ')[2:]) AS subtype,
        list_aggregate(list_transform(string_split(locality_raw, ' '),
                                      w -> upper(w[1]) || lower(w[2:])), 'string_agg', ' ') AS locality_name,
-       regexp_replace(locality_zip, '\\s*\\(\\d+\\)', '') AS locality_clean
+       regexp_replace(locality_zip, '{cleaning.ZIP_BLOCK}', '', 'g') AS locality_clean
 FROM derived
 """
 

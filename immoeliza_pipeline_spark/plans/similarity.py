@@ -374,7 +374,7 @@ _KM_PARAMS_CTE = f"""params AS (
 ),
 tr AS (
   SELECT vec_id, v FROM e, params
-  WHERE CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 4)) AS INT)
+  WHERE {S.sql_md5_bucket16("vec_id")}
         < thr
 )"""
 

@@ -36,7 +36,7 @@ def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         T.token_count(text).alias("n_tokens"),
         N.quantize(T.stopword_ratio(T.tokens(text)), 10000).alias("stopword_ratio"),
-        N.quantize(T.avg_word_len(text), 10000).alias("avg_word_len"),
+        N.quantize(T.avg_word_len(T.tokens(text)), 10000).alias("avg_word_len"),
         N.quantize(T.punct_ratio(text), 10000).alias("punct_ratio"),
         T.quality_gate(T.token_count(text), T.stopword_ratio(T.tokens(text)))
         .alias("passes_quality"),
@@ -48,8 +48,8 @@ WITH d AS (SELECT doc_id, text, {_TOKS} AS t FROM documents)
 SELECT doc_id,
        len(t) AS n_tokens,
        {N.sql_quantize(T.sql_stopword_ratio("t"), 10000)} AS stopword_ratio,
-       {N.sql_quantize("list_sum(list_transform(t, x -> length(x)::DOUBLE)) / len(t)", 10000)} AS avg_word_len,
-       {N.sql_quantize("(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g'))) / length(text)::DOUBLE", 10000)} AS punct_ratio,
+       {N.sql_quantize(T.sql_avg_word_len("t"), 10000)} AS avg_word_len,
+       {N.sql_quantize(T.sql_punct_ratio("text"), 10000)} AS punct_ratio,
        {T.sql_quality_gate("len(t)", T.sql_stopword_ratio("t"))} AS passes_quality
 FROM d
 """
@@ -103,11 +103,8 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).over(Window.partitionBy("fp")))
 
 
-FINGERPRINT_SQL = """
-WITH fp AS (
-  SELECT doc_id, md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp
-  FROM documents
-)
+FINGERPRINT_SQL = f"""
+WITH fp AS (SELECT doc_id, {T.sql_fingerprint("text")} AS fp FROM documents)
 SELECT doc_id, fp, count(*) OVER (PARTITION BY fp) AS n_docs_with_fp
 FROM fp
 """
@@ -119,7 +116,7 @@ def bpe_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     thumb — the two standard cheap token estimators."""
     docs = load_table(spark, sf_dir, "documents")
     subwords = F.size(F.regexp_extract_all(
-        F.lower("text"), F.lit(r"[a-z]+|[0-9]|[^a-z0-9\s]"), F.lit(0)))
+        F.lower("text"), F.lit(T.SUBWORD), F.lit(0)))
     return docs.select(
         "doc_id",
         subwords.alias("n_subwords"),
@@ -127,9 +124,9 @@ def bpe_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BPE_SQL = """
+BPE_SQL = f"""
 SELECT doc_id,
-       len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\\s]')) AS n_subwords,
+       len(regexp_extract_all(lower(text), '{T.SUBWORD}')) AS n_subwords,
        CAST(ceil(length(text) / 4.0) AS BIGINT) AS est_tokens_chars4
 FROM documents
 """
@@ -280,41 +277,26 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", T.tokens(F.col("text")).alias("__toks"))
-    n = F.size("__toks")
-    n_chunks = F.when(n <= CHUNK_TOKENS, F.lit(1)).otherwise(
-        F.floor((n - CHUNK_TOKENS + _STEP - 1) / F.lit(float(_STEP)))
-        .cast("int") + 1)
-    chunked = toks.select(
-        "doc_id", "__toks",
-        F.posexplode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx", "_i"))
-    start = F.col("chunk_idx") * _STEP
-    piece = F.slice(F.col("__toks"), start + 1, CHUNK_TOKENS)
+    chunked = toks.select("doc_id", "__toks", F.posexplode(F.sequence(F.lit(0), T.window_count(
+        F.size("__toks"), CHUNK_TOKENS, _STEP) - 1)).alias("chunk_idx", "_i"))
+    piece = T.window_slice(F.col("__toks"), F.col("chunk_idx"), CHUNK_TOKENS, _STEP)
     return chunked.select(
         "doc_id", "chunk_idx",
-        start.cast("int").alias("chunk_start"),
+        (F.col("chunk_idx") * _STEP).cast("int").alias("chunk_start"),
         F.size(piece).alias("n_chunk_tokens"),
         F.md5(F.concat_ws(" ", piece).cast("binary")).alias("chunk_md5"))
 
 
 CHUNKS_SQL = f"""
 WITH d AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-sized AS (
-  SELECT doc_id, t, len(t) AS n,
-         CASE WHEN len(t) <= {CHUNK_TOKENS} THEN 1
-              ELSE CAST(floor((len(t) - {CHUNK_TOKENS} + {_STEP} - 1) / {_STEP}e0) AS INT) + 1
-         END AS n_chunks
-  FROM d
-),
+sized AS (SELECT doc_id, t, {T.sql_window_count("len(t)", CHUNK_TOKENS, _STEP)} AS k FROM d),
 chunked AS (
-  SELECT doc_id, t, CAST(i AS INT) AS chunk_idx,
-         CAST(i * {_STEP} AS INT) AS chunk_start
-  FROM sized, unnest(range(0, n_chunks)) AS u(i)
+  SELECT doc_id, CAST(i AS INT) AS chunk_idx, CAST(i * {_STEP} AS INT) AS chunk_start,
+         {T.sql_window_slice("t", "i", CHUNK_TOKENS, _STEP)} AS piece
+  FROM sized, unnest(range(0, k)) AS u(i)
 )
-SELECT doc_id, chunk_idx, chunk_start,
-       CAST(len(list_slice(t, chunk_start + 1, chunk_start + {CHUNK_TOKENS})) AS INT)
-           AS n_chunk_tokens,
-       md5(array_to_string(list_slice(t, chunk_start + 1, chunk_start + {CHUNK_TOKENS}), ' '))
-           AS chunk_md5
+SELECT doc_id, chunk_idx, chunk_start, CAST(len(piece) AS INT) AS n_chunk_tokens,
+       md5(array_to_string(piece, ' ')) AS chunk_md5
 FROM chunked
 """
 

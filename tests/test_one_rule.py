@@ -1,7 +1,9 @@
-"""Every plan calls the one rule in ``functions/``: no module under
-``plans/`` restates a text or rounding rule in its own SQL, and none
-reaches into ``plans/text`` for a private fragment. Reads the source
-only; no Spark session."""
+"""Every plan, operator and streaming stage calls the one rule in
+``functions/`` (or, for the md5 sampling key, in
+``operators/similarity``): none restates a text, rounding, window or
+sampling rule in its own code or SQL, and none reaches into
+``plans/text`` for a private fragment. Reads the source only; no
+Spark session."""
 
 import ast
 import re
@@ -9,21 +11,33 @@ from pathlib import Path
 
 import pytest
 
-PLANS = sorted((Path(__file__).resolve().parent.parent
-                / "immoeliza_pipeline_spark" / "plans").glob("*.py"))
+PKG = Path(__file__).resolve().parent.parent / "immoeliza_pipeline_spark"
+PLANS = sorted((PKG / "plans").glob("*.py"))
+LAYERS = sorted(p for d in ("plans", "operators", "streaming")
+                for p in (PKG / d).glob("*.py"))
 
+# rule: (pattern, the files it must not appear in, the rule's own module)
 RESTATED = {
-    "word n-gram (functions.text.sql_word_shingles)": r"t\[i\] \|\|",
+    "word n-gram (functions.text.sql_word_shingles)": (r"t\[i\] \|\|", PLANS),
     "stopword filter (functions.text.sql_stopword_ratio)":
-        r"list_filter\(t, x -> x IN",
-    "half-up rounding (functions.num.sql_quantize)": r"floor\(.*\+ 0\.5",
+        (r"list_filter\(t, x -> x IN", PLANS),
+    "half-up rounding (functions.num.sql_quantize)": (r"floor\(.*\+ 0\.5", PLANS),
+    "whitespace class (functions.text.WS)": (r"\\s", LAYERS),
+    "token-window count (functions.text.window_count)":
+        (r"\+ *[\w{}.]+ *- *1\) */", LAYERS),
+    "token-window slice (functions.text.window_slice)":
+        (r"slice\([^,]+, [^,]*\+ *1\b|\[\([^]]*\+ *1\):", LAYERS),
+    "md5 sampling key (operators.similarity.sql_md5_prefix)":
+        (r"substr(ing)?\((F\.)?md5\(",
+         [p for p in LAYERS if p != PKG / "operators" / "similarity.py"]),
 }
 
 
 @pytest.mark.parametrize("rule", sorted(RESTATED))
 def test_plans_do_not_restate_rule(rule):
-    pattern = re.compile(RESTATED[rule])
-    hits = [f"{p.name}:{i}" for p in PLANS
+    pattern, files = RESTATED[rule]
+    pattern = re.compile(pattern)
+    hits = [f"{p.parent.name}/{p.name}:{i}" for p in files
             for i, line in enumerate(p.read_text().splitlines(), 1)
             if pattern.search(line)]
     assert not hits, f"{rule} written by hand at {hits}"

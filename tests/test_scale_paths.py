@@ -1,23 +1,8 @@
-"""Scale-path mechanisms: salted joins, bucketed tables, approximate
-quantiles, generic as-of join — the knobs that matter at 100 TB,
+"""Scale-path mechanisms: AQE skew-join splits, bucketed tables,
+approximate quantiles, generic as-of join — the knobs that matter at 100 TB,
 checked for result-equivalence against their exact/plain forms."""
 
 from pyspark.sql import functions as F
-
-
-def test_salted_join_matches_plain_join(spark, sf_dir):
-    from immoeliza_pipeline_spark.operators.window_ops import salted_join
-    from immoeliza_pipeline_spark.sources.readers import load_table
-    orders = load_table(spark, sf_dir, "orders")
-    prio_dim = spark.createDataFrame(
-        [("1-URGENT", 1), ("2-HIGH", 2), ("3-MEDIUM", 3),
-         ("4-NOT SPECIFIED", 4), ("5-LOW", 5)],
-        "o_orderpriority string, prio_rank int")
-    plain = orders.join(prio_dim, "o_orderpriority").select("o_orderkey", "prio_rank")
-    salted = salted_join(orders, prio_dim, "o_orderpriority").select(
-        "o_orderkey", "prio_rank")
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
 
 
 def test_bucketed_join_has_no_shuffle(tmp_path, spark, sf_dir):
