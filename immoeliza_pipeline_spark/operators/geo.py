@@ -14,6 +14,7 @@ cluster hot path anyway).
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -55,23 +56,23 @@ def assign_city_by_proximity_literal(df: DataFrame, lat_col: str, lon_col: str,
                               F.lit(clat), F.lit(clon)), 1000000).alias(f"__d_{i}")
         for i, (_name, clat, clon) in enumerate(cities)
     ]
-    out = df.select("*", *dists)
+    d = [F.col(f"__d_{i}") for i in range(len(cities))]
+    flags = [
+        reduce(F.greatest, [(x <= r).cast("int") for x in d])
+        .alias(f"has_city_{int(r)}")
+        for r in radii_km
+    ]
     max_r = max(radii_km)
-    for r in radii_km:
-        flag = None
-        for i in range(len(cities)):
-            cond = (F.col(f"__d_{i}") <= r).cast("int")
-            flag = cond if flag is None else F.greatest(flag, cond)
-        out = out.withColumn(f"has_city_{int(r)}", flag)
     candidates = F.array(*[
-        F.when(F.col(f"__d_{i}") <= max_r,
-               F.struct(F.col(f"__d_{i}").alias("dist_km"),
-                        F.lit(name).alias("city")))
-        for i, (name, _la, _lo) in enumerate(cities)
+        F.when(x <= max_r, F.struct(x.alias("dist_km"), F.lit(name).alias("city")))
+        for x, (name, _la, _lo) in zip(d, cities)
     ])
     nearest = F.array_min(F.filter(candidates, lambda c: c.isNotNull()))
-    out = out.withColumn("nearest_city", nearest["city"])
-    return out.drop(*[f"__d_{i}" for i in range(len(cities))])
+    # One projection over the distances: each withColumn would analyse
+    # the whole haversine plan again.
+    keep = [F.col("`" + c.replace("`", "``") + "`") for c in df.columns]
+    return df.select("*", *dists).select(
+        *keep, *flags, nearest["city"].alias("nearest_city"))
 
 
 # Address normalization rules (geocode_and_fill, preprocessing.py:149-154).

@@ -23,6 +23,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -139,10 +140,18 @@ def write_versioned(df: DataFrame, base_dir: str, dataset: str,
 
 def read_versioned(spark: SparkSession, base_dir: str, dataset: str,
                    version: str | None = None) -> DataFrame:
+    """Read one version (default: LATEST) with the schema its manifest
+    records, so the read infers nothing and starts no job. Columns come
+    in the order a plain parquet read gives (partition columns last),
+    and a partition column keeps the type it was written with rather
+    than the one its directory names would suggest."""
     if version is None:
         with open(os.path.join(base_dir, dataset, "LATEST")) as f:
             version = f.read().strip()
-    return spark.read.parquet(os.path.join(base_dir, dataset, f"v={version}"))
+    path = os.path.join(base_dir, dataset, f"v={version}")
+    with open(os.path.join(path, "_MANIFEST.json")) as f:
+        schema = StructType.fromJson(json.load(f)["schema"])
+    return spark.read.schema(schema).parquet(path)
 
 
 def backfill(spark: SparkSession, df: DataFrame, date_col: str,

@@ -74,6 +74,14 @@ def get_spark(app_name: str = "immoeliza-pipeline-spark",
         # recompile ~20 classes every run. A larger cache keeps a
         # repeated workload's classes compiled once per JVM.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # PySpark wraps every Column call to record the caller's file
+        # and line in the JVM: about five py4j round trips per call,
+        # which on small tables is a large share of a query's driver
+        # time. Off, an AnalysisException no longer names the Python
+        # line of the Column call that failed. Static conf, read once
+        # per process by pyspark.errors.utils, so tune_existing cannot
+        # set it on a session built elsewhere.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 

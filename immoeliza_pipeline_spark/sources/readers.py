@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -27,9 +28,31 @@ TABLES = (
 )
 
 
+# (absolute path, st_mtime_ns, st_size) of a parquet file -> its schema
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one parquet table from a scale-factor directory."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """Load one parquet table from a scale-factor directory.
+
+    Inferring a schema is a Spark job that reads the footer, so a file's
+    schema is inferred on its first read in the process and kept; later
+    reads hand it to the reader and start no job. A rewritten file has a
+    new key, so it is inferred again. The inferred types depend on the
+    session's parquet-reading conf (binaryAsString, inferTimestampNTZ,
+    ...), which must stay fixed for the process. A directory, or a path
+    that is not a local file, is inferred on every read: a directory's
+    mtime does not change when a file inside it is rewritten."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+    if key in _SCHEMAS:
+        return spark.read.schema(_SCHEMAS[key]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str,

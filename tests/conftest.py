@@ -26,3 +26,21 @@ def sf_dir():
 def persisted_rdds(spark):
     """Callable returning the ids of the RDDs Spark holds persisted."""
     return lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """Callable ``(group, fn) -> (fn(), jobs fn started)``."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status tracker is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return run

@@ -376,3 +376,57 @@ def test_streaming_dedup_ingest_matches_batch(tmp_path, spark, sf_dir):
     after = read_shingle_index(spark, index_dir)
     assert after.count() == n_before
     assert after.distinct().count() == n_before
+
+
+def test_session_turns_call_site_capture_off(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_load_table_infers_a_file_schema_once(tmp_path, spark, sf_dir,
+                                              count_jobs):
+    import shutil
+
+    from immoeliza_pipeline_spark.sources.readers import load_table
+    shutil.copy(f"{sf_dir}/orders.parquet", tmp_path / "orders.parquet")
+    first, n_first = count_jobs(
+        "first-read", lambda: load_table(spark, str(tmp_path), "orders"))
+    second, n_second = count_jobs(
+        "second-read", lambda: load_table(spark, str(tmp_path), "orders"))
+    assert n_first >= 1  # the inference job: the counter does see jobs
+    assert n_second == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_cached_schema_equals_inferred_schema(spark, sf_dir):
+    from immoeliza_pipeline_spark.sources.readers import TABLES, load_table
+    for name in TABLES:
+        load_table(spark, sf_dir, name)
+        cached = load_table(spark, sf_dir, name).schema
+        assert cached == spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+
+
+def test_rewritten_file_is_read_with_its_new_schema(tmp_path, spark):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from immoeliza_pipeline_spark.sources.readers import load_table
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), path)
+    again = load_table(spark, str(tmp_path), "t")
+    assert again.columns == ["a", "b"]
+    assert [tuple(r) for r in again.collect()] == [(3, "x")]
+
+
+def test_directory_table_is_inferred_on_every_read(tmp_path, spark):
+    """A directory's mtime does not follow a rewrite of a file inside
+    it, so a directory path is never served a kept schema."""
+    from immoeliza_pipeline_spark.sources.readers import load_table
+    path = str(tmp_path / "d.parquet")
+    spark.createDataFrame([(1,)], "a int").write.parquet(path)
+    assert load_table(spark, str(tmp_path), "d").columns == ["a"]
+    spark.createDataFrame([(1, "x")], "a int, b string").write.mode(
+        "overwrite").parquet(path)
+    assert load_table(spark, str(tmp_path), "d").columns == ["a", "b"]

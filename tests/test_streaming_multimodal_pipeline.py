@@ -112,24 +112,22 @@ def _cache_is_empty(spark) -> bool:
 
 
 @pytest.fixture(scope="module")
-def counted_weekly_run(tmp_path_factory, spark, sf_dir, persisted_rdds):
+def counted_weekly_run(tmp_path_factory, spark, sf_dir, persisted_rdds,
+                       count_jobs):
     """One weekly DAG run + the caller's action on ``publish``, under
     its own job group, starting from an empty session cache."""
     from immoeliza_pipeline_spark.plans.pipeline import immoeliza_pipeline
-    sc = spark.sparkContext
     spark.catalog.clearCache()
     before = persisted_rdds()
     out = tmp_path_factory.mktemp("weekly")
-    sc.setJobGroup("weekly-dag", "weekly DAG job budget")
-    try:
+
+    def run():
         results = immoeliza_pipeline(sf_dir, str(out)).run(spark)
         leaked = persisted_rdds() - before
         cache_empty = _cache_is_empty(spark)
         results["publish"].collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup("weekly-dag"))
+        return leaked, cache_empty
+    (leaked, cache_empty), jobs = count_jobs("weekly-dag", run)
     return {"out": out, "jobs": jobs, "leaked": leaked,
             "cache_empty": cache_empty}
 
@@ -241,6 +239,56 @@ def test_dataset_diff_cdc(tmp_path, spark, sf_dir):
     assert counts.get("unchanged", 0) > 0
     total = sum(counts.values())
     assert total == diff.count()
+
+
+@pytest.mark.parametrize("partition_by", [(), ("status", "bucket")])
+def test_read_versioned_uses_the_manifest_schema(tmp_path, spark, count_jobs,
+                                                 partition_by):
+    """A versioned read starts no job and gives the columns, column
+    order and rows of a plain parquet read of that version."""
+    from immoeliza_pipeline_spark.plans.pipeline import (
+        read_versioned, write_versioned)
+    df = spark.createDataFrame(
+        [(k, "OF"[k % 2], k % 3, k * 1.5, None) for k in range(12)],
+        "key long, status string, bucket int, price double, note string")
+    path = write_versioned(df, str(tmp_path), "t", version="v1",
+                           partition_by=partition_by)
+    got, jobs = count_jobs("versioned-read",
+                           lambda: read_versioned(spark, str(tmp_path), "t"))
+    plain = spark.read.parquet(path)
+    assert jobs == 0
+    assert got.schema == plain.schema
+    assert sorted(got.collect()) == sorted(plain.collect())
+
+
+def test_read_versioned_keeps_a_partition_column_type(tmp_path, spark):
+    """A plain read infers a partition column's type from its directory
+    names ("0070" -> 70); the manifest keeps the written string."""
+    from immoeliza_pipeline_spark.plans.pipeline import (
+        read_versioned, write_versioned)
+    df = spark.createDataFrame([(1, "0070"), (2, "1000")], "k long, zip string")
+    write_versioned(df, str(tmp_path), "z", version="v1", partition_by=("zip",))
+    got = read_versioned(spark, str(tmp_path), "z")
+    assert dict(got.dtypes)["zip"] == "string"
+    assert sorted(tuple(r) for r in got.collect()) == [(1, "0070"), (2, "1000")]
+
+
+def test_dataset_diff_classifies_each_key(tmp_path, spark):
+    """Two versions, one key of each kind: 1 removed, 2 changed (in a
+    NULL-to-value column), 3 unchanged, 4 added."""
+    from immoeliza_pipeline_spark.plans.pipeline import (
+        dataset_diff, write_versioned)
+    schema = "k long, name string, amount double"
+    write_versioned(spark.createDataFrame(
+        [(1, "a", 1.0), (2, "b", None), (3, "c", 3.0)], schema),
+        str(tmp_path), "d", version="v1")
+    write_versioned(spark.createDataFrame(
+        [(2, "b", 2.0), (3, "c", 3.0), (4, "d", 4.0)], schema),
+        str(tmp_path), "d", version="v2")
+    diff = dataset_diff(spark, str(tmp_path), "d", "v1", "v2", "k")
+    assert diff.columns == ["k", "change"]
+    assert {r.k: r.change for r in diff.collect()} == {
+        1: "removed", 2: "changed", 3: "unchanged", 4: "added"}
 
 
 def test_pipeline_cycle_detection(spark):
