@@ -42,7 +42,8 @@ class Pipeline:
     dependent is computed once. It is persisted as it is produced and
     unpersisted when ``run`` returns or raises; the frames ``run``
     returns are uncached, so an action on them after ``run`` recomputes
-    its plan."""
+    its plan, and gets the answer its consumers got from the cache
+    (see ``session._RUNTIME_CONF``'s cached-plan partitioning)."""
 
     name: str
     stages: list[Stage] = field(default_factory=list)
@@ -85,7 +86,7 @@ class Pipeline:
                 inputs = {dep: results[dep] for dep in stage.depends_on}
                 out = stage.fn(spark, **inputs)
                 if dependents[stage.name] > 1:
-                    cached.append(_persist_as_planned(out))
+                    cached.append(out.persist())
                 results[stage.name] = out
         finally:
             # Blocking: the cached blocks are gone when run returns, not
@@ -93,24 +94,6 @@ class Pipeline:
             for df in cached:
                 df.unpersist(blocking=True)
         return results
-
-
-def _persist_as_planned(df: DataFrame) -> DataFrame:
-    """Persist ``df`` with the partitioning AQE gives it uncached.
-
-    By default Spark pins a cached plan's output partitioning (its final
-    shuffle is not coalesced), which regroups the floating-point sums
-    of every consumer; letting AQE coalesce keeps each consumer's result
-    bit-identical to an uncached run. The conf is read when the cache
-    entry is built, so it is set only around ``persist()``."""
-    conf = df.sparkSession.conf
-    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    prev = conf.get(key)
-    conf.set(key, "true")
-    try:
-        return df.persist()
-    finally:
-        conf.set(key, prev)
 
 
 def write_versioned(df: DataFrame, base_dir: str, dataset: str,
@@ -133,9 +116,20 @@ def write_versioned(df: DataFrame, base_dir: str, dataset: str,
     }
     with open(os.path.join(path, "_MANIFEST.json"), "w") as f:
         json.dump(manifest, f, indent=2)
-    with open(os.path.join(base_dir, dataset, "LATEST"), "w") as f:
-        f.write(version)
+    _point_latest(base_dir, dataset, version)
     return path
+
+
+def _point_latest(base_dir: str, dataset: str, version: str) -> None:
+    """Point base/dataset/LATEST at ``version`` (the bare version
+    string, no newline). The pointer is written beside it and renamed
+    over it, so a concurrent reader sees the old version or the new
+    one, never an empty file."""
+    latest = os.path.join(base_dir, dataset, "LATEST")
+    tmp = f"{latest}.{os.getpid()}.tmp"
+    with open(tmp, "w") as f:
+        f.write(version)
+    os.replace(tmp, latest)
 
 
 def read_versioned(spark: SparkSession, base_dir: str, dataset: str,
@@ -163,21 +157,19 @@ def backfill(spark: SparkSession, df: DataFrame, date_col: str,
     partitioned layout gives downstream readers partition pruning.
 
     Re-running a window must be IDEMPOTENT (Airflow retries +
-    catchup re-runs): dynamic partition-overwrite replaces only the
-    touched dt partitions instead of appending duplicates."""
+    catchup re-runs): the writer's dynamic partition-overwrite option
+    replaces only the touched dt partitions instead of appending
+    duplicates, and leaves the session's mode as it was."""
     from pyspark.sql import functions as F
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    path = os.path.join(out_dir, dataset)
     written = []
-    try:
-        for start, end in windows:
-            slice_df = (df.filter((F.col(date_col) >= start) & (F.col(date_col) < end))
-                        .withColumn("dt", F.lit(start)))
-            path = os.path.join(out_dir, dataset)
-            (slice_df.write.mode("overwrite").partitionBy("dt").parquet(path))
-            written.append(f"{path}/dt={start}")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    for start, end in windows:
+        slice_df = (df.filter((F.col(date_col) >= start) & (F.col(date_col) < end))
+                    .withColumn("dt", F.lit(start)))
+        (slice_df.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("dt").parquet(path))
+        written.append(f"{path}/dt={start}")
     return written
 
 
@@ -243,8 +235,7 @@ def immoeliza_pipeline(sf_dir: str, out_dir: str) -> Pipeline:
             reg_params=(0.0, 1.0))
         P.save_model(best["model"],
                      os.path.join(out_dir, "lr_model", f"v={version}"))
-        with open(os.path.join(out_dir, "lr_model", "LATEST"), "w") as f:
-            f.write(version)
+        _point_latest(out_dir, "lr_model", version)
         fitted["lr_model"] = best["model"]
         return spark.createDataFrame(
             [(version, float(best["rmse"]), float(best["r2"]),

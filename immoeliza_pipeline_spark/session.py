@@ -30,6 +30,12 @@ _RUNTIME_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # A cached plan's consumers see the partitioning AQE gives the plan
+    # uncached (its last shuffle coalesced), so their floating-point
+    # sums group as in an uncached run; Spark's default pins a cached
+    # plan to one partition per shuffle partition. Read when the cache
+    # entry is built.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 

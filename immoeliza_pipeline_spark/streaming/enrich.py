@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.operators.geo import (geocode_from_cache,
                                                     normalize_address)
+from immoeliza_pipeline_spark.streaming.events import drain, write_epoch
 
 CACHE_SCHEMA = "normalized_address string, lat double, lon double"
 
@@ -105,19 +106,7 @@ def enrich_stream(stream: DataFrame, address_col: str, cache_dir: str,
                 filled = geocode_from_cache(
                     batch_df, address_col, read_cache(spark, cache_dir))
 
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                              "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (filled.withColumn("__epoch", F.lit(epoch_id))
-             .write.mode("overwrite").partitionBy("__epoch").parquet(out_dir))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        write_epoch(filled, epoch_id, out_dir)
 
-    q = (stream.writeStream.foreachBatch(enrich_batch)
-         .option("checkpointLocation", checkpoint_dir)
-         .start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream.writeStream.foreachBatch(enrich_batch)
+          .option("checkpointLocation", checkpoint_dir))

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from immoeliza_pipeline_spark.operators.dedup import (
     jaccard_pairs, jaccard_pairs_against_index, shingle_table)
+from immoeliza_pipeline_spark.streaming.events import drain, write_epoch
 
 INDEX_SCHEMA = "id bigint, shingle string"
 
@@ -79,28 +80,13 @@ def dedup_ingest_stream(stream: DataFrame, id_col: str, text_col: str,
             dup_ids, batch_df[id_col] == dup_ids["__dup"], "left")
             .withColumn("is_near_dup", F.col("__dup").isNotNull())
             .drop("__dup"))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                              "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (flagged.withColumn("__epoch", F.lit(epoch_id))
-             .write.mode("overwrite").partitionBy("__epoch").parquet(out_dir))
-            # idempotent index append: epoch-partitioned dynamic
-            # overwrite, so a crash between this write and the
-            # checkpoint commit cannot leave duplicated shingle rows
-            # when the batch replays
-            (shingle_table(batch_df, id_col, text_col, n=n)
-             .withColumn("__epoch", F.lit(epoch_id))
-             .write.mode("overwrite").partitionBy("__epoch")
-             .parquet(index_dir))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        write_epoch(flagged, epoch_id, out_dir)
+        # idempotent index append: epoch-partitioned dynamic overwrite,
+        # so a crash between this write and the checkpoint commit
+        # cannot leave duplicated shingle rows when the batch replays
+        write_epoch(shingle_table(batch_df, id_col, text_col, n=n),
+                    epoch_id, index_dir)
         spark.catalog.clearCache()
 
-    q = (stream.writeStream.foreachBatch(process_batch)
-         .option("checkpointLocation", checkpoint_dir)
-         .start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream.writeStream.foreachBatch(process_batch)
+          .option("checkpointLocation", checkpoint_dir))

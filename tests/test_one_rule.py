@@ -2,8 +2,10 @@
 ``functions/`` (or, for the md5 sampling key, in
 ``operators/similarity``): none restates a text, rounding, window or
 sampling rule in its own code or SQL, and none reaches into
-``plans/text`` for a private fragment. Reads the source only; no
-Spark session."""
+``plans/text`` for a private fragment. Session conf is set in
+``session`` only (and by ``streaming/events.process_all``), and the
+exactly-once epoch sink and the stream drain are written once, in
+``streaming/events``. Reads the source only; no Spark session."""
 
 import ast
 import re
@@ -15,6 +17,8 @@ PKG = Path(__file__).resolve().parent.parent / "immoeliza_pipeline_spark"
 PLANS = sorted((PKG / "plans").glob("*.py"))
 LAYERS = sorted(p for d in ("plans", "operators", "streaming")
                 for p in (PKG / d).glob("*.py"))
+MODULES = sorted(PKG.rglob("*.py"))
+EVENTS = PKG / "streaming" / "events.py"
 
 # rule: (pattern, the files it must not appear in, the rule's own module)
 RESTATED = {
@@ -30,6 +34,13 @@ RESTATED = {
     "md5 sampling key (operators.similarity.sql_md5_prefix)":
         (r"substr(ing)?\((F\.)?md5\(",
          [p for p in LAYERS if p != PKG / "operators" / "similarity.py"]),
+    "session conf (session._RUNTIME_CONF)":
+        (r"conf\.set\(",
+         [p for p in MODULES if p not in (PKG / "session.py", EVENTS)]),
+    "epoch sink (streaming.events.write_epoch)":
+        (r'partitionBy\("__epoch"\)', [p for p in MODULES if p != EVENTS]),
+    "stream drain (streaming.events.drain)":
+        (r"processAllAvailable", [p for p in MODULES if p != EVENTS]),
 }
 
 

@@ -66,16 +66,12 @@ def test_foreachbatch_exactly_once_sink(tmp_path, spark, sf_dir):
     sunk = spark.read.parquet(out)
     assert sunk.count() == src.count()
     assert sunk.select("event_id").distinct().count() == src.count()
-    # simulate an at-least-once replay of epoch 0: rewrite it manually
-    replay = sunk.filter("__epoch = 0").drop("__epoch")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (replay.withColumn("__epoch", F.lit(0))
-         .write.mode("overwrite").partitionBy("__epoch").parquet(out))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # simulate an at-least-once replay of epoch 0 through the same sink
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    E.write_epoch(sunk.filter("__epoch = 0").drop("__epoch"), 0, out)
     assert spark.read.parquet(out).count() == src.count()  # no dupes
+    # the writer's option, not the session's mode, made it dynamic
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == mode
 
 
 def test_stateful_multi_batch_state_roundtrip(tmp_path, spark, sf_dir):

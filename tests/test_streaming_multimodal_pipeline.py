@@ -126,10 +126,10 @@ def counted_weekly_run(tmp_path_factory, spark, sf_dir, persisted_rdds,
         leaked = persisted_rdds() - before
         cache_empty = _cache_is_empty(spark)
         results["publish"].collect()
-        return leaked, cache_empty
-    (leaked, cache_empty), jobs = count_jobs("weekly-dag", run)
+        return results, leaked, cache_empty
+    (results, leaked, cache_empty), jobs = count_jobs("weekly-dag", run)
     return {"out": out, "jobs": jobs, "leaked": leaked,
-            "cache_empty": cache_empty}
+            "cache_empty": cache_empty, "results": results}
 
 
 def test_pipeline_dag_job_budget_and_cache_lifetime(counted_weekly_run):
@@ -140,6 +140,34 @@ def test_pipeline_dag_job_budget_and_cache_lifetime(counted_weekly_run):
     assert counted_weekly_run["jobs"] <= 40
     assert counted_weekly_run["leaked"] == set()
     assert counted_weekly_run["cache_empty"]
+
+
+def test_fan_out_stage_answers_the_same_cached_and_uncached(
+        counted_weekly_run, spark):
+    """The ols_model row published during the run was fitted over the
+    cached preprocess stage; re-running the model stage after ``run``
+    returns reads preprocess uncached and must give the same row, bit
+    for bit (floating-point sums grouped the same way)."""
+    from immoeliza_pipeline_spark.plans.pipeline import read_versioned
+    published = read_versioned(spark, str(counted_weekly_run["out"]),
+                               "ols_model").collect()
+    recomputed = counted_weekly_run["results"]["model"].collect()
+
+    def bits(rows):
+        return [[v.hex() if isinstance(v, float) else v for v in r]
+                for r in rows]
+    assert len(published) == 1
+    assert bits(published) == bits(recomputed)
+
+
+def test_weekly_sinks_hold_only_the_pointer_and_versions(counted_weekly_run):
+    """LATEST is swapped in by rename: no temp file is left beside it,
+    and it holds the bare name of a published version."""
+    out = counted_weekly_run["out"]
+    for sink in ("orders_clean", "ols_model", "predictions", "lr_model"):
+        names = {p.name for p in (out / sink).iterdir()}
+        assert all(n == "LATEST" or n.startswith("v=") for n in names), names
+        assert f"v={(out / sink / 'LATEST').read_text()}" in names
 
 
 def test_saved_model_reproduces_published_predictions(counted_weekly_run, spark):

@@ -1,11 +1,14 @@
-"""Spark jobs and wall seconds per registry query, in one process.
+"""Spark jobs, tasks and wall seconds per registry query, in one process.
 
 Each query runs under its own job group; the jobs the group started
 (plan building included, e.g. schema inference) are counted with the
-status tracker once the result is collected. Prints one line per query
-and a TOTAL line:
+status tracker once the result is collected. Tasks are the tasks those
+jobs' stages ran (``numCompletedTasks``, each stage once): a stage a
+job skips, because its shuffle output is already written, stays in the
+tracker with its ``numTasks`` but runs none. Prints one line per
+query and a TOTAL line summing both counts:
 
-    name jobs seconds
+    name jobs tasks seconds
 
 The first reader of a table in a process pays that table's schema
 inference, so a count depends on which queries ran before it: compare
@@ -36,17 +39,23 @@ def main() -> int:
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
     registry = ent.queries()
-    total_jobs, total_s = 0, 0.0
+    tracker = sc.statusTracker()
+    total_jobs, total_tasks, total_s = 0, 0, 0.0
     for name in sys.argv[1:] or sorted(registry):
         sc.setJobGroup(name, name)
         t0 = time.time()
         registry[name](spark, SF_DIR).collect()
         dt = time.time() - t0
-        jobs = len(sc.statusTracker().getJobIdsForGroup(name))
-        total_jobs, total_s = total_jobs + jobs, total_s + dt
-        print(f"{name} {jobs} {dt:.2f}", flush=True)
+        # the status tracker is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = tracker.getJobIdsForGroup(name)
+        stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+        tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
+        total_jobs, total_tasks = total_jobs + len(jobs), total_tasks + tasks
+        total_s += dt
+        print(f"{name} {len(jobs)} {tasks} {dt:.2f}", flush=True)
         spark.catalog.clearCache()
-    print(f"TOTAL {total_jobs} {total_s:.1f}")
+    print(f"TOTAL {total_jobs} {total_tasks} {total_s:.1f}")
     spark.stop()
     return 0
 
