@@ -20,6 +20,9 @@ apply before a value is compared, ranked or returned.
 
 Every rounding is ``half_up`` (Spark) or ``sql_half_up`` (oracle
 SQL), floor(y + 0.5), so the two sides can never drift.
+
+Sign patterns (SimHash bands, hyperplane-LSH buckets) pack into an
+int through ``pack_sign_bits`` and its twin ``sql_pack_sign_bits``.
 """
 
 from __future__ import annotations
@@ -58,6 +61,17 @@ def avg_money(expr: Column, out_dp: int = 4) -> Column:
     return quantize(F.sum(exact_units(expr)) / (SCALE * F.count(expr)), 10 ** out_dp)
 
 
+def pack_sign_bits(arr: Column) -> Column:
+    """An int whose bit j is set where element j of ``arr`` is > 0
+    (at most 31 elements): one fold over the reversed array, doubling
+    the running value at each step. A NULL element sets no bit and a
+    NULL array gives 0, as the CASE arms of ``sql_pack_sign_bits`` do."""
+    return F.coalesce(
+        F.aggregate(F.reverse(arr), F.lit(0),
+                    lambda acc, x: acc * 2 + F.when(x > 0, 1).otherwise(0)),
+        F.lit(0))
+
+
 # ---- oracle-SQL text builders (identical semantics) ----
 
 def sql_half_up(y: str) -> str:
@@ -82,3 +96,9 @@ def sql_sum_money(expr: str, out_dp: int = 2) -> str:
 def sql_avg_money(expr: str, out_dp: int = 4) -> str:
     total = f"sum({sql_exact_units(expr)})"
     return sql_quantize(f"{total} / ({SCALE}e0 * count({expr}))", 10 ** out_dp)
+
+
+def sql_pack_sign_bits(terms: list[str]) -> str:
+    """Bit j set where the SQL term ``terms[j]`` is > 0."""
+    return " + ".join(f"(CASE WHEN {t} > 0 THEN {1 << j} ELSE 0 END)"
+                      for j, t in enumerate(terms))

@@ -125,8 +125,8 @@ def window_count(n: Column, width: int, step: int) -> Column:
         F.floor((n - width + step - 1) / F.lit(float(step))).cast("int") + 1)
 
 
-def window_slice(toks: Column, i: Column, width: int, step: int) -> Column:
-    """Window ``i`` of the token array ``toks``."""
+def window_slice(toks: Column, i: Column | int, width: int, step: int) -> Column:
+    """Window ``i`` of the token array ``toks`` (or of any array)."""
     return F.slice(toks, i * step + 1, width)
 
 

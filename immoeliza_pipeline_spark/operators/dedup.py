@@ -23,8 +23,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from immoeliza_pipeline_spark.functions.num import quantize
-from immoeliza_pipeline_spark.functions.text import WS, tokens, word_shingles
+from immoeliza_pipeline_spark.functions.num import pack_sign_bits, quantize
+from immoeliza_pipeline_spark.functions.text import (WS, tokens, window_slice,
+                                                     word_shingles)
 from immoeliza_pipeline_spark.sources.readers import spread as _spread
 
 DEFAULT_NUM_HASHES = 12
@@ -437,43 +438,31 @@ def token_nibbles(hashes: Column) -> Column:
     """First 16 hex nibbles of each token hash as an int array —
     staged so conv() runs 16× per token, not 64× (bit b reads nibble
     b//4, and there is no CSE inside lambda bodies)."""
-    return F.transform(hashes, lambda h: F.array(*[
-        F.conv(F.substring(h, j + 1, 1), 16, 10).cast("int")
-        for j in range(16)]))
+    return F.transform(hashes, lambda h: F.transform(
+        F.sequence(F.lit(1), F.lit(SIMHASH_BITS // 4)),
+        lambda j: F.conv(F.substring(h, j, 1), 16, 10).cast("int")))
 
 
 def simhash_votes(nibbles: Column) -> Column:
-    """Struct of 64 vote counters in ONE array traversal: bit b
-    (nibble j = b//4, bit k = b%4) votes +1 when bit k of the j-th
-    nibble of the token's hash is set, else -1."""
-    init = F.struct(*[F.lit(0).alias(f"c{b}") for b in range(SIMHASH_BITS)])
-
+    """The 64 vote counters as one array<int>, in ONE traversal of the
+    tokens: counter b (bit b%4 of nibble b//4) gains +1 from a token
+    whose hash has that bit set, else -1."""
+    # F.shiftright takes a constant shift only; the SQL function does not
     def step(acc, x):
-        return F.struct(*[
-            (acc[f"c{b}"]
-             + F.when(F.element_at(x, b // 4 + 1)
-                      .bitwiseAND(F.lit(1 << (b % 4))) != 0, 1)
-             .otherwise(-1)).alias(f"c{b}")
-            for b in range(SIMHASH_BITS)
-        ])
+        return F.transform(acc, lambda c, b: c + 2 * F.call_function(
+            "shiftright", x[F.shiftright(b, 2)], b % 4).bitwiseAND(1) - 1)
 
-    return F.aggregate(nibbles, init, step)
+    return F.aggregate(nibbles, F.array_repeat(F.lit(0), SIMHASH_BITS), step)
 
 
 def simhash_bands(votes: Column) -> list[Column]:
     """The 64-bit fingerprint as 4 × 16-bit band ints (band i covers
-    bits 16i..16i+15). Bands ARE the fingerprint — and the LSH probe
-    key: two fingerprints within Hamming distance 3 must agree
-    exactly on at least one band (pigeonhole: 3 flipped bits touch at
-    most 3 of the 4 bands)."""
-    out = []
-    for i in range(SIMHASH_BANDS):
-        band = F.lit(0)
-        for k in range(_BAND_WIDTH):
-            b = i * _BAND_WIDTH + k
-            band = band + F.when(votes[f"c{b}"] > 0, F.lit(1 << k)).otherwise(0)
-        out.append(band.alias(f"band{i}"))
-    return out
+    bits 16i..16i+15, bit b set where vote b is positive). Bands ARE
+    the fingerprint — and the LSH probe key: two fingerprints within
+    Hamming distance 3 must agree exactly on at least one band
+    (pigeonhole: 3 flipped bits touch at most 3 of the 4 bands)."""
+    return [pack_sign_bits(window_slice(votes, i, _BAND_WIDTH, _BAND_WIDTH))
+            .alias(f"band{i}") for i in range(SIMHASH_BANDS)]
 
 
 def simhash_fingerprint_hex(*bands: Column) -> Column:

@@ -3,18 +3,17 @@
 Parity: assign_city_based_on_proximity_multiple_radii
 (preprocessing.py:218-254, geopandas buffer + sjoin) and
 geocode_and_fill (preprocessing.py:138-216, Nominatim with a JSON
-cache). Spark-first: the 10-city list unrolls into literal haversine
-expressions (no join, no spatial index) and the geocode cache is a
-dimension table broadcast against the fact side. Network geocoding
-is inherently a driver-side external call; here the CACHE LOOKUP is
-the operator and the network fallback is stubbed (no network in a
-cluster hot path anyway).
+cache). Spark-first: one haversine expression maps over the 10-city
+list, one array literal (no join, no spatial index), and the geocode
+cache is a dimension table broadcast against the fact side. Network
+geocoding is inherently a driver-side external call; here the CACHE
+LOOKUP is the operator and the network fallback is stubbed (no
+network in a cluster hot path anyway).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -47,32 +46,29 @@ def assign_city_by_proximity_literal(df: DataFrame, lat_col: str, lon_col: str,
                                      cities: list[tuple[str, float, float]] = CITIES,
                                      radii_km: Sequence[float] = (5, 10, 15)) -> DataFrame:
     """Per row: has_city_<r> flag for each radius + the nearest city
-    within the largest radius, for a LITERAL city list. The distances
-    unroll into one projection (codegen'd fma/trig chain) and the
-    flags/argmin fold over an array of structs — no join, no groupBy,
-    zero exchanges."""
-    dists = [
-        quantize(haversine_km(F.col(lat_col), F.col(lon_col),
-                              F.lit(clat), F.lit(clon)), 1000000).alias(f"__d_{i}")
-        for i, (_name, clat, clon) in enumerate(cities)
-    ]
-    d = [F.col(f"__d_{i}") for i in range(len(cities))]
-    flags = [
-        reduce(F.greatest, [(x <= r).cast("int") for x in d])
-        .alias(f"has_city_{int(r)}")
-        for r in radii_km
-    ]
+    within the largest radius, for a LITERAL city list. The cities are
+    ONE array literal of (lat, lon, city) structs, so building the plan
+    costs the same at any list length; one haversine maps over it, and
+    the flags and the argmin read the cities it keeps — no join, no
+    groupBy, zero exchanges. A NULL coordinate gives NULL distances,
+    which no radius keeps: flags 0 and no nearest city, as the oracle's
+    CASE … ELSE 0 and the reference's sjoin."""
+    # Python's repr of a float or a printable str is Spark SQL literal text
+    lit = F.expr("array(" + ", ".join(
+        f"named_struct('lat', {float(la)!r}D, 'lon', {float(lo)!r}D, 'city', {name!r})"
+        for name, la, lo in cities) + ")")
     max_r = max(radii_km)
-    candidates = F.array(*[
-        F.when(x <= max_r, F.struct(x.alias("dist_km"), F.lit(name).alias("city")))
-        for x, (name, _la, _lo) in zip(d, cities)
-    ])
-    nearest = F.array_min(F.filter(candidates, lambda c: c.isNotNull()))
-    # One projection over the distances: each withColumn would analyse
-    # the whole haversine plan again.
+    near = F.filter(F.transform(lit, lambda c: F.struct(
+        quantize(haversine_km(F.col(lat_col), F.col(lon_col), c["lat"], c["lon"]),
+                 1000000).alias("dist_km"),
+        c["city"].alias("city"))), lambda c: c["dist_km"] <= max_r)
+    flags = [F.exists("__near", lambda c: c["dist_km"] <= r).cast("int")
+             .alias(f"has_city_{int(r)}") for r in radii_km]
+    # The kept cities are staged as their own column: there is no CSE
+    # across the flags' and the argmin's lambdas.
     keep = [F.col("`" + c.replace("`", "``") + "`") for c in df.columns]
-    return df.select("*", *dists).select(
-        *keep, *flags, nearest["city"].alias("nearest_city"))
+    return df.select("*", near.alias("__near")).select(
+        *keep, *flags, F.array_min("__near")["city"].alias("nearest_city"))
 
 
 # Address normalization rules (geocode_and_fill, preprocessing.py:149-154).

@@ -16,7 +16,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from immoeliza_pipeline_spark.functions.num import quantize
+from immoeliza_pipeline_spark.functions.num import pack_sign_bits, quantize
+from immoeliza_pipeline_spark.functions.text import window_slice
 from immoeliza_pipeline_spark.operators.dedup import (_band_keys, _first_band_match,
                                                       banded_self_join)
 
@@ -122,7 +123,7 @@ def _banded(df: DataFrame, id_col: str, vec_col: str, dim: int,
         F.col("v"), dim, bands * r).alias("__projs"))
     return projected.select(
         "vid", "v", norm(F.col("v")).alias("nv"),
-        *[bucket_from_projections(F.col("__projs"), i * r, r)
+        *[bucket_from_projections(F.col("__projs"), i, r)
           .alias(f"band{i}") for i in range(bands)]).persist()
 
 
@@ -373,41 +374,37 @@ def hyperplane_projections(vec_col: Column, dim: int, n_planes: int,
     """All n_planes Rademacher projections in ONE vector traversal:
     the vector is zipped with a dim×n_planes sign-matrix literal
     (element d holds the n_planes signs for dimension d, every sign a
-    foldable ±1.0 — constant-folded by Catalyst, never an unrolled
-    per-element expression chain) and an n_planes running-sum vector
-    accumulates left-to-right. Per plane j the accumulation order is
-    d = 0..dim-1 — exactly the order of a standalone
+    ±1.0 constant that Catalyst folds) and an n_planes running-sum
+    vector accumulates left-to-right. Per plane j the accumulation
+    order is d = 0..dim-1 — exactly the order of a standalone
     zip_with+aggregate over that plane — so results stay bit-identical
     to the oracle's per-plane list_sum(list_transform(list_zip))
     mirror. Callers MUST materialize the returned array as its own
     projection before reading elements (no CSE across the aggregate:
     inlining it under k element_at's would run the traversal k×)."""
     v = F.transform(vec_col, lambda x: x.cast("double"))
-    # ONE nested-list literal (a single pre-folded Literal node), not
-    # dim×n_planes CreateArray/lit children — the unrolled form costs
-    # a py4j roundtrip per element at plan build and bloats analysis
-    signs_t = F.lit([[float(_rademacher(plane_offset + j, d))
-                      for j in range(n_planes)]
-                     for d in range(dim)])
-    init = F.lit([0.0] * n_planes)
+    # The sign matrix and the zero vector are each ONE SQL array
+    # literal, so building them costs the same few py4j round trips at
+    # any dim and plane count (F.lit(list) would send one lit() per
+    # element); Catalyst folds both to constants.
+    signs_t = F.expr("array(" + ", ".join(
+        "array(" + ", ".join(f"{_rademacher(plane_offset + j, d)}.0D"
+                             for j in range(n_planes)) + ")"
+        for d in range(dim)) + ")")
+    init = F.expr("array(" + ", ".join(["0.0D"] * n_planes) + ")")
     return F.aggregate(
         F.zip_with(v, signs_t,
                    lambda x, srow: F.transform(srow, lambda s: x * s)),
         init, lambda acc, xr: F.zip_with(acc, xr, lambda a, x: a + x))
 
 
-def bucket_from_projections(projs_col: Column, start: int = 0,
-                            n_planes: int = 8) -> Column:
-    """LSH bucket id from a MATERIALIZED projections array (the
-    random-hyperplane family for cosine similarity): the sign pattern
-    of projections [start, start+n_planes) as an int — bit j set when
-    projection start+j is positive."""
-    bucket = F.lit(0)
-    for j in range(n_planes):
-        bucket = bucket + F.when(
-            F.element_at(projs_col, start + j + 1) > 0,
-            F.lit(2 ** j)).otherwise(0)
-    return bucket
+def bucket_from_projections(projs_col: Column, band: int,
+                            n_planes: int) -> Column:
+    """LSH bucket id of ``band`` from a MATERIALIZED projections array
+    (the random-hyperplane family for cosine similarity): the sign
+    pattern of projections [band·n_planes, (band+1)·n_planes) as an
+    int — bit j set when projection band·n_planes + j is positive."""
+    return pack_sign_bits(window_slice(projs_col, band, n_planes, n_planes))
 
 
 def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, id_col: str,

@@ -186,8 +186,7 @@ def _vote(b: int) -> str:
 
 
 _BANDS = ", ".join(
-    " + ".join(f"(CASE WHEN {_vote(i * 16 + k)} > 0 THEN {1 << k} ELSE 0 END)"
-               for k in range(16)) + f" AS band{i}"
+    N.sql_pack_sign_bits([_vote(i * 16 + k) for k in range(16)]) + f" AS band{i}"
     for i in range(4))
 
 _SIMHASH_FP_CTE = f"""

@@ -102,12 +102,6 @@ def _proj_sql(j: int, dim: int = 64) -> str:
     return f"list_sum(list_transform(list_zip(v, {signs}), p -> p[1] * p[2]))"
 
 
-def _bucket_sql(planes: list[str]) -> str:
-    """LSH band bucket: bit jj set where projection planes[jj] > 0."""
-    return " + ".join(f"(CASE WHEN {p} > 0 THEN {1 << jj} ELSE 0 END)"
-                      for jj, p in enumerate(planes))
-
-
 # Dynamic-r mirror: the same integer ladder over count(*) as
 # operators.similarity.auto_rows_per_band (smallest r in [3, 8] with
 # 512·2^r ≥ n — integer comparisons, no cross-engine log2), all
@@ -126,7 +120,8 @@ _PROJ_COLS = ", ".join(f"{_proj_sql(j)} AS p{j}"
 
 def _band_case(i: int) -> str:
     branches = [
-        f"WHEN {r} THEN {_bucket_sql([f'p{i * r + jj}' for jj in range(r)])}"
+        f"WHEN {r} THEN "
+        + N.sql_pack_sign_bits([f"p{i * r + jj}" for jj in range(r)])
         for r in range(_LSH_R_MIN, _LSH_R_MAX + 1)]
     return "CASE r " + " ".join(branches) + f" END AS band{i}"
 
@@ -189,8 +184,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ANN_BAND_COLS = ", ".join(
-    f"{_bucket_sql([_proj_sql(i * _ANN_ROWS + jj) for jj in range(_ANN_ROWS)])}"
-    f" AS band{i}" for i in range(_ANN_BANDS))
+    N.sql_pack_sign_bits([_proj_sql(i * _ANN_ROWS + jj) for jj in range(_ANN_ROWS)])
+    + f" AS band{i}" for i in range(_ANN_BANDS))
 
 ANN_LSH_SQL = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),

@@ -1,5 +1,6 @@
 """Dedup / text-analysis / similarity queries vs DuckDB at sf0.001."""
 
+import hashlib
 import math
 import os
 from collections import Counter
@@ -213,6 +214,33 @@ def test_operators_tolerate_empty_input(spark, sf_dir):
     empty_counts = docs.select("doc_id", "lang",
                                F.lit(0).cast("long").alias("n_tokens"))
     assert pack_layout(empty_counts).count() == 0
+
+
+def test_simhash_and_lsh_bands_on_null_and_empty_input(spark):
+    """A NULL doc has no token and fingerprint 0, as the oracle's
+    CASE … ELSE 0; an empty or whitespace-only doc is one empty token,
+    whose fingerprint is md5("")'s first 16 nibbles with each band's 4
+    nibbles reversed (bit k of a band is bit k % 4 of nibble k div 4).
+    A NULL or zero vector falls in bucket 0 of every LSH band."""
+    from immoeliza_pipeline_spark.operators import dedup as D
+    from immoeliza_pipeline_spark.operators import similarity as S
+
+    docs = spark.createDataFrame([(1, None), (2, ""), (3, " \t\n ")],
+                                 "doc_id int, text string")
+    got = {r.id: (r.simhash, [r[f"band{i}"] for i in range(4)])
+           for r in D.simhash_table(docs, "doc_id", "text").collect()}
+    h = hashlib.md5(b"").hexdigest()
+    empty = "".join(h[4 * i:4 * i + 4][::-1] for i in range(4))
+    empty_bands = [int(empty[4 * i:4 * i + 4], 16) for i in range(4)]
+    assert got == {1: ("0" * 16, [0] * 4), 2: (empty, empty_bands),
+                   3: (empty, empty_bands)}
+
+    vecs = spark.createDataFrame([(1, None), (2, [0.0] * 4)],
+                                 "vec_id int, embedding array<double>")
+    banded = S._banded(vecs, "vec_id", "embedding", dim=4, bands=3, r=2)
+    assert {r.vid: [r.band0, r.band1, r.band2] for r in banded.collect()} \
+        == {1: [0] * 3, 2: [0] * 3}
+    banded.unpersist()
 
 
 def _pairs(df, *cols):

@@ -189,3 +189,23 @@ def test_iqr_profile_skewness_hostile(spark, value, skew):
     df = spark.range(1000).selectExpr(f"CAST({value} AS DOUBLE) AS v")
     row = outliers.iqr_outlier_profile(df, ["v"]).first()
     assert row["skewness"] == skew
+
+
+def test_city_scan_null_coordinates_match_oracle(spark):
+    """A NULL lat or lon is within no radius: flags 0 and no nearest
+    city on both engines, as the oracle's CASE … ELSE 0 and the
+    reference's sjoin, beside rows near a city and far from all."""
+    from immoeliza_pipeline_spark.operators.geo import assign_city_by_proximity_literal
+
+    rows = [(1, None, None), (2, 50.85, None), (3, None, 4.35),
+            (4, 50.85, 4.35), (5, 50.9, 4.1), (6, 49.0, 2.0)]
+    cust = f"SELECT c_custkey, {geo._LAT} AS lat, {geo._LON} AS lon FROM customer"
+    assert cust in geo.CITY_RADIUS_SQL
+    oracle = _duck_query("c_custkey INTEGER, lat DOUBLE, lon DOUBLE", rows,
+                         geo.CITY_RADIUS_SQL.replace(cust, "SELECT * FROM t"))
+    pts = spark.createDataFrame(rows, "c_custkey int, lat double, lon double")
+    engine = [tuple(r) for r in assign_city_by_proximity_literal(pts, "lat", "lon")
+              .select("c_custkey", "has_city_5", "has_city_10", "has_city_15",
+                      "nearest_city").collect()]
+    assert sorted(engine) == sorted(oracle)
+    assert sorted(engine)[:3] == [(k, 0, 0, 0, None) for k in (1, 2, 3)]

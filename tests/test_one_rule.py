@@ -1,7 +1,7 @@
 """Every plan, operator and streaming stage calls the one rule in
 ``functions/`` (or, for the md5 sampling key, in
-``operators/similarity``): none restates a text, rounding, window or
-sampling rule in its own code or SQL, and none reaches into
+``operators/similarity``): none restates a text, rounding, sign-bit
+packing, window or sampling rule in its own code or SQL, and none reaches into
 ``plans/text`` for a private fragment. Session conf is set in
 ``session`` only (and by ``streaming/events.process_all``), and the
 exactly-once epoch sink and the stream drain are written once, in
@@ -26,6 +26,8 @@ RESTATED = {
     "stopword filter (functions.text.sql_stopword_ratio)":
         (r"list_filter\(t, x -> x IN", PLANS),
     "half-up rounding (functions.num.sql_quantize)": (r"floor\(.*\+ 0\.5", PLANS),
+    "sign-bit packing (functions.num.pack_sign_bits)":
+        (r"THEN \{1 << |lit\((2 \*\*|1 <<)", LAYERS),
     "whitespace class (functions.text.WS)": (r"\\s", LAYERS),
     "token-window count (functions.text.window_count)":
         (r"\+ *[\w{}.]+ *- *1\) */", LAYERS),

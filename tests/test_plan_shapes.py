@@ -145,3 +145,35 @@ def test_sessionize_reads_micros_once(spark, sf_dir):
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("unix_micros(") == 1, plan
     assert plan.count("lag(") == 1, plan
+
+
+def _projections(spark, dim, planes):
+    from pyspark.sql import functions as F
+
+    from immoeliza_pipeline_spark.operators.similarity import hyperplane_projections
+    vecs = spark.createDataFrame([([1.0] * dim,)], "v array<double>")
+    return vecs.select(hyperplane_projections(F.col("v"), dim, planes))
+
+
+def _city_scan(spark, n_cities):
+    from immoeliza_pipeline_spark.operators.geo import (
+        CITIES, assign_city_by_proximity_literal)
+    pts = spark.createDataFrame([(50.85, 4.35)], "lat double, lon double")
+    return assign_city_by_proximity_literal(pts, "lat", "lon", cities=CITIES[:n_cities])
+
+
+@pytest.mark.parametrize("build,small,large", [
+    (_projections, (8, 2), (64, 18)), (_city_scan, (2,), (10,))])
+def test_plan_build_cost_does_not_grow_with_the_literal(spark, build, small, large):
+    """Building the hyperplane-LSH projections or the city scan sends
+    the JVM as many py4j commands for a large literal (sign matrix,
+    city list) as for a small one: each literal is one SQL text."""
+    from tools.job_census import py4j_round_trips
+
+    build(spark, *small), build(spark, *large)  # first calls may warm caches
+    counts = []
+    for args in (small, large):
+        with py4j_round_trips(spark) as trips:
+            build(spark, *args)
+        counts.append(trips[0])
+    assert counts[0] == counts[1], counts

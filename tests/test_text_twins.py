@@ -153,3 +153,30 @@ def test_window_counts_at_each_width_boundary(twins):
     pieces = twins[first + len(_WINDOW_SIZES) - 1][0]["p64"]  # 113 tokens
     assert [len(p) for p in pieces] == [64, 64, 17]
     assert pieces[1][0] == "w48"
+
+
+# (array, packed int): empty, all negative, both zeros, a NULL element,
+# one element, 16 positives, and a NULL array
+SIGNS = [([], 0), ([-1.0, -2.5, -3.0], 0), ([0.0, -0.0], 0),
+         ([1.0, None, 2.0], 5), ([3.0], 1), ([0.5] * 16, 65535), (None, 0)]
+
+
+def test_pack_sign_bits_equals_sql_twin(spark):
+    """functions.num.pack_sign_bits equals sql_pack_sign_bits over the
+    first 16 elements (DuckDB reads an index past the end as NULL)."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from immoeliza_pipeline_spark.functions import num as N
+
+    rows = [(i, a) for i, (a, _) in enumerate(SIGNS)]
+    engine = spark.createDataFrame(rows, "i int, a array<double>").select(
+        "i", N.pack_sign_bits(F.col("a")).alias("bits")).collect()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, a DOUBLE[])")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    terms = [f"a[{j + 1}]" for j in range(16)]
+    oracle = con.execute(
+        f"SELECT i, {N.sql_pack_sign_bits(terms)} FROM t ORDER BY i").fetchall()
+    assert sorted((r.i, r.bits) for r in engine) == oracle
+    assert [bits for _, bits in oracle] == [bits for _, bits in SIGNS]
